@@ -85,6 +85,36 @@ BLOCK_SCHEMA = (
 )
 
 
+_INT32_MAX = (1 << 31) - 1
+
+
+def segment_binary(buf: np.ndarray, val_sizes: np.ndarray,
+                   seg_starts: np.ndarray) -> "pa.Array":
+    """BinaryArray over the single encoded stream ``buf``, cut into
+    segments that start at the values ``seg_starts``; ``val_sizes`` holds
+    each value's encoded byte count. The offsets index ``buf`` directly,
+    so no per-segment bytes object is made.
+
+    Arrow binary offsets are int32: a stream of more than 2^31 - 1 bytes
+    would wrap them silently into a corrupt array, so it raises
+    ValueError instead."""
+    import pyarrow as pa
+
+    seg_bytes = np.add.reduceat(val_sizes, seg_starts)
+    ends = np.cumsum(seg_bytes, dtype=np.int64)
+    if len(ends) and int(ends[-1]) > _INT32_MAX:
+        raise ValueError(
+            f"{int(ends[-1])} encoded bytes in one Arrow batch exceed the "
+            f"int32 binary offset limit ({_INT32_MAX}); use smaller batches"
+        )
+    offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
+    offsets[1:] = ends
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), len(seg_bytes),
+        [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
+    )
+
+
 @dataclass
 class BuildParams:
     """The job spec — analog of IndexBuildParameters
@@ -293,16 +323,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
         from .analysis import tokenize_flat_arrow
         from .codecs import vbyte_encode_arrays
 
-        def bin_col(buf: np.ndarray, val_sizes: np.ndarray,
-                    run_starts_post: np.ndarray) -> pa.Array:
-            seg_bytes = np.add.reduceat(val_sizes, run_starts_post)
-            offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(seg_bytes)
-            return pa.BinaryArray.from_buffers(
-                pa.binary(), len(seg_bytes),
-                [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
-            )
-
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -355,9 +375,9 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                     uniq_sorted.take(pa.array(post_tcode[starts])),
                     pa.array(shards[starts], type=pa.int64()),
                     pa.array(lens.astype(np.int32), type=pa.int32()),
-                    bin_col(docs_buf, docs_sz, starts),
-                    bin_col(tfs_buf, tfs_sz, starts),
-                    bin_col(dls_buf, dls_sz, starts),
+                    segment_binary(docs_buf, docs_sz, starts),
+                    segment_binary(tfs_buf, tfs_sz, starts),
+                    segment_binary(dls_buf, dls_sz, starts),
                     pa.nulls(n_runs, pa.binary()),
                 ],
                 names=[
@@ -377,16 +397,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
 
         from .analysis import tokenize_flat_arrow
         from .codecs import vbyte_encode_arrays
-
-        def bin_col(buf: np.ndarray, val_sizes: np.ndarray,
-                    seg_starts: np.ndarray) -> pa.Array:
-            seg_bytes = np.add.reduceat(val_sizes, seg_starts)
-            offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(seg_bytes)
-            return pa.BinaryArray.from_buffers(
-                pa.binary(), len(seg_bytes),
-                [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
-            )
 
         for rb in batches:
             if rb.num_rows == 0:
@@ -452,10 +462,10 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                     uniq_sorted.take(pa.array(post_tcode[r_starts])),
                     pa.array(post_shard[r_starts], type=pa.int64()),
                     pa.array(r_lens.astype(np.int32), type=pa.int32()),
-                    bin_col(docs_buf, docs_sz, r_starts),
-                    bin_col(tfs_buf, tfs_sz, r_starts),
-                    bin_col(dls_buf, dls_sz, r_starts),
-                    bin_col(pos_buf, pos_sz, tok_run_starts),
+                    segment_binary(docs_buf, docs_sz, r_starts),
+                    segment_binary(tfs_buf, tfs_sz, r_starts),
+                    segment_binary(dls_buf, dls_sz, r_starts),
+                    segment_binary(pos_buf, pos_sz, tok_run_starts),
                 ],
                 names=[
                     "term", "shard_id", "n_docs",
@@ -517,18 +527,6 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
         data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None \
             else np.zeros(0, dtype=np.uint8)
         return data[offs[0]:offs[-1]], np.diff(offs)
-
-    def _block_bin(buf: np.ndarray, val_sizes: np.ndarray,
-                   seg_starts: np.ndarray) -> "pa.Array":
-        """BinaryArray over ``buf`` sliced at segment starts (the stage-1
-        bin_col pattern): offsets index the single encoded buffer."""
-        seg_bytes = np.add.reduceat(val_sizes, seg_starts)
-        offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
-        offsets[1:] = np.cumsum(seg_bytes)
-        return pa.BinaryArray.from_buffers(
-            pa.binary(), len(seg_bytes),
-            [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
-        )
 
     def _flush_vectorized(n_rows: int, terms, shards, lens,
                           docs_all, tfs_all, dls_all,
@@ -614,7 +612,9 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
             pos_sorted = pos_all[np.repeat(old_tok_starts[order], c_p) + within]
             pos_gaps = segment_delta_gaps(pos_sorted, new_tok_starts)
             pos_buf, pos_sz = vbyte_encode_arrays(pos_gaps)
-            pos_col = _block_bin(pos_buf, pos_sz, new_tok_starts[b_starts])
+            pos_col = segment_binary(
+                pos_buf, pos_sz, new_tok_starts[b_starts]
+            )
         else:
             pos_col = pa.nulls(len(b_starts), pa.binary())
         return pa.RecordBatch.from_arrays(
@@ -632,9 +632,9 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
                 pa.array(np.minimum.reduceat(t_, b_starts), type=pa.int64()),
                 pa.array(np.minimum.reduceat(l_, b_starts), type=pa.int64()),
                 pa.array(np.maximum.reduceat(l_, b_starts), type=pa.int64()),
-                _block_bin(docs_buf, docs_sz, b_starts),
-                _block_bin(tfs_buf, tfs_sz, b_starts),
-                _block_bin(dls_buf, dls_sz, b_starts),
+                segment_binary(docs_buf, docs_sz, b_starts),
+                segment_binary(tfs_buf, tfs_sz, b_starts),
+                segment_binary(dls_buf, dls_sz, b_starts),
                 pos_col,
             ],
             names=_BLOCK_COLS,

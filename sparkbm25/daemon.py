@@ -21,11 +21,76 @@ row" taken one level up: once per MACHINE, not once per worker
 worker reuse; preloading in the daemon also covers the workers the reaper
 replaces).
 
+Every task also pays a zip re-read that preloading cannot remove: before
+each task, pyspark.worker_util.setup_spark_files calls
+``importlib.invalidate_caches()``, which on Python < 3.13 makes every
+zipimporter in ``sys.path_importer_cache`` re-read its archive's whole
+central directory — one importer per imported pyspark subpackage over
+pyspark.zip (1,328 entries), plus py4j-*.zip and the spark-core jar that
+Spark puts on the worker PYTHONPATH: 16 ``zipimport._read_directory``
+calls per task on a warm reused worker (Python 3.11).
+``install_zip_stat_cache`` makes that invalidation stat-validated
+(CPython 3.13 made it lazy instead): an archive whose (mtime, size,
+inode) is unchanged keeps its cached directory, a rewritten one is
+re-read as before. Installed here pre-fork, every worker inherits it.
+Measured with tools/worker_task_cost.py (4-core VM, local[4], median of
+10 trivial 4-task mapInPandas calls): 0.40 -> 0.18 s wall, and 206 ->
+33 ms of worker CPU per task.
+
 The module body must run ONLY under ``python -m`` (the JVM's daemon
 launch): pyspark.daemon reads sys.argv at import time and calls
 os.setpgid/signal handlers in manager(), so importing this module from
-library code must stay side-effect free.
+library code must stay side-effect free — ``install_zip_stat_cache``
+patches nothing until called.
 """
+
+import os
+import sys
+import zipimport
+
+
+def install_zip_stat_cache() -> bool:
+    """Replace ``zipimport.zipimporter.invalidate_caches`` with a
+    stat-validated one on Python < 3.13; returns whether it is installed.
+
+    The replacement keeps ``zipimport._zip_directory_cache[archive]`` when
+    the archive's (st_mtime_ns, st_size, st_ino) equals the stamp taken
+    just before its last re-read, and otherwise calls the original, which
+    re-reads the directory. The stamp is taken BEFORE the read, so an
+    archive rewritten during the read is re-read again on the next call.
+    session._package_zip rewrites sparkbm25_pyfiles.zip in place on every
+    get_spark, which changes its mtime and so forces the re-read.
+    Idempotent: a second call leaves the first replacement in place."""
+    if sys.version_info >= (3, 13):
+        return False
+    cls = zipimport.zipimporter
+    original = cls.invalidate_caches
+    if getattr(original, "_stat_validated", False):
+        return True
+    stamps: dict[str, tuple[int, int, int]] = {}
+
+    def invalidate_caches(self):
+        archive = self.archive
+        try:
+            st = os.stat(archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(archive)
+        if stamp is not None and files is not None \
+                and stamps.get(archive) == stamp:
+            self._files = files
+            return
+        original(self)
+        if stamp is not None and archive in zipimport._zip_directory_cache:
+            stamps[archive] = stamp
+        else:
+            stamps.pop(archive, None)
+
+    invalidate_caches._stat_validated = True
+    cls.invalidate_caches = invalidate_caches
+    return True
+
 
 if __name__ == "__main__":
     # Pre-fork preload. Failures must never take the daemon down — a
@@ -61,6 +126,14 @@ if __name__ == "__main__":
         import sparkbm25.query  # noqa: F401
     except Exception:  # pragma: no cover
         pass
+
+    # Stamp every archive the preload opened (one directory read per
+    # archive, once per daemon), so forked workers start with valid
+    # stamps and their first task re-reads nothing either.
+    if install_zip_stat_cache():
+        import importlib
+
+        importlib.invalidate_caches()
 
     from pyspark.daemon import manager
 

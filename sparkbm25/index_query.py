@@ -32,6 +32,8 @@ kernels (numpy varbyte, batch-vectorized).
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 from collections.abc import Iterator
 
 import numpy as np
@@ -1401,9 +1403,42 @@ LOCAL_SEARCH_MAX_QUERIES = int(
 LOCAL_SEARCH_MAX_POSTINGS = int(
     os.environ.get("SPARKBM25_LOCAL_SEARCH_MAX_POSTINGS", "8000000")
 )
+# parquet footers the point path keeps per Index handle (LRU, so driver
+# memory stays bounded however many files an artifact grows to); an
+# artifact with at most this many files is warmed whole on first use.
 LOCAL_SEARCH_FOOTER_WARM_MAX_FILES = int(
     os.environ.get("SPARKBM25_LOCAL_FOOTER_WARM_MAX_FILES", "4096")
 )
+
+
+class _FooterCache:
+    """LRU map of parquet path -> FileMetaData holding at most ``cap``
+    entries: ``Index._pq_meta``. Locked, because the shard reads (and
+    the warm pass) run on a thread pool."""
+
+    def __init__(self, cap: int):
+        self.cap = cap
+        self.warmed = False
+        self._lock = threading.Lock()
+        self._d: OrderedDict = OrderedDict()
+
+    def __len__(self) -> int:
+        with self._lock:
+            return len(self._d)
+
+    def get(self, path: str):
+        with self._lock:
+            md = self._d.get(path)
+            if md is not None:
+                self._d.move_to_end(path)
+            return md
+
+    def put(self, path: str, md) -> None:
+        with self._lock:
+            self._d[path] = md
+            self._d.move_to_end(path)
+            while len(self._d) > self.cap:
+                self._d.popitem(last=False)
 
 
 def _local_serve_ok(ix: Index, occ: dict, terms: list[str]) -> bool:
@@ -1419,7 +1454,7 @@ def _local_serve_ok(ix: Index, occ: dict, terms: list[str]) -> bool:
 
 def _read_blocks_meta_cached(entry: list, cols: list[str],
                              terms: list[str], need_gseq: bool,
-                             meta_cache: dict) -> pd.DataFrame:
+                             meta_cache: _FooterCache) -> pd.DataFrame:
     """Driver-side block read with per-path parquet FOOTER caching: the
     footer parse dominated the per-file read cost on the point-query path
     (~2-3 ms x ~100 files per call), and the artifact is immutable for a
@@ -1441,7 +1476,8 @@ def _read_blocks_meta_cached(entry: list, cols: list[str],
     for gseq, path in entry:
         md = meta_cache.get(path)
         if md is None:
-            md = meta_cache[path] = pq.read_metadata(path)
+            md = pq.read_metadata(path)
+            meta_cache.put(path, md)
         term_ix = md.schema.names.index("term")
         rgs = []
         for i in range(md.num_row_groups):
@@ -1483,30 +1519,32 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
     need_gseq = tomb is not None and len(tomb[0]) > 0
     meta_cache = getattr(ix, "_pq_meta", None)
     if meta_cache is None:
-        meta_cache = ix._pq_meta = {}
-    if not meta_cache:
+        meta_cache = ix._pq_meta = _FooterCache(
+            LOCAL_SEARCH_FOOTER_WARM_MAX_FILES
+        )
+    if not meta_cache.warmed:
+        meta_cache.warmed = True
         # first local call: warm the WHOLE artifact's parquet footers once
         # (threaded; ~2 ms each). A point-query workload touches fresh
         # buckets per query, so per-call caching alone leaves every call
         # cold; one warm pass makes the whole 20-call p50 sweep read data
         # pages only. Gated by file count so a huge index falls back to
-        # per-call parsing instead of an unbounded driver warm.
+        # per-call parsing (through the LRU) instead of a warm that the
+        # cache bound would evict again.
         import pyarrow.parquet as pq
 
         all_paths = [
             p for lst in ix.shard_file_map().values() for _, p in lst
         ]
-        if len(all_paths) <= LOCAL_SEARCH_FOOTER_WARM_MAX_FILES:
+        if len(all_paths) <= meta_cache.cap:
             def _warm(p):
                 try:
-                    meta_cache[p] = pq.read_metadata(p)
+                    meta_cache.put(p, pq.read_metadata(p))
                 except OSError:
                     pass
 
             with ThreadPoolExecutor(max_workers=16) as wpool:
                 list(wpool.map(_warm, all_paths))
-        else:
-            meta_cache["__no_warm__"] = None
 
     shards = sorted(fm)
 

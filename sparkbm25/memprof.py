@@ -89,11 +89,13 @@ class MemorySampler:
 
     with MemorySampler() as ms: ...work...
     ms.peak_bytes  -> peak process-tree RSS observed during the stage
+    ms.peak_mb     -> the same in MB, or None when no sweep finished
     """
 
     def __init__(self, interval_s: float = 0.1):
         self.interval_s = interval_s
         self.peak_bytes = 0
+        self.sweeps = 0  # finished tree sweeps in the current window
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
 
@@ -115,6 +117,7 @@ class MemorySampler:
             cur = _proc_tree_rss(pid)
             if cur > self.peak_bytes:
                 self.peak_bytes = cur
+            self.sweeps += 1
             sweep = time.time() - t0
             # cap the backoff so a very slow sweep (huge heap under load)
             # still yields a ~2 s cadence — enough resolution for the
@@ -129,6 +132,7 @@ class MemorySampler:
         # first sample immediately anyway (r07; was ~25% of a 0.85 s
         # query stage).
         self.peak_bytes = 0
+        self.sweeps = 0
         self._stop.clear()
         self._thread = threading.Thread(target=self._run, daemon=True)
         self._thread.start()
@@ -141,5 +145,10 @@ class MemorySampler:
         return False
 
     @property
-    def peak_mb(self) -> float:
+    def peak_mb(self) -> float | None:
+        """Peak in MB; None when no sweep finished in the window (one
+        sweep can outlast a short stage on a big tree), so an unsampled
+        stage does not read as a real zero."""
+        if not self.sweeps:
+            return None
         return round(self.peak_bytes / (1024 * 1024), 1)

@@ -145,12 +145,17 @@ def get_spark(
     # the kernel modules preloaded (sparkbm25/daemon.py): a fresh worker's
     # import bill is ~1 s of core time, and 32 fresh workers made the
     # first kernel stage of a session (or any stage after the idle-worker
-    # reaper) 3-6x slower (measured r07). SPARKBM25_DAEMON=0 restores the
-    # stock pyspark.daemon. The daemon is a fresh `python -m` process, so
-    # the package root must be on ITS path (PythonWorkerFactory merges the
-    # JVM's PYTHONPATH and spark.executorEnv.PYTHONPATH into the daemon
-    # env; addPyFile reaches workers only per-task, AFTER daemon launch) —
-    # an unresolvable daemon module fails every task hard, so set both.
+    # reaper) 3-6x slower (measured r07). The same daemon makes the
+    # per-task importlib.invalidate_caches() stat-validated: on Python
+    # < 3.13 it re-read pyspark.zip, py4j and the spark-core jar's zip
+    # directories once per zipimporter on EVERY task, ~200 ms of worker
+    # CPU per task (daemon.install_zip_stat_cache). SPARKBM25_DAEMON=0
+    # restores the stock pyspark.daemon. The daemon is a fresh
+    # `python -m` process, so the package root must be on ITS path
+    # (PythonWorkerFactory merges the JVM's PYTHONPATH and
+    # spark.executorEnv.PYTHONPATH into the daemon env; addPyFile reaches
+    # workers only per-task, AFTER daemon launch) — an unresolvable
+    # daemon module fails every task hard, so set both.
     if os.environ.get("SPARKBM25_DAEMON", "1") != "0":
         pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         existing = os.environ.get("PYTHONPATH", "")

@@ -118,3 +118,26 @@ def test_pack_unpack_blocks():
         assert b["max_tf_norm"] == pytest.approx(ub[lo : lo + b["n_docs"]].max())
     assert got_ids == ids.tolist()
     assert got_tfs == tfs.tolist()
+
+
+def test_segment_binary_slices_one_stream():
+    from sparkbm25.build import segment_binary
+    from sparkbm25.codecs import vbyte_encode_arrays
+
+    vals = np.array([1, 300, 2, 70000, 5], dtype=np.uint64)
+    buf, sizes = vbyte_encode_arrays(vals)
+    arr = segment_binary(buf, sizes, np.array([0, 2, 4]))
+    assert arr.to_pylist() == [
+        vbyte_encode(vals[0:2]), vbyte_encode(vals[2:4]),
+        vbyte_encode(vals[4:5]),
+    ]
+
+
+def test_segment_binary_rejects_int32_offset_overflow():
+    """Arrow binary offsets are int32; a stream past 2^31 - 1 bytes must
+    raise, not wrap into a corrupt array."""
+    from sparkbm25.build import segment_binary
+
+    sizes = np.array([1 << 30, 1 << 30], dtype=np.int64)  # 2^31 bytes
+    with pytest.raises(ValueError, match="int32"):
+        segment_binary(np.zeros(1, dtype=np.uint8), sizes, np.array([0, 1]))

@@ -3,6 +3,7 @@ attributed the whole JVM heap to every transient COW fork it spawned,
 overstating build peaks ~2-5x in bursts)."""
 
 import os
+import threading
 import time
 
 from sparkbm25.memprof import MemorySampler, _proc_tree_rss, _pss_bytes
@@ -39,3 +40,23 @@ def test_tree_rss_excludes_shared_double_count():
         assert during < before * 1.4 + 20 * 1024 * 1024, (before, during)
     finally:
         os.waitpid(pid, 0)
+
+
+def test_peak_mb_none_until_a_sweep_finishes(monkeypatch):
+    """A window shorter than one tree sweep has no measured peak: peak_mb
+    is None, not 0.0 (which would read as a real, tiny peak)."""
+    import sparkbm25.memprof as memprof
+
+    gate = threading.Event()
+
+    def slow_sweep(pid):
+        gate.wait(10.0)
+        return 123 << 20
+
+    monkeypatch.setattr(memprof, "_proc_tree_rss", slow_sweep)
+    with MemorySampler(interval_s=0.02) as ms:
+        assert ms.peak_mb is None
+    assert ms.peak_mb is None  # __exit__'s bounded join gave up on it
+    gate.set()
+    ms._thread.join()
+    assert ms.peak_mb == 123.0
