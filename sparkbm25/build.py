@@ -780,11 +780,12 @@ def build_postings(
 # Physical postings layout generation. 2 (engine >= 0.8) adds a shard_id
 # directory level under each term_bucket: group=G/term_bucket=B/shard_id=S/
 # — shard-CLUSTERED files, so a search task can read exactly its shard's
-# blocks straight from shared storage (index_query's direct route: no
-# scan->kernel exchange, no JVM->Python Arrow hop). Layout 1 indexes keep
-# working through the exchange route; appends into them stay layout 1
-# (mixed directory depths would break Spark partition discovery), and
-# compaction rewrites the whole tree so it upgrades to 2.
+# blocks straight from shared storage (index_query's direct and
+# side-direct plans: no scan->kernel exchange, no JVM->Python Arrow hop).
+# Search refuses layout 1 indexes (Index.shard_file_map); appends into
+# them stay layout 1 (mixed directory depths would break Spark partition
+# discovery), and compaction rewrites the whole tree so it upgrades to 2
+# — the one migration.
 POSTING_LAYOUT = 2
 
 

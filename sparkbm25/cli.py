@@ -206,7 +206,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="attribute filter col=value (repeatable; "
                         "comma-separated values = membership)")
     q.add_argument("--strategy", default="sharded",
-                   choices=["sharded", "blockmax", "exhaustive"])
+                   choices=["sharded", "blockmax"])
     q.add_argument("--cores", type=int, default=None)
     q.set_defaults(fn=_query)
 

@@ -8,15 +8,15 @@ every search UI over transcripts needs). Reference provenance for the
 candidate-set semantics: the same match set OR scoring ranks,
 benchmarking/search/search_indices.py:30-39.
 
-Scale shape: posting blocks group by the doc-range shard key and COGROUP
-with the attribute side (doc_id -> value from live doc_stats, co-
-partitioned on the same key) — counting happens inside the kernel, so a
-group emits at most |distinct values| rows per query regardless of how
-many docs matched. One shuffle, partial-aggregate-sized output, no
-broadcast, no collect; composes with where=/where_expr (the side is
-pre-filtered, docs without a side row can't be counted) and with
-per-group tombstones (dead copies are masked at decode, exactly like the
-scoring kernels)."""
+Scale shape: the attribute side (doc_id -> value from live doc_stats)
+groups by the doc-range shard key, and each group reads its shard's
+posting blocks in-task (index_query's side-direct plan) — counting
+happens inside the kernel, so a group emits at most |distinct values|
+rows per query regardless of how many docs matched. The blocks never
+shuffle; output is partial-aggregate-sized, no broadcast, no collect.
+Composes with where=/where_expr (the side is pre-filtered, docs without
+a side row can't be counted) and with per-group tombstones (dead copies
+are masked at decode, exactly like the scoring kernels)."""
 
 from __future__ import annotations
 
@@ -34,10 +34,10 @@ FACET_SCHEMA = "query_id int, value string, n_docs long"
 
 def _facet_count_fn(q_tokens: dict[int, list[str]],
                     tombstones: "tuple | None" = None):
-    """Cogrouped per-shard facet kernel.
+    """Per-shard facet kernel over (blocks, side) frames.
 
-    Left: posting blocks (term, n_docs, docs_vbyte[, gseq]) of one
-    doc-range group. Right: this group's side rows — kind=0 attribute
+    Blocks: posting blocks (term, n_docs, docs_vbyte[, gseq]) of one
+    doc-range shard. Side: this shard's rows — kind=0 attribute
     rows (doc_id, value) for docs eligible to be counted (live + passing
     any where= filter), kind=1 distributed tombstones (doc_id, seq)
     overriding the closure pair past TOMBSTONE_BROADCAST_MAX.
@@ -47,7 +47,7 @@ def _facet_count_fn(q_tokens: dict[int, list[str]],
     that HAVE a side row. Emits (query_id, value, n_docs) partials —
     final sums happen plan-side (groupBy over the tiny partials)."""
 
-    def fn(key: tuple, blocks_pdf: pd.DataFrame,
+    def fn(blocks_pdf: pd.DataFrame,
            side_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -73,32 +73,9 @@ def _facet_count_fn(q_tokens: dict[int, list[str]],
             t_seqs = side_pdf["seq"].to_numpy(dtype=np.int64)[tm]
             to = np.argsort(t_ids)
             tomb = (t_ids[to], t_seqs[to])
-
-        n_arr = blocks_pdf["n_docs"].to_numpy().astype(np.int64)
-        total = int(n_arr.sum())
-        if total == 0:
+        spans = _live_term_spans(blocks_pdf, tomb)
+        if spans is None:
             return empty
-        seg_starts = np.cumsum(n_arr) - n_arr
-        gaps = vbyte_decode(b"".join(blocks_pdf["docs_vbyte"]), total)
-        all_ids = segment_delta_restore(gaps, seg_starts, n_arr)
-        if tomb is not None and len(tomb[0]):
-            gseqs = np.repeat(
-                blocks_pdf["gseq"].to_numpy(np.int64), n_arr
-            )
-            alive = ~dead_mask(all_ids, gseqs, tomb[0], tomb[1])
-        else:
-            alive = None
-        # per-term row spans (a term may span several block rows)
-        terms_arr = blocks_pdf["term"].to_numpy()
-        spans: dict[str, list[np.ndarray]] = {}
-        for i in range(len(blocks_pdf)):
-            lo = int(seg_starts[i])
-            hi = lo + int(n_arr[i])
-            ids_i = all_ids[lo:hi]
-            if alive is not None:
-                ids_i = ids_i[alive[lo:hi]]
-            if len(ids_i):
-                spans.setdefault(terms_arr[i], []).append(ids_i)
 
         rows_q, rows_v, rows_n = [], [], []
         for qid, toks in q_tokens.items():
@@ -141,7 +118,7 @@ def _facet_count_fn(q_tokens: dict[int, list[str]],
 
 def _stats_agg_fn(q_tokens: dict[int, list[str]],
                   tombstones: "tuple | None" = None):
-    """Cogrouped per-shard STATS kernel (ES stats-aggregation analog):
+    """Per-shard STATS kernel (ES stats-aggregation analog):
     same match computation as the facet kernel, but the side's kind=0
     rows carry a NUMERIC value and the emission is one partial
     (n, sum, min, max) row per query — final folds happen plan-side.
@@ -151,7 +128,7 @@ def _stats_agg_fn(q_tokens: dict[int, list[str]],
     contract; float attributes may differ from a serial sum by ~1 ulp,
     absorbed by the driver's 6dp rounding)."""
 
-    def fn(key: tuple, blocks_pdf: pd.DataFrame,
+    def fn(blocks_pdf: pd.DataFrame,
            side_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -246,33 +223,42 @@ def _matched_agg_plan(
     out_schema: str,
     where: dict | None,
     where_expr,
-    direct: bool | None,
     drop_null_value: bool = False,
 ):
     """Shared plan assembly for the match-set aggregations (facets /
-    histogram / stats): tokenize + merge dup query ids, build the
-    attribute side (doc_id, shard_id, value, kind, seq) from live
-    filtered doc_stats with ``value_col`` as the value expression,
-    route it side-grouped-direct on layout-2 (blocks pyarrow-read
-    in-task) or cogrouped-exchange otherwise, and return (partials
-    DataFrame | None, empty DataFrame). ``drop_null_value`` excludes
-    NULL attribute values from the side (ES histogram/stats ignore
-    docs missing the field; facets keep a NULL bucket)."""
-    spark = ix.spark
-    if ix.shard_shift is None:
-        raise ValueError("aggregations need the doc-range shard layout")
-    from .index_query import filtered_live_stats
+    histogram / stats / cardinality / count): tokenize + merge dup query
+    ids, build the attribute side (doc_id, shard_id, value, kind, seq)
+    from live filtered doc_stats with ``value_col`` as the value
+    expression, run the kernel on index_query's side-direct plan (the
+    side grouped by shard, blocks pyarrow-read in-task), and return
+    (partials DataFrame | None, empty DataFrame). Exact: every countable
+    doc has a side row, so a shard absent from the side has nothing to
+    count. ``drop_null_value`` excludes NULL attribute values from the
+    side (ES histogram/stats ignore docs missing the field; facets keep
+    a NULL bucket)."""
+    # late imports: TOMBSTONE_BROADCAST_MAX must be read at call time
+    # (tests lower it to force the distributed path), and the where=
+    # contract is the one filtered search uses — shared helper
+    from .index_query import _direct_side_fn, filtered_live_stats
     from .jobs import TOMBSTONE_BROADCAST_MAX
     from .xxhash64 import spark_pmod_bucket
 
+    spark = ix.spark
     q_tokens: dict[int, list[str]] = {}
     for qid, text in queries:
         toks = tokenize_py(text)
         if toks:
+            # duplicate query_ids merge their token lists (index_search
+            # contract); duplicates within a query are harmless (set())
             q_tokens.setdefault(qid, []).extend(toks)
     empty = spark.createDataFrame([], out_schema)
     if not q_tokens:
         return None, empty
+    terms = sorted({t for ts in q_tokens.values() for t in ts})
+    buckets = sorted(
+        {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
+    )
+    fm = ix.shard_file_map(buckets)  # refuses posting layout < 2
     side_src = filtered_live_stats(ix, where, where_expr)
     if drop_null_value:
         side_src = side_src.filter(value_col.isNotNull())
@@ -280,32 +266,16 @@ def _matched_agg_plan(
     n_del = ix.n_deleted()
     use_cotomb = n_del > TOMBSTONE_BROADCAST_MAX
     tomb = ix.tombstones_pair() if (n_del and not use_cotomb) else None
-    terms = sorted({t for ts in q_tokens.values() for t in ts})
-    buckets = sorted(
-        {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
-    )
-    need_gseq = n_del > 0
-    blocks = (
-        ix.postings()
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select(
-            "term", "shard_id", "n_docs", "docs_vbyte",
-            *([ix.gseq_col().alias("gseq")] if need_gseq else []),
-        )
-    )
     val_type = side_src.select(value_col.alias("value")).schema[0].dataType
-    sides = [
-        side_src.select(
-            "doc_id",
-            F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
-            value_col.alias("value"),
-            F.lit(0).alias("kind"),
-            F.lit(0).cast("long").alias("seq"),
-        )
-    ]
+    side = side_src.select(
+        "doc_id",
+        F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
+        value_col.alias("value"),
+        F.lit(0).alias("kind"),
+        F.lit(0).cast("long").alias("seq"),
+    )
     if use_cotomb:
-        sides.append(
+        side = side.unionByName(
             ix.tombstones_df().select(
                 "doc_id",
                 F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
@@ -314,30 +284,13 @@ def _matched_agg_plan(
                 F.col("del_seq").alias("seq"),
             )
         )
-    side = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
-    kern = kern_factory(q_tokens, tomb)
-    use_direct = direct is not False and ix.posting_layout >= 2
-    if direct and not use_direct:
-        raise ValueError(
-            "direct=True is not serviceable: posting layout < 2 "
-            "(rebuild or compact_index first)"
-        )
-    if use_direct:
-        from .index_query import _direct_side_fn
-
-        partials = side.groupBy("shard_id").applyInPandas(
-            _direct_side_fn(
-                kern, ["term", "n_docs", "docs_vbyte"], terms,
-                ix.shard_file_map(buckets), need_gseq=need_gseq,
-            ),
-            schema=out_schema,
-        )
-    else:
-        partials = (
-            blocks.groupBy("shard_id")
-            .cogroup(side.groupBy("shard_id"))
-            .applyInPandas(kern, schema=out_schema)
-        )
+    partials = side.groupBy("shard_id").applyInPandas(
+        _direct_side_fn(
+            kern_factory(q_tokens, tomb), ["term", "n_docs", "docs_vbyte"],
+            terms, fm, need_gseq=n_del > 0,
+        ),
+        schema=out_schema,
+    )
     return partials, empty
 
 
@@ -358,7 +311,6 @@ def index_histogram(
     width: float,
     where: dict | None = None,
     where_expr=None,
-    direct: bool | None = None,
 ) -> DataFrame:
     """Histogram aggregation over the match set (ES `histogram` /
     `date_histogram` analog): per query, doc counts in fixed-width
@@ -367,7 +319,7 @@ def index_histogram(
     NULL attribute are ignored, the ES missing-field default). Matching
     semantics, filters, routing, tombstones: exactly index_facets — the
     facet kernel runs unchanged over a bucket-valued side, so the plan
-    exchanges only the (doc_id, bucket) side on layout-2 indexes.
+    exchanges only the (doc_id, bucket) side.
 
     Reference analog: the reference service exposes no aggregations
     (SURVEY §2.5 widening, like facets); semantics follow OpenSearch's
@@ -382,7 +334,7 @@ def index_histogram(
     partials, empty = _matched_agg_plan(
         ix, queries, bucket, _facet_count_fn,
         "query_id int, value long, n_docs long",
-        where, where_expr, direct, drop_null_value=True,
+        where, where_expr, drop_null_value=True,
     )
     if partials is None:
         return empty
@@ -399,7 +351,6 @@ def index_stats(
     on: str,
     where: dict | None = None,
     where_expr=None,
-    direct: bool | None = None,
 ) -> DataFrame:
     """Stats aggregation over the match set (ES `stats` analog): per
     query, (query_id, n_docs, min_v, max_v, sum_v, avg_v) of a stored
@@ -410,12 +361,12 @@ def index_stats(
     2^53 (f64 partials of integers); avg = sum/n of those exact
     doubles, so it is deterministic and oracle-identical for integer
     attributes. Composes with where=/where_expr/tombstones; same
-    side-grouped direct routing as facets."""
+    side-direct plan as facets."""
     _require_attr(ix, on)
     partials, empty = _matched_agg_plan(
         ix, queries, F.col(on).cast("double"), _stats_agg_fn,
         "query_id int, n long, s double, mn double, mx double",
-        where, where_expr, direct, drop_null_value=True,
+        where, where_expr, drop_null_value=True,
     )
     if partials is None:
         return empty
@@ -434,7 +385,6 @@ def index_cardinality(
     on: str,
     where: dict | None = None,
     where_expr=None,
-    direct: bool | None = None,
 ) -> DataFrame:
     """Cardinality aggregation (ES `cardinality` analog, EXACT — no
     HyperLogLog: the kernel's per-group partials are already one row
@@ -443,12 +393,12 @@ def index_cardinality(
     per query, the number of distinct values of a stored attribute over
     all docs matching >= 1 query token — (query_id, n_values). NULL
     attrs are ignored (ES missing-field default). Composes with
-    where=/tombstones; same side-grouped direct routing as facets."""
+    where=/tombstones; same side-direct plan as facets."""
     _require_attr(ix, on)
     partials, _empty = _matched_agg_plan(
         ix, queries, F.col(on).cast("string"), _facet_count_fn,
         "query_id int, value string, n_docs long",
-        where, where_expr, direct, drop_null_value=True,
+        where, where_expr, drop_null_value=True,
     )
     if partials is None:
         return ix.spark.createDataFrame([], "query_id int, n_values long")
@@ -462,7 +412,6 @@ def index_count(
     queries: list[tuple[int, str]],
     where: dict | None = None,
     where_expr=None,
-    direct: bool | None = None,
 ) -> DataFrame:
     """Match-count API (ES `_count` analog): per query, the number of
     live docs matching >= 1 query token — (query_id, n_docs) — under
@@ -473,7 +422,7 @@ def index_count(
     partials, _empty = _matched_agg_plan(
         ix, queries, F.lit("*"), _facet_count_fn,
         "query_id int, value string, n_docs long",
-        where, where_expr, direct,
+        where, where_expr,
     )
     if partials is None:
         return ix.spark.createDataFrame([], "query_id int, n_docs long")
@@ -489,7 +438,6 @@ def index_facets(
     k_facets: int | None = None,
     where: dict | None = None,
     where_expr=None,
-    direct: bool | None = None,
 ) -> DataFrame:
     """Per-query facet counts: (query_id, value, n_docs) where n_docs is
     the number of live docs matching >= 1 of the query's tokens whose
@@ -503,106 +451,17 @@ def index_facets(
     (BuildParams(attr_cols=(by, ...))). A query with no corpus-present
     token yields no rows.
 
-    On a layout-2 index the kernel rides the SIDE-GROUPED direct plan by
-    default (r06): only the attribute side is exchanged (grouped on the
-    shard key); each task pyarrow-reads its shard's posting blocks
-    in-task (index_query._direct_side_fn), so the blocks never shuffle.
-    Exact: every live doc has an attribute row, so a shard absent from
-    the side has nothing countable. ``direct`` mirrors index_search
-    (None auto, False forces the cogrouped exchange, True refuses on
-    layout-1); results are bit-identical across plans (same kernel)."""
-    spark = ix.spark
-    if ix.shard_shift is None:
-        raise ValueError("facets need the doc-range shard layout")
-    # late imports: TOMBSTONE_BROADCAST_MAX must be read at call time
-    # (tests lower it to force the distributed path), and the where=
-    # contract is the one filtered search uses — shared helper
-    from .index_query import filtered_live_stats
-    from .jobs import TOMBSTONE_BROADCAST_MAX
-    from .xxhash64 import spark_pmod_bucket
-
-    q_tokens: dict[int, list[str]] = {}
-    for qid, text in queries:
-        toks = tokenize_py(text)
-        if toks:
-            # duplicate query_ids merge their token lists (index_search
-            # contract); duplicates within a query are harmless (set())
-            q_tokens.setdefault(qid, []).extend(toks)
-    empty = spark.createDataFrame([], FACET_SCHEMA)
-    if not q_tokens:
+    The kernel rides the side-direct plan (r06): only the attribute
+    side is exchanged (grouped on the shard key); each task
+    pyarrow-reads its shard's posting blocks in-task, so the blocks
+    never shuffle (_matched_agg_plan)."""
+    _require_attr(ix, by)
+    partials, empty = _matched_agg_plan(
+        ix, queries, F.col(by).cast("string"), _facet_count_fn,
+        FACET_SCHEMA, where, where_expr,
+    )
+    if partials is None:
         return empty
-
-    ds = ix.live_doc_stats()
-    if by not in ds.columns:
-        raise ValueError(
-            f"attribute {by!r} not stored in this index's doc_stats "
-            f"(build with BuildParams(attr_cols=...)); stored columns: "
-            f"{sorted(ds.columns)}"
-        )
-    side_src = filtered_live_stats(ix, where, where_expr, ds=ds)
-
-    n_del = ix.n_deleted()
-    use_cotomb = n_del > TOMBSTONE_BROADCAST_MAX
-    tomb = (
-        ix.tombstones_pair() if (n_del and not use_cotomb) else None
-    )
-    terms = sorted({t for ts in q_tokens.values() for t in ts})
-    buckets = sorted(
-        {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
-    )
-    need_gseq = n_del > 0
-    blocks = (
-        ix.postings()
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select(
-            "term", "shard_id", "n_docs", "docs_vbyte",
-            *([ix.gseq_col().alias("gseq")] if need_gseq else []),
-        )
-    )
-    sides = [
-        side_src.select(
-            "doc_id",
-            F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
-            F.col(by).cast("string").alias("value"),
-            F.lit(0).alias("kind"),
-            F.lit(0).cast("long").alias("seq"),
-        )
-    ]
-    if use_cotomb:
-        sides.append(
-            ix.tombstones_df().select(
-                "doc_id",
-                F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
-                F.lit(None).cast("string").alias("value"),
-                F.lit(1).alias("kind"),
-                F.col("del_seq").alias("seq"),
-            )
-        )
-    side = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
-    kern = _facet_count_fn(q_tokens, tombstones=tomb)
-    use_direct = direct is not False and ix.posting_layout >= 2
-    if direct and not use_direct:
-        raise ValueError(
-            "direct=True is not serviceable: posting layout < 2 "
-            "(rebuild or compact_index first)"
-        )
-    if use_direct:
-        from .index_query import _direct_side_fn
-
-        partials = side.groupBy("shard_id").applyInPandas(
-            _direct_side_fn(
-                kern, ["term", "n_docs", "docs_vbyte"], terms,
-                ix.shard_file_map(buckets), need_gseq=need_gseq,
-            ),
-            schema=FACET_SCHEMA,
-        )
-    else:
-        partials = (
-            blocks.groupBy("shard_id")
-            .cogroup(side.groupBy("shard_id"))
-            .applyInPandas(kern, schema=FACET_SCHEMA)
-        )
     out = partials.groupBy("query_id", "value").agg(
         F.sum("n_docs").alias("n_docs")
     )

@@ -1,32 +1,33 @@
-"""Top-k BM25 over the prebuilt compressed index — block-max pruned, EXACT.
+"""Top-k BM25 over the prebuilt compressed index — EXACT, optionally
+block-max pruned.
 
 The reference's search entry point loads a serialized index and answers
-top-k per query with beam pruning (benchmarking/search/search_indices.py:13-55,
-efSearch pruning :16-20). Ours reads the posting blocks and prunes with
-block-max metadata, expressed entirely as DataFrame joins + Arrow decode
-kernels — and is rank-identical to exhaustive scoring (the reference only
-promises recall; the north rule demands identity, so the pruning here is
-*sound*, not approximate):
+top-k per query (benchmarking/search/search_indices.py:13-55). Ours is a
+per-shard index probe: posting layout 2 clusters each term bucket's
+files by doc-range shard (Index.shard_file_map), so a kernel reads
+exactly its shard's blocks with pyarrow, scores every query of the
+batch in numpy and emits its local top-k. A doc lives in one shard, so
+per-shard scoring is exact, and results are rank-identical to the
+pure-Python OracleIndex (the reference only promises recall; the north
+rule demands identity, so any pruning here is *sound*, not
+approximate).
 
-Phase 0  read only the query terms' postings: `term_bucket` partition
-         pruning + `term` predicate pushed into the Parquet scan; block
-         METADATA columns only (Catalyst prunes the vbyte binaries).
-Phase 1  threshold bootstrap θ(q) from metadata alone: for each query term,
-         rank its blocks by the block's guaranteed-per-doc LOWER bound
-         L = qtf·idf·min_tf_norm; the L at which the cumulative doc count
-         reaches k proves "k docs exist scoring ≥ L" → θ(q) = max over terms.
-Phase 2  survivors = blocks whose doc-level UPPER bound
-         qtf·idf·max_tf_norm + Σ_{other terms} qtf'·idf'·max_tf_norm_global
-         ≥ θ(q). Docs appearing only in pruned blocks score < θ ≤ true kth
-         score → safely excluded. Decode survivors (Arrow kernel), partial
-         scores P(q,d) + the exact set of contributing terms.
-Phase 3  τ(q) = kth largest P (valid lower bound on the true kth score).
-         Candidates = docs with P + (UB of their missing terms) ≥ τ.
-         Re-decode only pruned blocks whose [first_doc, last_doc] range
-         covers a candidate, add exact missing contributions, final top-k.
+Two plans serve every query shape:
 
-Every phase is a DataFrame plan; Python appears only in the two decode
-kernels (numpy varbyte, batch-vectorized).
+direct       one ``spark.range`` work item per shard feeds the kernel
+             (mapInPandas); the only exchange is the tiny per-shard
+             top-k merge. A few queries over a bounded posting volume
+             run the same kernel in the driver (_local_search).
+side-direct  when the kernel needs a side frame — `where=` qualifying
+             ids, collapse values, or tombstones past
+             TOMBSTONE_BROADCAST_MAX — only that frame is grouped by
+             shard, and each group reads its shard's blocks in-task
+             (_direct_side_fn). Posting blocks never cross an exchange.
+
+Kernels: the densified exact fold (_sharded_topk_fn), its interval-level
+block-max pruning (_interval_prune, strategy='blockmax'), and the
+per-block WAND kernel (_wand_topk_fn) for the exclude/field-weighted
+shapes the interval pruner refuses.
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from __future__ import annotations
 import os
 import threading
 from collections import OrderedDict
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -51,13 +51,7 @@ from .codecs import (
 )
 from .jobs import Index
 from .localrel import local_df
-from .query import canonical_score_sum, topk_window
-
-DECODE_SCHEMA = (
-    "query_id int, doc_id long, term string, qpos int, "
-    "contrib double, w_term double"
-)
-EXTRA_SCHEMA = "query_id int, doc_id long, qpos int, extra double"
+from .query import topk_window
 
 
 def _query_weights(ix: Index, queries: list[tuple[int, str]]):
@@ -65,200 +59,28 @@ def _query_weights(ix: Index, queries: list[tuple[int, str]]):
     OCCURRENCE: the oracle accumulates w·tf_norm once per token occurrence
     in query order (oracle.py:60-77), and bit-exact tie agreement requires
     the engine to add the same values in the same order — so a duplicated
-    query term yields two rows rather than a qtf-scaled weight.
+    query term yields two entries rather than a qtf-scaled weight.
 
-    Returns (rows, occ):
-      rows — (query_id, term, w=idf, ub_term, rest, qpos) per occurrence,
-             qpos = token position among the query's indexed occurrences;
-      occ  — {query_id: [(term, idf), ...]} in query-token order (the
-             kernels' accumulation schedule)."""
-    occ: dict[int, list[tuple[str, float]]] = {}
-    terms: set[str] = set()
+    Returns {query_id: [(term, idf), ...]} in query-token order (the
+    kernels' accumulation schedule); a query with no indexed term is
+    absent."""
+    toks: dict[int, list[str]] = {}
     for qid, qtext in queries:
-        for t in tokenize_py(qtext):
-            occ.setdefault(qid, []).append((t, 0.0))
-            terms.add(t)
+        toks.setdefault(qid, []).extend(tokenize_py(qtext))
+    terms = sorted({t for ts in toks.values() for t in ts})
     if not terms:
-        return [], {}
-    stats = ix.term_stats_lookup(sorted(terms))
-    rows = []
-    for qid in list(occ):
+        return {}
+    stats = ix.term_stats_lookup(terms)
+    occ: dict[int, list[tuple[str, float]]] = {}
+    for qid, ts in toks.items():
         present = [
-            (t, idf_fn(stats[t][0], ix.n_docs), stats[t][1])
-            for t, _ in occ[qid]
+            (t, idf_fn(stats[t][0], ix.n_docs))
+            for t in ts
             if t in stats  # absent term contributes nothing (oracle skips)
         ]
-        if not present:
-            del occ[qid]
-            continue
-        occ[qid] = [(t, w) for t, w, _ in present]
-        rows.extend(_weight_rows(qid, present))
-    return rows, occ
-
-
-def _weight_rows(
-    qid: int, present: list[tuple[str, float, float]]
-) -> list[tuple]:
-    """(query_id, term, w, ub_term, rest, qpos) rows from one query's
-    resolved occurrences [(term, idf, max_tf_norm), ...] — the single
-    definition of the kernel/WAND weight-row contract, shared by
-    _query_weights and index_prefix_search."""
-    ubs = [w * m for _, w, m in present]
-    total_ub = sum(ubs)
-    return [
-        (qid, t, w, ub, total_ub - ub, qpos)
-        for qpos, ((t, w, _), ub) in enumerate(zip(present, ubs))
-    ]
-
-
-def _matched_blocks(
-    ix: Index, weights: list[tuple], with_gseq: bool = False
-) -> DataFrame:
-    """Postings blocks of the query terms, joined with per-(query,term)
-    weights. Partition pruning via term_bucket; predicate pushdown on term.
-    ``with_gseq`` attaches each block's lineage-group creation seq (needed
-    only for per-group tombstone masking)."""
-    spark = ix.spark
-    terms = sorted({t for _, t, *_ in weights})
-    # term_bucket computed driver-side with the Spark-parity XXH64 — no job
-    from .xxhash64 import spark_pmod_bucket
-
-    buckets = sorted({spark_pmod_bucket(t, ix.num_term_buckets) for t in terms})
-    w_df = local_df(
-        spark, weights,
-        "query_id int, term string, w double, ub_term double, rest double, "
-        "qpos int",
-    )
-    blocks = (
-        ix.postings()
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-    )
-    if with_gseq:
-        blocks = blocks.withColumn("gseq", ix.gseq_col())
-    return blocks.join(F.broadcast(w_df), "term")
-
-
-def _theta(qblocks: DataFrame, k: int) -> DataFrame:
-    """Phase 1: per-query pruning threshold from metadata only. Keyed per
-    OCCURRENCE (qpos) — duplicate query terms carry one row per occurrence,
-    and a bound derived from a single occurrence's contribution alone is
-    still a valid lower bound on the final kth score."""
-    L = (F.col("w") * F.col("min_tf_norm")).alias("L")
-    meta = qblocks.select("query_id", "term", "qpos", "n_docs", L)
-    w = Window.partitionBy("query_id", "term", "qpos").orderBy(F.desc("L"))
-    ranked = (
-        meta.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)  # each block holds >=1 doc, k blocks suffice
-        .withColumn(
-            "cum",
-            F.sum("n_docs").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    )
-    theta_t = (
-        ranked.filter(F.col("cum") >= k)
-        .groupBy("query_id", "term", "qpos")
-        .agg(F.max("L").alias("theta_t"))
-    )
-    return theta_t.groupBy("query_id").agg(F.max("theta_t").alias("theta"))
-
-
-def _decode_gen(k1: float, b: float, avgdl: float,
-                tombstones: "tuple | None" = None):
-    from .codecs import dead_mask as _dead_mask
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                ids = delta_decode(vbyte_decode(r.docs_vbyte, r.n_docs))
-                tfs = vbyte_decode(r.tfs_vbyte, r.n_docs).astype(np.float64)
-                dls = vbyte_decode(r.dls_vbyte, r.n_docs).astype(np.float64)
-                if tombstones is not None and len(tombstones[0]):
-                    # per-group deadness: r.gseq is this block's lineage
-                    # seq (scalar broadcast into the mask)
-                    alive = ~_dead_mask(
-                        ids, np.int64(r.gseq), tombstones[0], tombstones[1]
-                    )
-                    if not alive.any():
-                        continue
-                    ids, tfs, dls = ids[alive], tfs[alive], dls[alive]
-                tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.int32(r.query_id),
-                            "doc_id": ids,
-                            "term": r.term,
-                            "qpos": np.int32(r.qpos),
-                            "contrib": r.w * tfn,
-                            "w_term": np.float64(r.ub_term),
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="int32"),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "term": pd.Series(dtype="object"),
-                        "qpos": pd.Series(dtype="int32"),
-                        "contrib": pd.Series(dtype="float64"),
-                        "w_term": pd.Series(dtype="float64"),
-                    }
-                )
-            )
-
-    return gen
-
-
-def _rescore_gen(k1: float, b: float, avgdl: float):
-    """Decode pruned blocks, keeping only that row's `wanted` doc ids
-    (assembled distributedly — no driver-side candidate map)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                # same searchsorted primitive as the hot kernels (np.isin
-                # re-sorts its second argument per call) — this path exists
-                # to cross-check the kernels, so it uses their membership op
-                cands = np.sort(np.asarray(r.wanted, dtype=np.int64))
-                ids = delta_decode(vbyte_decode(r.docs_vbyte, r.n_docs))
-                keep = _in_sorted(ids, cands)
-                if not keep.any():
-                    continue
-                tfs = vbyte_decode(r.tfs_vbyte, r.n_docs).astype(np.float64)[keep]
-                dls = vbyte_decode(r.dls_vbyte, r.n_docs).astype(np.float64)[keep]
-                tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.int32(r.query_id),
-                            "doc_id": ids[keep],
-                            "qpos": np.int32(r.qpos),
-                            "extra": r.w * tfn,
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="int32"),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "qpos": pd.Series(dtype="int32"),
-                        "extra": pd.Series(dtype="float64"),
-                    }
-                )
-            )
-
-    return gen
+        if present:
+            occ[qid] = present
+    return occ
 
 
 _PRUNE_EPS = 1e-9
@@ -267,8 +89,6 @@ _PRUNE_EPS = 1e-9
 def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
                 tomb: "tuple | None" = None,
                 qual: "np.ndarray | None" = None,
-                sub_shift: "int | None" = None,
-                vs: int = 0,
                 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
     """Decode a (sub)frame of posting blocks into {term: (doc_ids,
     tf_norm)} — the prune-refinement SEED decode. Same vbyte/delta
@@ -279,16 +99,7 @@ def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
     every surviving seed doc is a REAL eligible candidate — required
     for the theta bound to stay sound under deletes / filtered search
     (an unmasked seed could certify theta from a dead or non-qualifying
-    doc's score, overstating the kth eligible score).
-
-    ``sub_shift``/``vs`` restrict seed postings to THIS subgroup's
-    doc-id range (mirroring the main kernel's range mask). Required for
-    soundness whenever the masks above are GROUP-SCOPED: with explicit
-    subsplit, replicated straddling blocks carry postings from
-    neighboring subgroups whose tombstone/qualifying rows live in OTHER
-    groups' cogrouped sides — an unmaskable foreign doc could otherwise
-    certify theta (ADVICE r06 high). Always applied under sub_shift:
-    shrinking the seed set only weakens theta, never unsounds it."""
+    doc's score, overstating the kth eligible score)."""
     pdf = pdf.sort_values("term", kind="stable", ignore_index=True)
     terms_arr = pdf["term"].to_numpy()
     n_arr = pdf["n_docs"].to_numpy().astype(np.int64)
@@ -303,14 +114,11 @@ def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
     dls = vbyte_decode(b"".join(pdf["dls_vbyte"]), total).astype(np.float64)
     tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
     m = None
-    if sub_shift is not None:
-        m = (all_ids >> np.int64(sub_shift)) == vs
     if tomb is not None and len(tomb[0]):
         from .codecs import dead_mask as _dead_mask
 
         gseqs = np.repeat(pdf["gseq"].to_numpy(np.int64), n_arr)
-        mt = ~_dead_mask(all_ids, gseqs, tomb[0], tomb[1])
-        m = mt if m is None else (m & mt)
+        m = ~_dead_mask(all_ids, gseqs, tomb[0], tomb[1])
     if qual is not None:
         mq = _in_sorted(all_ids, qual)
         m = mq if m is None else (m & mq)
@@ -333,7 +141,7 @@ def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
 def _interval_prune(pdf: pd.DataFrame,
                     q_terms: dict[int, list[tuple[str, float]]],
                     k1: float, b: float, avgdl: float, k: int,
-                    mode: str, sub_shift: int | None, vs: int,
+                    mode: str,
                     and_need: dict[int, int] | None = None,
                     tomb: "tuple | None" = None,
                     qual: "np.ndarray | None" = None):
@@ -355,8 +163,7 @@ def _interval_prune(pdf: pd.DataFrame,
       BATCH, not per query).
     - per query q: θ_q from the same metadata-only bootstrap as the
       WAND kernel ("k docs provably score >= θ": some block of one
-      occurrence term holds >= k postings each with lower bound L;
-      under sub_shift only blocks fully inside this range may count);
+      occurrence term holds >= k postings each with lower bound L);
       bound vector B_q[i] = Σ over q's occurrences (t, w) of w*M_t[i];
       live_q = B_q >= θ_q - |θ_q|·EPS.
     - decode only blocks overlapping the live-interval UNION of the
@@ -443,14 +250,9 @@ def _interval_prune(pdf: pd.DataFrame,
         M[t] = m
     if not M:
         return None
-    if sub_shift is not None:
-        cont_all = ((firsts >> np.int64(sub_shift)) == vs) & (
-            (lasts >> np.int64(sub_shift)) == vs
-        )
     # phase 1 — metadata-only theta per query ("k docs provably score
     # >= theta": a prefix of ONE term's blocks, ordered by lower bound
-    # desc, holds >= k postings; under sub_shift only blocks fully
-    # inside this group's range may count)
+    # desc, holds >= k postings)
     theta_of: dict[int, float] = {}
     present_of: dict[int, list[tuple[str, float]]] = {}
     need_of: dict[int, int] = {}
@@ -470,11 +272,6 @@ def _interval_prune(pdf: pd.DataFrame,
             for t, w in present:
                 idx = blk_of[t]
                 L, nn = w * mint[idx], n_arr[idx]
-                if sub_shift is not None:
-                    c = cont_all[idx]
-                    if not c.any():
-                        continue
-                    L, nn = L[c], nn[c]
                 order = np.argsort(-L, kind="stable")
                 cum = np.cumsum(nn[order])
                 hit = np.flatnonzero(cum >= k)
@@ -492,11 +289,7 @@ def _interval_prune(pdf: pd.DataFrame,
     # Soundness: every decoded candidate is a real doc and its
     # accumulated score omits at most some of its own contributions
     # (an UNDERestimate), and a subset's kth order statistic never
-    # exceeds the full set's — so theta' <= the true kth score. (Under
-    # sub_shift the seed decode masks to THIS subgroup's id range:
-    # replicated straddling blocks carry neighboring subgroups' docs
-    # whose tombstone/qualifying rows live in other groups' cogrouped
-    # sides, so a foreign doc would be unmaskable here — ADVICE r06.)
+    # exceeds the full set's — so theta' <= the true kth score.
     # Accumulation order may differ from the final fold by ~ulp; the
     # relative _PRUNE_EPS margin on the live test absorbs that.
     # seed-worthiness gate (pure COST heuristic — skipping a seed only
@@ -528,8 +321,7 @@ def _interval_prune(pdf: pd.DataFrame,
         n_seed = int(n_arr[seed_rows].sum())
         if 0 < n_seed <= max(0.25 * float(n_arr.sum()), 64.0 * k):
             raw = _decode_tfn(pdf[seed_rows], k1, b, avgdl,
-                              tomb=tomb, qual=qual,
-                              sub_shift=sub_shift, vs=vs)
+                              tomb=tomb, qual=qual)
             if raw:
                 for qid in seed_qids:
                     present = present_of[qid]
@@ -639,7 +431,7 @@ def _interval_prune(pdf: pd.DataFrame,
 
 def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                      k1: float, b: float, avgdl: float, k: int,
-                     sub_shift: int | None = None, cogroup: bool = False,
+                     side: bool = False,
                      has_qual: bool = False,
                      tombstones: "tuple | None" = None,
                      and_need: dict[int, int] | None = None,
@@ -651,13 +443,6 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     """Per-shard exact scoring kernel: decode each query term's blocks ONCE,
     densify each term into one contribution column over the group's doc
     universe, and score every query as a few whole-vector adds.
-
-    With ``sub_shift`` the group key is a FINER doc-id range (a virtual
-    shard ``doc_id >> sub_shift``; blocks straddling a boundary were
-    replicated to each side by the caller): decoded postings are masked to
-    this group's range, so every doc is still scored exactly once, with all
-    its term contributions together — search-time kernel parallelism
-    decoupled from the build-time num_shards (VERDICT r03 #2).
 
     The kernel is DENSIFIED ACROSS QUERIES: a term's per-doc contribution
     ``idf(t) * tf_norm`` is query-INDEPENDENT (the weight is the term's
@@ -672,18 +457,18 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     whose fixed cost dominated batch latency and capped core-scaling
     (VERDICT r03 #2): per-query work drops to O(group-docs) vector adds +
     one top-k extraction. Memory: one column per distinct matched term over
-    <= group-doc-count doubles — bounded by the doc-range grouping and
-    shrunk further by sub_shift.
+    <= group-doc-count doubles — bounded by the doc-range grouping.
 
     Masking inputs (all optional, composable):
     - ``tombstones`` — closure-shipped (sorted ids, per-id max del_seq)
       pair for SMALL delete sets; per-group deadness via codecs.dead_mask
       with the block's ``gseq`` column.
-    - ``cogroup`` — the kernel takes a co-partitioned side frame
-      (doc_id, kind, seq): kind=0 rows are `where=` qualifying ids (active
-      when ``has_qual``), kind=1 rows are DISTRIBUTED tombstones (the
-      no-driver-array path for large delete sets; they override the
-      closure pair, index_search routes one source at a time).
+    - ``side`` — the kernel takes ``(blocks, side)`` frames, the side
+      being this shard's rows of (doc_id, kind, seq): kind=0 rows are
+      `where=` qualifying ids (active when ``has_qual``), kind=1 rows are
+      DISTRIBUTED tombstones (the no-driver-array path for large delete
+      sets; they override the closure pair, index_search routes one
+      source at a time), kind=2 rows are shard anchors (_parse_side).
 
     ``and_need`` activates COVERAGE semantics for the listed queries:
     {query_id: required distinct matched-term count}. Because a doc's
@@ -710,12 +495,12 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     each query's candidates are masked to its own live doc-range
     intervals. Exact (scores of surviving docs are the bitwise-unchanged
     dense fold); requires the blockmax metadata columns in the group and
-    composes with sub_shift AND with ``and_need`` (conjunctive queries
-    get coverage liveness + a coverage-aware seed theta; the live mask
-    applies AFTER the coverage selection, so surviving docs keep exact
-    counts and scores) — the caller routes masked/excluded/
-    field-weighted shapes to the WAND kernel instead (their bootstrap
-    needs decode-time masking).
+    composes with ``and_need`` (conjunctive queries get coverage
+    liveness + a coverage-aware seed theta; the live mask applies AFTER
+    the coverage selection, so surviving docs keep exact counts and
+    scores) and with the tombstone / qualifying masks — the caller
+    routes excluded and field-weighted shapes to the WAND kernel
+    instead (their bootstrap needs decode-time masking).
 
     ``after`` ({query_id: (score, doc_id) cursor}) activates
     SEARCH-AFTER pagination: only candidates STRICTLY after the cursor
@@ -727,11 +512,11 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     cursor comes from this engine's own bit-exact scores).
 
     ``collapse`` activates FIELD COLLAPSING (OpenSearch `collapse`):
-    the cogrouped side's kind=0 rows carry a ``value`` column (the
-    stored attribute of every eligible doc — they double as the
-    qualifying set, so ``collapse`` implies ``cogroup`` +
-    ``has_qual``); after each query's fold, candidates sort by the
-    total order (score DESC, doc_id ASC) and only the FIRST doc per
+    the side's kind=0 rows carry a ``value`` column (the stored
+    attribute of every eligible doc — they double as the qualifying
+    set, so ``collapse`` implies ``side`` + ``has_qual``); after each
+    query's fold, candidates sort by the total order (score DESC,
+    doc_id ASC) and only the FIRST doc per
     distinct value survives (NULL is one group), up to k — each group
     emits at most k rows per query, one per collapse group, and the
     output gains a ``value`` column. Scores are the unchanged dense
@@ -739,8 +524,8 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     exact (a group in the global collapsed top-k has < k groups ahead
     of it inside its best doc's shard — any group ahead there is ahead
     globally too, its global best being >= its shard-local best)."""
-    if collapse and not (cogroup and has_qual):
-        raise ValueError("collapse requires the cogrouped side "
+    if collapse and not (side and has_qual):
+        raise ValueError("collapse requires the side frame "
                          "(attribute rows double as qualifying ids)")
     if collapse and after:
         raise ValueError(
@@ -762,7 +547,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             "/ search_after; route those to the WAND or dense kernel"
         )
 
-    def _run(vs: int, pdf: pd.DataFrame,
+    def _run(pdf: pd.DataFrame,
              qual: np.ndarray | None,
              tomb: "tuple | None",
              sidev: "tuple | None" = None) -> pd.DataFrame:
@@ -783,8 +568,8 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         int_bounds: np.ndarray | None = None
         if prune_bounds is not None and len(pdf):
             pruned = _interval_prune(
-                pdf, q_terms, k1, b, avgdl, k, prune_bounds, sub_shift,
-                vs, and_need=and_need, tomb=tomb, qual=qual,
+                pdf, q_terms, k1, b, avgdl, k, prune_bounds,
+                and_need=and_need, tomb=tomb, qual=qual,
             )
             if pruned is not None:
                 keep_rows, int_bounds, live_of = pruned
@@ -836,16 +621,11 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             tfs = tfs_i.astype(np.float64)
         tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
         m = None
-        if sub_shift is not None:
-            # arithmetic >> matches the build's F.shiftright sharding
-            # (overflow-free over the full signed-int64 id range)
-            m = (all_ids >> np.int64(sub_shift)) == vs
         if tomb is not None and len(tomb[0]):
             from .codecs import dead_mask as _dead_mask
 
             gseqs = np.repeat(pdf["gseq"].to_numpy(np.int64), n_arr)
-            mt = ~_dead_mask(all_ids, gseqs, tomb[0], tomb[1])
-            m = mt if m is None else (m & mt)
+            m = ~_dead_mask(all_ids, gseqs, tomb[0], tomb[1])
         if qual is not None:
             # `where=` filter: restrict scoring to the group's QUALIFYING
             # docs (global idf/avgdl stay untouched — standard filtered-
@@ -1091,14 +871,13 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             )
         return pd.DataFrame(out)
 
-    def topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _run(int(key[0]), pdf, None, tombstones)
+    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _run(pdf, None, tombstones)
 
-    def topk_cogroup(key: tuple, blocks_pdf: pd.DataFrame,
-                     side_pdf: pd.DataFrame) -> pd.DataFrame:
-        # cogroup form: the right side carries this doc-range group's
-        # qualifying ids (kind=0) and/or distributed tombstones (kind=1),
-        # already co-partitioned by the same key
+    def topk_side(blocks_pdf: pd.DataFrame,
+                  side_pdf: pd.DataFrame) -> pd.DataFrame:
+        # side form: side_pdf carries this shard's qualifying ids
+        # (kind=0) and/or distributed tombstones (kind=1)
         qual, tomb = _parse_side(side_pdf, has_qual, tombstones)
         sidev = None
         if collapse:
@@ -1111,17 +890,18 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             svals_c = side_pdf["value"].to_numpy()[a]
             o = np.argsort(sids_c, kind="stable")
             sidev = (sids_c[o], svals_c[o])
-        return _run(int(key[0]), blocks_pdf, qual, tomb, sidev)
+        return _run(blocks_pdf, qual, tomb, sidev)
 
-    return topk_cogroup if cogroup else topk
+    return topk_side if side else topk
 
 
 def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
                 closure_tomb: "tuple | None"):
-    """Split a cogrouped side frame (the kind-tagged contract shared by
+    """Split a shard's side frame (the kind-tagged contract shared by
     the dense and WAND kernels) into (sorted qualifying ids | None,
     tombstone (ids, seqs) pair — distributed rows override the
-    closure-shipped pair when present)."""
+    closure-shipped pair when present). kind=2 anchor rows only make
+    their shard a group of the side-direct plan and are ignored here."""
     if len(side_pdf):
         kind = side_pdf["kind"].to_numpy()
         ids_side = side_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
@@ -1140,14 +920,12 @@ def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
 
 
 def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
-                     tombstones: "tuple | None" = None,
-                     items: "list[tuple] | None" = None):
-    """DIRECT-route kernel: each task reads its shard's parquet files
-    straight from the index dir via pyarrow (layout 2's shard-clustered
-    files) and scores with the SAME dense kernel as the exchange route —
-    identical fold order, so results are bit-exact across routes.
+                     fm: dict, tombstones: "tuple | None"):
+    """DIRECT-plan mapInPandas body: each task reads its shard's parquet
+    files straight from the index dir via pyarrow (layout 2's
+    shard-clustered files) and runs the per-shard kernel on them.
 
-    Why: the scan->kernel exchange + JVM->Python Arrow hop costs ~0.9 s
+    Why: a scan->kernel exchange + JVM->Python Arrow hop costs ~0.9 s
     per batch nearly INDEPENDENT of core count (measured 0.90 s at
     local[8] vs 1.13 s at local[2] on a 2.2M-turn index) — the fixed term
     that capped q100 batch scaling at ~0.70 (VERDICT r04 #4). Reading in
@@ -1156,65 +934,57 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
     index shard from shared storage, like any segment-replicated search
     fleet, instead of re-shuffling the index per query batch.
 
-    Work items (one per shard): (shard_id, paths, gseqs). The pyarrow
-    read pushes the term filter down (row groups are term-sorted within a
-    bucket file). ``gseqs`` carries each file's lineage-group seq for
-    per-group tombstone masking; grouping by seq keeps the column
-    assignment exact when a delete must mask only older groups.
-
-    ``items`` (r07): the work items as a driver list; the input frame is
-    then just ``spark.range(len(items))`` row indices. A
-    createDataFrame(rows) work-item frame was a pickled-parallelize
-    PythonRDD whose evaluation needs a python worker from the non-Arrow
-    factory — the first direct search in a session serialized all task
-    threads behind SparkEnv.createPythonWorker while a second daemon +
-    worker pool booted (~1.6 s PER TASK, uniform — measured), and every
-    later search paid a python hop to scan a few hundred bytes. A range
-    scan is pure JVM; the items ship once per task in this closure, like
-    the query weights already do."""
-    inner = kernel
+    The input frame is ``spark.range(len(fm))``: row i names the i-th
+    shard of ``fm`` ({shard_id: [(gseq, path), ...]},
+    Index.shard_file_map) in sorted order. A createDataFrame(rows)
+    work-item frame was a pickled-parallelize PythonRDD whose evaluation
+    needs a python worker from the non-Arrow factory — the first direct
+    search in a session serialized all task threads behind
+    SparkEnv.createPythonWorker while a second daemon + worker pool
+    booted (~1.6 s PER TASK, uniform — measured), and every later search
+    paid a python hop to scan a few hundred bytes. A range scan is pure
+    JVM; the file map ships once per task in this closure, like the
+    query weights already do."""
     need_gseq = tombstones is not None and len(tombstones[0]) > 0
+    entries = [fm[s] for s in sorted(fm)]
     cols = list(cols)
     terms = list(terms)
 
     def gen(batches):
         for wpdf in batches:
-            for r in wpdf.itertuples(index=False):
-                if items is not None:
-                    shard_id, paths, gseqs = items[int(r.id)]
-                else:
-                    shard_id, paths, gseqs = (
-                        int(r.shard_id), list(r.paths), list(r.gseqs)
-                    )
+            for i in wpdf["id"]:
                 pdf = _read_shard_blocks(
-                    list(paths), list(gseqs), cols, terms, need_gseq
+                    entries[int(i)], cols, terms, need_gseq
                 )
                 if len(pdf):
-                    out = inner((int(shard_id),), pdf)
+                    out = kernel(pdf)
                     if len(out):
                         yield out
 
     return gen
 
 
-def _read_shard_blocks(paths: list, gseqs: list, cols: list[str],
+def _read_shard_blocks(entry: list, cols: list[str],
                        terms: list[str], need_gseq: bool) -> pd.DataFrame:
-    """pyarrow read of one shard's posting files (layout-2 clustered tree)
-    with the term filter pushed down to row groups. use_threads=False: a
-    task must stay inside its ONE Spark core slot — arrow's default pool
-    would use every host core, silently oversubscribing executors (and
-    faking low-core scaling measurements). With ``need_gseq`` files read
-    grouped by lineage seq so per-group tombstone masking stays exact."""
+    """pyarrow read of one shard's posting files ``entry`` ([(gseq,
+    path), ...], layout-2 clustered tree) with the term filter pushed
+    down to row groups (row groups are term-sorted within a bucket
+    file). use_threads=False: a task must stay inside its ONE Spark core
+    slot — arrow's default pool would use every host core, silently
+    oversubscribing executors (and faking low-core scaling
+    measurements). With ``need_gseq`` files read grouped by lineage seq
+    and tagged with it, so per-group tombstone masking stays exact when
+    a delete must mask only older groups."""
     import pyarrow.dataset as pads
 
-    if not paths:
+    if not entry:
         return pd.DataFrame(
             columns=cols + (["gseq"] if need_gseq else [])
         )
     filt = pads.field("term").isin(terms)
     if need_gseq:
         by_gs: dict[int, list[str]] = {}
-        for p, g in zip(paths, gseqs):
+        for g, p in entry:
             by_gs.setdefault(int(g), []).append(p)
         parts = []
         for g, ps in sorted(by_gs.items()):
@@ -1230,7 +1000,7 @@ def _read_shard_blocks(paths: list, gseqs: list, cols: list[str],
             else pd.concat(parts, ignore_index=True)
         )
     return (
-        pads.dataset(paths, format="parquet")
+        pads.dataset([p for _, p in entry], format="parquet")
         .to_table(columns=cols, filter=filt, use_threads=False)
         .to_pandas()
     )
@@ -1260,109 +1030,42 @@ def _collapse_window(shard_tops: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _direct_side_fn(kernel_cogroup, cols: list[str], terms: list[str],
+def _direct_side_fn(kernel_side, cols: list[str], terms: list[str],
                     file_map: dict, need_gseq: bool):
-    """SIDE-GROUPED direct kernel (r06): applyInPandas over the
-    co-partitioned SIDE frame alone — qualifying ids / facet attribute
-    rows / distributed tombstones — with each group's posting blocks
-    pyarrow-read IN-TASK from the shard-clustered layout. The blocks
-    never cross an exchange; only the small side does. This is how
-    `where=` filtered search and facets consume the direct route: the
-    cogrouped kernels are reused verbatim, so results are bit-identical
-    to the blocks-exchange plan.
+    """SIDE-DIRECT plan body (r06): applyInPandas over the SIDE frame
+    alone — qualifying ids / facet attribute rows / distributed
+    tombstones / shard anchors, grouped by shard — with each group's
+    posting blocks pyarrow-read IN-TASK from the shard-clustered layout.
+    The blocks never cross an exchange; only the small side does. This
+    is how `where=` filtered search, collapse, distributed tombstones
+    and the match-set aggregations consume the direct layout; the
+    kernel takes ``(blocks, side)`` frames.
 
     Validity: every group key is a WHOLE shard (the side is keyed by
-    shard_shift), and a shard absent from the side has no qualifying /
-    countable docs, so skipping it is exact. ``file_map`` is the tiny
-    driver-side {shard_id: [(gseq, path), ...]} listing (n_shards
-    entries of strings — closure-shipped like the query terms)."""
+    shard_shift), and a shard absent from the side is skipped. That is
+    exact when the side lists every qualifying / countable doc; a side
+    of tombstones alone carries one kind=2 anchor row per shard instead
+    (index_search). ``file_map`` is the tiny driver-side {shard_id:
+    [(gseq, path), ...]} listing (n_shards entries of strings —
+    closure-shipped like the query terms)."""
 
     def fn(key: tuple, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        entry = file_map.get(int(key[0]), ())
         pdf = _read_shard_blocks(
-            [p for _, p in entry], [g for g, _ in entry],
-            cols, terms, need_gseq,
+            file_map.get(int(key[0]), []), cols, terms, need_gseq
         )
-        return kernel_cogroup(key, pdf, side_pdf)
+        return kernel_side(pdf, side_pdf)
 
     return fn
 
 
-def _direct_search(ix: Index, weights, occ, eff_k1: float, eff_b: float,
-                   k: int, tomb: "tuple | None",
-                   strategy: str = "sharded",
-                   derived: bool = False,
-                   and_need: dict[int, int] | None = None,
-                   exclude: dict[int, list[str]] | None = None,
-                   fieldw: tuple | None = None,
-                   eff_avgdl: float | None = None,
-                   after: dict[int, tuple[float, int]] | None = None,
-                   allow_local: bool = True,
-                   ) -> DataFrame:
-    """Assemble the direct route's plan: a tiny work-item DataFrame (one
-    row per shard; LocalRelation -> parallelize, NO exchange) feeding the
-    pyarrow-reading kernel (dense sharded scoring, or block-max WAND for
-    strategy='blockmax' — WAND gains the most: its pruned kernel is light,
-    so the removed exchange dominated its latency), then the global top-k
+def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
+                   fm: dict, tomb: "tuple | None", occ: dict,
+                   k: int) -> DataFrame:
+    """The direct plan: one ``spark.range`` work item per shard feeding
+    the pyarrow-reading kernel (_direct_topk_gen), then the global top-k
     window — exactly ONE exchange in the whole plan (the tiny per-shard
     top-k merge)."""
-    from .xxhash64 import spark_pmod_bucket
-
-    spark = ix.spark
-    # the widened fetch list (scoring ∪ MUST-NOT terms) is computed ONCE
-    # in index_search (_fetch_terms) and shared with the exchange route,
-    # so the routes' bit-exactness can't drift on fetch scope
-    terms = _fetch_terms(weights, exclude)
-    buckets = sorted(
-        {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
-    )
-    avgdl = ix.avgdl if eff_avgdl is None else eff_avgdl
-    cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
-    if fieldw is not None:
-        cols.append("pos_vbyte")
-    if strategy == "blockmax":
-        cols += ["first_doc", "last_doc"]
-        # derived bounds replace the precomputed tf_norm bounds entirely —
-        # don't read columns the kernel ignores
-        cols += (
-            ["max_tf", "min_tf", "min_dl", "max_dl"] if derived
-            else ["max_tf_norm", "min_tf_norm"]
-        )
-        if not exclude and fieldw is None:
-            # interval-pruned dense kernel (BENCH_BOOL_AB.json follow-up):
-            # the bounds analysis runs vectorized over doc-range
-            # intervals, the scoring is the unchanged densified fold —
-            # never slower than 'sharded', skips decode where bounds
-            # pay; conjunctive queries (and_need) compose via coverage
-            # liveness + the coverage-aware seed theta, and tombstones
-            # via mask-exact seed decode (_interval_prune doc)
-            kernel = _sharded_topk_fn(
-                occ, eff_k1, eff_b, avgdl, k, None,
-                prune_bounds="derived" if derived else "stored",
-                and_need=and_need, tombstones=tomb,
-            )
-        else:
-            kernel = _wand_topk_fn(
-                occ, eff_k1, eff_b, avgdl, k, None,
-                derived_bounds=derived, tombstones=tomb,
-                and_need=and_need, exclude=exclude, fieldw=fieldw,
-            )
-    else:
-        kernel = _sharded_topk_fn(
-            occ, eff_k1, eff_b, avgdl, k, None, tombstones=tomb,
-            and_need=and_need, exclude=exclude, fieldw=fieldw,
-            after=after,
-        )
-    fm = ix.shard_file_map(buckets)
-    rows = [
-        (s, [p for _, p in fm[s]], [g for g, _ in fm[s]])
-        for s in sorted(fm)
-    ]
-    if not rows:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_id long, score double"
-        )
-    if allow_local and _local_serve_ok(ix, occ, terms):
+    if _local_serve_ok(ix, occ, terms):
         # POINT-QUERY fast path (r07): for a few queries over a bounded
         # posting volume, run the SAME per-shard kernel in the driver
         # process — pyarrow block reads + numpy fold, zero Spark jobs.
@@ -1375,19 +1078,11 @@ def _direct_search(ix: Index, weights, occ, eff_k1: float, eff_b: float,
         # driver-resident. Bit-exact: same kernel closure, and the
         # global merge reimplements topk_window's exact total order
         # (score DESC, doc_id ASC). Size-guarded: falls through to the
-        # distributed route when the query set or its posting volume
+        # distributed plan when the query set or its posting volume
         # exceeds the driver budget.
-        return _local_search(
-            spark, kernel, cols, terms, fm, tomb, k, ix,
-        )
-    # range-scan work items, one row (= one shard) per task: pure-JVM
-    # input, no exchange, and the (tiny) file lists ride the kernel
-    # closure (_direct_topk_gen docstring; r07 — replaces the pickled-
-    # parallelize frame whose PythonRDD evaluation booted a second
-    # worker pool and paid a python hop per action)
-    items = spark.range(len(rows), numPartitions=len(rows))
-    tops = items.mapInPandas(
-        _direct_topk_gen(kernel, cols, terms, tombstones=tomb, items=rows),
+        return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k, ix)
+    tops = ix.spark.range(len(fm), numPartitions=len(fm)).mapInPandas(
+        _direct_topk_gen(kernel, cols, terms, fm, tomb),
         schema="query_id int, doc_id long, score double",
     )
     return topk_window(tops, k)
@@ -1561,9 +1256,7 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
             pdfs = list(pool.map(read_shard, shards))
     else:
         pdfs = [read_shard(shards[0])]
-    parts = [
-        kernel((int(s),), pdf) for s, pdf in zip(shards, pdfs) if len(pdf)
-    ]
+    parts = [kernel(pdf) for pdf in pdfs if len(pdf)]
     parts = [p for p in parts if p is not None and len(p)]
     out_schema = "query_id int, rank int, doc_id long, score double"
     if not parts:
@@ -1605,19 +1298,16 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
 
 def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
                   k1: float, b: float, avgdl: float, k: int,
-                  sub_shift: int | None = None,
                   derived_bounds: bool = False,
-                  cogroup: bool = False, has_qual: bool = False,
+                  side: bool = False, has_qual: bool = False,
                   tombstones: "tuple | None" = None,
                   and_need: dict[int, int] | None = None,
                   exclude: dict[int, list[str]] | None = None,
                   fieldw: tuple | None = None):
-    """Shard-local block-max WAND kernel: the module doc's 3-phase pruned
-    traversal executed INSIDE the shard task on block metadata, so pruned
-    search keeps the sharded path's one-shuffle plan (the DataFrame 3-phase
-    plan spent ~8 Spark jobs per batch — VERDICT r01 #5). All bounds are
-    shard-local (tighter than the global plan's) and epsilon-widened, so the
-    result is EXACT under the total order (score desc, doc_id asc):
+    """Shard-local block-max WAND kernel: a 3-phase pruned traversal
+    executed INSIDE the shard task on block metadata. All bounds are
+    shard-local and epsilon-widened, so the result is EXACT under the
+    total order (score desc, doc_id asc):
 
     phase 1  θ = per-term bootstrap from block minima (k docs provably ≥ θ)
     phase 2  decode only blocks with w·max_tf_norm + rest ≥ θ; partial P
@@ -1632,13 +1322,6 @@ def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
     ordered reduceat), matching OracleIndex.search bit-exactly so exact
     ties break by doc_id in both engines.
 
-    With ``sub_shift`` the group is a finer doc-range (virtual shard, see
-    _sharded_topk_fn): decoded postings mask to the range, and phase 1's
-    bootstrap counts only blocks fully CONTAINED in it (a straddling
-    block's n_docs overcounts this range, and an overcounted "k docs >= θ"
-    claim would over-prune — containment keeps θ sound, merely looser, so
-    the result stays exact).
-
     Round-5 unification — the pruned path survives production traffic:
     - ``derived_bounds``: per-block upper/lower contribution bounds are
       computed AT QUERY TIME from the stored raw (max_tf, min_dl) /
@@ -1647,7 +1330,7 @@ def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
       correctly rounded hence weakly monotone, so the float bound is
       sound, not just the real-arithmetic one) — removing the k1/b
       override refusal.
-    - ``tombstones`` (closure pair) / ``cogroup`` side rows (kind=1
+    - ``tombstones`` (closure pair) / ``side`` rows (kind=1
       distributed tombstones, kind=0 `where=` qualifying ids when
       ``has_qual``): decoded blocks mask per posting exactly like the
       dense kernel. Phase 1's METADATA bootstrap would count dead or
@@ -1684,7 +1367,7 @@ def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
     if exclude:
         wanted |= {t for ts in exclude.values() for t in ts}
 
-    def _run(vs: int, pdf: pd.DataFrame,
+    def _run(pdf: pd.DataFrame,
              qual: "np.ndarray | None",
              tomb: "tuple | None") -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -1784,13 +1467,8 @@ def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
                     tfs = tfs_i.astype(np.float64)
                 tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
                 m = None
-                if sub_shift is not None:
-                    m = (ids >> np.int64(sub_shift)) == vs
                 if tomb is not None:
-                    mt = ~_dead_mask(
-                        ids, td["gseq"][j], tomb[0], tomb[1]
-                    )
-                    m = mt if m is None else (m & mt)
+                    m = ~_dead_mask(ids, td["gseq"][j], tomb[0], tomb[1])
                 if qual is not None:
                     mq = _in_sorted(ids, qual)
                     m = mq if m is None else (m & mq)
@@ -1942,18 +1620,8 @@ def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
                             theta = max(theta, float(L[j]))
                             break
                     continue
-                nn = td["n"]
-                if sub_shift is not None:
-                    # only blocks fully inside this doc-range may count
-                    # toward the "k docs provably >= θ" claim
-                    cont = ((td["first"] >> np.int64(sub_shift)) == vs) & (
-                        (td["last"] >> np.int64(sub_shift)) == vs
-                    )
-                    if not cont.any():
-                        continue
-                    L, nn = L[cont], nn[cont]
                 order = np.argsort(-L, kind="stable")
-                cum = np.cumsum(nn[order])
+                cum = np.cumsum(td["n"][order])
                 hit = np.flatnonzero(cum >= k)
                 if len(hit):
                     theta = max(theta, float(L[order[hit[0]]]))
@@ -2038,16 +1706,16 @@ def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
             }
         )
 
-    def topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _run(int(key[0]), pdf, None, tombstones)
+    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _run(pdf, None, tombstones)
 
-    def topk_cogroup(key: tuple, blocks_pdf: pd.DataFrame,
-                     side_pdf: pd.DataFrame) -> pd.DataFrame:
+    def topk_side(blocks_pdf: pd.DataFrame,
+                  side_pdf: pd.DataFrame) -> pd.DataFrame:
         # same kind-tagged side contract as the dense kernel
         qual, tomb = _parse_side(side_pdf, has_qual, tombstones)
-        return _run(int(key[0]), blocks_pdf, qual, tomb)
+        return _run(blocks_pdf, qual, tomb)
 
-    return topk_cogroup if cogroup else topk
+    return topk_side if side else topk
 
 
 PHRASE_MATCH_SCHEMA = "query_id int, doc_id long, ptf int, dl int"
@@ -2083,9 +1751,7 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
 
     Tombstones mask per (id, group-seq) at decode, exactly like the
     scoring kernels."""
-    wanted = sorted({t for ts in q_phrases.values() for t in ts})
-
-    def topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
         from .codecs import dead_mask as _dead_mask
 
         empty = pd.DataFrame(
@@ -2240,7 +1906,6 @@ def index_phrase_search(
     k1: float | None = None,
     b: float | None = None,
     slop: int = 0,
-    direct: bool | None = None,
 ) -> DataFrame:
     """Exact top-k PHRASE search: docs containing the exact token sequence,
     ranked by BM25 over the PHRASE frequency — score = idf(df_phrase) *
@@ -2257,16 +1922,12 @@ def index_phrase_search(
     slop=0 (default) is exact adjacency, bit-identical to the original
     path.
 
-    Plan: the position-intersection kernel runs per shard, then the tiny
-    (query, doc, phrase_tf) stream flows into Catalyst scoring + top-k
-    window. On a layout-2 index the kernel rides the DIRECT route by
-    default (r06): each task pyarrow-reads its shard's files — including
+    Plan: the position-intersection kernel runs per shard on the direct
+    plan (r06): each task pyarrow-reads its shard's files — including
     the heavy positional stream, which therefore never crosses an
-    exchange — leaving the skinny match stream's window as the only
-    shuffle, exactly like index_search's direct route. ``direct`` mirrors
-    index_search: None auto-selects, False forces the cogrouped exchange
-    kernel, True refuses when ineligible. Bit-identical across routes
-    (same kernel; it sorts its block batch itself).
+    exchange — then the tiny (query, doc, phrase_tf) stream flows into
+    Catalyst scoring + top-k window, the only shuffle, exactly like
+    index_search's direct plan.
 
     Returns (query_id, rank, doc_id, score); queries whose phrase matches
     nothing (or with an absent term) yield no rows."""
@@ -2281,8 +1942,6 @@ def index_phrase_search(
             "this index stores no positional postings; rebuild with "
             "BuildParams(store_positions=True) to serve phrase queries"
         )
-    if ix.shard_shift is None:
-        raise ValueError("phrase search needs the doc-range shard layout")
     eff_k1 = ix.k1 if k1 is None else float(k1)
     eff_b = ix.b if b is None else float(b)
     if not (eff_k1 >= 0.0):
@@ -2312,43 +1971,20 @@ def index_phrase_search(
     buckets = sorted(
         {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
     )
-    kern = _phrase_match_fn(q_phrases, tombstones=tomb, slop=slop)
-    use_direct = direct is not False and ix.posting_layout >= 2
-    if direct and not use_direct:
-        raise ValueError(
-            "direct=True is not serviceable: posting layout < 2 "
-            "(rebuild or compact_index first)"
-        )
-    if use_direct:
-        cols = ["term", "n_docs", "first_doc",
-                "docs_vbyte", "tfs_vbyte", "dls_vbyte", "pos_vbyte"]
-        fm = ix.shard_file_map(buckets)
-        rows = [
-            (sh, [p for _, p in fm[sh]], [g for g, _ in fm[sh]])
-            for sh in sorted(fm)
-        ]
-        if not rows:
-            return empty
-        # range-scan work items (see _direct_topk_gen: pure-JVM input,
-        # file lists in the closure — no PythonRDD scan)
-        items = spark.range(len(rows), numPartitions=len(rows))
-        matched = items.mapInPandas(
-            _direct_topk_gen(kern, cols, terms, tombstones=tomb,
-                             items=rows),
-            schema=PHRASE_MATCH_SCHEMA,
-        )
-    else:
-        blocks = (
-            ix.postings()
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .select("term", "shard_id", "n_docs", "first_doc",
-                    "docs_vbyte", "tfs_vbyte", "dls_vbyte", "pos_vbyte",
-                    *([ix.gseq_col().alias("gseq")] if n_del else []))
-        )
-        matched = blocks.groupBy("shard_id").applyInPandas(
-            kern, schema=PHRASE_MATCH_SCHEMA,
-        )
+    fm = ix.shard_file_map(buckets)
+    if not fm:
+        return empty
+    cols = ["term", "n_docs", "first_doc",
+            "docs_vbyte", "tfs_vbyte", "dls_vbyte", "pos_vbyte"]
+    # range-scan work items (see _direct_topk_gen: pure-JVM input, file
+    # lists in the closure — no PythonRDD scan)
+    matched = spark.range(len(fm), numPartitions=len(fm)).mapInPandas(
+        _direct_topk_gen(
+            _phrase_match_fn(q_phrases, tombstones=tomb, slop=slop),
+            cols, terms, fm, tomb,
+        ),
+        schema=PHRASE_MATCH_SCHEMA,
+    )
     # materialize the (small) match stream once: the df-per-query count and
     # the scoring pass must see the same rows without re-running the kernel
     matched = matched.localCheckpoint(eager=True)
@@ -2405,7 +2041,7 @@ def index_prefix_search(
     Resolution happens driver-side against the vocabulary artifact
     (term_stats: |vocab| rows); the search itself delegates to
     index_search's kernels via the resolved occurrence list, so every
-    strategy/route/filter/override there serves prefix queries too."""
+    strategy/filter/override there serves prefix queries too."""
     parsed: dict[int, list[tuple[str, bool]]] = {}
     for qid, q in queries:
         # a duplicated query_id merges its occurrences, like index_search
@@ -2417,34 +2053,18 @@ def index_prefix_search(
     stats = ix.term_stats_lookup(exact) if exact else {}
     exp = ix.prefix_expand(stems, max_expansions) if stems else {}
     occ: dict[int, list[tuple[str, float]]] = {}
-    rows: list[tuple] = []
     for qid, toks in parsed.items():
-        # (term, idf, max_tf_norm) per resolved occurrence, query order
-        present: list[tuple[str, float, float]] = []
+        # (term, idf) per resolved occurrence, query order
+        present: list[tuple[str, float]] = []
         for t, is_pref in toks:
             if is_pref:
-                for term, df, mtn in exp.get(t, ()):
-                    present.append((term, idf_fn(df, ix.n_docs), mtn))
+                for term, df, _mtn in exp.get(t, ()):
+                    present.append((term, idf_fn(df, ix.n_docs)))
             elif (v := stats.get(t)) is not None:
-                present.append((t, idf_fn(v[0], ix.n_docs), v[1]))
-        if not present:
-            continue
-        occ[qid] = [(t, w) for t, w, _ in present]
-        rows.extend(_weight_rows(qid, present))
-    return index_search(
-        ix, queries, k=k, _resolved=(rows, occ), **kwargs
-    )
-
-
-def _fetch_terms(weights, exclude: dict[int, list[str]] | None) -> list[str]:
-    """The block-fetch term list: scoring terms ∪ MUST-NOT terms
-    (exclusion blocks ride the same fetch presence-only). One definition
-    shared by the direct and exchange routes — their bit-exactness
-    guarantee includes fetch scope."""
-    return sorted(
-        {t for _, t, *_ in weights}
-        | ({t for ts in exclude.values() for t in ts} if exclude else set())
-    )
+                present.append((t, idf_fn(v[0], ix.n_docs)))
+        if present:
+            occ[qid] = present
+    return index_search(ix, queries, k=k, _resolved=occ, **kwargs)
 
 
 def filtered_live_stats(ix: Index, where: dict | None = None,
@@ -2501,7 +2121,7 @@ def index_fuzzy_search(
     against the vocabulary artifact (Index.fuzzy_expand: preloaded-cache
     fast path, or a windowed plan with the cap applied IN the plan);
     the search itself delegates to index_search's kernels, so every
-    strategy/route/filter/override there serves fuzzy queries too."""
+    strategy/filter/override there serves fuzzy queries too."""
     parsed: dict[int, list[str]] = {}
     for qid, q in queries:
         # a duplicated query_id merges its occurrences, like index_search
@@ -2511,19 +2131,14 @@ def index_fuzzy_search(
         ix.fuzzy_expand(stems, max_dist, max_expansions) if stems else {}
     )
     occ: dict[int, list[tuple[str, float]]] = {}
-    rows: list[tuple] = []
     for qid, toks in parsed.items():
-        present: list[tuple[str, float, float]] = []
-        for t in toks:
-            for term, df, mtn in exp.get(t, ()):
-                present.append((term, idf_fn(df, ix.n_docs), mtn))
-        if not present:
-            continue
-        occ[qid] = [(t, w) for t, w, _ in present]
-        rows.extend(_weight_rows(qid, present))
-    return index_search(
-        ix, queries, k=k, _resolved=(rows, occ), **kwargs
-    )
+        present = [
+            (term, idf_fn(df, ix.n_docs))
+            for t in toks for term, df, _mtn in exp.get(t, ())
+        ]
+        if present:
+            occ[qid] = present
+    return index_search(ix, queries, k=k, _resolved=occ, **kwargs)
 
 
 def index_bm25f_search(
@@ -2548,8 +2163,8 @@ def index_bm25f_search(
     exactly from doc_stats integer sums (Index.bm25f_avgdl); df/idf are
     the unchanged any-field counts, matching the corpus-scan path.
 
-    Delegates to index_search's kernels (direct and exchange routes;
-    'sharded' default or 'blockmax' — the WAND kernel derives sound
+    Delegates to index_search's kernels ('sharded' default or
+    'blockmax' — the WAND kernel derives sound
     pruning bounds from the raw block integers under the weight
     envelope tf~ <= wmax*max_tf, dl~ >= wmin*min_dl), so
     where=/k1/b/tombstones/mode/min_match/exclude all compose; with
@@ -2565,92 +2180,61 @@ def index_bm25f_search(
     )
 
 
-def _auto_subsplit(ix: Index, parallelism: int, n_queries: int) -> int:
-    """Search-time kernel sub-split factor (power of two).
-
-    The kernel's group count was structurally coupled to the build-time
-    num_shards; with few shards relative to cores the last scheduling wave
-    runs mostly idle (25 groups / 8 cores = 4 waves at 78% utilization —
-    measured, VERDICT r03 #2). Target ~16 groups per core so wave
-    quantization stays <~6%, capped at 8 (per-(group,query) kernel fixed
-    cost) and so a sub-range stays >= 4 dense blocks wide (straddling
-    blocks replicate; keep that fraction a few %). Single queries skip the
-    split: their kernel is light and extra groups only add task-launch
-    latency to p50."""
-    if n_queries < 16:
-        return 1
-    shards = max(1, ix.num_shards)
-    n = 1
-    while shards * n < 16 * parallelism and n < 8:
-        n *= 2
-    span_cap = max(1, (1 << ix.shard_shift) // (4 * ix.block_size))
-    while n > 1 and n > span_cap:
-        n //= 2
-    return n
-
-
 def index_search(
     ix: Index,
     queries: list[tuple[int, str]],
     k: int = 10,
     strategy: str = "sharded",
-    prune: bool | None = None,
-    subsplit: int | None = None,
     where: dict | None = None,
     where_expr=None,
     k1: float | None = None,
     b: float | None = None,
-    direct: bool | None = None,
     mode: str = "or",
     min_match: int | None = None,
     exclude: dict[int, str] | None = None,
     fields: tuple | None = None,
     search_after: dict[int, tuple[float, int]] | None = None,
     collapse: str | None = None,
-    _resolved: tuple | None = None,
+    _resolved: dict | None = None,
 ) -> DataFrame:
     """Exact top-k BM25 from the index.
 
+    Plan (module doc): every shard's kernel pyarrow-reads only the query
+    terms' posting files of that shard, scores every query in numpy and
+    emits its local top-k. Without a side frame that is the direct plan
+    (one ``spark.range`` work item per shard, or the driver for a few
+    small queries); `where=`/`where_expr`/`collapse`, and tombstones past
+    TOMBSTONE_BROADCAST_MAX, take the side-direct plan. An index whose
+    posting layout predates 2 is refused (Index.shard_file_map);
+    ``compact_index`` upgrades it.
+
     strategy:
-      "sharded"     (default) shard-grouped exact scoring: posting blocks of
-                    the query terms shuffle ONCE by shard (never replicated
-                    per query); each shard task scores every query in numpy
-                    and emits only its local top-k. Minimal shuffle, exact.
-      "blockmax"    same one-shuffle plan with block-max pruning: only
-                    blocks that can affect the top-k are decoded; exact.
-                    Clean shape (no tombstones/where/boolean/field
-                    weights): INTERVAL-pruned dense kernel — the bounds
-                    analysis runs vectorized over doc-range intervals
+      "sharded"     (default) exact dense scoring: each shard task decodes
+                    every block of the query terms once and folds every
+                    query over it.
+      "blockmax"    block-max pruning: only blocks that can affect the
+                    top-k are decoded; exact.
+                    Clean shape (no exclude/field weights): INTERVAL-
+                    pruned dense kernel — the bounds analysis runs
+                    vectorized over doc-range intervals
                     (_interval_prune) and surviving blocks feed the
                     unchanged densified fold, so it degrades to
                     'sharded' speed when bounds exclude nothing
                     (BENCH_BOOL_AB.json: the per-block WAND kernel's
                     Python call overhead lost to the dense kernel at
-                    every benchable scale). Masked/boolean/field shapes:
-                    3-phase block-max WAND (_wand_topk_fn), whose
-                    bootstrap masks at decode time.
-      "blockmax_plan" legacy DataFrame-level 3-phase traversal (module doc)
-                    — retained as a cross-check; ~8 Spark jobs per batch.
-      "exhaustive"  decode every block of the query's terms — the
-                    cross-check baseline.
+                    every benchable scale). Excluded/field-weighted
+                    shapes: 3-phase block-max WAND (_wand_topk_fn),
+                    whose bootstrap masks at decode time.
 
-    `prune` is the legacy bool alias (True→blockmax, False→exhaustive).
-
-    `subsplit` (sharded/blockmax only) splits each shard group into that
-    many finer doc-range groups at SEARCH time (power of two; blocks
-    straddling a sub-boundary are replicated and the kernel masks decoded
-    postings to the group's range — exact, bit-identical scores). Default
-    None auto-derives from cluster parallelism vs num_shards; 1 disables.
-
-    `where` (sharded/blockmax strategies) restricts the top-k to docs whose
-    stored attributes match every predicate: `{"lang": "en"}` (equality)
-    or `{"source": ["web", "wiki"]}` (membership). Attributes come from
-    the build's `attr_cols` stored in doc_stats; the qualifying doc ids
-    cogroup with the posting blocks on the same doc-range key (no
-    broadcast — scales to any corpus/filter size) and the kernel masks
-    decoded postings to them. Standard filtered-search semantics: the
-    filter narrows CANDIDATES; idf/avgdl stay global. Exact top-k of the
-    filtered set, same tie contract.
+    `where` restricts the top-k to docs whose stored attributes match
+    every predicate: `{"lang": "en"}` (equality) or `{"source": ["web",
+    "wiki"]}` (membership). Attributes come from the build's `attr_cols`
+    stored in doc_stats; the qualifying doc ids form the side frame,
+    grouped by the doc-range shard key (no broadcast — scales to any
+    corpus/filter size), and the kernel masks decoded postings to them.
+    Standard filtered-search semantics: the filter narrows CANDIDATES;
+    idf/avgdl stay global. Exact top-k of the filtered set, same tie
+    contract.
 
     `where_expr` accepts an arbitrary Column predicate over the stored
     doc_stats columns for shapes the dict can't say (ranges, nulls,
@@ -2663,14 +2247,7 @@ def index_search(
     its search-time knob the same way, benchmarks.yml ef_search). The
     blockmax strategy derives sound pruning bounds for the effective
     (k1, b) from each block's raw (max_tf, min_tf, min_dl, max_dl)
-    metadata (layout >= 0.7); only the legacy blockmax_plan cross-check
-    path refuses overrides.
-
-    `direct` controls the no-exchange route (posting layout >= 2,
-    'sharded' only): None (default) auto-selects it whenever eligible,
-    False forces the exchange route, True requires it (raises with the
-    reason when ineligible). Results are bit-exact across routes — same
-    kernel, same fold order.
+    metadata.
 
     `mode` selects the boolean semantics over the query's tokens:
     "or" (default) ranks any doc matching >= 1 token; "and" ranks only
@@ -2678,8 +2255,8 @@ def index_search(
     classic search-engine AND query). Scores are the same full BM25
     sums (an AND hit matches every term, so its OR and AND scores are
     bitwise identical); the doc-range sharding makes the coverage test
-    group-local (see _sharded_topk_fn). Served by the 'sharded'
-    strategy, both routes; composes with where=/k1/b/tombstones.
+    group-local (see _sharded_topk_fn). Composes with
+    where=/k1/b/tombstones.
     On 'blockmax' these queries run CANDIDATE-DRIVEN conjunctive
     retrieval (see _wand_topk_fn). Measured guidance (BENCH_BOOL_AB.json):
     on the fixture corpus the dense 'sharded' kernel beats 'blockmax'
@@ -2699,7 +2276,7 @@ def index_search(
     mode='and'. Scores are the unchanged full BM25 sums of the
     surviving docs; the coverage test is group-local and exact, same
     as mode='and' (see _sharded_topk_fn). Composes with where=/k1/b/
-    tombstones/exclude, both routes, 'sharded' and 'blockmax'.
+    tombstones/exclude.
 
     `exclude` is Lucene's MUST_NOT: {query_id: "tokens ..."} — docs
     containing ANY of that query's excluded tokens are dropped from its
@@ -2709,9 +2286,9 @@ def index_search(
     scored and excluded in the SAME query raises (always-empty by
     construction) — except under prefix expansion, where excluding one
     of a wildcard's own expansions ("w07*" minus "w0777") is legitimate
-    and simply drops that token's docs. 'sharded' and 'blockmax'
-    strategies (the WAND kernel filters excluded docs at accumulation
-    time so its τ bound stays sound), both routes; composes with
+    and simply drops that token's docs. On 'blockmax' the WAND kernel
+    filters excluded docs at accumulation time so its τ bound stays
+    sound; composes with
     mode/min_match/where=/k1/b/tombstones and
     with prefix search (exclusion tokens are exact, never expanded).
 
@@ -2726,8 +2303,8 @@ def index_search(
     float equality is sound because cursors come from the engine's
     own bit-exact scores. 'sharded' strategy only (a pruning
     strategy's theta bootstrap counts docs the cursor excludes, so
-    theta could exceed the true kth-after-cursor score); both routes;
-    composes with where=/mode/min_match/exclude/k1/b/tombstones.
+    theta could exceed the true kth-after-cursor score); composes with
+    where=/mode/min_match/exclude/k1/b/tombstones.
 
     `collapse` is OpenSearch's FIELD COLLAPSING: name a stored
     attribute (BuildParams(attr_cols=...)) and each query's top-k
@@ -2736,10 +2313,9 @@ def index_search(
     over the surviving group representatives — "best hit per
     conversation/source/author". The output gains a ``value`` column
     (the group key, cast to string). Plan: the attribute side (one row
-    per eligible doc: id + value, pre-filtered by where=) groups by
-    the shard key exactly like filtered search — on a layout-2 index
-    it rides the SIDE-GROUPED direct route (blocks pyarrow-read
-    in-task, never exchanged); the kernel collapses its shard-local
+    per eligible doc: id + value, pre-filtered by where=) is the side
+    frame, exactly like filtered search (blocks pyarrow-read in-task,
+    never exchanged); the kernel collapses its shard-local
     candidates (at most one row per group value per query), and a
     two-window merge picks each group's global best then ranks them.
     Exact: a group in the global collapsed top-k has < k groups ahead
@@ -2750,43 +2326,23 @@ def index_search(
     search_after (a doc-level cursor could resurface a page-1 group
     via its second-best doc).
 
-    `_resolved` (internal) bypasses _query_weights with pre-expanded
-    (weights, occ) — the prefix-search entry point resolves wildcard
+    `_resolved` (internal) bypasses _query_weights with a pre-expanded
+    occurrence map — the prefix-search entry point resolves wildcard
     tokens against the vocabulary and delegates everything else here.
     """
     from .jobs import TOMBSTONE_BROADCAST_MAX
+    from .xxhash64 import spark_pmod_bucket
 
-    if prune is not None:
-        strategy = "blockmax" if prune else "exhaustive"
+    if strategy not in ("sharded", "blockmax"):
+        raise ValueError(
+            f"strategy must be 'sharded' or 'blockmax', got {strategy!r}"
+        )
     n_del = ix.n_deleted()
     # small delete sets ship into kernels as closure (ids, del_seq) arrays;
-    # large ones co-partition with the blocks on the doc-range key exactly
-    # like `where=` qualifying ids — no driver array, no size cap
+    # large ones ride the side frame as kind=1 rows grouped by shard
+    # exactly like `where=` qualifying ids — no driver array, no size cap
     use_cotomb = n_del > TOMBSTONE_BROADCAST_MAX
     tomb = ix.tombstones_pair() if (n_del and not use_cotomb) else None
-    if n_del:
-        # blockmax stays available under tombstones: the WAND kernel masks
-        # dead postings per (id, group-seq) and switches its θ bootstrap
-        # to live-count decodes (sound; see _wand_topk_fn). Only the two
-        # legacy cross-check paths refuse.
-        if strategy == "blockmax_plan":
-            raise ValueError(
-                "blockmax_plan does not support tombstoned indexes; use "
-                "strategy='sharded'/'blockmax' (or compact_index first)"
-            )
-        elif strategy == "exhaustive" and use_cotomb:
-            raise ValueError(
-                f"{n_del} tombstoned docs exceed the closure-mask "
-                f"threshold ({TOMBSTONE_BROADCAST_MAX}); the exhaustive "
-                "cross-check path has no distributed mask — use "
-                "strategy='sharded' or compact_index first"
-            )
-    if (k1 is not None or b is not None) and strategy == "blockmax_plan":
-        raise ValueError(
-            "query-time k1/b overrides are not supported by the legacy "
-            "blockmax_plan cross-check path; use 'sharded', 'blockmax' or "
-            "'exhaustive'"
-        )
     eff_k1 = ix.k1 if k1 is None else float(k1)
     eff_b = ix.b if b is None else float(b)
     # range-validate the shape parameters: b > 1 makes the tf_norm
@@ -2815,11 +2371,6 @@ def index_search(
             raise ValueError(
                 f"field weights must be > 0, got ({w_t}, {w_b})"
             )
-        if strategy not in ("sharded", "blockmax"):
-            raise ValueError(
-                "fields= (BM25F) is served by the 'sharded' and "
-                "'blockmax' strategies only"
-            )
         if not ix.store_positions:
             raise ValueError(
                 "field-weighted search derives per-field tf from the "
@@ -2833,21 +2384,16 @@ def index_search(
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     if _resolved is not None:
-        weights, occ = _resolved
+        occ = _resolved
         if mode == "and":
             raise ValueError(
                 "mode='and' does not compose with prefix expansion "
                 "(coverage over expanded synonym sets is undefined)"
             )
     else:
-        weights, occ = _query_weights(ix, queries)
+        occ = _query_weights(ix, queries)
     and_need: dict[int, int] | None = None
     if mode == "and":
-        if strategy not in ("sharded", "blockmax"):
-            raise ValueError(
-                "mode='and' is served by the 'sharded' and 'blockmax' "
-                "strategies only"
-            )
         # required count = the query's distinct TOKENS (vocabulary
         # membership included: a token absent from the whole corpus makes
         # the conjunction unsatisfiable, so the query drops here instead
@@ -2867,7 +2413,6 @@ def index_search(
                 and_need[qid] = len(toks)
             else:
                 del occ[qid]
-        weights = [r for r in weights if r[0] in occ]
     if min_match is not None:
         if mode == "and":
             raise ValueError(
@@ -2878,11 +2423,6 @@ def index_search(
             raise ValueError(
                 "min_match does not compose with prefix expansion "
                 "(coverage over expanded synonym sets is undefined)"
-            )
-        if strategy not in ("sharded", "blockmax"):
-            raise ValueError(
-                "min_match is served by the 'sharded' and 'blockmax' "
-                "strategies only"
             )
         if not isinstance(min_match, int) or min_match < 1:
             raise ValueError(
@@ -2898,14 +2438,8 @@ def index_search(
                     # unsatisfiable, drop driver-side (mirrors the SQL
                     # oracle, where no doc can reach the HAVING threshold)
                     del occ[qid]
-            weights = [r for r in weights if r[0] in occ]
     excl_map: dict[int, list[str]] | None = None
     if exclude:
-        if strategy not in ("sharded", "blockmax"):
-            raise ValueError(
-                "exclude is served by the 'sharded' and 'blockmax' "
-                "strategies only"
-            )
         ex_tokens = {qid: tokenize_py(txt) for qid, txt in exclude.items()}
         # user-typed exact tokens that are both scored and excluded make
         # the query always-empty — an error worth raising. In _resolved
@@ -2969,11 +2503,6 @@ def index_search(
                 "level cursor mask could resurface a page-1 group via "
                 "its second-best doc"
             )
-        if ix.shard_shift is None:
-            raise ValueError(
-                "collapse needs the doc-range shard layout (engine >= "
-                "0.2); rebuild the index"
-            )
         ds_cols = ix.live_doc_stats().columns
         if collapse not in ds_cols:
             raise ValueError(
@@ -2985,466 +2514,111 @@ def index_search(
         "query_id int, rank int, doc_id long, score double"
         + (", value string" if collapse is not None else "")
     )
-    if not weights:
+    if not occ:
         return spark.createDataFrame([], out_schema)
-    decode = _decode_gen(eff_k1, eff_b, ix.avgdl, tombstones=tomb)
-
-    if (where or where_expr is not None) and strategy not in (
-        "sharded", "blockmax"
-    ):
-        raise ValueError(
-            "where= filters are supported on the 'sharded' and 'blockmax' "
-            "strategies only"
-        )
-    # k1/b overrides on blockmax need the RAW per-block bound inputs
-    # (max_tf/min_tf/min_dl/max_dl, layout >= 0.7) to derive sound bounds
+    # k1/b overrides and field weights on blockmax derive the pruning
+    # bounds from the RAW per-block integers (max_tf/min_tf/min_dl/max_dl)
     # under the effective parameters at query time
     derived = strategy == "blockmax" and (
         eff_k1 != ix.k1 or eff_b != ix.b or fw is not None
     )
-    if derived and "max_tf" not in ix.postings().columns:
-        raise ValueError(
-            "this index predates the raw block-bound layout (engine < 0.7):"
-            " blockmax cannot derive pruning bounds for overridden k1/b — "
-            "rebuild the index, or use strategy='sharded'"
+    # the block fetch widens scoring terms with MUST-NOT terms (their
+    # blocks ride the same read, presence-only)
+    terms = sorted(
+        {t for tw in occ.values() for t, _ in tw}
+        | ({t for ts in excl_map.values() for t in ts} if excl_map else set())
+    )
+    buckets = sorted(
+        {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
+    )
+    fm = ix.shard_file_map(buckets)  # refuses posting layout < 2
+    if not fm:
+        return spark.createDataFrame([], out_schema)
+    cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
+    if fw is not None:
+        cols.append("pos_vbyte")
+    if strategy == "blockmax":
+        cols += ["first_doc", "last_doc"]
+        # derived bounds replace the precomputed tf_norm bounds entirely —
+        # don't read columns the kernel ignores
+        cols += (
+            ["max_tf", "min_tf", "min_dl", "max_dl"] if derived
+            else ["max_tf_norm", "min_tf_norm"]
         )
-
-    if direct and strategy not in ("sharded", "blockmax"):
-        raise ValueError(
-            "direct=True is not serviceable: "
-            f"strategy={strategy!r} (direct serves 'sharded' and 'blockmax')"
+    # collapse values ride the side frame exactly like qualifying ids
+    has_qual = bool(where) or where_expr is not None or collapse is not None
+    needs_side = has_qual or use_cotomb
+    kw = dict(side=needs_side, has_qual=has_qual, tombstones=tomb,
+              and_need=and_need)
+    if strategy == "blockmax" and not excl_map and fw is None:
+        # interval-pruned dense kernel (BENCH_BOOL_AB.json follow-up): the
+        # bounds analysis runs vectorized over doc-range intervals, the
+        # scoring is the unchanged densified fold — never slower than
+        # 'sharded', skips decode where bounds pay; conjunctive queries
+        # (and_need) compose via coverage liveness + the coverage-aware
+        # seed theta, and tombstones / where= via mask-exact seed decode
+        # (_interval_prune doc)
+        kern = _sharded_topk_fn(
+            occ, eff_k1, eff_b, eff_avgdl, k,
+            prune_bounds="derived" if derived else "stored", **kw,
         )
-
-    if strategy in ("sharded", "blockmax"):
-        from .xxhash64 import spark_pmod_bucket
-
-        if ix.shard_shift is None:
-            raise ValueError(
-                "manifest predates the shard_shift layout (engine < 0.2); "
-                "rebuild the index, or use strategy='exhaustive'/"
-                "'blockmax_plan' which do not need doc-range shards"
-            )
-        # DIRECT route (default where eligible): shard-clustered layout-2
-        # files let each kernel task pyarrow-read exactly its shard — no
-        # scan->kernel exchange, no JVM->Python Arrow hop (the near-fixed
-        # ~0.9 s/batch that capped core-scaling; _direct_topk_gen). The
-        # where=/distributed-tombstone variants need the cogrouped
-        # exchange, and explicit subsplit requests the exchange kernel's
-        # finer grouping, so those fall through.
-        # collapse always needs the attribute side (values co-partitioned
-        # with the blocks), so it routes exactly like filtered search
-        _needs_side = (
-            bool(where) or where_expr is not None or collapse is not None
+    elif strategy == "blockmax":
+        kern = _wand_topk_fn(
+            occ, eff_k1, eff_b, eff_avgdl, k, derived_bounds=derived,
+            exclude=excl_map, fieldw=fw, **kw,
         )
-        use_direct = (
-            direct is not False
-            and ix.posting_layout >= 2
-            and not _needs_side
-            and not use_cotomb
-            and subsplit in (None, 1)
+    else:
+        kern = _sharded_topk_fn(
+            occ, eff_k1, eff_b, eff_avgdl, k, exclude=excl_map, fieldw=fw,
+            after=search_after, collapse=collapse is not None, **kw,
         )
-        # SIDE-GROUPED direct (r06): filtered search on a layout-2 index
-        # groups only the SIDE (qualifying ids [+ distributed tombstones])
-        # by the shard key and pyarrow-reads each shard's blocks IN-TASK —
-        # the blocks never cross an exchange, only the small side does.
-        # Skipping shards absent from the side is exact: no qualifying
-        # docs there. Whole-shard groups only (files are per shard).
-        use_side_direct = (
-            direct is not False
-            and ix.posting_layout >= 2
-            and _needs_side
-            and subsplit in (None, 1)
-        )
-        if direct and not (use_direct or use_side_direct):
-            why = (
-                "posting layout < 2 (rebuild or compact_index first)"
-                if ix.posting_layout < 2
-                else "the distributed tombstone mask cogroups with the "
-                     "blocks"
-                if use_cotomb and not _needs_side
-                else f"subsplit={subsplit} requests the exchange kernel"
-            )
-            raise ValueError(f"direct=True is not serviceable: {why}")
-        if use_direct:
-            return _direct_search(
-                ix, weights, occ, eff_k1, eff_b, k, tomb,
-                strategy=strategy, derived=derived, and_need=and_need,
-                exclude=excl_map, fieldw=fw, eff_avgdl=eff_avgdl,
-                after=search_after,
-                # an EXPLICIT direct=True asks for the distributed
-                # no-exchange plan (plan-contract callers); only the
-                # auto route may serve driver-side
-                allow_local=direct is None,
-            )
-        if use_side_direct:
-            terms = _fetch_terms(weights, excl_map)
-            buckets = sorted(
-                {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
-            )
-            cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte",
-                    "dls_vbyte"]
-            if fw is not None:
-                cols.append("pos_vbyte")
-            if strategy == "blockmax":
-                cols += ["first_doc", "last_doc"]
-                cols += (
-                    ["max_tf", "min_tf", "min_dl", "max_dl"] if derived
-                    else ["max_tf_norm", "min_tf_norm"]
-                )
-            val_cols = (
-                [F.col(collapse).cast("string").alias("value")]
+    if not needs_side:
+        return _direct_search(ix, kern, cols, terms, fm, tomb, occ, k)
+    # SIDE-DIRECT: only the side frame is grouped by shard; each group
+    # pyarrow-reads its shard's blocks in-task (_direct_side_fn)
+    val_cols = (
+        [F.col(collapse).cast("string").alias("value")]
+        if collapse is not None else []
+    )
+    sides = []
+    if has_qual:
+        sides.append(filtered_live_stats(ix, where, where_expr).select(
+            "doc_id",
+            F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
+            F.lit(0).alias("kind"),
+            F.lit(0).cast("long").alias("seq"),
+            *val_cols,
+        ))
+    if use_cotomb:
+        sides.append(ix.tombstones_df().select(
+            "doc_id",
+            F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
+            F.lit(1).alias("kind"),
+            F.col("del_seq").alias("seq"),
+            *(
+                [F.lit(None).cast("string").alias("value")]
                 if collapse is not None else []
-            )
-            sides = [
-                filtered_live_stats(ix, where, where_expr).select(
-                    "doc_id",
-                    F.shiftright("doc_id", ix.shard_shift)
-                    .alias("shard_id"),
-                    F.lit(0).alias("kind"),
-                    F.lit(0).cast("long").alias("seq"),
-                    *val_cols,
-                )
-            ]
-            if use_cotomb:
-                sides.append(ix.tombstones_df().select(
-                    "doc_id",
-                    F.shiftright("doc_id", ix.shard_shift)
-                    .alias("shard_id"),
-                    F.lit(1).alias("kind"),
-                    F.col("del_seq").alias("seq"),
-                    *(
-                        [F.lit(None).cast("string").alias("value")]
-                        if collapse is not None else []
-                    ),
-                ))
-            side = (
-                sides[0] if len(sides) == 1
-                else sides[0].unionByName(sides[1])
-            )
-            if strategy == "blockmax" and not excl_map and fw is None:
-                # filtered search on the pruned path: the qualifying ids
-                # arrive as the cogrouped side, so the seed theta masks
-                # to them exactly (_interval_prune tomb/qual doc)
-                kern = _sharded_topk_fn(
-                    occ, eff_k1, eff_b, eff_avgdl, k, None,
-                    cogroup=True, has_qual=True, tombstones=tomb,
-                    and_need=and_need,
-                    prune_bounds="derived" if derived else "stored",
-                )
-            elif strategy == "blockmax":
-                kern = _wand_topk_fn(
-                    occ, eff_k1, eff_b, eff_avgdl, k, None,
-                    derived_bounds=derived, cogroup=True, has_qual=True,
-                    tombstones=tomb, and_need=and_need, exclude=excl_map,
-                    fieldw=fw,
-                )
-            else:
-                kern = _sharded_topk_fn(
-                    occ, eff_k1, eff_b, eff_avgdl, k, None,
-                    cogroup=True, has_qual=True, tombstones=tomb,
-                    and_need=and_need, exclude=excl_map, fieldw=fw,
-                    after=search_after, collapse=collapse is not None,
-                )
-            shard_tops = side.groupBy("shard_id").applyInPandas(
-                _direct_side_fn(kern, cols, terms,
-                                ix.shard_file_map(buckets),
-                                need_gseq=bool(n_del)),
-                schema=(
-                    "query_id int, doc_id long, score double"
-                    + (", value string" if collapse is not None else "")
-                ),
-            )
-            if collapse is not None:
-                return _collapse_window(shard_tops, k)
-            return topk_window(shard_tops, k)
-        # auto-split only the dense sharded kernel: WAND's block pruning
-        # already bounds its per-group work, and finer groups just multiply
-        # its per-group fixed cost (measured: 20-query blockmax 2.34 s at
-        # n=1 vs 2.71 s at n=4 on local[8]); explicit subsplit still
-        # applies to both
-        n_sub = (
-            subsplit
-            if subsplit is not None
-            else 1
-            if strategy == "blockmax"
-            else _auto_subsplit(
-                ix, spark.sparkContext.defaultParallelism, len(queries)
-            )
-        )
-        if n_sub < 1 or (n_sub & (n_sub - 1)):
-            raise ValueError(f"subsplit must be a power of two >= 1, got {n_sub}")
-        n_sub = min(n_sub, 1 << ix.shard_shift)
-        meta_cols = (
-            ["first_doc", "last_doc"]
-            + (["max_tf", "min_tf", "min_dl", "max_dl"] if derived
-               else ["max_tf_norm", "min_tf_norm"])
-            if strategy == "blockmax"
-            else []
-        )
-        terms = _fetch_terms(weights, excl_map)
-        buckets = sorted({spark_pmod_bucket(t, ix.num_term_buckets) for t in terms})
-        blocks = (
-            ix.postings()
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .select("term", "shard_id", "n_docs",
-                    "first_doc", "last_doc",
-                    *[c for c in meta_cols if c not in
-                      ("first_doc", "last_doc")],
-                    "docs_vbyte", "tfs_vbyte", "dls_vbyte",
-                    # field-weighted scoring reads the positions stream
-                    *(["pos_vbyte"] if fw is not None else []),
-                    # per-group tombstone masking needs each block's
-                    # lineage seq (codecs.dead_mask)
-                    *([ix.gseq_col().alias("gseq")] if n_del else []))
-        )
-        if n_sub > 1:
-            sub_shift = ix.shard_shift - (n_sub.bit_length() - 1)
-            # replicate each block to every sub-range it overlaps (a dense
-            # block spans ~block_size ids, a sub-range >= 4*block_size, so
-            # the straddle fraction is a few %); the kernel masks decoded
-            # ids to its range, so each doc is scored exactly once
-            blocks = blocks.withColumn(
-                "vshard",
-                F.explode(
-                    F.sequence(
-                        F.shiftright("first_doc", sub_shift),
-                        F.shiftright("last_doc", sub_shift),
-                    )
-                ),
-            )
-            group_key = "vshard"
-        else:
-            sub_shift = None
-            group_key = "shard_id"
-        if strategy != "blockmax":
-            blocks = blocks.drop("first_doc", "last_doc")
-        has_qual = (
-            bool(where) or where_expr is not None or collapse is not None
-        )
-        if has_qual or use_cotomb:
-            key_shift = sub_shift if sub_shift is not None else ix.shard_shift
-            val_cols = (
-                [F.col(collapse).cast("string").alias("value")]
-                if collapse is not None else []
-            )
-            sides = []
-            if has_qual:
-                qual = filtered_live_stats(ix, where, where_expr)
-                # co-partition qualifying ids on the SAME doc-range key as
-                # the blocks: a doc's group key is unique (no replication)
-                sides.append(qual.select(
-                    "doc_id",
-                    F.shiftright("doc_id", key_shift).alias(group_key),
-                    F.lit(0).alias("kind"),
-                    F.lit(0).cast("long").alias("seq"),
-                    *val_cols,
-                ))
-            if use_cotomb:
-                # distributed tombstones: same co-partitioning, kind=1
-                sides.append(ix.tombstones_df().select(
-                    "doc_id",
-                    F.shiftright("doc_id", key_shift).alias(group_key),
-                    F.lit(1).alias("kind"),
-                    F.col("del_seq").alias("seq"),
-                    *(
-                        [F.lit(None).cast("string").alias("value")]
-                        if collapse is not None else []
-                    ),
-                ))
-            side = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
-            if strategy == "blockmax" and not excl_map and fw is None:
-                # pruned path with cogrouped masks (where= and/or
-                # distributed tombstones): seed theta masks exactly
-                kern = _sharded_topk_fn(
-                    occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                    cogroup=True, has_qual=has_qual, tombstones=tomb,
-                    and_need=and_need,
-                    prune_bounds="derived" if derived else "stored",
-                )
-            elif strategy == "blockmax":
-                kern = _wand_topk_fn(
-                    occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                    derived_bounds=derived, cogroup=True,
-                    has_qual=has_qual, tombstones=tomb,
-                    and_need=and_need, exclude=excl_map, fieldw=fw,
-                )
-            else:
-                kern = _sharded_topk_fn(
-                    occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                    cogroup=True, has_qual=has_qual, tombstones=tomb,
-                    and_need=and_need, exclude=excl_map, fieldw=fw,
-                    after=search_after, collapse=collapse is not None,
-                )
-            shard_tops = (
-                blocks.groupBy(group_key)
-                .cogroup(side.groupBy(group_key))
-                .applyInPandas(
-                    kern,
-                    schema=(
-                        "query_id int, doc_id long, score double"
-                        + (", value string" if collapse is not None
-                           else "")
-                    ),
-                )
-            )
-            if collapse is not None:
-                return _collapse_window(shard_tops, k)
-            return topk_window(shard_tops, k)
-        if strategy == "blockmax" and not excl_map and fw is None:
-            # same interval-pruned dense kernel as the direct route
-            # (conjunctive + tombstoned shapes included)
-            kern = _sharded_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                prune_bounds="derived" if derived else "stored",
-                and_need=and_need, tombstones=tomb,
-            )
-        elif strategy == "blockmax":
-            kern = _wand_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                derived_bounds=derived, tombstones=tomb,
-                and_need=and_need, exclude=excl_map, fieldw=fw,
-            )
-        else:
-            kern = _sharded_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                tombstones=tomb, and_need=and_need, exclude=excl_map,
-                fieldw=fw, after=search_after,
-            )
-        shard_tops = blocks.groupBy(group_key).applyInPandas(
-            kern, schema="query_id int, doc_id long, score double"
-        )
-        return topk_window(shard_tops, k)
-
-    qblocks = _matched_blocks(ix, weights, with_gseq=tomb is not None)
-    # canonical per-doc summation for the plan paths too: sum contributions
-    # in query-occurrence order (sort_array by qpos + ordered fold), so
-    # exact ties agree bit-for-bit with the oracle's accumulation — the
-    # same fold score_all uses (sparkbm25.query.canonical_score_sum)
-    canonical_sum = canonical_score_sum()
-    if strategy == "exhaustive":
-        contribs = qblocks.mapInPandas(decode, schema=DECODE_SCHEMA)
-        scored = contribs.groupBy("query_id", "doc_id").agg(
-            canonical_sum.alias("score")
-        )
-        return topk_window(scored, k)
-
-    if strategy != "blockmax_plan":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    theta = _theta(qblocks, k)  # (query_id, theta)
-    qb = qblocks.join(F.broadcast(theta), "query_id", "left").withColumn(
-        "theta", F.coalesce("theta", F.lit(0.0))
+            ),
+        ))
+        if not has_qual:
+            # the side-direct plan skips every shard absent from the side,
+            # which is exact only when the side lists the qualifying docs;
+            # a tombstone-only side would drop tombstone-free shards, so
+            # it carries one kind=2 anchor row per shard the query reads
+            sides.append(local_df(
+                spark, [(0, s, 2, 0) for s in sorted(fm)],
+                "doc_id long, shard_id long, kind int, seq long",
+            ))
+    side = sides[0]
+    for extra in sides[1:]:
+        side = side.unionByName(extra)
+    shard_tops = side.groupBy("shard_id").applyInPandas(
+        _direct_side_fn(kern, cols, terms, fm, need_gseq=bool(n_del)),
+        schema=(
+            "query_id int, doc_id long, score double"
+            + (", value string" if collapse is not None else "")
+        ),
     )
-    # same 1-ulp hazard class as the candidate filter: widen the survivor
-    # set by a relative epsilon (sound — pruning less is always safe)
-    ub_doc = F.col("w") * F.col("max_tf_norm") + F.col("rest")
-    theta_eps = F.col("theta") - F.abs(F.col("theta")) * 1e-9
-    survivors = qb.filter(ub_doc >= theta_eps)
-    pruned = qb.filter(ub_doc < theta_eps)
-
-    contribs = survivors.mapInPandas(decode, schema=DECODE_SCHEMA)
-    partial = contribs.groupBy("query_id", "doc_id").agg(
-        F.sum("contrib").alias("P"),
-        F.sum("w_term").alias("contributed_ub"),
-        F.collect_set("term").alias("cterms"),
-    )
-    # total UB per query (driver-side tiny)
-    total_ub = {}
-    for qid, _t, _w, ub, rest, _qp in weights:
-        total_ub[qid] = max(total_ub.get(qid, 0.0), ub + rest)
-    tub = local_df(
-        spark, [(q, v) for q, v in total_ub.items()],
-        "query_id int, total_ub double",
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("P"), F.asc("doc_id"))
-    with_tau = partial.withColumn("rn", F.row_number().over(wk))
-    tau = (
-        with_tau.filter(F.col("rn") == k)
-        .select("query_id", F.col("P").alias("tau"))
-    )
-    # M = UB of the missing terms' contributions. total_ub (driver sum) and
-    # contributed_ub (Spark sum of the same values, different order) can
-    # differ by ~1 ulp, making M negative for a doc whose true M is 0 —
-    # which silently drops the kth doc (found by fuzzing). Clamp M >= 0 and
-    # give the filter a relative epsilon margin: both only WIDEN the
-    # candidate set, so soundness is preserved at the cost of a few extra
-    # exact rescores.
-    cand = (
-        partial.join(F.broadcast(tau), "query_id", "left")
-        .join(F.broadcast(tub), "query_id")
-        .withColumn("tau", F.coalesce("tau", F.lit(float("-inf"))))
-        .withColumn(
-            "M", F.greatest(F.col("total_ub") - F.col("contributed_ub"), F.lit(0.0))
-        )
-        .filter(
-            F.col("P") + F.col("M")
-            >= F.col("tau") - F.abs(F.col("tau")) * 1e-9
-        )
-    )
-    cand = cand.cache()
-    try:
-        # Phase 3, fully distributed (no driver-side candidate collect —
-        # weak-pruning query batches can make the candidate set a large
-        # fraction of the corpus): per candidate, the query terms that did
-        # NOT contribute; then pruned blocks whose doc range covers that
-        # candidate, with the wanted ids gathered per block.
-        qterms_df = local_df(
-            spark, [(qid, t, qpos) for qid, t, _w, _ub, _rest, qpos in weights],
-            "query_id int, term string, qpos int",
-        )
-        # shard_id is computable on the candidate side (doc-range shards:
-        # shard_id = doc_id >> shard_shift), so the rescore equi-join key is
-        # (query, term, shard) — a head term with B pruned blocks and C
-        # candidates materializes B_shard x C_shard rows per shard instead
-        # of B x C per query (the quadratic head-term hazard, VERDICT #5);
-        # exact because a block's [first_doc, last_doc] lies inside one shard
-        shard_shift = int(ix.manifest["build"]["shard_shift"])
-        missing = (
-            cand.select("query_id", "doc_id", "cterms")
-            .join(F.broadcast(qterms_df), "query_id")
-            .filter(~F.array_contains("cterms", F.col("term")))
-            .select(
-                "query_id", "term", "qpos", "doc_id",
-                F.shiftright(F.col("doc_id"), shard_shift).alias("shard_id"),
-            )
-        )
-        to_rescore = (
-            pruned.join(missing, ["query_id", "term", "qpos", "shard_id"])
-            .filter(
-                (F.col("doc_id") >= F.col("first_doc"))
-                & (F.col("doc_id") <= F.col("last_doc"))
-            )
-            .groupBy("query_id", "term", "qpos", "shard_id", "block_id")
-            .agg(
-                F.first("w").alias("w"),
-                F.first("n_docs").alias("n_docs"),
-                F.first("docs_vbyte").alias("docs_vbyte"),
-                F.first("tfs_vbyte").alias("tfs_vbyte"),
-                F.first("dls_vbyte").alias("dls_vbyte"),
-                F.collect_list("doc_id").alias("wanted"),
-            )
-        )
-        extra = to_rescore.mapInPandas(
-            _rescore_gen(ix.k1, ix.b, ix.avgdl), schema=EXTRA_SCHEMA
-        )
-        # final scores canonically: union the candidates' surviving-block
-        # contributions with the rescored missing ones and fold in query-
-        # occurrence order — bit-identical to the oracle on exact ties
-        base_rows = contribs.join(
-            cand.select("query_id", "doc_id"), ["query_id", "doc_id"],
-            "left_semi",
-        ).select("query_id", "doc_id", "qpos", "contrib")
-        extra_rows = extra.select(
-            "query_id", "doc_id", "qpos", F.col("extra").alias("contrib")
-        )
-        final = (
-            base_rows.unionByName(extra_rows)
-            .groupBy("query_id", "doc_id")
-            .agg(canonical_sum.alias("score"))
-        )
-        out = topk_window(final, k)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        cand.unpersist()
-    return out
+    if collapse is not None:
+        return _collapse_window(shard_tops, k)
+    return topk_window(shard_tops, k)

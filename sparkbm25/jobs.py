@@ -262,9 +262,9 @@ TOMBSTONES_DIR = "tombstones"
 # driver-side tombstone threshold for SEARCH masking: small delete sets
 # ride into kernels as sorted (id, del_seq) closure arrays (16 B/id via
 # Arrow — the p50-friendly path); past the threshold search switches to
-# the fully distributed cogroup path (tombstones co-partitioned with the
-# posting blocks on the doc-range key, exactly like `where=` qualifying
-# ids) — no driver array, no cap, no refusal.
+# the fully distributed side-direct path (tombstones grouped by the
+# doc-range shard key, exactly like `where=` qualifying ids) — no driver
+# array, no cap, no refusal.
 TOMBSTONE_BROADCAST_MAX = int(
     os.environ.get("SPARKBM25_TOMBSTONE_BROADCAST_MAX", "1000000")
 )
@@ -678,15 +678,12 @@ class Index:
         self.k1: float = b["k1"]
         self.b: float = b["b"]
         self.num_term_buckets: int = b["num_term_buckets"]
-        # lenient reads: a pre-0.2 manifest (no shard_shift) must still
-        # open for the plan-level strategies; the sharded/blockmax path
-        # raises its own descriptive error when these are missing
         self.num_shards: int = b.get("num_shards", 8)  # BuildParams default
         self.shard_shift: int | None = b.get("shard_shift")
         self.block_size: int = b.get("block_size", 128)
         # physical postings layout generation (build.POSTING_LAYOUT):
-        # >= 2 means shard-clustered files, eligible for the direct
-        # (no-exchange) search route; pre-0.8 indexes report 1
+        # >= 2 means shard-clustered files, which every search plan reads
+        # (shard_file_map); pre-0.8 indexes report 1 and need compaction
         self.posting_layout: int = int(b.get("posting_layout", 1))
         self._bucket_files: dict[int, dict[int, list[tuple[int, str]]]] = {}
         self._dfs: dict[str, DataFrame] = {}
@@ -905,16 +902,13 @@ class Index:
             for g, rec in (self.manifest.get("completed_groups") or {}).items()
         }
 
-    def gseq_col(self) -> F.Column:
-        return group_seq_expr(self.manifest)
-
     def shard_file_map(
         self, buckets: "list[int] | None" = None
     ) -> dict[int, list[tuple[int, str]]]:
         """{shard_id: [(group_seq, file_path), ...]} for layout-2 postings,
         restricted to the given term_bucket dirs (None = all buckets).
 
-        This is the DIRECT search route's work-item source: each search
+        This is every search plan's work-item source: each search
         task reads exactly its shard's parquet files straight from the
         (shared-storage) index dir — the layout makes co-location a
         property of the artifact instead of a runtime shuffle. The listing
@@ -960,7 +954,7 @@ class Index:
     def tombstones_pair(self):
         """(ids, seqs): sorted int64 doc ids with their per-id MAX delete
         seq — the closure-shipped search mask for small delete sets (the
-        distributed cogroup path takes over past TOMBSTONE_BROADCAST_MAX;
+        distributed side path takes over past TOMBSTONE_BROADCAST_MAX;
         index_search routes). Cached; refresh() reloads after
         delete/compact."""
         import numpy as np

@@ -202,12 +202,11 @@ def index_more_like_this(
     min_tf: int = 1,
     min_df: int = 1,
     strategy: str = "sharded",
-    direct: bool | None = None,
 ) -> DataFrame:
     """Artifact-served MLT: source text from the stored-text doc_stats,
     df from the term_stats artifact (driver-cached lookup — zero Spark
-    jobs warm), candidates from ONE `index_search` at k+1 (any
-    strategy/route), then drop each source's own row and re-cut ranks in
+    jobs warm), candidates from ONE `index_search` at k+1 (either
+    strategy), then drop each source's own row and re-cut ranks in
     a window over the <= k+1-row result. Rank-identical to
     :func:`more_like_this` on the same corpus (untombstoned; with
     tombstones df stays build-time global — the standard Lucene posture
@@ -241,7 +240,7 @@ def index_more_like_this(
         return _empty_result(ix.spark)
     lids = sorted(sel)
     queries = [(i, " ".join(sel[lid])) for i, lid in enumerate(lids)]
-    res = index_search(ix, queries, k=k + 1, strategy=strategy, direct=direct)
+    res = index_search(ix, queries, k=k + 1, strategy=strategy)
     pm = local_df(
         ix.spark, [(i, lid) for i, lid in enumerate(lids)],
         "query_id int, like_id long",

@@ -47,7 +47,6 @@ def index_significant_terms(
     min_df: int = 1,
     include_query_terms: bool = False,
     strategy: str = "sharded",
-    direct: bool | None = None,
 ) -> DataFrame:
     """Per query: the ``max_terms`` most significant terms of its top
     ``k_hits`` result docs — (query_id, term, fg_df, df, score) where
@@ -90,8 +89,8 @@ def index_significant_terms(
             "df comes from build-time term_stats); run compact_index "
             "first to fold tombstones into the stats"
         )
-    hits = index_search(ix, queries, k=k_hits, strategy=strategy,
-                        direct=direct).select("query_id", "doc_id")
+    hits = index_search(ix, queries, k=k_hits,
+                        strategy=strategy).select("query_id", "doc_id")
     texts = ix.fetch_text(hits).select("query_id", "doc_id", "text")
     # foreground size per query (<= k_hits; short result lists shrink it)
     qn = texts.groupBy("query_id").agg(F.count("*").alias("n_hits"))

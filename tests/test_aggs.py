@@ -10,8 +10,8 @@ kernel (|queries| output rows regardless of match volume; integer
 attributes sum exactly in f64 below 2^53).
 
 Contract pinned here:
-- counts/stats equal a brute-force python oracle on both the
-  side-grouped direct route and the cogrouped exchange route;
+- counts/stats equal a brute-force python oracle on the side-direct
+  plan;
 - NULL attributes are excluded from buckets and stats;
 - where= composes (the side is pre-filtered);
 - tombstoned docs are not counted;
@@ -106,27 +106,24 @@ def test_histogram_both_routes(built):
     ix, docs_pdf = built
     want = _brute_hist(docs_pdf)
     assert want
-    for direct in (None, False):
-        got = {
-            (r.query_id, r.bucket, r.n_docs)
-            for r in index_histogram(ix, QS, on="n_chars", width=WIDTH,
-                                     direct=direct).collect()
-        }
-        assert got == want
+    got = {
+        (r.query_id, r.bucket, r.n_docs)
+        for r in index_histogram(ix, QS, on="n_chars",
+                                 width=WIDTH).collect()
+    }
+    assert got == want
 
 
 def test_stats_both_routes(built):
     ix, docs_pdf = built
     want = _brute_stats(docs_pdf)
     assert want
-    for direct in (None, False):
-        got = {
-            (r.query_id, r.n_docs, r.min_v, r.max_v, r.sum_v,
-             round(r.avg_v, 9))
-            for r in index_stats(ix, QS, on="n_chars",
-                                 direct=direct).collect()
-        }
-        assert got == want
+    got = {
+        (r.query_id, r.n_docs, r.min_v, r.max_v, r.sum_v,
+         round(r.avg_v, 9))
+        for r in index_stats(ix, QS, on="n_chars").collect()
+    }
+    assert got == want
 
 
 def test_where_composes(built):
@@ -183,13 +180,11 @@ def test_cardinality_both_routes(built):
     }
     want = {(q, n) for q, n in want if n}
     assert want
-    for direct in (None, False):
-        got = {
-            (r.query_id, r.n_values)
-            for r in index_cardinality(ix, QS, on="role",
-                                       direct=direct).collect()
-        }
-        assert got == want
+    got = {
+        (r.query_id, r.n_values)
+        for r in index_cardinality(ix, QS, on="role").collect()
+    }
+    assert got == want
 
 
 def test_count_matches_and_filters(built):
@@ -198,12 +193,11 @@ def test_count_matches_and_filters(built):
     ix, docs_pdf = built
     want = {(q, len(m)) for q, m in _matches(docs_pdf).items()}
     assert want
-    for direct in (None, False):
-        got = {
-            (r.query_id, r.n_docs)
-            for r in index_count(ix, QS, direct=direct).collect()
-        }
-        assert got == want
+    got = {
+        (r.query_id, r.n_docs)
+        for r in index_count(ix, QS).collect()
+    }
+    assert got == want
     got_f = {
         (r.query_id, r.n_docs)
         for r in index_count(ix, QS, where={"role": "user"}).collect()

@@ -123,11 +123,12 @@ def test_indexed_bm25f_bitexact_vs_corpus_scan(spark, f_built):
         want = _rows(bm25f_score_topk(corpus, queries, k=K,
                                       title_tokens=split, w_title=wt,
                                       w_body=wb, **kw))
-        for route in ({"direct": True}, {"direct": False}):
+        for strategy in ("sharded", "blockmax"):
             got = _rows(index_bm25f_search(ix, queries, k=K,
                                            title_tokens=split, w_title=wt,
-                                           w_body=wb, **route, **kw))
-            assert got == want, (split, wt, wb, kw, route)
+                                           w_body=wb, strategy=strategy,
+                                           **kw))
+            assert got == want, (split, wt, wb, kw, strategy)
 
 
 def test_indexed_bm25f_composes_with_boolean_and_filterless(spark, f_built):
@@ -179,8 +180,8 @@ def test_indexed_bm25f_refusals(spark, f_built, tmp_path):
 def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
     """r06: BM25F on the pruned strategy — bounds from the raw block
     integers under the weight envelope (tf~ <= wmax*max_tf,
-    dl~ >= wmin*min_dl) — must match the sharded kernel bit-for-bit on
-    both routes, composing with overrides and boolean surfaces."""
+    dl~ >= wmin*min_dl) — must match the sharded kernel bit-for-bit,
+    composing with overrides and boolean surfaces."""
     from sparkbm25.index_query import index_bm25f_search
     from sparkbm25.jobs import Index
 
@@ -191,8 +192,6 @@ def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
                {"title_tokens": 4, "w_title": 3.0}):
         ref = _rows(index_bm25f_search(ix, queries, k=K, **kw))
         assert ref
-        for route in (True, False):
-            got = _rows(index_bm25f_search(ix, queries, k=K,
-                                           strategy="blockmax",
-                                           direct=route, **kw))
-            assert got == ref, (kw, route)
+        got = _rows(index_bm25f_search(ix, queries, k=K,
+                                       strategy="blockmax", **kw))
+        assert got == ref, kw

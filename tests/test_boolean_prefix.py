@@ -58,9 +58,9 @@ def test_and_mode_rank_identical_both_routes(spark, built, oracle):
     queries = make_queries(40)
     want = oracle.search_all(queries, k=K, mode="and")
     assert want, "fixture queries must produce conjunctive hits"
-    for direct in (False, None):
+    for strategy in ("sharded", "blockmax"):
         got = index_search(ix, queries, k=K, mode="and",
-                           direct=direct).collect()
+                           strategy=strategy).collect()
         _assert_rank_identical(got, want)
 
 
@@ -125,8 +125,8 @@ def test_and_mode_refused_off_sharded(spark, built):
 
 def test_and_mode_blockmax_rank_identical(spark, built, oracle):
     """Round 6: mode='and' on the pruned strategy (candidate-driven
-    conjunctive retrieval) — bit-identical to sharded on both routes,
-    including under a k1/b override (derived bounds)."""
+    conjunctive retrieval) — bit-identical to sharded, including under
+    a k1/b override (derived bounds)."""
     ix = Index(spark, built)
     queries = make_queries(30)
     for kw in ({}, {"k1": 0.8, "b": 0.25}):
@@ -136,14 +136,12 @@ def test_and_mode_blockmax_rank_identical(spark, built, oracle):
                                   strategy="sharded", **kw).collect()
         )
         assert ref
-        for route_kw in ({"direct": True}, {"direct": False, "subsplit": 1}):
-            got = sorted(
-                (r.query_id, r.rank, r.doc_id, r.score)
-                for r in index_search(ix, queries, k=K, mode="and",
-                                      strategy="blockmax",
-                                      **route_kw, **kw).collect()
-            )
-            assert got == ref, (kw, route_kw)
+        got = sorted(
+            (r.query_id, r.rank, r.doc_id, r.score)
+            for r in index_search(ix, queries, k=K, mode="and",
+                                  strategy="blockmax", **kw).collect()
+        )
+        assert got == ref, kw
 
 
 def test_parse_prefix_query():
@@ -180,12 +178,12 @@ def test_prefix_search_capped_expansion(spark, built, oracle):
 
 
 def test_prefix_search_strategies_agree(spark, built, oracle):
-    """Prefix resolution feeds the ordinary kernels: blockmax and the
-    exchange route must agree with the direct sharded route."""
+    """Prefix resolution feeds the ordinary kernels: both strategies
+    must agree with the oracle."""
     ix = Index(spark, built)
     queries = [(0, "w01*"), (1, "w0100 w03*")]
     want = oracle.search_prefix_all(queries, k=K)
-    for kw in ({"direct": False}, {"strategy": "blockmax"}, {}):
+    for kw in ({"strategy": "blockmax"}, {}):
         got = index_prefix_search(ix, queries, k=K, **kw).collect()
         _assert_rank_identical(got, want)
 

@@ -7,8 +7,7 @@ representatives, with the group key in a new `value` column.
 
 Contract pinned here:
 - equals the brute-force collapse of a full (k=corpus) search joined
-  to the attribute — on both the direct (side-grouped) and exchange
-  routes, bit-identical scores;
+  to the attribute — on the side-direct plan, bit-identical scores;
 - composes with where=, mode='and', exclude, and k1/b overrides;
 - NULL attribute values collapse into one group;
 - refuses: unstored attribute, non-sharded strategies, search_after.
@@ -61,7 +60,7 @@ def _rows(df):
 def _brute(ix, corpus, by, k, **kw):
     """Reference collapse: FULL search (k = corpus size), join the
     attribute, best per (query, value), re-rank, cut to k — pure pandas
-    over the engine's own exhaustive-checked scores."""
+    over the engine's own oracle-checked scores."""
     full = index_search(ix, QS, k=10**6, **kw).toPandas()
     attrs = corpus.select("doc_id", by).toPandas()
     m = full.merge(attrs, on="doc_id")
@@ -88,10 +87,7 @@ def test_collapse_matches_brute_both_routes(built):
     want = _brute(ix, corpus, "conv_id", K)
     assert want
     got_d = _rows(index_search(ix, QS, k=K, collapse="conv_id"))
-    got_e = _rows(index_search(ix, QS, k=K, collapse="conv_id",
-                               direct=False))
     assert got_d == want  # bit-identical scores, exact collapsed ranks
-    assert got_e == want
 
 
 def test_collapse_null_group(built):
@@ -157,9 +153,7 @@ def test_collapse_under_tombstones(built, spark, tmp_path):
         want.extend(kept)
     want = sorted(want)
     got_d = _rows(index_search(tix, QS, k=K, collapse="conv_id"))
-    got_e = _rows(index_search(tix, QS, k=K, collapse="conv_id",
-                               direct=False))
-    assert got_d == want == got_e and want
+    assert got_d == want and want
 
 
 def test_collapse_refusals(built):

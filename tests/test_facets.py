@@ -185,25 +185,17 @@ def test_facets_sql_oracle_parity(spark, built, rows):
     assert got == want
 
 
-def test_facets_direct_vs_exchange_identical(spark, built):
-    """r06: the default side-grouped direct plan (blocks pyarrow-read
-    in-task) must produce exactly the exchange plan's counts, and its
-    physical plan must exchange ONLY the side (one hashpartitioning for
-    the applyInPandas, plus the final partial-sum agg) with no cogroup."""
+def test_facets_direct_vs_exchange_identical(spark, built, rows):
+    """r06: the side-direct plan (blocks pyarrow-read in-task) must
+    produce the brute-force oracle's counts, and its physical plan must
+    exchange ONLY the side (one hashpartitioning for the applyInPandas,
+    plus the final partial-sum agg) with no cogroup."""
     ix = Index(spark, built)
     queries = make_queries(10)
-
-    def cnts(**kw):
-        return sorted(
-            (r.query_id, r.value or "", r.n_docs)
-            for r in index_facets(ix, queries, by="lang", **kw).collect()
-        )
-
-    d = cnts(direct=True)
-    e = cnts(direct=False)
-    assert d == e and len(d) > 0
+    got = _got_map(index_facets(ix, queries, by="lang"))
+    assert got and got == _py_facets(rows, queries, attr_idx=2)
     plan = (
-        index_facets(ix, queries, by="lang", direct=True)
+        index_facets(ix, queries, by="lang")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "FlatMapCoGroupsInPandas" not in plan, plan

@@ -63,7 +63,7 @@ def test_fuzz_full_engine_rank_identity(spark, tmp_path, seed):
         (q, r, did, round(s, 9)) for q, r, did, s in oracle.search_all(queries, k=7)
     )
 
-    for strategy in ("sharded", "blockmax", "blockmax_plan", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got = sorted(
             (r.query_id, r.rank, r.doc_id, round(r.score, 9))
             for r in index_search(ix, queries, k=7, strategy=strategy).collect()
@@ -102,7 +102,7 @@ def test_exact_ties_and_duplicate_query_terms(spark, tmp_path):
     want = sorted(
         (q, r, did, s) for q, r, did, s in oracle.search_all(queries, k=12)
     )
-    for strategy in ("sharded", "blockmax", "blockmax_plan", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got = sorted(
             (r.query_id, r.rank, r.doc_id, r.score)
             for r in index_search(ix, queries, k=12, strategy=strategy).collect()
@@ -176,7 +176,7 @@ def test_fuzz_compaction_invariance(spark, tmp_path, seed):
 def test_fuzz_filtered_search_rank_identity(spark, tmp_path, seed):
     """Seeded fuzz of the `where=` path: random nasty corpora with random
     categorical attributes, random equality/membership predicates (often
-    selecting few or zero docs), random subsplit — always rank-identical
+    selecting few or zero docs), random strategy — always rank-identical
     to the oracle restricted to the same allowed set."""
     rng = random.Random(seed)
     docs, queries = _random_corpus(rng, n_docs=100)
@@ -196,16 +196,16 @@ def test_fuzz_filtered_search_rank_identity(spark, tmp_path, seed):
         pick = rng.sample(["a", "b", "c", "d", "zz"], rng.randint(1, 3))
         pred = {"tag": pick if len(pick) > 1 else pick[0]}
         allowed = {d_ for d_, tg in tag_of.items() if tg in pick}
-        n_sub = rng.choice([None, 1, 2, 4])
+        strategy = rng.choice(["sharded", "blockmax"])
         got = sorted(
             (r.query_id, r.rank, r.doc_id, round(r.score, 9))
             for r in index_search(ix, queries, k=6, where=pred,
-                                  subsplit=n_sub).collect()
+                                  strategy=strategy).collect()
         )
         want = sorted(
             (q, rk, d_, round(s, 9))
             for q, rk, d_, s in ora.search_all(queries, k=6, allowed=allowed)
         )
-        assert [g[:3] for g in got] == [w[:3] for w in want], (pred, n_sub)
+        assert [g[:3] for g in got] == [w[:3] for w in want], (pred, strategy)
         for g, w in zip(got, want):
             assert g[3] == pytest.approx(w[3], rel=1e-9)

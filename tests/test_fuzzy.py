@@ -85,16 +85,24 @@ def test_fuzzy_dist0_is_plain_search(spark, built):
     assert sorted(map(tuple, got)) == sorted(map(tuple, base))
 
 
-def test_fuzzy_routes_and_strategies_agree(spark, built, oracle):
+def test_fuzzy_routes_and_strategies_agree(spark, built, oracle,
+                                           monkeypatch):
+    import sparkbm25.index_query as iq
+
     ix = Index(spark, built)
     queries = _typo_queries(oracle)[:3]
-    base = sorted(map(tuple, index_fuzzy_search(
-        ix, queries, k=K, max_dist=1, max_expansions=6).collect()))
-    for kw in ({"direct": False}, {"strategy": "blockmax"}):
-        got = sorted(map(tuple, index_fuzzy_search(
+
+    def run(**kw):
+        return sorted(map(tuple, index_fuzzy_search(
             ix, queries, k=K, max_dist=1, max_expansions=6,
             **kw).collect()))
-        assert [g[:3] for g in got] == [b[:3] for b in base], kw
+
+    base = run()  # three queries: served in the driver
+    others = {"blockmax": run(strategy="blockmax")}
+    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", 0)
+    others["spark"] = run()
+    for label, got in others.items():
+        assert [g[:3] for g in got] == [b[:3] for b in base], label
         for g, b in zip(got, base):
             assert g[3] == pytest.approx(b[3], rel=1e-9)
 

@@ -99,51 +99,20 @@ def test_index_search_rank_identical_all_strategies(spark, built, oracle):
     ix = Index(spark, d)
     queries = make_queries(40)
     want = oracle.search_all(queries, k=K)
-    for strategy in ("sharded", "blockmax", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got = index_search(ix, queries, k=K, strategy=strategy).collect()
         _assert_rank_identical(got, want)
 
 
-def test_index_search_subsplit_bit_exact(spark, built, oracle):
-    """Search-time sub-split (VERDICT r03 #2): forcing 2/4/8 finer
-    doc-range groups must return BIT-identical (query, rank, doc, score)
-    rows to the unsplit kernel and stay rank-identical to the oracle, for
-    both the sharded and block-max strategies — straddling blocks are
-    replicated and masked, never double-counted or dropped."""
-    d, _ = built
-    ix = Index(spark, d)
-    queries = make_queries(40)
-    want = oracle.search_all(queries, k=K)
-    for strategy in ("sharded", "blockmax"):
-        base = sorted(
-            (r.query_id, r.rank, r.doc_id, r.score)
-            for r in index_search(
-                ix, queries, k=K, strategy=strategy, subsplit=1
-            ).collect()
-        )
-        _assert_rank_identical(
-            index_search(ix, queries, k=K, strategy=strategy,
-                         subsplit=1).collect(),
-            want,
-        )
-        for n_sub in (2, 4, 8):
-            got = sorted(
-                (r.query_id, r.rank, r.doc_id, r.score)
-                for r in index_search(
-                    ix, queries, k=K, strategy=strategy, subsplit=n_sub
-                ).collect()
-            )
-            assert got == base, (strategy, n_sub)
-    with pytest.raises(ValueError, match="power of two"):
-        index_search(ix, queries, k=K, subsplit=3)
-
-
 def test_index_search_subsplit_hash64_ids(spark, tmp_path, oracle):
-    """Sub-split over the hash64 doc-id scheme: ids span the FULL signed
-    int64 range (negative ids), so the virtual-shard arithmetic-shift rule
-    must agree between Spark's F.shiftright (block replication) and
-    numpy's >> (kernel masking) — a logical-shift mismatch would drop every
-    negative-id doc from its group."""
+    """The hash64 doc-id scheme: ids span the FULL signed int64 range
+    (negative ids, negative shard keys), so the build's shard directories
+    and the side-direct plan's F.shiftright side key must agree on the
+    arithmetic shift — a logical-shift mismatch would drop every
+    negative-id doc from its shard. Direct and side-direct plans, both
+    strategies, one kernel group per shard."""
+    from pyspark.sql import functions as F
+
     pdf = make_transcripts_pdf(50)
     corpus = add_doc_id(spark.createDataFrame(pdf), scheme="hash64").select(
         "doc_id", "text"
@@ -161,10 +130,10 @@ def test_index_search_subsplit_hash64_ids(spark, tmp_path, oracle):
     queries = make_queries(20)
     want = ora.search_all(queries, k=K)
     for strategy in ("sharded", "blockmax"):
-        for n_sub in (1, 4):
+        for kw in ({}, {"where_expr": F.col("doc_len") >= 0}):
             _assert_rank_identical(
                 index_search(ix, queries, k=K, strategy=strategy,
-                             subsplit=n_sub).collect(),
+                             **kw).collect(),
                 want,
             )
 
@@ -252,8 +221,8 @@ def test_micro_corpus_via_index(spark, tmp_path):
 def test_index_search_filtered_rank_identical(spark, tmp_path):
     """`where=` filtered search: exact top-k of the qualifying docs with
     GLOBAL idf/avgdl, rank-identical to the oracle restricted to the same
-    allowed set — across subsplit levels, with membership lists, and with
-    an empty-qualifying-set filter returning no rows."""
+    allowed set — with membership lists, and with an empty-qualifying-set
+    filter returning no rows."""
     pdf = make_transcripts_pdf(60)
     df = add_doc_id(spark.createDataFrame(pdf), scheme="conv_seq")
     # planted attribute: role alternates deterministically per turn
@@ -277,10 +246,8 @@ def test_index_search_filtered_rank_identical(spark, tmp_path):
          {d_ for d_, ro in roles.items() if ro in ("user", "assistant")}),
     ]:
         want = ora.search_all(queries, k=K, allowed=allowed)
-        for n_sub in (None, 1, 4):
-            got = index_search(ix, queries, k=K, where=pred,
-                               subsplit=n_sub).collect()
-            _assert_rank_identical(got, want)
+        got = index_search(ix, queries, k=K, where=pred).collect()
+        _assert_rank_identical(got, want)
     # every returned doc actually satisfies the predicate
     got = index_search(ix, queries, k=K, where={"role": "user"}).collect()
     assert got and all(roles[r.doc_id] == "user" for r in got)
@@ -290,11 +257,6 @@ def test_index_search_filtered_rank_identical(spark, tmp_path):
     # unknown attribute -> descriptive refusal
     with pytest.raises(ValueError, match="attr_cols"):
         index_search(ix, queries, k=K, where={"missing_col": "x"}).count()
-    # blockmax supports filters too (round-5 unification); the legacy
-    # cross-check paths refuse
-    with pytest.raises(ValueError, match="sharded"):
-        index_search(ix, queries, k=K, strategy="exhaustive",
-                     where={"role": "user"})
 
 
 def test_blockmax_unified_filters_tuning_tombstones(spark, tmp_path):
@@ -391,16 +353,15 @@ def test_index_search_where_expr_range(spark, tmp_path):
 
 def test_index_search_query_time_k1_b_override(spark, built, oracle):
     """k1/b overridden at query time (no rebuild) must be rank-identical
-    to the oracle scored with the same parameters, for ALL strategies —
+    to the oracle scored with the same parameters, for both strategies —
     blockmax derives sound pruning bounds for the effective (k1, b) from
-    the raw per-block (max_tf, min_tf, min_dl, max_dl) metadata; only the
-    legacy blockmax_plan cross-check path refuses."""
+    the raw per-block (max_tf, min_tf, min_dl, max_dl) metadata."""
     d, _ = built
     ix = Index(spark, d)
     queries = make_queries(20)
     for k1, b in [(0.9, 0.4), (2.0, 0.0), (1.2, 0.75)]:
         want = oracle.search_all(queries, k=K, k1=k1, b=b)
-        for strategy in ("sharded", "exhaustive", "blockmax"):
+        for strategy in ("sharded", "blockmax"):
             got = index_search(ix, queries, k=K, strategy=strategy,
                                k1=k1, b=b).collect()
             _assert_rank_identical(got, want)
@@ -409,8 +370,6 @@ def test_index_search_query_time_k1_b_override(spark, built, oracle):
         index_search(ix, queries, k=K).collect(),
         oracle.search_all(queries, k=K),
     )
-    with pytest.raises(ValueError, match="blockmax_plan"):
-        index_search(ix, queries, k=K, strategy="blockmax_plan", k1=0.9)
 
 
 def _phrase_oracle(docs, phrases, k, n_docs=None, avgdl=None, allowed=None):

@@ -6,9 +6,9 @@ position intersection both assumed sortedness — these tests pin the fix
 kernel) on an index built exactly that way: base = even ids, streamed
 append = odd ids in the same range.
 
-Reference: strategy='exhaustive' (independent plan-side scoring over the
-same blocks — shares the index's FROZEN streaming stats, which a
-corpus-level python oracle would not).
+Reference: the pure-Python OracleIndex over both batches, emulating
+the index's FROZEN streaming stats (the base build's avgdl, the summed
+n_docs), which a corpus-level oracle would not share by itself.
 """
 
 import numpy as np
@@ -18,7 +18,8 @@ import pytest
 from sparkbm25.build import BuildParams
 from sparkbm25.index_query import index_phrase_search, index_search
 from sparkbm25.jobs import Index, build_index
-from sparkbm25.streaming import append_batch
+from sparkbm25.oracle import OracleIndex
+from sparkbm25.streaming import append_batch, finalize_stream
 
 N_DOCS = 600  # per parity; universe/shard ~600 -> heavy_at ~75, rare df ~15
 
@@ -62,6 +63,7 @@ def interleaved(spark, tmp_path_factory):
         pd.DataFrame(app_rows, columns=["doc_id", "text"])
     )
     append_batch(app, d, epoch_id=0)
+    finalize_stream(spark, d)  # lifts n_docs/df over both batches
     return Index(spark, d), base_rows + app_rows
 
 
@@ -73,16 +75,21 @@ def _got(df):
 def test_light_term_scoring_matches_exhaustive(interleaved):
     """Light-only queries take the sparse candidate path; per-term
     positions within a shard interleave across the two groups. Both
-    routes must stay bit-exact vs the independent exhaustive scorer."""
-    ix, _rows = interleaved
+    strategies must stay rank-identical to the oracle under the frozen
+    stats."""
+    ix, rows = interleaved
     qs = [(0, "rareterm"), (1, "w001 w399"), (2, "rareterm w002"),
           (3, "w123"), (4, "w000 w000 w377")]
-    ref = _got(index_search(ix, qs, k=8, strategy="exhaustive"))
+    ora = OracleIndex.build(rows)
+    assert ora.n_docs == ix.n_docs
+    ora.avgdl = ix.avgdl  # frozen base avgdl (append never re-averages)
+    ref = sorted(ora.search_all(qs, k=8))
     assert ref  # sanity: the reference found something
-    got_d = _got(index_search(ix, qs, k=8))               # direct route
-    got_e = _got(index_search(ix, qs, k=8, direct=False))  # exchange route
-    assert got_d == ref
-    assert got_e == ref
+    for strategy in ("sharded", "blockmax"):
+        got = _got(index_search(ix, qs, k=8, strategy=strategy))
+        assert [g[:3] for g in got] == [w[:3] for w in ref], strategy
+        for g, w in zip(got, ref):
+            assert g[3] == pytest.approx(w[3], rel=1e-9), strategy
 
 
 def test_phrase_search_interleaved_groups(interleaved):

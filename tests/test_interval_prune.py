@@ -12,9 +12,9 @@ pruned search that degrades to dense-kernel speed when the bounds
 exclude nothing, and skips decode when they do.
 
 Contract pinned by these tests:
-- bit-exact identity with 'sharded' and 'exhaustive' on both the
-  direct and exchange routes, with subsplit, and under k1/b overrides
-  (derived bounds);
+- bit-exact identity with 'sharded' and rank identity with the
+  pure-Python OracleIndex, under k1/b overrides (derived bounds) and
+  under distributed tombstones (the side-direct plan's anchor rows);
 - on a skewed corpus the prune provably drops blocks (asserted on the
   real index's block metadata, not a synthetic frame);
 - on a bounds-hostile frame the analysis reports "nothing excludable"
@@ -43,6 +43,7 @@ from sparkbm25.index_query import (
     index_search,
 )
 from sparkbm25.jobs import Index, build_index
+from sparkbm25.oracle import OracleIndex
 
 
 def _mk_pdf(rows):
@@ -58,7 +59,7 @@ def _mk_pdf(rows):
 def _prune(pdf, q_terms, k=3, mode="stored"):
     return _interval_prune(
         pdf, q_terms, k1=1.2, b=0.75, avgdl=10.0, k=k,
-        mode=mode, sub_shift=None, vs=0,
+        mode=mode,
     )
 
 
@@ -141,8 +142,7 @@ def test_unit_conjunctive_coverage_kills_uncovered_intervals():
     ])
     out = _interval_prune(
         pdf, {1: [("t1", 1.0), ("t2", 1.0)]}, k1=1.2, b=0.75,
-        avgdl=10.0, k=3, mode="stored", sub_shift=None, vs=0,
-        and_need={1: 2},
+        avgdl=10.0, k=3, mode="stored", and_need={1: 2},
     )
     assert out is not None
     keep_rows, bounds, live_of = out
@@ -158,8 +158,7 @@ def test_unit_conjunctive_unreachable_need_all_dead():
     pdf = _mk_pdf([("t1", 0, 99, 8, 1.0, 1.0)])
     out = _interval_prune(
         pdf, {1: [("t1", 1.0), ("t2", 1.0)]}, k1=1.2, b=0.75,
-        avgdl=10.0, k=3, mode="stored", sub_shift=None, vs=0,
-        and_need={1: 2},
+        avgdl=10.0, k=3, mode="stored", and_need={1: 2},
     )
     assert out is not None
     keep_rows, _bounds, live_of = out
@@ -184,7 +183,7 @@ def test_blockmax_masked_bit_exact_skewed(skewed, spark, tmp_path):
     # the dead docs' — exactly the unsound-theta trap
     delete_docs(spark, d2, list(range(1500, 1590)))
     tix = Index(spark, d2)
-    for kw in ({}, {"direct": False}, {"mode": "and"}, {"min_match": 2}):
+    for kw in ({}, {"mode": "and"}, {"min_match": 2}):
         sh = _rows(index_search(tix, QS, k=10, strategy="sharded", **kw))
         bm = _rows(index_search(tix, QS, k=10, strategy="blockmax", **kw))
         assert bm == sh and sh, kw
@@ -213,7 +212,6 @@ def test_blockmax_filtered_bit_exact(spark, tmp_path_factory):
     # the filter excludes the whole hot stripe (role='tool')
     for kw in (
         {"where": {"role": "user"}},
-        {"where": {"role": "user"}, "direct": False},
         {"where": {"role": "user"}, "mode": "and"},
         {"where": {"role": "tool"}},
     ):
@@ -224,15 +222,12 @@ def test_blockmax_filtered_bit_exact(spark, tmp_path_factory):
 
 def test_blockmax_conjunctive_bit_exact_skewed(skewed):
     """mode='and' and min_match now ride the interval-pruned dense
-    kernel on strategy='blockmax' — bit-identical to 'sharded' on both
-    routes (the r06-late replacement for the candidate-driven WAND
-    conjunction, which lost to dense scoring at every benchable
-    scale)."""
+    kernel on strategy='blockmax' — bit-identical to 'sharded' (the
+    r06-late replacement for the candidate-driven WAND conjunction,
+    which lost to dense scoring at every benchable scale)."""
     for kw in (
         {"mode": "and"},
         {"min_match": 2},
-        {"mode": "and", "direct": False},
-        {"min_match": 2, "direct": False, "subsplit": 4},
         {"mode": "and", "k1": 0.9, "b": 0.4},
     ):
         sh = _rows(index_search(skewed, QS, k=10, strategy="sharded", **kw))
@@ -261,13 +256,24 @@ QS = [(1, "alpha"), (2, "alpha w0003"), (3, "w0007 w0011"),
 
 
 @pytest.fixture(scope="module")
-def skewed(spark, tmp_path_factory):
-    corpus = add_doc_id(
+def skewed_corpus(spark):
+    return add_doc_id(
         spark.createDataFrame(_skewed_pdf()), "conv_seq"
     ).select("doc_id", "text")
+
+
+@pytest.fixture(scope="module")
+def skewed_oracle(skewed_corpus):
+    return OracleIndex.build(
+        [(r.doc_id, r.text) for r in skewed_corpus.collect()]
+    )
+
+
+@pytest.fixture(scope="module")
+def skewed(spark, skewed_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("prune_ix"))
     build_index(
-        corpus, d,
+        skewed_corpus, d,
         BuildParams(num_shards=2, salt_factor=2, num_term_buckets=2,
                     lineage_groups=1, block_size=64,
                     doc_id_scheme="conv_seq"),
@@ -282,24 +288,24 @@ def _rows(df):
     )
 
 
-def test_blockmax_prune_bit_exact_skewed(skewed):
-    base = _rows(index_search(skewed, QS, k=10, strategy="exhaustive"))
-    assert len(base) > 0
+def _assert_oracle(got, want):
+    """``got`` (sorted engine rows) rank-identical to the oracle's
+    ``search_all`` rows, scores to 1e-9."""
+    want = sorted(want)
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    for g, w in zip(got, want):
+        assert g[3] == pytest.approx(w[3], rel=1e-9)
+
+
+def test_blockmax_prune_bit_exact_skewed(skewed, skewed_oracle):
     for kw in (
-        {},                     # direct route (auto on layout 2)
-        {"direct": False},      # exchange route
-        {"direct": False, "subsplit": 4},
+        {},
         {"k1": 0.9, "b": 0.4},  # derived bounds
     ):
         sh = _rows(index_search(skewed, QS, k=10, strategy="sharded", **kw))
         bm = _rows(index_search(skewed, QS, k=10, strategy="blockmax", **kw))
-        if "k1" in kw:
-            base_kw = _rows(
-                index_search(skewed, QS, k=10, strategy="exhaustive", **kw)
-            )
-            assert bm == sh == base_kw
-        else:
-            assert bm == sh == base
+        assert bm == sh and sh, kw
+        _assert_oracle(bm, skewed_oracle.search_all(QS, k=10, **kw))
 
 
 def test_prune_fires_on_real_blocks(skewed, spark):
@@ -319,7 +325,7 @@ def test_prune_fires_on_real_blocks(skewed, spark):
     assert len(pdf) > 4  # multiple blocks so there is something to skip
     out = _interval_prune(
         pdf, {1: [("alpha", 1.0)]}, k1=skewed.k1, b=skewed.b,
-        avgdl=skewed.avgdl, k=10, mode="stored", sub_shift=None, vs=0,
+        avgdl=skewed.avgdl, k=10, mode="stored",
     )
     assert out is not None
     keep_rows, _bounds, live_of = out
@@ -327,20 +333,22 @@ def test_prune_fires_on_real_blocks(skewed, spark):
     assert 1 in live_of
 
 
-def test_blockmax_subsplit_cotomb_bit_exact(skewed, spark, monkeypatch):
-    """ADVICE r06 (high): with explicit subsplit, replicated straddling
-    blocks carry postings of NEIGHBORING subgroups whose tombstones live
-    in other groups' cogrouped sides. The seed decode must mask to the
-    subgroup's id range, or a deleted hot doc can certify theta and
-    silently prune live docs. Forced here: distributed tombstones
-    (TOMBSTONE_BROADCAST_MAX=1) + subsplit + blockmax, deleting exactly
-    the hot docs the seed would otherwise score."""
+def test_blockmax_cotomb_side_direct_oracle(skewed, skewed_oracle, spark,
+                                           monkeypatch):
+    """Distributed tombstones with no `where=` ride the side-direct plan:
+    the side is the tombstone rows plus one kind=2 anchor row per shard.
+    Forced here with TOMBSTONE_BROADCAST_MAX=1, deleting the hot docs —
+    all in ONE shard — that an unmasked seed theta would score. Every
+    strategy must stay rank-identical to the oracle over the live docs;
+    hits from the tombstone-free shard pin the anchor rows (without
+    them that shard is absent from the side and its docs are lost).
+    `exclude=` on blockmax reaches the WAND kernel."""
     import shutil
 
     import sparkbm25.jobs as J
     from sparkbm25.jobs import delete_docs
 
-    d2 = skewed.index_dir + "_subtomb"
+    d2 = skewed.index_dir + "_cotomb"
     shutil.rmtree(d2, ignore_errors=True)
     shutil.copytree(skewed.index_dir, d2)
     # delete the hot tail (the theta-certifying docs)
@@ -348,38 +356,23 @@ def test_blockmax_subsplit_cotomb_bit_exact(skewed, spark, monkeypatch):
     delete_docs(spark, d2, victims)
     monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 1)
     ix = Index(spark, d2)
-    for sub in (2, 4):
-        sh = _rows(index_search(ix, QS, k=10, strategy="sharded",
-                                subsplit=sub))
-        bm = _rows(index_search(ix, QS, k=10, strategy="blockmax",
-                                subsplit=sub))
-        assert bm == sh and len(sh) > 0
-        assert not ({r[2] for r in bm} & set(victims))
+    shift = ix.shard_shift
+    tomb_shards = {v >> shift for v in victims}
+    assert len(tomb_shards) == 1
+    live = set(skewed_oracle.doc_len) - set(victims)
+    excl = {q: "w0019" for q, _ in QS}
+    for kw in (
+        {"strategy": "sharded"},
+        {"strategy": "blockmax"},
+        {"strategy": "blockmax", "exclude": excl},
+    ):
+        got = _rows(index_search(ix, QS, k=10, **kw))
+        want = skewed_oracle.search_all(
+            QS, k=10, allowed=live, exclude=kw.get("exclude")
+        )
+        assert got, kw
+        _assert_oracle(got, want)
+        hit_ids = {r[2] for r in got}
+        assert not (hit_ids & set(victims)), kw
+        assert {h >> shift for h in hit_ids} - tomb_shards, kw
     shutil.rmtree(d2, ignore_errors=True)
-
-
-def test_decode_tfn_masks_subgroup_range():
-    """Mechanism pin for the ADVICE r06 fix: the seed decode must drop
-    postings outside THIS subgroup's id range (docs replicated in via
-    straddling blocks), because their tombstone/qualifying rows live in
-    other groups' cogrouped sides and are unmaskable here."""
-    from sparkbm25.codecs import delta_encode, vbyte_encode
-    from sparkbm25.index_query import _decode_tfn
-
-    docs = np.array([10, 20, 5000, 6000], dtype=np.int64)
-    pdf = pd.DataFrame([
-        {
-            "term": "t", "n_docs": 4,
-            "docs_vbyte": vbyte_encode(delta_encode(docs)),
-            "tfs_vbyte": vbyte_encode(np.array([1, 2, 40, 40], dtype=np.uint64)),
-            "dls_vbyte": vbyte_encode(np.array([5, 5, 5, 5], dtype=np.uint64)),
-        }
-    ])
-    raw_all = _decode_tfn(pdf, 1.2, 0.75, 5.0)
-    assert raw_all["t"][0].tolist() == [10, 20, 5000, 6000]
-    # subgroup 0 under sub_shift=10 holds ids < 1024 only
-    raw_sub = _decode_tfn(pdf, 1.2, 0.75, 5.0, sub_shift=10, vs=0)
-    assert raw_sub["t"][0].tolist() == [10, 20]
-    # neighboring subgroup sees only its own ids
-    raw_sub4 = _decode_tfn(pdf, 1.2, 0.75, 5.0, sub_shift=10, vs=4)
-    assert raw_sub4["t"][0].tolist() == [5000]

@@ -127,10 +127,14 @@ def test_indexed_mlt_rank_identical(spark, docs, mlt_ix):
         assert got == want, strategy
 
 
-def test_indexed_mlt_routes_bit_identical(spark, mlt_ix):
-    a = _rows(mlt.index_more_like_this(mlt_ix, LIKE, k=K, direct=False))
-    b = _rows(mlt.index_more_like_this(mlt_ix, LIKE, k=K, direct=True))
-    assert a == b
+def test_indexed_mlt_routes_bit_identical(spark, mlt_ix, monkeypatch):
+    # three sources fit the in-driver serve; 0 forces the Spark plan
+    import sparkbm25.index_query as iq
+
+    a = _rows(mlt.index_more_like_this(mlt_ix, LIKE, k=K))
+    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", 0)
+    b = _rows(mlt.index_more_like_this(mlt_ix, LIKE, k=K))
+    assert a == b and a
 
 
 def test_indexed_mlt_needs_stored_text(spark, docs, tmp_path_factory):

@@ -59,9 +59,9 @@ def test_msm_rank_identical_both_routes(spark, built, oracle):
     queries = make_queries(40)
     want = oracle.search_all(queries, k=K, min_match=2)
     assert want, "fixture queries must produce msm hits"
-    for direct in (False, None):
+    for strategy in ("sharded", "blockmax"):
         got = index_search(ix, queries, k=K, min_match=2,
-                           direct=direct).collect()
+                           strategy=strategy).collect()
         _assert_rank_identical(got, want)
 
 
@@ -143,9 +143,9 @@ def test_exclude_rank_identical_both_routes(spark, built, oracle):
     assert want
     or_want = oracle.search_all(queries, k=K)
     assert want != or_want, "exclusion must change some result"
-    for direct in (False, None):
+    for strategy in ("sharded", "blockmax"):
         got = index_search(ix, queries, k=K, exclude=excl,
-                           direct=direct).collect()
+                           strategy=strategy).collect()
         _assert_rank_identical(got, want)
 
 
@@ -254,8 +254,9 @@ def test_msm_exclude_distributed_tombstones(spark, corpus, tmp_path,
                                             oracle, monkeypatch):
     """min_match and exclude under the DISTRIBUTED tombstone path
     (n_deleted > TOMBSTONE_BROADCAST_MAX, forced to 1): tombstones
-    cogroup as kind=1 side rows and must interact correctly with the
-    coverage count and the exclusion positions."""
+    ride the side frame as kind=1 rows and must interact correctly with
+    the coverage count and the exclusion positions, on both
+    strategies."""
     import sparkbm25.jobs as J
     from sparkbm25.jobs import delete_docs
 
@@ -268,16 +269,17 @@ def test_msm_exclude_distributed_tombstones(spark, corpus, tmp_path,
     ix = Index(spark, d)
     alive = set(all_ids) - set(victims)
     queries = make_queries(15)
-    want = oracle.search_all(queries, k=K, allowed=alive, min_match=2)
-    got = index_search(ix, queries, k=K, min_match=2,
-                       direct=False).collect()
-    _assert_rank_identical(got, want)
     excl = {qid: "w0006" for qid, text in queries
             if "w0006" not in text.split()}
-    want = oracle.search_all(queries, k=K, allowed=alive, exclude=excl)
-    got = index_search(ix, queries, k=K, exclude=excl,
-                       direct=False).collect()
-    _assert_rank_identical(got, want)
+    for strategy in ("sharded", "blockmax"):
+        want = oracle.search_all(queries, k=K, allowed=alive, min_match=2)
+        got = index_search(ix, queries, k=K, min_match=2,
+                           strategy=strategy).collect()
+        _assert_rank_identical(got, want)
+        want = oracle.search_all(queries, k=K, allowed=alive, exclude=excl)
+        got = index_search(ix, queries, k=K, exclude=excl,
+                           strategy=strategy).collect()
+        _assert_rank_identical(got, want)
 
 
 def test_exclude_composes_with_prefix_search(spark, built, oracle):
@@ -333,8 +335,8 @@ def test_exclude_rejects_exhaustive(spark, built):
 
 def test_msm_exclude_blockmax_rank_identical(spark, built, oracle):
     """min_match / exclude / their composition on strategy='blockmax'
-    (direct AND exchange routes) must be bit-identical to 'sharded' —
-    same kernels' canonical fold, pruned candidate generation."""
+    must be bit-identical to 'sharded' — same kernels' canonical fold,
+    pruned candidate generation."""
     ix = Index(spark, built)
     queries = make_queries(30)
     ex = {qid: queries[(i + 5) % len(queries)][1].split()[0]
@@ -351,19 +353,17 @@ def test_msm_exclude_blockmax_rank_identical(spark, built, oracle):
             for r in index_search(ix, queries, k=K,
                                   strategy="sharded", **kw).collect()
         )
-        for route_kw in ({"direct": True}, {"direct": False, "subsplit": 1}):
-            got = sorted(
-                (r.query_id, r.rank, r.doc_id, r.score)
-                for r in index_search(ix, queries, k=K,
-                                      strategy="blockmax",
-                                      **route_kw, **kw).collect()
-            )
-            assert got == ref, (kw, route_kw)
+        got = sorted(
+            (r.query_id, r.rank, r.doc_id, r.score)
+            for r in index_search(ix, queries, k=K,
+                                  strategy="blockmax", **kw).collect()
+        )
+        assert got == ref, kw
 
 
 def test_exclude_blockmax_with_where_filter(spark, corpus, tmp_path):
-    """exclude + where= on blockmax rides the cogrouped exchange route
-    and must agree with sharded exactly."""
+    """exclude + where= on blockmax rides the side-direct plan (WAND
+    kernel) and must agree with sharded exactly."""
     d = str(tmp_path / "ixbwf")
     params = BuildParams(num_shards=6, salt_factor=2, num_term_buckets=8,
                          lineage_groups=3, doc_id_scheme="conv_seq",

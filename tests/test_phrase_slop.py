@@ -230,39 +230,40 @@ def test_slop_oracle_explosion_guard():
         phrase_topk_sql([(0, "a b c d e f g h i j")], slop=9)
 
 
-# --- round 6: phrase search on the direct (no-exchange) route ----------------
-
-def _rrows(df):
-    return sorted((r.query_id, r.rank, r.doc_id, r.score)
-                  for r in df.collect())
-
+# --- round 6: phrase search on the direct (no-exchange) plan ----------------
 
 @pytest.mark.parametrize("slop", [0, 2])
 def test_phrase_direct_route_bit_identical(spark, built, docs, slop):
-    """The direct route (per-shard pyarrow reads — the positional stream
-    never crosses an exchange) must be bit-identical to the cogrouped
-    exchange kernel; it is the default on layout-2 indexes."""
+    """The direct plan (per-shard pyarrow reads — the positional stream
+    never crosses an exchange) must match the phrase oracle, with no
+    shard-grouped blocks exchange in its physical plan."""
     ix = Index(spark, built)
     phrases = _phrases_with_gaps(docs)
-    d = _rrows(index_phrase_search(ix, phrases, k=K, slop=slop,
-                                   direct=True))
-    auto = _rrows(index_phrase_search(ix, phrases, k=K, slop=slop))
-    e = _rrows(index_phrase_search(ix, phrases, k=K, slop=slop,
-                                   direct=False))
-    assert d and d == e and d == auto
+    df = index_phrase_search(ix, phrases, k=K, slop=slop)
+    _cmp(df.collect(), _slop_oracle(docs, phrases, k=K, slop=slop))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
-def test_phrase_direct_refused_on_layout1(spark, corpus, tmp_path,
+def test_phrase_direct_refused_on_layout1(spark, corpus, docs, tmp_path,
                                           monkeypatch):
+    """A layout-1 index has no per-shard posting files for the direct
+    plan, and no other phrase plan exists: phrase search refuses it until
+    compact_index rewrites the postings as layout 2."""
     import sparkbm25.build as build_mod
-    from sparkbm25.jobs import build_index as bi
+    from sparkbm25.streaming import compact_index
 
-    monkeypatch.setattr(build_mod, "POSTING_LAYOUT", 1)
     d = str(tmp_path / "ixl1")
-    bi(corpus, d, PARAMS, source_fingerprint="phl1")
+    with monkeypatch.context() as m:
+        m.setattr(build_mod, "POSTING_LAYOUT", 1)
+        build_index(corpus, d, PARAMS, source_fingerprint="phl1")
     ix = Index(spark, d)
     assert ix.posting_layout == 1
+    phrases = _phrases_with_gaps(docs)
     with pytest.raises(ValueError, match="layout"):
-        index_phrase_search(ix, [(0, "spark merge")], direct=True)
-    # auto falls back to the exchange kernel and still answers
-    index_phrase_search(ix, [(0, "spark merge")]).collect()
+        index_phrase_search(ix, phrases, k=K, slop=1)
+    compact_index(spark, d)
+    ix = Index(spark, d)
+    assert ix.posting_layout == 2
+    _cmp(index_phrase_search(ix, phrases, k=K, slop=1).collect(),
+         _slop_oracle(docs, phrases, k=K, slop=1))

@@ -144,28 +144,57 @@ def test_cosine_pairs_plan_single_shuffle(spark):
 
 
 def test_wand_plan_one_kernel_two_exchanges(built):
-    """The block-max WAND strategy's EXCHANGE route keeps the sharded
-    path's plan shape: exactly one shard-grouped kernel
-    (FlatMapGroupsInPandas) and two exchanges total (shard groupBy +
+    """The block-max WAND kernel (blockmax + exclude) on the side-direct
+    plan keeps the one-kernel shape: exactly one shard-grouped kernel
+    (FlatMapGroupsInPandas) and two exchanges total (side groupBy +
     final skinny top-k window) — the legacy DataFrame 3-phase plan this
-    replaced ran ~8 jobs. (direct=False pins the exchange route; the
-    default DIRECT route's 1-exchange shape is pinned in
-    test_direct_route.py.)"""
+    replaced ran ~8 jobs. (The direct plan's 1-exchange shape is pinned
+    in test_direct_route.py.)"""
+    from pyspark.sql import functions as F
+
     from sparkbm25.index_query import index_search
 
     df = index_search(built, [(0, "w0001 w0002")], k=5, strategy="blockmax",
-                      direct=False)
+                      exclude={0: "w0003"},
+                      where_expr=F.col("doc_len") >= 1)
     plan = _plan(df)
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("FlatMapCoGroupsInPandas") == 0, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert df.count() > 0
+
+
+def test_cotomb_plan_side_direct(built, spark, tmp_path, monkeypatch):
+    """Distributed tombstones with no `where=` ride the side-direct plan
+    (tombstone rows + one anchor row per shard): one shard-grouped
+    kernel, no cogroup — the posting blocks never cross an exchange."""
+    import shutil
+
+    import sparkbm25.jobs as J
+    from sparkbm25.index_query import index_search
+
+    d = str(tmp_path / "cotomb_plan")
+    shutil.copytree(built.index_dir, d)
+    victim = built.live_doc_stats().select("doc_id").first().doc_id
+    J.delete_docs(spark, d, [victim])
+    monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 0)
+    for strategy in ("sharded", "blockmax"):
+        df = index_search(Index(spark, d), [(0, "w0001 w0002")], k=5,
+                          strategy=strategy)
+        plan = _plan(df)
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert plan.count("FlatMapCoGroupsInPandas") == 0, plan
+        assert "MapInPandas" not in plan, plan
+        assert df.count() > 0
 
 
 def test_filtered_search_plan_cogroup_no_broadcast(spark, tmp_path):
-    """`where=` filtered search must CO-PARTITION the qualifying doc ids
-    with the posting blocks (one cogrouped kernel, three exchanges total:
-    blocks + qual on the doc-range key, then the skinny top-k window) —
-    never a driver collect, broadcast of the filter set, or cartesian:
-    the qualifying set can be corpus-sized at 10^12 turns."""
+    """`where=` filtered search must GROUP the qualifying doc ids by the
+    doc-range shard key (one shard-grouped kernel reading its blocks
+    in-task, two exchanges total: the side groupBy, then the skinny top-k
+    window) — never a driver collect, broadcast of the filter set,
+    cogroup or cartesian: the qualifying set can be corpus-sized at
+    10^12 turns."""
     from sparkbm25.corpus import add_doc_id
     from sparkbm25.fixtures import make_transcripts_pdf
     from sparkbm25.index_query import index_search
@@ -183,7 +212,7 @@ def test_filtered_search_plan_cogroup_no_broadcast(spark, tmp_path):
         "fplan",
     )
     ix = Index(spark, d)
-    # r06 default: SIDE-GROUPED direct — only the qualifying ids are
+    # SIDE-DIRECT: only the qualifying ids are
     # exchanged (one hashpartitioning for the side's applyInPandas + the
     # skinny top-k window); the blocks are pyarrow-read in-task, so no
     # cogroup and no blocks exchange appear in the plan at all
@@ -193,17 +222,6 @@ def test_filtered_search_plan_cogroup_no_broadcast(spark, tmp_path):
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert plan.count("FlatMapCoGroupsInPandas") == 0, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan
-    assert df.count() > 0
-    # the exchange fallback (direct=False) keeps the cogrouped shape:
-    # blocks + qual co-partitioned on the doc-range key, then the window
-    df = index_search(ix, [(0, "w0001 w0002")], k=5,
-                      where={"role": "user"}, direct=False)
-    plan = _plan(df)
-    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
-    assert plan.count("Exchange hashpartitioning") == 3, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan

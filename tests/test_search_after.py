@@ -6,12 +6,12 @@ top-k candidates STRICTLY after the cursor in the result total order
 The mask runs on the folded scores in the kernel BEFORE local top-k
 extraction, so per-shard survivors are the true after-cursor leaders;
 the float equality is sound because cursors come from the engine's own
-bit-exact scores (identical across strategies/routes — the repo's
-oldest contract).
+bit-exact scores (identical across strategies and the driver/Spark
+serves — the repo's oldest contract).
 
 Contract pinned here:
 - page 2 from a rank-k cursor == ranks k+1..2k of one top-2k search
-  (bit-identical scores), on both the direct and exchange routes;
+  (bit-identical scores), served in the driver and through Spark;
 - chaining cursors walks the full result list with no gaps or dups;
 - composes with filters, mode='and', exclude, and k1/b overrides
   (anything the dense kernel serves);
@@ -82,14 +82,17 @@ def test_page2_equals_rank_window(built):
         assert page2.get(qid, []) == want  # bit-identical scores
 
 
-def test_routes_bit_identical(built):
+def test_routes_bit_identical(built, monkeypatch):
+    import sparkbm25.index_query as iq
+
     page1 = _by_query(index_search(built, QS, k=K))
     cur = _cursors(page1, K)
     qs2 = [(qid, txt) for qid, txt in QS if qid in cur]
+    # the in-driver serve vs the distributed direct plan
+    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", len(qs2))
     d = _by_query(index_search(built, qs2, k=K, search_after=cur))
-    e = _by_query(
-        index_search(built, qs2, k=K, search_after=cur, direct=False)
-    )
+    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", 0)
+    e = _by_query(index_search(built, qs2, k=K, search_after=cur))
     assert d == e and d
 
 
@@ -128,11 +131,6 @@ def test_composes_with_boolean_and_overrides(built):
         page2 = _by_query(
             index_search(built, qs2, k=K, search_after=cur, **kw)
         )
-        page2_ex = _by_query(
-            index_search(built, qs2, k=K, search_after=cur,
-                         direct=False, **kw)
-        )
-        assert page2_ex == page2  # exchange route honors the cursor too
         for qid in cur:
             want = [
                 (r - K, d, s) for r, d, s in full.get(qid, []) if r > K

@@ -514,13 +514,6 @@ def test_delete_docs_then_compact_purges(spark, corpora, tmp_path):
                               strategy="blockmax").collect()
     )
     assert got_bm == sorted((q, rk, d_) for q, rk, d_, _s in want_logical)
-    # exhaustive path masks too
-    got_ex = sorted(
-        (r.query_id, r.rank, r.doc_id)
-        for r in index_search(ix, queries, k=10,
-                              strategy="exhaustive").collect()
-    )
-    assert got_ex == sorted((q, rk, d_) for q, rk, d_, _s in want_logical)
 
     # ---- physical purge ------------------------------------------------
     n_before = spark.read.parquet(f"{d}/postings").groupBy().sum(
@@ -537,7 +530,7 @@ def test_delete_docs_then_compact_purges(spark, corpora, tmp_path):
     assert len(ix2.tombstones_array()) == 0
     ora_alive = OracleIndex.build(alive_docs)
     want_purged = ora_alive.search_all(queries, k=10)
-    for strategy in ("sharded", "blockmax", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got2 = sorted(
             (r.query_id, r.rank, r.doc_id, round(r.score, 9))
             for r in index_search(ix2, queries, k=10,
@@ -653,7 +646,7 @@ def test_reingest_of_doc_with_base_postings(spark, corpora, tmp_path):
     ora.avgdl = ix.avgdl  # frozen base avgdl (append never re-averages)
     allowed = {i for i, _ in emu if i != sentinel}
     queries = [(0, new_text), (1, old_text), (2, shared)]
-    for strategy in ("sharded", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got = sorted(
             (r.query_id, r.rank, r.doc_id, round(r.score, 9))
             for r in index_search(ix, queries, k=10,
@@ -684,10 +677,12 @@ def test_reingest_of_doc_with_base_postings(spark, corpora, tmp_path):
 
 
 def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
-    """Past the closure threshold the tombstones co-partition with the
-    posting blocks (kind=1 cogroup rows) — no driver-side array, no cap:
-    results must be identical to the closure path and to the oracle, and
-    compose with `where=` filters (both kinds in one side frame)."""
+    """Past the closure threshold the tombstones ride the side-direct
+    plan (kind=1 side rows, plus one kind=2 anchor row per shard when no
+    `where=` side lists the qualifying docs) — no driver-side array, no
+    cap: results must be identical to the closure path and to the
+    oracle, and compose with `where=` filters (both kinds in one side
+    frame)."""
     import sparkbm25.jobs as J
     from sparkbm25.build import BuildParams
     from sparkbm25.fixtures import make_queries
@@ -731,8 +726,8 @@ def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
         for r in index_search(ix2, queries, k=10).collect()
     )
     assert got_dist == want
-    # blockmax over the distributed-tombstone cogroup side (WAND kernel
-    # with live-count bootstrap) must agree too
+    # blockmax over the distributed-tombstone side (pruned dense kernel
+    # with a mask-exact seed theta) must agree too
     got_bm = sorted(
         (r.query_id, r.rank, r.doc_id)
         for r in index_search(ix2, queries, k=10,
@@ -751,9 +746,6 @@ def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
                               where={"role": "user"}).collect()
     )
     assert got_f == want_f
-    # exhaustive has no distributed mask: loud refusal, not wrong results
-    with pytest.raises(ValueError, match="closure-mask threshold"):
-        index_search(ix2, queries, k=10, strategy="exhaustive")
 
 
 def test_ten_million_tombstones_search_succeeds(spark, corpora, tmp_path):

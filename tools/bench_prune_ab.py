@@ -11,14 +11,12 @@ Two corpora, same engine:
    unchanged), instead of WAND's 1.4-6x regressions.
 2. SKEWED (prune-friendly): hot-tail tf skew concentrated in the high
    doc-id range — the shape real ranked corpora have (popularity/
-   recency clustering). Claim under test: the same strategy now WINS
-   where decode is on the wall path — the EXCHANGE route (blocks
-   stream through Spark into the kernel; pruning skips vbyte decode +
-   densified scoring). On the DIRECT route the pyarrow payload read
-   happens before the kernel sees metadata, so pruning there only
-   saves decode, which the read + per-batch floor dominate at
-   benchable scales (metadata-first payload skipping is the known
-   future work).
+   recency clustering). Claim under test: the same strategy WINS
+   where decode is on the wall path (pruning skips vbyte decode +
+   densified scoring). The pyarrow payload read happens before the
+   kernel sees metadata, so pruning only saves decode, which the read +
+   per-batch floor dominate at benchable scales (metadata-first payload
+   skipping is the known future work).
 
 Usage: python tools/bench_prune_ab.py [--convs 50000] [--skew-docs 550000]
        [--out BENCH_PRUNE_AB.json]
@@ -141,28 +139,18 @@ def main() -> int:
         * 4
     )]
     res_skew = {}
-    strats = ("sharded", "blockmax") if n_docs > 1_000_000 else (
-        "sharded", "blockmax", "exhaustive")
-    # route cells: the DIRECT route's cost is the pyarrow payload read
-    # + the per-batch floor (the prune runs after the read), so decode
-    # savings show on the EXCHANGE route; measure both honestly
-    for strat in strats:
-        for direct in (True, False):
-            if strat == "exhaustive" and direct:
-                continue  # exhaustive has no direct route
-            key = f"{strat}_{'direct' if direct else 'exchange'}"
-            kw = {} if strat == "exhaustive" else {"direct": direct}
-            index_search(ixs, skew_qs, k=10, strategy=strat, **kw).count()
-            res_skew[key] = best_of(
-                3, lambda: index_search(
-                    ixs, skew_qs, k=10, strategy=strat, **kw).count()
-            )
+    # the direct plan's cost is the pyarrow payload read + the per-batch
+    # floor (the prune runs after the read), so decode savings are a
+    # fraction of the cell
+    for strat in ("sharded", "blockmax"):
+        index_search(ixs, skew_qs, k=10, strategy=strat).count()
+        res_skew[strat] = best_of(
+            3, lambda: index_search(
+                ixs, skew_qs, k=10, strategy=strat).count()
+        )
     out[f"skewed_{args.skew_docs}_20q_s"] = res_skew
-    out["skewed_speedup_direct"] = round(
-        res_skew["sharded_direct"] / res_skew["blockmax_direct"], 3
-    )
-    out["skewed_speedup_exchange"] = round(
-        res_skew["sharded_exchange"] / res_skew["blockmax_exchange"], 3
+    out["skewed_speedup"] = round(
+        res_skew["sharded"] / res_skew["blockmax"], 3
     )
 
     # sanity: identical results on the skewed corpus

@@ -106,8 +106,6 @@ def bench_scale(spark, n_convs: int, cpus: int) -> dict:
     out["bm25f20_indexed_s"] = t(index_bm25f_search, ix, queries[:20], k=10)
     out["filtered20_sidedirect_s"] = t(index_search, ix, queries[:20],
                                        k=10, where={"role": "user"})
-    out["filtered20_exchange_s"] = t(index_search, ix, queries[:20], k=10,
-                                     where={"role": "user"}, direct=False)
     # r06-late surfaces: interval-pruned blockmax, field collapsing,
     # cursor pagination, histogram + stats aggregations
     from sparkbm25.facets import index_histogram, index_stats
