@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .analysis import tokenize_py
 from .codecs import dead_mask, segment_delta_restore, vbyte_decode
 from .jobs import Index
+from .localrel import local_df
 
 FACET_SCHEMA = "query_id int, value string, n_docs long"
 
@@ -251,7 +252,7 @@ def _matched_agg_plan(
             # duplicate query_ids merge their token lists (index_search
             # contract); duplicates within a query are harmless (set())
             q_tokens.setdefault(qid, []).extend(toks)
-    empty = spark.createDataFrame([], out_schema)
+    empty = local_df(spark, [], out_schema)
     if not q_tokens:
         return None, empty
     terms = sorted({t for ts in q_tokens.values() for t in ts})
@@ -401,7 +402,7 @@ def index_cardinality(
         where, where_expr, drop_null_value=True,
     )
     if partials is None:
-        return ix.spark.createDataFrame([], "query_id int, n_values long")
+        return local_df(ix.spark, [], "query_id int, n_values long")
     return partials.groupBy("query_id").agg(
         F.countDistinct("value").alias("n_values")
     )
@@ -425,7 +426,7 @@ def index_count(
         where, where_expr,
     )
     if partials is None:
-        return ix.spark.createDataFrame([], "query_id int, n_docs long")
+        return local_df(ix.spark, [], "query_id int, n_docs long")
     return partials.groupBy("query_id").agg(
         F.sum("n_docs").alias("n_docs")
     )

@@ -23,7 +23,8 @@ Determinism contract:
   tie-break decides identically everywhere.
 
 Scale shape: each leg is its own already-scale-audited plan (indexed
-BM25 = one exchange direct route; dense = IVF partition-pruned probes).
+BM25 = direct route, per-shard tops merged in the driver; dense = IVF
+partition-pruned probes).
 The fuse is a join of two k×|queries|-row frames — broadcast-sized for
 any real query batch — plus one per-query window. Nothing here touches
 the corpus again.

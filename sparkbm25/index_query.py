@@ -15,9 +15,12 @@ approximate).
 Two plans serve every query shape:
 
 direct       one ``spark.range`` work item per shard feeds the kernel
-             (mapInPandas); the only exchange is the tiny per-shard
-             top-k merge. A few queries over a bounded posting volume
-             run the same kernel in the driver (_local_search).
+             (mapInPandas). index_search collects the per-shard top-k
+             (one job, one task per shard, no exchange) and merges it in
+             the driver (_merge_tops); only tops past the driver row
+             budget keep the lazy topk_window exchange. A few queries
+             over a bounded posting volume run the same kernel in the
+             driver (_local_search), with no Spark job at all.
 side-direct  when the kernel needs a side frame — `where=` qualifying
              ids, collapse values, or tombstones past
              TOMBSTONE_BROADCAST_MAX — only that frame is grouped by
@@ -1062,9 +1065,11 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
                    fm: dict, tomb: "tuple | None", occ: dict,
                    k: int) -> DataFrame:
     """The direct plan: one ``spark.range`` work item per shard feeding
-    the pyarrow-reading kernel (_direct_topk_gen), then the global top-k
-    window — exactly ONE exchange in the whole plan (the tiny per-shard
-    top-k merge)."""
+    the pyarrow-reading kernel (_direct_topk_gen). When the per-shard
+    tops fit the driver row budget (at most k rows per query per shard)
+    they are collected here — one job, one stage, one task per shard, no
+    exchange — and merged by _merge_tops into a LocalRelation. Over the
+    budget the global merge stays lazy: the topk_window exchange."""
     if _local_serve_ok(ix, occ, terms):
         # POINT-QUERY fast path (r07): for a few queries over a bounded
         # posting volume, run the SAME per-shard kernel in the driver
@@ -1075,9 +1080,8 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
         # costs 0.686 s on the bench host); the reference's query model
         # is an in-process index probe (search_indices.py:30-39), and
         # the vocabulary stats and shard file map are already
-        # driver-resident. Bit-exact: same kernel closure, and the
-        # global merge reimplements topk_window's exact total order
-        # (score DESC, doc_id ASC). Size-guarded: falls through to the
+        # driver-resident. Bit-exact: same kernel closure and the same
+        # global merge (_merge_tops). Size-guarded: falls through to the
         # distributed plan when the query set or its posting volume
         # exceeds the driver budget.
         return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k, ix)
@@ -1085,13 +1089,52 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
         _direct_topk_gen(kernel, cols, terms, fm, tomb),
         schema="query_id int, doc_id long, score double",
     )
+    if len(occ) * len(fm) * k <= LOCAL_SEARCH_MAX_POSTINGS:
+        # collecting the tops here skips the window's exchange, sort and
+        # second job — the JVM CPU (mostly JIT compiling that tail) was
+        # most of a warm call's cost
+        return _merge_tops(ix.spark, [tops.toArrow()], k)
     return topk_window(tops, k)
 
 
-# driver-side serve limits for the point-query fast path: at most this
+def _merge_tops(spark, parts: list, k: int) -> DataFrame:
+    """Global top-k merge of per-shard tops in the driver: ``parts`` are
+    pandas frames or Arrow tables of (query_id, doc_id, score); the
+    result keeps rank <= k per query under topk_window's exact total
+    order (score DESC, doc_id ASC) and is a LocalRelation — collecting
+    it launches no Spark job. A doc lives in one shard, so no (query,
+    doc) pair repeats across parts."""
+    import pyarrow as pa
+
+    def col(name, dtype):
+        return np.concatenate([np.empty(0, dtype)] + [
+            np.asarray(p[name], dtype=dtype) for p in parts
+        ])
+
+    q = col("query_id", np.int32)
+    d = col("doc_id", np.int64)
+    s = col("score", np.float64)
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    # rank - 1 = offset from the first row of the query's sorted run
+    first = np.ones(len(q), dtype=bool)
+    first[1:] = q[1:] != q[:-1]
+    rank = np.arange(len(q)) - np.flatnonzero(first)[np.cumsum(first) - 1]
+    keep = rank < k
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array(q[keep], pa.int32()),
+        "rank": pa.array(rank[keep] + 1, pa.int32()),
+        "doc_id": pa.array(d[keep], pa.int64()),
+        "score": pa.array(s[keep], pa.float64()),
+    }))
+
+
+# driver-side serve limits. The point-query fast path takes at most this
 # many queries, and at most this many postings across the fetched terms
 # (driver decode memory ~= 3 int64 arrays over the postings ~ 24 B each).
-# Env-tunable; 0 queries disables the path outright.
+# The postings budget is also the driver's row budget for the direct
+# plan's collected per-shard tops (queries x shards x k rows, ~24 B
+# each). Env-tunable; 0 queries disables the fast path outright.
 LOCAL_SEARCH_MAX_QUERIES = int(
     os.environ.get("SPARKBM25_LOCAL_SEARCH_MAX_QUERIES", "4")
 )
@@ -1205,9 +1248,9 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
                   fm: dict, tomb: "tuple | None", k: int,
                   ix: Index) -> DataFrame:
     """Driver-side execution of the direct route: read each shard's block
-    files with pyarrow (threaded — the reads release the GIL) and run the
-    unchanged per-shard kernel, then merge with topk_window's exact
-    (score DESC, doc_id ASC) total order. Returns a local-relation
+    files with pyarrow (threaded — the reads release the GIL), run the
+    unchanged per-shard kernel and merge the tops with _merge_tops, the
+    same merge the collected Spark plan ends in. Returns a LocalRelation
     DataFrame; every call recomputes from the parquet artifact."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1257,43 +1300,7 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
     else:
         pdfs = [read_shard(shards[0])]
     parts = [kernel(pdf) for pdf in pdfs if len(pdf)]
-    parts = [p for p in parts if p is not None and len(p)]
-    out_schema = "query_id int, rank int, doc_id long, score double"
-    if not parts:
-        return spark.createDataFrame([], out_schema)
-    allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-    qids = allp["query_id"].to_numpy()
-    dids = allp["doc_id"].to_numpy(dtype=np.int64)
-    scs = allp["score"].to_numpy(dtype=np.float64)
-    rows = []
-    for qid in np.unique(qids):
-        m = qids == qid
-        d, s = dids[m], scs[m]
-        order = np.lexsort((d, -s))[:k]
-        rows.extend(
-            (int(qid), r + 1, int(d[i]), float(s[i]))
-            for r, i in enumerate(order)
-        )
-    # VALUES LocalRelation, not createDataFrame(rows): the latter builds a
-    # parallelize()-backed RDD whose every action is a real multi-task job
-    # (~0.35 s per count at local[32] — measured); a VALUES relation
-    # collapses to LocalTableScan, driver-only. repr(float) -> string ->
-    # CAST(DOUBLE) is an exact round trip (correctly-rounded parse of the
-    # shortest round-trip decimal), so scores keep their exact bits.
-    # Casts are per COLUMN, not per cell — analysis cost scales with the
-    # expression count (measured 0.15 s vs 0.12 s per action at 40 cells).
-    # r07 note: the Arrow localrel.local_df path was tried here and
-    # measured ~15-45 ms SLOWER per action than VALUES at top-k sizes
-    # (pandas+Arrow conversion overhead on a latency path where the rest
-    # is a ~90 ms analysis floor) — keep VALUES for this one site.
-    vals = ", ".join(
-        f"({q}, {r}, {d}, '{s!r}')" for q, r, d, s in rows
-    )
-    return spark.sql(
-        "SELECT CAST(c1 AS INT) query_id, CAST(c2 AS INT) rank, "
-        "CAST(c3 AS BIGINT) doc_id, CAST(c4 AS DOUBLE) score "
-        "FROM (VALUES {}) AS t(c1, c2, c3, c4)".format(vals)
-    )
+    return _merge_tops(spark, [p for p in parts if p is not None], k)
 
 
 def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
@@ -1962,8 +1969,8 @@ def index_phrase_search(
         toks = tokenize_py(text)
         if toks:
             q_phrases[qid] = toks
-    empty = spark.createDataFrame(
-        [], "query_id int, rank int, doc_id long, score double"
+    empty = local_df(
+        spark, [], "query_id int, rank int, doc_id long, score double"
     )
     if not q_phrases:
         return empty
@@ -2207,6 +2214,14 @@ def index_search(
     TOMBSTONE_BROADCAST_MAX, take the side-direct plan. An index whose
     posting layout predates 2 is refused (Index.shard_file_map);
     ``compact_index`` upgrades it.
+
+    Execution: a direct-plan call whose per-shard tops fit the driver
+    row budget (queries x shards x k <= LOCAL_SEARCH_MAX_POSTINGS), like
+    a call served in the driver, runs its Spark job INSIDE this function
+    and returns computed results as a LocalRelation (collecting it
+    launches no job; session confs set around the collect no longer
+    reach the search). Over the budget, and on the side-direct plan,
+    the returned DataFrame is lazy and the work runs at its action.
 
     strategy:
       "sharded"     (default) exact dense scoring: each shard task decodes
@@ -2515,7 +2530,7 @@ def index_search(
         + (", value string" if collapse is not None else "")
     )
     if not occ:
-        return spark.createDataFrame([], out_schema)
+        return local_df(spark, [], out_schema)
     # k1/b overrides and field weights on blockmax derive the pruning
     # bounds from the RAW per-block integers (max_tf/min_tf/min_dl/max_dl)
     # under the effective parameters at query time
@@ -2533,7 +2548,7 @@ def index_search(
     )
     fm = ix.shard_file_map(buckets)  # refuses posting layout < 2
     if not fm:
-        return spark.createDataFrame([], out_schema)
+        return local_df(spark, [], out_schema)
     cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
     if fw is not None:
         cols.append("pos_vbyte")

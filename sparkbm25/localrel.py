@@ -14,21 +14,43 @@ Two costs follow (measured r07 on the bench host):
 - steady-state: each action pays a JVM->python->JVM round trip to scan a
   frame of a few hundred bytes.
 
-Converting through pandas + Arrow instead yields a true ``LocalRelation``:
-pure JVM, zero python workers, and the optimizer sees concrete rows (so
-broadcast-size estimation is exact). Values round-trip through Arrow
-without a text detour, so doubles stay bit-identical.
+Converting through a typed Arrow table instead yields a true
+``LocalRelation``: pure JVM, zero python workers and zero Spark jobs on
+collect, and the optimizer sees concrete rows (so broadcast-size
+estimation is exact). The Arrow columns are typed from the DDL, not
+inferred by pandas, so a 0-row frame is a LocalRelation too (PySpark
+skips Arrow for an empty pandas frame) and a nullable long never passes
+through float64. Values round-trip without a text detour, so doubles
+stay bit-identical.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
+
+# the DDL types local_df callers use; anything else is refused
+_ARROW_TYPES = {
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "double": pa.float64(),
+    "string": pa.string(),
+}
 
 
-def _ddl_names(schema: str) -> list[str]:
-    """Top-level field names of a DDL schema string ("a int, b map<k,v>"):
-    split on commas outside <...> nesting, take the leading identifier."""
-    names, depth, start = [], 0, 0
+def _arrow_type(ddl: str) -> pa.DataType:
+    t = ddl.strip().lower()
+    if t.startswith("array<") and t.endswith(">"):
+        return pa.list_(_arrow_type(t[6:-1]))
+    if t not in _ARROW_TYPES:
+        raise ValueError(f"local_df: unsupported DDL type {ddl!r}")
+    return _ARROW_TYPES[t]
+
+
+def _ddl_fields(schema: str) -> list[tuple[str, pa.DataType]]:
+    """(name, Arrow type) per top-level field of a DDL schema string
+    ("a int, b array<string>"): split on commas outside <...> nesting,
+    then on the first space."""
+    fields, depth, start = [], 0, 0
     for i, ch in enumerate(schema + ","):
         if ch == "<":
             depth += 1
@@ -37,20 +59,27 @@ def _ddl_names(schema: str) -> list[str]:
         elif ch == "," and depth == 0:
             field = schema[start:i].strip()
             if field:
-                names.append(field.split()[0])
+                name, _, typ = field.partition(" ")
+                fields.append((name, _arrow_type(typ)))
             start = i + 1
-    return names
+    return fields
 
 
 def local_df(spark, rows, schema: str):
     """Small driver-local DataFrame from ``rows`` (iterable of tuples)
-    under a DDL ``schema`` string, built as a JVM LocalRelation via the
-    pandas/Arrow path. Falls back to the classic row path if the pandas
-    conversion rejects the values (never the other way: the classic path
-    accepts everything pandas does)."""
+    under a DDL ``schema`` string, built as a JVM LocalRelation from a
+    pyarrow table typed by the DDL. A value that does not fit its column
+    type raises (pyarrow's ArrowInvalid/ArrowTypeError/OverflowError)."""
+    fields = _ddl_fields(schema)
     rows = list(rows)
-    try:
-        pdf = pd.DataFrame.from_records(rows, columns=_ddl_names(schema))
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+    cols = list(zip(*rows, strict=True)) if rows else [()] * len(fields)
+    if len(cols) != len(fields):
+        raise ValueError(
+            f"local_df: rows have {len(cols)} columns, schema {schema!r} "
+            f"has {len(fields)}"
+        )
+    table = pa.table(
+        [pa.array(c, type=t) for c, (_, t) in zip(cols, fields)],
+        names=[n for n, _ in fields],
+    )
+    return spark.createDataFrame(table)

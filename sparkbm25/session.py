@@ -76,6 +76,14 @@ class low_latency:
     shrinking it is always safe and worth ~7% (r06 same-session sf0.1
     local[32]: default 0.714 s, AQE-off 0.684, AQE-off+sp4 0.637).
 
+    Since the direct route merges its per-shard tops in the driver, an
+    index_search whose tops fit the driver row budget runs its one job
+    inside the index_search call, so a context around the collect does
+    not reach it (and the job has no exchange for either setting to
+    act on). The settings still reach the lazy plans: side-direct
+    (`where=`, collapse, distributed tombstones), phrase search and
+    direct searches over the budget.
+
     Absolute-floor note (r06): a TRIVIAL 32-task mapInPandas + window +
     count measures 0.686 s on the bench host vs 0.136 s for a JVM-only
     action — single-query p50 on any route is dominated by the

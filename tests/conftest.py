@@ -20,3 +20,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """spark_jobs(fn) -> (fn(), [[tasks run per stage] per job]) for the
+    Spark jobs fn launched, read from the status tracker after the
+    listener bus has drained (so a job is never missed)."""
+    import itertools
+
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"spark_jobs_{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jobs = [
+            [st.getStageInfo(s).numCompletedTasks
+             for s in st.getJobInfo(j).stageIds]
+            for j in sorted(st.getJobIdsForGroup(group))
+        ]
+        return out, jobs
+
+    return run

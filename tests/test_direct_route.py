@@ -6,8 +6,10 @@ Arrow hop costs ~0.9 s per batch nearly independent of core count
 (measured 0.90 s at local[8] vs 1.13 s at local[2] on a 2.2M-turn index)
 — the fixed term that capped q100 batch-scaling efficiency at ~0.70
 (VERDICT r04 #4). Contract pinned here: rank identity with the
-pure-Python OracleIndex on the direct and side-direct plans, one
-Exchange total in the direct plan, and a layout-1 index refused until
+pure-Python OracleIndex on the direct and side-direct plans; under the
+driver row budget the direct plan is one Spark job (one task per shard)
+merged in the driver, over it one Exchange (the topk_window merge), with
+identical rows on both sides; and a layout-1 index refused until
 compact_index upgrades it.
 """
 
@@ -15,9 +17,14 @@ import pytest
 
 from sparkbm25.build import BuildParams
 from sparkbm25.corpus import add_doc_id
-from sparkbm25.fixtures import make_queries, make_transcripts_pdf
+from sparkbm25.fixtures import MICRO_DOCS, make_queries, make_transcripts_pdf
 from sparkbm25.index_query import index_search
-from sparkbm25.jobs import Index, build_index, delete_docs
+from sparkbm25.jobs import (
+    TOMBSTONE_BROADCAST_MAX,
+    Index,
+    build_index,
+    delete_docs,
+)
 from sparkbm25.oracle import OracleIndex
 
 QS = make_queries(25) + [(900, "w0001 w0001 w0003")]
@@ -81,10 +88,32 @@ def test_direct_tuned_k1_b_bit_exact(built, oracle40):
                    oracle40.search_all(QS, k=8, k1=0.9, b=0.4))
 
 
-def test_direct_plan_single_exchange(built, monkeypatch):
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_one_job_merged_in_driver(spark_jobs, ix, qs, **kw):
+    """Under the driver row budget the direct plan runs its one job inside
+    index_search — one stage, one task per shard, no exchange — and the
+    result is a LocalRelation whose collect launches no job."""
+    fm = ix.shard_file_map()
+    df, jobs = spark_jobs(lambda: index_search(ix, qs, **kw))
+    assert jobs == [[len(fm)]], jobs
+    plan = _plan(df)
+    assert "LocalTableScan" in plan and "Exchange" not in plan, plan
+    rows, jobs = spark_jobs(df.collect)
+    assert rows and jobs == [], jobs
+
+
+def test_direct_plan_single_exchange(built, monkeypatch, spark_jobs):
     _distributed(monkeypatch)
-    df = index_search(built, QS[:3], k=5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    _assert_one_job_merged_in_driver(spark_jobs, built, QS[:3], k=5)
+    # over the driver row budget the global merge stays a lazy window:
+    # one exchange after the per-shard kernel
+    import sparkbm25.index_query as iq
+
+    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_POSTINGS", 0)
+    plan = _plan(index_search(built, QS[:3], k=5))
     assert plan.count("Exchange") == 1, plan
     assert "MapInPandas" in plan, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
@@ -122,15 +151,21 @@ def test_direct_true_refusals(built):
 
 
 def test_direct_blockmax_bit_exact_and_single_exchange(built, oracle40,
-                                                       monkeypatch):
+                                                       monkeypatch,
+                                                       spark_jobs):
     d = _rows(index_search(built, QS, k=8, strategy="blockmax"))
     s = _rows(index_search(built, QS, k=8))
     assert d == s
     _assert_oracle(d, oracle40.search_all(QS, k=8))
     _distributed(monkeypatch)
-    df = index_search(built, QS[:3], k=5, strategy="blockmax")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    _assert_one_job_merged_in_driver(spark_jobs, built, QS[:3], k=5,
+                                     strategy="blockmax")
+    import sparkbm25.index_query as iq
+
+    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_POSTINGS", 0)
+    plan = _plan(index_search(built, QS[:3], k=5, strategy="blockmax"))
     assert plan.count("Exchange") == 1, plan
+    assert "MapInPandas" in plan, plan
 
 
 def test_direct_blockmax_tuned_bit_exact(built):
@@ -218,6 +253,90 @@ def test_shard_file_map_shape_and_cache(built):
     all_paths = {p for lst in fm.values() for _, p in lst}
     sub_paths = {p for lst in sub.values() for _, p in lst}
     assert sub_paths < all_paths
+
+
+# --- the driver row budget: per-shard tops merged in the driver vs the
+# topk_window exchange ------------------------------------------------------
+
+TIE_TEXT = MICRO_DOCS[0][1]  # MICRO_DOCS 0 and 4 are identical docs
+TIE_QS = QS + [(901, TIE_TEXT), (902, "cat"), (903, "the dog")]
+
+
+@pytest.fixture(scope="module")
+def built_ties(spark, tmp_path_factory):
+    """MICRO_DOCS at ids 0-4, then the 40-conversation fixture, then one
+    more copy of the tie doc at the last id, so equal scores meet within
+    a shard and across shards."""
+    texts = [t for _, t in MICRO_DOCS]
+    texts += list(make_transcripts_pdf(40)["text"]) + [TIE_TEXT]
+    docs = list(enumerate(texts))
+    d = str(tmp_path_factory.mktemp("ties_ix"))
+    build_index(
+        spark.createDataFrame(docs, "doc_id long, text string"), d,
+        BuildParams(num_shards=4, salt_factor=2, num_term_buckets=4,
+                    lineage_groups=1),
+        "ties",
+    )
+    return docs, d
+
+
+def test_driver_merge_matches_window_and_oracle(spark, built_ties, tmp_path,
+                                                monkeypatch):
+    """Both sides of the driver row budget give the same rows, bit for
+    bit, rank-identical to the oracle: sharded, blockmax, blockmax with
+    min_match=2, and a closure-tombstoned index; k=3, and k=50 (more
+    than some queries match). Equal scores break by doc_id."""
+    import shutil
+
+    import sparkbm25.index_query as iq
+
+    docs, d = built_ties
+    ix = Index(spark, d)
+    ties = [i for i, t in docs if t == TIE_TEXT]
+    assert len({i >> ix.shard_shift for i in ties}) > 1  # cross-shard tie
+    td = str(tmp_path / "ties_tomb")
+    shutil.copytree(d, td)
+    victims = [4, 7, 11, 12]
+    delete_docs(spark, td, victims)
+    tix = Index(spark, td)
+    assert 0 < tix.n_deleted() <= TOMBSTONE_BROADCAST_MAX  # closure masks
+    ora = OracleIndex.build(docs)
+    live = {i for i, _ in docs} - set(victims)
+    cases = [
+        (ix, {}, {}),
+        (ix, {"strategy": "blockmax"}, {}),
+        (ix, {"strategy": "blockmax", "min_match": 2}, {"min_match": 2}),
+        (tix, {}, {"allowed": live}),
+    ]
+    _distributed(monkeypatch)
+    for k in (3, 50):
+        for handle, kw, okw in cases:
+            under = _rows(index_search(handle, TIE_QS, k=k, **kw))
+            with monkeypatch.context() as m:
+                m.setattr(iq, "LOCAL_SEARCH_MAX_POSTINGS", 0)
+                over = _rows(index_search(handle, TIE_QS, k=k, **kw))
+            assert under == over, (k, kw)
+            want = ora.search_all(TIE_QS, k=k, **okw)
+            _assert_oracle(under, want)
+            if k == 3 and not okw:
+                # the three tie docs fill query 901's top 3 by doc_id
+                assert [r[2] for r in under if r[0] == 901] == ties
+    # k=50 really exceeded the matches of some query
+    assert any(
+        0 < sum(r[0] == q for r in under) < 50 for q, _ in TIE_QS
+    )
+
+
+def test_empty_results_launch_no_job(built, spark_jobs):
+    """A query set with nothing to score returns a typed 0-row
+    LocalRelation: no Spark job from the call through the collect."""
+    index_search(built, [(0, "w0001")], k=5)  # warm the vocabulary
+    for kw in ({"queries": [(0, "zzabsentzz")]},
+               {"queries": [(0, "w0001 zzabsentzz")], "min_match": 2}):
+        rows, jobs = spark_jobs(
+            lambda: index_search(built, k=5, **kw).collect()
+        )
+        assert rows == [] and jobs == [], (kw, jobs)
 
 
 # --- round 6: SIDE-DIRECT — filtered search without a blocks exchange
