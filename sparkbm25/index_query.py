@@ -27,10 +27,11 @@ side-direct  when the kernel needs a side frame — `where=` qualifying
              shard, and each group reads its shard's blocks in-task
              (_direct_side_fn). Posting blocks never cross an exchange.
 
-Kernels: the densified exact fold (_sharded_topk_fn), its interval-level
-block-max pruning (_interval_prune, strategy='blockmax'), and the
-per-block WAND kernel (_wand_topk_fn) for the exclude/field-weighted
-shapes the interval pruner refuses.
+One kernel family serves both strategies: the densified exact fold
+(_sharded_topk_fn) over one batched decode (_decode_tfn).
+strategy='blockmax' adds interval-level block-max pruning
+(_interval_prune) in front of the fold; the shapes the pruner refuses
+(exclude=, fields=) run the fold unpruned, exactly as 'sharded'.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ from pyspark.sql import functions as F
 from .analysis import parse_prefix_query, tokenize_py
 from .bm25 import idf as idf_fn
 from .codecs import (
-    delta_decode,
+    dead_mask,
     in_sorted as _in_sorted,
     segment_delta_restore,
     vbyte_decode,
@@ -92,17 +93,34 @@ _PRUNE_EPS = 1e-9
 def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
                 tomb: "tuple | None" = None,
                 qual: "np.ndarray | None" = None,
+                fieldw: tuple | None = None,
                 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
     """Decode a (sub)frame of posting blocks into {term: (doc_ids,
-    tf_norm)} — the prune-refinement SEED decode. Same vbyte/delta
-    layout and tf_norm formula as the main kernel's batched decode.
+    tf_norm)} with the masks applied; terms left with no posting are
+    absent. The one decode behind the dense kernel's scoring and
+    _interval_prune's seed.
 
-    ``tomb`` / ``qual`` apply the kernel's EXACT masks (per-group
-    tombstones via the frame's gseq column; sorted qualifying ids) so
-    every surviving seed doc is a REAL eligible candidate — required
-    for the theta bound to stay sound under deletes / filtered search
-    (an unmasked seed could certify theta from a dead or non-qualifying
-    doc's score, overstating the kth eligible score)."""
+    BATCHED: varbyte streams are self-delimiting, so the whole frame
+    decodes in three numpy passes (docs via segment_delta_restore with
+    per-block segment starts — each block's first doc id is absolute)
+    instead of three calls per block; per-call numpy overhead on
+    ~128-value blocks dominated kernel time (measured 0.48 s of a
+    0.74 s group).
+
+    ``fieldw`` ((split, w_title, w_body), index_bm25f_search) scores
+    positional-split BM25F: per-posting title tf derives from the
+    POSITIONS stream (tf1 = tokens at position < split), so split AND
+    weights are query-time parameters; ``avgdl`` is then ALREADY the
+    weighted avgdl~. With integer-valued weights every weighted sum is
+    exact in f64, bit-equal to the corpus-scan path (bm25f module doc).
+
+    ``tomb`` (per-group tombstones via the frame's gseq column) and
+    ``qual`` (sorted `where=` qualifying ids: the filter narrows
+    candidates, idf/avgdl stay global) drop dead and non-qualifying
+    postings. For the prune seed this keeps the theta bound sound under
+    deletes / filtered search: an unmasked seed could certify theta from
+    a dead or non-qualifying doc's score, overstating the kth eligible
+    score."""
     pdf = pdf.sort_values("term", kind="stable", ignore_index=True)
     terms_arr = pdf["term"].to_numpy()
     n_arr = pdf["n_docs"].to_numpy().astype(np.int64)
@@ -113,31 +131,44 @@ def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
     seg_starts[1:] = np.cumsum(n_arr)[:-1]
     gaps = vbyte_decode(b"".join(pdf["docs_vbyte"]), total)
     all_ids = segment_delta_restore(gaps, seg_starts, n_arr)
-    tfs = vbyte_decode(b"".join(pdf["tfs_vbyte"]), total).astype(np.float64)
+    tfs_i = vbyte_decode(b"".join(pdf["tfs_vbyte"]), total)
     dls = vbyte_decode(b"".join(pdf["dls_vbyte"]), total).astype(np.float64)
+    if fieldw is not None:
+        split, w_t, w_b = fieldw
+        tok_counts = tfs_i.astype(np.int64)
+        n_tok = int(tok_counts.sum())
+        pos_gaps = vbyte_decode(b"".join(pdf["pos_vbyte"]), n_tok)
+        tok_starts = np.cumsum(tok_counts) - tok_counts
+        pos_all = segment_delta_restore(pos_gaps, tok_starts, tok_counts)
+        tf1 = np.add.reduceat(
+            (pos_all < split).astype(np.int64), tok_starts
+        )
+        tfs = w_t * tf1 + w_b * (tok_counts - tf1)
+        dls = (
+            w_t * np.minimum(dls, float(split))
+            + w_b * np.maximum(dls - split, 0.0)
+        )
+    else:
+        tfs = tfs_i.astype(np.float64)
     tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+    term_first = np.flatnonzero(np.r_[True, terms_arr[1:] != terms_arr[:-1]])
+    post_off = np.r_[seg_starts[term_first], total]
     m = None
     if tomb is not None and len(tomb[0]):
-        from .codecs import dead_mask as _dead_mask
-
         gseqs = np.repeat(pdf["gseq"].to_numpy(np.int64), n_arr)
-        m = ~_dead_mask(all_ids, gseqs, tomb[0], tomb[1])
+        m = ~dead_mask(all_ids, gseqs, tomb[0], tomb[1])
     if qual is not None:
         mq = _in_sorted(all_ids, qual)
         m = mq if m is None else (m & mq)
-    blk_change = np.r_[True, terms_arr[1:] != terms_arr[:-1]]
-    term_first = np.flatnonzero(blk_change)
-    post_off = np.r_[seg_starts[term_first], total]
+    if m is not None:
+        # term slice offsets onto the masked arrays
+        post_off = np.r_[0, np.cumsum(m)][post_off]
+        all_ids, tfn = all_ids[m], tfn[m]
     raw: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     for i, tb in enumerate(term_first):
         lo, hi = int(post_off[i]), int(post_off[i + 1])
         if hi > lo:
-            ids_s, tfn_s = all_ids[lo:hi], tfn[lo:hi]
-            if m is not None:
-                ms = m[lo:hi]
-                ids_s, tfn_s = ids_s[ms], tfn_s[ms]
-            if len(ids_s):
-                raw[terms_arr[tb]] = (ids_s, tfn_s)
+            raw[terms_arr[tb]] = (all_ids[lo:hi], tfn[lo:hi])
     return raw
 
 
@@ -149,12 +180,12 @@ def _interval_prune(pdf: pd.DataFrame,
                     tomb: "tuple | None" = None,
                     qual: "np.ndarray | None" = None):
     """Interval-level block-max pruning for the DENSE kernel (the
-    round-6 answer to BENCH_BOOL_AB.json: the per-block WAND kernel's
-    Python call overhead loses to dense scoring even when its bounds
-    could pay, so run the bounds analysis VECTORIZED over doc-range
-    INTERVALS and feed the surviving blocks to the unchanged densified
-    fold — pruned search that degrades to dense-kernel speed, never
-    below it, when the data gives the bounds nothing to exclude).
+    answer to BENCH_BOOL_AB.json, where a per-block WAND kernel's Python
+    call overhead lost to dense scoring even when its bounds could pay:
+    run the bounds analysis VECTORIZED over doc-range INTERVALS and feed
+    the surviving blocks to the unchanged densified fold — pruned search
+    that degrades to dense-kernel speed, never below it, when the data
+    gives the bounds nothing to exclude).
 
     The block-max idea is Ding & Suel's (SIGIR'11); the interval
     formulation makes it batch-friendly:
@@ -164,9 +195,10 @@ def _interval_prune(pdf: pd.DataFrame,
     - per term t: M_t[i] = max upper-bound tf_norm over t's blocks
       overlapping interval i (a per-block slice-max sweep — once per
       BATCH, not per query).
-    - per query q: θ_q from the same metadata-only bootstrap as the
-      WAND kernel ("k docs provably score >= θ": some block of one
-      occurrence term holds >= k postings each with lower bound L);
+    - per query q: θ_q from a metadata-only bootstrap ("k docs
+      provably score >= θ": some block of one occurrence term holds
+      >= k postings each with lower bound L), refined by a bounded
+      seed decode (phase 2 below);
       bound vector B_q[i] = Σ over q's occurrences (t, w) of w*M_t[i];
       live_q = B_q >= θ_q - |θ_q|·EPS.
     - decode only blocks overlapping the live-interval UNION of the
@@ -501,9 +533,12 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     composes with ``and_need`` (conjunctive queries get coverage
     liveness + a coverage-aware seed theta; the live mask applies AFTER
     the coverage selection, so surviving docs keep exact counts and
-    scores) and with the tombstone / qualifying masks — the caller
-    routes excluded and field-weighted shapes to the WAND kernel
-    instead (their bootstrap needs decode-time masking).
+    scores) and with the tombstone / qualifying masks. It refuses
+    ``exclude``, ``fieldw`` and ``after``: index_search runs those
+    shapes unpruned on either strategy.
+
+    ``fieldw`` ((split, w_title, w_body)) scores positional-split BM25F;
+    _decode_tfn derives the per-field tf from the positions stream.
 
     ``after`` ({query_id: (score, doc_id) cursor}) activates
     SEARCH-AFTER pagination: only candidates STRICTLY after the cursor
@@ -547,7 +582,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         # masks and the seed decode applies them — _interval_prune doc.)
         raise ValueError(
             "prune_bounds does not compose with exclude / field weights "
-            "/ search_after; route those to the WAND or dense kernel"
+            "/ search_after; run those shapes unpruned"
         )
 
     def _run(pdf: pd.DataFrame,
@@ -580,81 +615,8 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                     pdf = pdf[keep_rows]
                 if not len(pdf):
                     return empty
-        # BATCHED decode: varbyte streams are self-delimiting, so the whole
-        # group's blocks decode in THREE numpy passes (docs via
-        # segment_delta_restore with per-block segment starts — each
-        # block's first doc id is absolute) instead of 3 calls per block;
-        # per-call numpy overhead on ~128-value blocks dominated kernel
-        # time (measured 0.48 s of a 0.74 s group).
-        pdf = pdf.sort_values("term", kind="stable", ignore_index=True)
-        terms_arr = pdf["term"].to_numpy()
-        n_arr = pdf["n_docs"].to_numpy().astype(np.int64)
-        total = int(n_arr.sum())
-        if total == 0:
-            return empty
-        seg_starts = np.zeros(len(n_arr), dtype=np.int64)
-        seg_starts[1:] = np.cumsum(n_arr)[:-1]
-        gaps = vbyte_decode(b"".join(pdf["docs_vbyte"]), total)
-        all_ids = segment_delta_restore(gaps, seg_starts, n_arr)
-        tfs_i = vbyte_decode(b"".join(pdf["tfs_vbyte"]), total)
-        dls = vbyte_decode(b"".join(pdf["dls_vbyte"]), total).astype(np.float64)
-        if fieldw is not None:
-            # positional-split BM25F (index_bm25f_search): per-posting
-            # title tf derives from the POSITIONS stream (tf1 = tokens at
-            # position < split), so field-weighted scoring serves from any
-            # positional index with split AND weights as query-time
-            # parameters. avgdl here is ALREADY the weighted avgdl~.
-            # With integer-valued weights every weighted sum is exact in
-            # f64, bit-equal to the corpus-scan path (bm25f module doc).
-            split, w_t, w_b = fieldw
-            tok_counts = tfs_i.astype(np.int64)
-            n_tok = int(tok_counts.sum())
-            pos_gaps = vbyte_decode(b"".join(pdf["pos_vbyte"]), n_tok)
-            tok_starts = np.cumsum(tok_counts) - tok_counts
-            pos_all = segment_delta_restore(pos_gaps, tok_starts, tok_counts)
-            tf1 = np.add.reduceat(
-                (pos_all < split).astype(np.int64), tok_starts
-            )
-            tfs = w_t * tf1 + w_b * (tok_counts - tf1)
-            dls = (
-                w_t * np.minimum(dls, float(split))
-                + w_b * np.maximum(dls - split, 0.0)
-            )
-        else:
-            tfs = tfs_i.astype(np.float64)
-        tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-        m = None
-        if tomb is not None and len(tomb[0]):
-            from .codecs import dead_mask as _dead_mask
-
-            gseqs = np.repeat(pdf["gseq"].to_numpy(np.int64), n_arr)
-            m = ~_dead_mask(all_ids, gseqs, tomb[0], tomb[1])
-        if qual is not None:
-            # `where=` filter: restrict scoring to the group's QUALIFYING
-            # docs (global idf/avgdl stay untouched — standard filtered-
-            # search semantics: the filter narrows candidates, not stats)
-            mq = _in_sorted(all_ids, qual)
-            m = mq if m is None else (m & mq)
-        if m is not None:
-            all_ids, tfn = all_ids[m], tfn[m]
-            # remap term slice offsets onto the masked arrays
-            kept_per_block = np.add.reduceat(
-                m.astype(np.int64), np.r_[0, np.cumsum(n_arr)[:-1]]
-            )
-            n_arr = kept_per_block
-            seg_starts = np.zeros(len(n_arr), dtype=np.int64)
-            seg_starts[1:] = np.cumsum(n_arr)[:-1]
-            total = int(n_arr.sum())
-            if total == 0:
-                return empty
-        blk_change = np.r_[True, terms_arr[1:] != terms_arr[:-1]]
-        term_first_blk = np.flatnonzero(blk_change)
-        post_off = np.r_[seg_starts[term_first_blk], total]
-        raw: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for i, tb in enumerate(term_first_blk):
-            lo, hi = int(post_off[i]), int(post_off[i + 1])
-            if hi > lo:
-                raw[terms_arr[tb]] = (all_ids[lo:hi], tfn[lo:hi])
+        raw = _decode_tfn(pdf, k1, b, avgdl, tomb=tomb, qual=qual,
+                          fieldw=fieldw)
         if not raw:
             return empty
         # group doc universe; HYBRID per-term representation: a dense
@@ -900,8 +862,8 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
 
 def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
                 closure_tomb: "tuple | None"):
-    """Split a shard's side frame (the kind-tagged contract shared by
-    the dense and WAND kernels) into (sorted qualifying ids | None,
+    """Split a shard's side frame (the kernel's kind-tagged side
+    contract) into (sorted qualifying ids | None,
     tombstone (ids, seqs) pair — distributed rows override the
     closure-shipped pair when present). kind=2 anchor rows only make
     their shard a group of the side-direct plan and are ignored here."""
@@ -1299,430 +1261,7 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
             pdfs = list(pool.map(read_shard, shards))
     else:
         pdfs = [read_shard(shards[0])]
-    parts = [kernel(pdf) for pdf in pdfs if len(pdf)]
-    return _merge_tops(spark, [p for p in parts if p is not None], k)
-
-
-def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
-                  k1: float, b: float, avgdl: float, k: int,
-                  derived_bounds: bool = False,
-                  side: bool = False, has_qual: bool = False,
-                  tombstones: "tuple | None" = None,
-                  and_need: dict[int, int] | None = None,
-                  exclude: dict[int, list[str]] | None = None,
-                  fieldw: tuple | None = None):
-    """Shard-local block-max WAND kernel: a 3-phase pruned traversal
-    executed INSIDE the shard task on block metadata. All bounds are
-    shard-local and epsilon-widened, so the result is EXACT under the
-    total order (score desc, doc_id asc):
-
-    phase 1  θ = per-term bootstrap from block minima (k docs provably ≥ θ)
-    phase 2  decode only blocks with w·max_tf_norm + rest ≥ θ; partial P
-    phase 3  τ = kth P; re-decode pruned blocks covering candidates with
-             P + missing-UB ≥ τ (a doc lives in exactly ONE block per term,
-             so adding a pruned block's contribution cannot double-count).
-
-    Decoded blocks are cached per task, so a term shared by many queries
-    decodes once, like the dense sharded kernel. q_occ holds each query's
-    (term, idf) list per token OCCURRENCE in query order; final candidate
-    scores are summed in exactly that order (lexsort by (doc, qpos) +
-    ordered reduceat), matching OracleIndex.search bit-exactly so exact
-    ties break by doc_id in both engines.
-
-    Round-5 unification — the pruned path survives production traffic:
-    - ``derived_bounds``: per-block upper/lower contribution bounds are
-      computed AT QUERY TIME from the stored raw (max_tf, min_dl) /
-      (min_tf, max_dl) integers under the EFFECTIVE (k1, b) — tf_norm is
-      monotone increasing in tf and decreasing in dl (each IEEE op is
-      correctly rounded hence weakly monotone, so the float bound is
-      sound, not just the real-arithmetic one) — removing the k1/b
-      override refusal.
-    - ``tombstones`` (closure pair) / ``side`` rows (kind=1
-      distributed tombstones, kind=0 `where=` qualifying ids when
-      ``has_qual``): decoded blocks mask per posting exactly like the
-      dense kernel. Phase 1's METADATA bootstrap would count dead or
-      non-qualifying docs toward "k docs ≥ θ" and over-prune, so under
-      any mask it switches to a DECODE-BASED bootstrap: blocks are walked
-      in descending lower-bound order and their LIVE QUALIFYING posting
-      counts accumulate until k is proven (decodes cache, so phase 2
-      reuses them). θ stays sound; pruning degrades gracefully with
-      mask selectivity instead of being refused.
-
-    Round-6 unification — the boolean surfaces run pruned too:
-    - ``exclude`` ({query_id: [terms]}, Lucene MUST_NOT): each excluded
-      term's blocks decode into a per-query sorted id set applied at
-      ACCUMULATION time — excluded docs never enter P/CU, so τ stays
-      sound (an excluded doc holding the kth partial would over-prune a
-      true candidate), and the θ bootstrap switches to the decode-based
-      variant counting only non-excluded docs. Survivor scores are the
-      bitwise-unchanged OR sums (exclusion only ever drops whole docs).
-    - ``and_need`` ({query_id: required distinct-token coverage} —
-      mode='and' and minimum_should_match): these queries skip the θ/τ
-      machinery for CANDIDATE-DRIVEN conjunctive retrieval, the textbook
-      stronger pruning for mandatory terms. With d shard-present distinct
-      terms and requirement n, any covering doc must match one of the
-      d-n+1 rarest terms (missing all of them leaves at most n-1
-      matches), so those terms' postings form the candidate list; every
-      other term decodes only blocks whose [first_doc, last_doc] range
-      intersects it. Coverage is counted per candidate (group-local and
-      exact — a doc's postings live in its one doc-range group), scores
-      are the canonical-fold OR sums of covering docs restricted to
-      decoded-∩-candidates (survivors ⊆ candidates, so nothing is
-      lost) — bit-identical to the sharded kernel's post-fold filter."""
-    EPS = 1e-9
-    wanted = {t for tw in q_occ.values() for t, _ in tw}
-    if exclude:
-        wanted |= {t for ts in exclude.values() for t in ts}
-
-    def _run(pdf: pd.DataFrame,
-             qual: "np.ndarray | None",
-             tomb: "tuple | None") -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
-        if pdf.empty:
-            return empty
-        masked = (qual is not None) or (tomb is not None and len(tomb[0]))
-        if tomb is not None and not len(tomb[0]):
-            tomb = None
-        from .bm25 import tf_norm_np
-        from .codecs import dead_mask as _dead_mask
-
-        tdata: dict[str, dict] = {}
-        for term, grp in pdf.groupby("term", sort=False):
-            if term not in wanted:
-                continue
-            if fieldw is not None:
-                # BM25F bounds from the raw block integers under the
-                # WEIGHT ENVELOPE: tf~ <= wmax*max_tf (weighted avg of the
-                # field tfs) and dl~ >= wmin*min_dl, so
-                # tf_norm(wmax*max_tf, wmin*min_dl) under the weighted
-                # avgdl upper-bounds every posting's weighted tf_norm
-                # (monotone inc in tf~, dec in dl~); the lower bound
-                # mirrors with (wmin*min_tf, wmax*max_dl). Sound for any
-                # positive weights; looser than exact per-field bounds,
-                # which the layout does not store.
-                _, w_t, w_b = fieldw
-                wmax, wmin = max(w_t, w_b), min(w_t, w_b)
-                maxt = tf_norm_np(
-                    wmax * grp["max_tf"].to_numpy(dtype=np.float64),
-                    wmin * grp["min_dl"].to_numpy(dtype=np.float64),
-                    avgdl, k1, b,
-                )
-                mint = tf_norm_np(
-                    wmin * grp["min_tf"].to_numpy(dtype=np.float64),
-                    wmax * grp["max_dl"].to_numpy(dtype=np.float64),
-                    avgdl, k1, b,
-                )
-            elif derived_bounds:
-                maxt = tf_norm_np(
-                    grp["max_tf"].to_numpy(dtype=np.int64),
-                    grp["min_dl"].to_numpy(dtype=np.int64), avgdl, k1, b,
-                )
-                mint = tf_norm_np(
-                    grp["min_tf"].to_numpy(dtype=np.int64),
-                    grp["max_dl"].to_numpy(dtype=np.int64), avgdl, k1, b,
-                )
-            else:
-                maxt = grp["max_tf_norm"].to_numpy()
-                mint = grp["min_tf_norm"].to_numpy()
-            tdata[term] = {
-                "n": grp["n_docs"].to_numpy(),
-                "first": grp["first_doc"].to_numpy(),
-                "last": grp["last_doc"].to_numpy(),
-                "maxt": maxt,
-                "mint": mint,
-                "gseq": (
-                    grp["gseq"].to_numpy(dtype=np.int64)
-                    if tomb is not None else None
-                ),
-                "dv": grp["docs_vbyte"].to_list(),
-                "tv": grp["tfs_vbyte"].to_list(),
-                "lv": grp["dls_vbyte"].to_list(),
-                "pv": (grp["pos_vbyte"].to_list()
-                       if fieldw is not None else None),
-                "dec": [None] * len(grp),
-            }
-
-        def dec(td: dict, j: int):
-            if td["dec"][j] is None:
-                n = int(td["n"][j])
-                ids = delta_decode(vbyte_decode(td["dv"][j], n))
-                tfs_i = vbyte_decode(td["tv"][j], n)
-                dls = vbyte_decode(td["lv"][j], n).astype(np.float64)
-                if fieldw is not None:
-                    # same weighted tf~/dl~ derivation as the sharded
-                    # kernel (index_bm25f_search): tf1 from positions
-                    split, w_t, w_b = fieldw
-                    cnt = tfs_i.astype(np.int64)
-                    pos_gaps = vbyte_decode(td["pv"][j], int(cnt.sum()))
-                    starts = np.cumsum(cnt) - cnt
-                    pos_all = segment_delta_restore(pos_gaps, starts, cnt)
-                    tf1 = np.add.reduceat(
-                        (pos_all < split).astype(np.int64), starts
-                    )
-                    tfs = w_t * tf1 + w_b * (cnt - tf1)
-                    dls = (
-                        w_t * np.minimum(dls, float(split))
-                        + w_b * np.maximum(dls - split, 0.0)
-                    )
-                else:
-                    tfs = tfs_i.astype(np.float64)
-                tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                m = None
-                if tomb is not None:
-                    m = ~_dead_mask(ids, td["gseq"][j], tomb[0], tomb[1])
-                if qual is not None:
-                    mq = _in_sorted(ids, qual)
-                    m = mq if m is None else (m & mq)
-                if m is not None:
-                    ids, tfn = ids[m], tfn[m]
-                td["dec"][j] = (ids, tfn)
-            return td["dec"][j]
-
-        def _fold_select(tri_d: list, tri_p: list, tri_v: list):
-            """Canonical query-order summation per doc (lexsort by
-            (doc, qpos) then a STRICTLY SEQUENTIAL per-doc fold —
-            bit-identical to the oracle's per-occurrence accumulation;
-            np.add.reduceat is pairwise even for 4 elements) followed by
-            the top-k selection under (score desc, doc_id asc)."""
-            d_all = np.concatenate(tri_d)
-            p_all = np.concatenate(tri_p)
-            v_all = np.concatenate(tri_v)
-            order = np.lexsort((p_all, d_all))
-            d_s, v_s = d_all[order], v_all[order]
-            bounds = np.flatnonzero(np.r_[True, d_s[1:] != d_s[:-1]])
-            counts = np.diff(np.r_[bounds, len(d_s)])
-            cs = np.zeros(len(bounds))
-            for r in range(int(counts.max())):  # <= #query occurrences
-                sel = counts > r
-                cs[sel] += v_s[bounds[sel] + r]
-            cd = d_s[bounds]
-            kk = min(k, len(cd))
-            kth = -np.partition(-cs, kk - 1)[kk - 1]
-            sel = np.flatnonzero(cs >= kth)
-            keep2 = sel[np.lexsort((cd[sel], -cs[sel]))][:k]
-            return cd[keep2], cs[keep2]
-
-        rows_q, rows_d, rows_s = [], [], []
-        for qid, tw_full in q_occ.items():
-            # occurrences present in this shard, with their query positions
-            tw = [
-                (qpos, t, w)
-                for qpos, (t, w) in enumerate(tw_full)
-                if t in tdata
-            ]
-            if not tw:
-                continue
-            # per-query MUST-NOT id set: excluded terms' blocks decode
-            # (cached, globally masked) into one sorted array applied at
-            # accumulation time below
-            ex_ids = None
-            if exclude and qid in exclude:
-                arrs = [
-                    dec(tdata[t], j)[0]
-                    for t in exclude[qid] if t in tdata
-                    for j in range(len(tdata[t]["n"]))
-                ]
-                arrs = [a for a in arrs if len(a)]
-                if arrs:
-                    ex_ids = np.unique(np.concatenate(arrs))
-                    if not len(ex_ids):
-                        ex_ids = None
-
-            if and_need is not None and qid in and_need:
-                # ---- candidate-driven conjunctive retrieval ----------
-                need = and_need[qid]
-                dterms = list(dict.fromkeys(t for _, t, _ in tw))
-                if len(dterms) < need:
-                    continue  # this doc range cannot cover the query
-                by_df = sorted(
-                    dterms, key=lambda t: int(tdata[t]["n"].sum())
-                )
-                gen_arrs = [
-                    dec(tdata[t], j)[0]
-                    for t in by_df[: len(dterms) - need + 1]
-                    for j in range(len(tdata[t]["n"]))
-                ]
-                gen_arrs = [a for a in gen_arrs if len(a)]
-                if not gen_arrs:
-                    continue
-                cand = np.unique(np.concatenate(gen_arrs))
-                if ex_ids is not None:
-                    cand = cand[~_in_sorted(cand, ex_ids)]
-                if not len(cand):
-                    continue
-                cov = np.zeros(len(cand), dtype=np.int32)
-                term_hits: dict[str, tuple] = {}
-                for t in dterms:
-                    td = tdata[t]
-                    # range-skip: only blocks overlapping the candidate
-                    # list can contribute (same searchsorted test as the
-                    # θ path's phase 3)
-                    lo = np.searchsorted(cand, td["first"], side="left")
-                    hi = np.searchsorted(cand, td["last"], side="right")
-                    idxs, vals = [], []
-                    for j in np.flatnonzero(hi > lo):
-                        ids, tfn = dec(td, int(j))
-                        if not len(ids):
-                            continue
-                        pos = np.searchsorted(cand, ids)
-                        pos_c = np.minimum(pos, len(cand) - 1)
-                        m = cand[pos_c] == ids
-                        if m.any():
-                            idxs.append(pos_c[m])
-                            vals.append(tfn[m])
-                    if idxs:
-                        pi = np.concatenate(idxs)
-                        cov[np.unique(pi)] += 1  # distinct-term coverage
-                        term_hits[t] = (pi, np.concatenate(vals))
-                covered = cov >= need
-                if not covered.any():
-                    continue
-                tri_d, tri_p, tri_v = [], [], []
-                for qpos, t, w in tw:
-                    th = term_hits.get(t)
-                    if th is None:
-                        continue
-                    pi, pv = th
-                    m = covered[pi]
-                    if m.any():
-                        tri_d.append(cand[pi[m]])
-                        tri_p.append(
-                            np.full(int(m.sum()), qpos, dtype=np.int32)
-                        )
-                        tri_v.append(w * pv[m])
-                if not tri_d:
-                    continue
-                cd2, cs2 = _fold_select(tri_d, tri_p, tri_v)
-                rows_q.append(np.full(len(cd2), qid, dtype=np.int32))
-                rows_d.append(cd2)
-                rows_s.append(cs2)
-                continue
-
-            ub = {qpos: w * float(tdata[t]["maxt"].max()) for qpos, t, w in tw}
-            S = sum(ub.values())
-            # phase 1: θ bootstrap — "k docs provably score >= θ". From
-            # metadata minima alone when unmasked; under tombstone/filter
-            # masks (or a MUST-NOT set), from cached decodes in descending
-            # lower-bound order (only LIVE QUALIFYING NON-EXCLUDED docs
-            # may count toward the claim).
-            theta = 0.0
-            for qpos, t, w in tw:
-                td = tdata[t]
-                L = w * td["mint"]
-                if masked or ex_ids is not None:
-                    order = np.argsort(-L, kind="stable")
-                    cnt = 0
-                    for j in order:
-                        ids_j = dec(td, int(j))[0]
-                        if ex_ids is not None and len(ids_j):
-                            ids_j = ids_j[~_in_sorted(ids_j, ex_ids)]
-                        cnt += len(ids_j)
-                        if cnt >= k:
-                            theta = max(theta, float(L[j]))
-                            break
-                    continue
-                order = np.argsort(-L, kind="stable")
-                cum = np.cumsum(td["n"][order])
-                hit = np.flatnonzero(cum >= k)
-                if len(hit):
-                    theta = max(theta, float(L[order[hit[0]]]))
-            theta_eps = theta - abs(theta) * EPS
-            # phase 2: decode survivors, partial scores
-            parts = []  # (qpos, ids, contrib, ub_occ)
-            pruned: list[tuple[int, str, float, np.ndarray]] = []
-            for qpos, t, w in tw:
-                td = tdata[t]
-                ub_b = w * td["maxt"] + (S - ub[qpos])
-                surv = ub_b >= theta_eps
-                for j in np.flatnonzero(surv):
-                    ids, tfn = dec(td, int(j))
-                    if ex_ids is not None and len(ids):
-                        mx = ~_in_sorted(ids, ex_ids)
-                        ids, tfn = ids[mx], tfn[mx]
-                    parts.append((qpos, ids, w * tfn, ub[qpos]))
-                pr = np.flatnonzero(~surv)
-                if len(pr):
-                    pruned.append((qpos, t, w, pr))
-            if not parts:
-                continue
-            ids_all = np.concatenate([p[1] for p in parts])
-            sc_all = np.concatenate([p[2] for p in parts])
-            ub_all = np.concatenate(
-                [np.full(len(p[1]), p[3]) for p in parts]
-            )
-            if not len(ids_all):
-                continue  # every decoded posting masked out of this range
-            uids, inv = np.unique(ids_all, return_inverse=True)
-            P = np.bincount(inv, weights=sc_all, minlength=len(uids))
-            CU = np.bincount(inv, weights=ub_all, minlength=len(uids))
-            if len(uids) > k:
-                tau = float(-np.partition(-P, k - 1)[k - 1])
-            else:
-                tau = float("-inf")
-            M = np.maximum(S - CU, 0.0)
-            cand_mask = P + M >= tau - abs(tau) * EPS
-            cand_ids = uids[cand_mask]  # sorted (np.unique output)
-            # candidate membership via searchsorted on the ALREADY-SORTED
-            # cand_ids (np.unique output) — np.isin re-sorts its second
-            # argument on EVERY call, which at 5.5M-turn shards made these
-            # two loops 6.2 s of a 7.5 s kernel (profiled)
-            def in_cands(ids: np.ndarray) -> np.ndarray:
-                return _in_sorted(ids, cand_ids)
-
-            # candidate contributions from surviving blocks, tagged by qpos
-            tri_d, tri_p, tri_v = [], [], []
-            for qpos, ids, contrib, _u in parts:
-                keep = in_cands(ids)
-                if keep.any():
-                    tri_d.append(ids[keep])
-                    tri_p.append(np.full(int(keep.sum()), qpos, dtype=np.int32))
-                    tri_v.append(contrib[keep])
-            # phase 3: exact missing contributions for candidates
-            for qpos, t, w, pr in pruned:
-                td = tdata[t]
-                lo = np.searchsorted(cand_ids, td["first"][pr], side="left")
-                hi = np.searchsorted(cand_ids, td["last"][pr], side="right")
-                for jj in np.flatnonzero(hi > lo):
-                    j = int(pr[jj])
-                    ids, tfn = dec(td, j)
-                    keep = in_cands(ids)
-                    if not keep.any():
-                        continue
-                    tri_d.append(ids[keep])
-                    tri_p.append(np.full(int(keep.sum()), qpos, dtype=np.int32))
-                    tri_v.append(w * tfn[keep])
-            if not tri_d:
-                continue
-            cd2, cs2 = _fold_select(tri_d, tri_p, tri_v)
-            rows_q.append(np.full(len(cd2), qid, dtype=np.int32))
-            rows_d.append(cd2)
-            rows_s.append(cs2)
-        if not rows_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(rows_q),
-                "doc_id": np.concatenate(rows_d),
-                "score": np.concatenate(rows_s),
-            }
-        )
-
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _run(pdf, None, tombstones)
-
-    def topk_side(blocks_pdf: pd.DataFrame,
-                  side_pdf: pd.DataFrame) -> pd.DataFrame:
-        # same kind-tagged side contract as the dense kernel
-        qual, tomb = _parse_side(side_pdf, has_qual, tombstones)
-        return _run(blocks_pdf, qual, tomb)
-
-    return topk_side if side else topk
+    return _merge_tops(spark, [kernel(pdf) for pdf in pdfs if len(pdf)], k)
 
 
 PHRASE_MATCH_SCHEMA = "query_id int, doc_id long, ptf int, dl int"
@@ -1759,8 +1298,6 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
     Tombstones mask per (id, group-seq) at decode, exactly like the
     scoring kernels."""
     def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .codecs import dead_mask as _dead_mask
-
         empty = pd.DataFrame(
             {
                 "query_id": pd.Series(dtype="int32"),
@@ -1792,7 +1329,7 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
         alive = None
         if tombstones is not None and len(tombstones[0]):
             gseqs = np.repeat(pdf["gseq"].to_numpy(np.int64), n_arr)
-            alive = ~_dead_mask(all_ids, gseqs, tombstones[0], tombstones[1])
+            alive = ~dead_mask(all_ids, gseqs, tombstones[0], tombstones[1])
         # slice per term
         tdata: dict[str, tuple] = {}
         blk_change = np.r_[True, terms_arr[1:] != terms_arr[:-1]]
@@ -2170,13 +1707,12 @@ def index_bm25f_search(
     exactly from doc_stats integer sums (Index.bm25f_avgdl); df/idf are
     the unchanged any-field counts, matching the corpus-scan path.
 
-    Delegates to index_search's kernels ('sharded' default or
-    'blockmax' — the WAND kernel derives sound
-    pruning bounds from the raw block integers under the weight
-    envelope tf~ <= wmax*max_tf, dl~ >= wmin*min_dl), so
+    Delegates to index_search's dense kernel, so
     where=/k1/b/tombstones/mode/min_match/exclude all compose; with
     integer-valued weights results are bit-identical to the corpus-scan
-    path pre-rounding.
+    path pre-rounding. Field-weighted search is never pruned: on
+    'blockmax' it runs the same unpruned fold, and reads the same
+    columns, as 'sharded'.
 
     Reference analog: search params applied at query time over a
     prebuilt artifact (benchmarking/search/search_indices.py:16-39) —
@@ -2228,18 +1764,14 @@ def index_search(
                     every block of the query terms once and folds every
                     query over it.
       "blockmax"    block-max pruning: only blocks that can affect the
-                    top-k are decoded; exact.
-                    Clean shape (no exclude/field weights): INTERVAL-
-                    pruned dense kernel — the bounds analysis runs
+                    top-k are decoded; exact. The bounds analysis runs
                     vectorized over doc-range intervals
-                    (_interval_prune) and surviving blocks feed the
-                    unchanged densified fold, so it degrades to
-                    'sharded' speed when bounds exclude nothing
-                    (BENCH_BOOL_AB.json: the per-block WAND kernel's
-                    Python call overhead lost to the dense kernel at
-                    every benchable scale). Excluded/field-weighted
-                    shapes: 3-phase block-max WAND (_wand_topk_fn),
-                    whose bootstrap masks at decode time.
+                    (_interval_prune) and the surviving blocks feed the
+                    same densified fold, so it degrades to 'sharded'
+                    speed when the bounds exclude nothing. Composes
+                    with where=/k1/b/tombstones/mode/min_match. With
+                    exclude= or fields= nothing is pruned: the call
+                    runs exactly as 'sharded'.
 
     `where` restricts the top-k to docs whose stored attributes match
     every predicate: `{"lang": "en"}` (equality) or `{"source": ["web",
@@ -2271,18 +1803,15 @@ def index_search(
     sums (an AND hit matches every term, so its OR and AND scores are
     bitwise identical); the doc-range sharding makes the coverage test
     group-local (see _sharded_topk_fn). Composes with
-    where=/k1/b/tombstones.
-    On 'blockmax' these queries run CANDIDATE-DRIVEN conjunctive
-    retrieval (see _wand_topk_fn). Measured guidance (BENCH_BOOL_AB.json):
-    on the fixture corpus the dense 'sharded' kernel beats 'blockmax'
-    at EVERY batch size and core count — iid-Zipf text is prune-hostile
-    (block bounds sit near actual scores, θ excludes little) while the
-    WAND kernel pays per-block call overhead. Prefer the default
-    'sharded' for interactive traffic; 'blockmax' is the asymptotic
-    design point (per-term postings ≫ task memory, skewed real-text tf
-    where block maxima discriminate).
+    where=/k1/b/tombstones. On 'blockmax' the interval pruner adds
+    coverage liveness (an interval where fewer distinct query terms
+    have blocks than required is dead) and a coverage-aware seed theta
+    (_interval_prune). iid-Zipf text is prune-hostile (block bounds
+    sit near actual scores, θ excludes little), so there 'blockmax'
+    runs at 'sharded' speed; it pays on skewed real-text tf where block
+    maxima discriminate.
 
-    `min_match` (mode='or', 'sharded' strategy) is Lucene's
+    `min_match` (mode='or', either strategy) is Lucene's
     minimum-should-match: rank only docs matching >= that many DISTINCT
     query tokens. A token absent from the corpus can never match, so a
     query whose corpus-present distinct tokens number fewer than
@@ -2291,7 +1820,8 @@ def index_search(
     mode='and'. Scores are the unchanged full BM25 sums of the
     surviving docs; the coverage test is group-local and exact, same
     as mode='and' (see _sharded_topk_fn). Composes with where=/k1/b/
-    tombstones/exclude.
+    tombstones/exclude, and rides the interval pruner on 'blockmax'
+    exactly like mode='and'.
 
     `exclude` is Lucene's MUST_NOT: {query_id: "tokens ..."} — docs
     containing ANY of that query's excluded tokens are dropped from its
@@ -2301,10 +1831,11 @@ def index_search(
     scored and excluded in the SAME query raises (always-empty by
     construction) — except under prefix expansion, where excluding one
     of a wildcard's own expansions ("w07*" minus "w0777") is legitimate
-    and simply drops that token's docs. On 'blockmax' the WAND kernel
-    filters excluded docs at accumulation time so its τ bound stays
-    sound; composes with
-    mode/min_match/where=/k1/b/tombstones and
+    and simply drops that token's docs. The kernel drops excluded docs
+    after the fold. A partial decode cannot prove that a doc lacks a
+    MUST_NOT term, so a prune seed theta could count ineligible docs:
+    on 'blockmax' an excluded query runs unpruned, exactly as
+    'sharded'. Composes with mode/min_match/where=/k1/b/tombstones and
     with prefix search (exclusion tokens are exact, never expanded).
 
     `search_after` is OpenSearch's stateless cursor pagination:
@@ -2531,12 +2062,6 @@ def index_search(
     )
     if not occ:
         return local_df(spark, [], out_schema)
-    # k1/b overrides and field weights on blockmax derive the pruning
-    # bounds from the RAW per-block integers (max_tf/min_tf/min_dl/max_dl)
-    # under the effective parameters at query time
-    derived = strategy == "blockmax" and (
-        eff_k1 != ix.k1 or eff_b != ix.b or fw is not None
-    )
     # the block fetch widens scoring terms with MUST-NOT terms (their
     # blocks ride the same read, presence-only)
     terms = sorted(
@@ -2552,41 +2077,30 @@ def index_search(
     cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
     if fw is not None:
         cols.append("pos_vbyte")
-    if strategy == "blockmax":
-        cols += ["first_doc", "last_doc"]
-        # derived bounds replace the precomputed tf_norm bounds entirely —
-        # don't read columns the kernel ignores
-        cols += (
-            ["max_tf", "min_tf", "min_dl", "max_dl"] if derived
-            else ["max_tf_norm", "min_tf_norm"]
+    prune = None
+    if strategy == "blockmax" and not excl_map and fw is None:
+        # interval-pruned dense kernel (_interval_prune doc): conjunctive
+        # queries compose via coverage liveness + the coverage-aware seed
+        # theta, tombstones / where= via the mask-exact seed decode. A
+        # MUST-NOT or field-weighted shape cannot bound a seed theta, so
+        # it runs the same kernel unpruned — exactly 'sharded'.
+        # k1/b overrides derive the bounds from the RAW per-block
+        # integers under the effective parameters; the precomputed
+        # tf_norm bounds are then not read.
+        prune = "stored" if (eff_k1, eff_b) == (ix.k1, ix.b) else "derived"
+        cols += ["first_doc", "last_doc"] + (
+            ["max_tf_norm", "min_tf_norm"] if prune == "stored"
+            else ["max_tf", "min_tf", "min_dl", "max_dl"]
         )
     # collapse values ride the side frame exactly like qualifying ids
     has_qual = bool(where) or where_expr is not None or collapse is not None
     needs_side = has_qual or use_cotomb
-    kw = dict(side=needs_side, has_qual=has_qual, tombstones=tomb,
-              and_need=and_need)
-    if strategy == "blockmax" and not excl_map and fw is None:
-        # interval-pruned dense kernel (BENCH_BOOL_AB.json follow-up): the
-        # bounds analysis runs vectorized over doc-range intervals, the
-        # scoring is the unchanged densified fold — never slower than
-        # 'sharded', skips decode where bounds pay; conjunctive queries
-        # (and_need) compose via coverage liveness + the coverage-aware
-        # seed theta, and tombstones / where= via mask-exact seed decode
-        # (_interval_prune doc)
-        kern = _sharded_topk_fn(
-            occ, eff_k1, eff_b, eff_avgdl, k,
-            prune_bounds="derived" if derived else "stored", **kw,
-        )
-    elif strategy == "blockmax":
-        kern = _wand_topk_fn(
-            occ, eff_k1, eff_b, eff_avgdl, k, derived_bounds=derived,
-            exclude=excl_map, fieldw=fw, **kw,
-        )
-    else:
-        kern = _sharded_topk_fn(
-            occ, eff_k1, eff_b, eff_avgdl, k, exclude=excl_map, fieldw=fw,
-            after=search_after, collapse=collapse is not None, **kw,
-        )
+    kern = _sharded_topk_fn(
+        occ, eff_k1, eff_b, eff_avgdl, k, side=needs_side,
+        has_qual=has_qual, tombstones=tomb, and_need=and_need,
+        exclude=excl_map, fieldw=fw, prune_bounds=prune,
+        after=search_after, collapse=collapse is not None,
+    )
     if not needs_side:
         return _direct_search(ix, kern, cols, terms, fm, tomb, occ, k)
     # SIDE-DIRECT: only the side frame is grouped by shard; each group

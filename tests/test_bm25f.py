@@ -178,9 +178,8 @@ def test_indexed_bm25f_refusals(spark, f_built, tmp_path):
 
 
 def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
-    """r06: BM25F on the pruned strategy — bounds from the raw block
-    integers under the weight envelope (tf~ <= wmax*max_tf,
-    dl~ >= wmin*min_dl) — must match the sharded kernel bit-for-bit,
+    """BM25F on strategy='blockmax' (field-weighted shapes run the dense
+    kernel unpruned) must match the sharded kernel bit-for-bit,
     composing with overrides and boolean surfaces."""
     from sparkbm25.index_query import index_bm25f_search
     from sparkbm25.jobs import Index
@@ -195,3 +194,54 @@ def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
         got = _rows(index_bm25f_search(ix, queries, k=K,
                                        strategy="blockmax", **kw))
         assert got == ref, kw
+
+
+def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
+                                                       monkeypatch):
+    """`blockmax` with exclude= or fields= cannot prune (a partial decode
+    cannot bound a seed theta for them), so it runs the dense fold
+    unpruned: on the driver route it must read exactly the `sharded`
+    call's columns — no block-bound columns — and return the `sharded`
+    rows bit for bit, rank-identical to the pure-Python oracles."""
+    import sparkbm25.index_query as iq
+    from sparkbm25.jobs import Index
+    from sparkbm25.oracle import OracleIndex
+
+    corpus, d = f_built
+    ix = Index(spark, d)
+    pool = make_queries(12)
+    queries = pool[:iq.LOCAL_SEARCH_MAX_QUERIES]
+    ex = {queries[0][0]: pool[5][1].split()[0]}
+    reads = []
+    real_read = iq._read_blocks_meta_cached
+
+    def spy(entry, cols, *args, **kwargs):
+        reads.append(tuple(cols))
+        return real_read(entry, cols, *args, **kwargs)
+
+    monkeypatch.setattr(iq, "_read_blocks_meta_cached", spy)
+
+    def run(search, **kw):
+        reads.clear()
+        rows = _rows(search(ix, queries, k=K, **kw))
+        assert reads, "not served on the driver route"
+        return rows, set(reads)
+
+    docs = [(r.doc_id, r.text) for r in corpus.collect()]
+    oracle_ex = OracleIndex.build(docs).search_all(queries, k=K, exclude=ex)
+    for search, oracle in (
+        (lambda *a, **kw: iq.index_search(*a, exclude=ex, **kw), oracle_ex),
+        (iq.index_bm25f_search, _py_bm25f(docs, queries, K)),
+    ):
+        want, want_cols = run(search, strategy="sharded")
+        got, got_cols = run(search, strategy="blockmax")
+        assert got_cols == want_cols and len(got_cols) == 1
+        assert not set(next(iter(got_cols))) & {
+            "first_doc", "last_doc", "max_tf_norm", "min_tf_norm",
+            "max_tf", "min_tf", "min_dl", "max_dl",
+        }
+        assert got == want and got
+        oracle = sorted(oracle)
+        assert [g[:3] for g in got] == [w[:3] for w in oracle]
+        for g, w in zip(got, oracle):
+            assert g[3] == pytest.approx(w[3], rel=1e-9)

@@ -4,12 +4,12 @@ BENCH_BOOL_AB.json measured the per-block WAND kernel losing to the
 dense sharded kernel at every benchable batch size, core count, and
 even the decode-heaviest high-df regime on this corpus: the bounds
 could pay, the per-block Python call overhead didn't. The answer
-pinned here: ``strategy='blockmax'`` in the clean shape (no
-tombstones / where / boolean / field weights) now runs the bounds
-analysis VECTORIZED over doc-range intervals (``_interval_prune``)
-and feeds only surviving blocks to the unchanged densified fold —
-pruned search that degrades to dense-kernel speed when the bounds
-exclude nothing, and skips decode when they do.
+pinned here: ``strategy='blockmax'`` runs the bounds analysis
+VECTORIZED over doc-range intervals (``_interval_prune``) and feeds
+only surviving blocks to the unchanged densified fold — pruned search
+that degrades to dense-kernel speed when the bounds exclude nothing,
+and skips decode when they do. It composes with tombstones, where=,
+mode='and' and min_match.
 
 Contract pinned by these tests:
 - bit-exact identity with 'sharded' and rank identity with the
@@ -19,9 +19,9 @@ Contract pinned by these tests:
   real index's block metadata, not a synthetic frame);
 - on a bounds-hostile frame the analysis reports "nothing excludable"
   (None) so the caller pays zero per-query masking;
-- masked/boolean/field-weighted shapes refuse prune_bounds (their
-  theta bootstrap needs decode-time masking — they keep the WAND
-  kernel).
+- excluded / field-weighted / cursor shapes refuse prune_bounds (a
+  partial decode cannot bound their seed theta) — on 'blockmax' they
+  run the same dense kernel unpruned, exactly as 'sharded'.
 
 Reference analog: pruning serves every search unconditionally in the
 reference harness (benchmarking/search/search_indices.py:16-20); the
@@ -342,7 +342,7 @@ def test_blockmax_cotomb_side_direct_oracle(skewed, skewed_oracle, spark,
     strategy must stay rank-identical to the oracle over the live docs;
     hits from the tombstone-free shard pin the anchor rows (without
     them that shard is absent from the side and its docs are lost).
-    `exclude=` on blockmax reaches the WAND kernel."""
+    `exclude=` on blockmax runs the dense kernel unpruned."""
     import shutil
 
     import sparkbm25.jobs as J

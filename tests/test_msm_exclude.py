@@ -362,8 +362,8 @@ def test_msm_exclude_blockmax_rank_identical(spark, built, oracle):
 
 
 def test_exclude_blockmax_with_where_filter(spark, corpus, tmp_path):
-    """exclude + where= on blockmax rides the side-direct plan (WAND
-    kernel) and must agree with sharded exactly."""
+    """exclude + where= on blockmax rides the side-direct plan (the
+    dense kernel, unpruned) and must agree with sharded exactly."""
     d = str(tmp_path / "ixbwf")
     params = BuildParams(num_shards=6, salt_factor=2, num_term_buckets=8,
                          lineage_groups=3, doc_id_scheme="conv_seq",

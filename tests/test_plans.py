@@ -143,8 +143,8 @@ def test_cosine_pairs_plan_single_shuffle(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_wand_plan_one_kernel_two_exchanges(built):
-    """The block-max WAND kernel (blockmax + exclude) on the side-direct
+def test_blockmax_exclude_plan_one_kernel_two_exchanges(built):
+    """blockmax + exclude (the dense kernel, unpruned) on the side-direct
     plan keeps the one-kernel shape: exactly one shard-grouped kernel
     (FlatMapGroupsInPandas) and two exchanges total (side groupBy +
     final skinny top-k window) — the legacy DataFrame 3-phase plan this

@@ -1,6 +1,8 @@
-"""A/B the interval-pruned dense kernel (strategy='blockmax', clean
-shape) against the plain dense kernel (strategy='sharded') — the
-round-6 follow-up to BENCH_BOOL_AB.json.
+"""A/B the interval-pruned dense kernel (strategy='blockmax')
+against the plain dense kernel (strategy='sharded') — the round-6
+follow-up to BENCH_BOOL_AB.json. Its results, with BENCH_BOOL_AB.json,
+are why the per-block WAND kernel was deleted: 'blockmax' now has one
+kernel family, and the exclude=/fields= shapes run unpruned.
 
 Two corpora, same engine:
 
