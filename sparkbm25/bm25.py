@@ -34,10 +34,6 @@ def tf_norm(tf: float, doc_len: float, avgdl: float, k1: float = K1, b: float = 
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * doc_len / avgdl))
 
 
-def idf_np(df_t: np.ndarray, n_docs: float) -> np.ndarray:
-    return np.log1p((n_docs - df_t + 0.5) / (df_t + 0.5))
-
-
 def tf_norm_np(
     tf: np.ndarray, doc_len: np.ndarray, avgdl: float, k1: float = K1, b: float = B
 ) -> np.ndarray:

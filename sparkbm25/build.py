@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bm25 import B, K1
-from .codecs import BLOCK_SIZE, vbyte_decode
+from .codecs import BLOCK_SIZE
 
 RUN_SCHEMA = (
     "term string, shard_id long, n_docs int, "
@@ -285,8 +285,9 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
     """Stage-1 kernel: corpus batches -> COMPRESSED sorted runs per
     (term, shard).
 
-    Vectorized end-to-end: tf via C-level groupby (_tf_batch), one sort by
-    (term, shard, doc_id), boundary detection, then ONE varbyte encode call
+    Vectorized end-to-end: tf as a run-length count over one lexsort by
+    (term, doc_id) of the Arrow token stream, run boundaries where
+    (term, shard) changes, then ONE varbyte encode call
     per stream for the whole batch with per-run byte slicing — runs ship at
     ~3-4 B/posting instead of 16 B raw, cutting the SPIMI shuffle ~4-5x
     (at 10^12 turns the runs shuffle is the dominant network cost).
@@ -296,11 +297,7 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
     out with their position lists attached (first-absolute + gaps varbyte
     per posting, ~1 B per token occurrence), still one encode call per
     stream."""
-    from .codecs import (
-        segment_delta_gaps,
-        slice_bytes,
-        vbyte_encode_with_sizes,
-    )
+    from .codecs import segment_delta_gaps
 
     def gen(batches) -> "Iterator":
         # ARROW-NATIVE stage-1 kernel (r07; mapInArrow): the pandas shape
@@ -502,36 +499,20 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
     repartitioned on the group key and sorted within partitions; this
     generator streams Arrow record batches (mapInArrow, r07 — the
     mapInPandas shape paid an arrow->pandas conversion of every run row
-    plus a bytes-object b"".join per stream; here each binary column's
-    data buffer IS the concatenated stream, read zero-copy through the
-    offsets), carries the (possibly split) last group over to the next
+    plus a bytes-object join per stream; here codecs.decode_blocks reads
+    each binary column's data buffer zero-copy as the concatenated
+    stream), carries the (possibly split) last group over to the next
     batch as a zero-copy table slice, and merges each group with plain
     numpy — per-group cost ~0.1ms."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .codecs import segment_delta_restore
+    from .codecs import decode_blocks
 
     k1, b, bs = params.k1, params.b, params.block_size
 
-    def _bin_stream(tbl: "pa.Table", name: str):
-        """(stream bytes as one uint8 ndarray view, per-run byte counts)
-        from a binary column — the column's Arrow data buffer holds all
-        runs' bytes contiguously; the offsets vector IS the run length
-        table. Handles sliced arrays (non-zero offset)."""
-        col = tbl.column(name).combine_chunks()
-        bufs = col.buffers()
-        offs = np.frombuffer(bufs[1], dtype=np.int32)[
-            col.offset:col.offset + len(col) + 1
-        ].astype(np.int64)
-        data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None \
-            else np.zeros(0, dtype=np.uint8)
-        return data[offs[0]:offs[-1]], np.diff(offs)
-
-    def _flush_vectorized(n_rows: int, terms, shards, lens,
-                          docs_all, tfs_all, dls_all,
-                          g_row_starts, alive,
-                          pos_all=None) -> "pa.RecordBatch | None":
+    def _flush_vectorized(n_rows: int, terms, shards, post,
+                          g_row_starts) -> "pa.RecordBatch | None":
         """Merge vectorized ACROSS groups: one global (group, doc)
         lexsort replaces any per-(term, shard) loop, block aggregates
         come from reduceat at block starts, and every vbyte stream is
@@ -544,25 +525,21 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
         string column — block terms come from a take, never per-row
         Python strings.
 
-        ``pos_all``: the batch's token positions in PRE-SORT posting
-        order; the posting permutation is applied to the ragged stream
-        with one global gather, the delta restart runs once over
-        posting-start boundaries, and blocks slice the single encoded
-        stream at block token boundaries."""
+        ``post`` (codecs.Postings, dead copies already purged) holds the
+        batch's token positions in PRE-SORT posting order; the posting
+        permutation is applied to the ragged stream with one global
+        gather, the delta restart runs once over posting-start
+        boundaries, and blocks slice the single encoded stream at block
+        token boundaries."""
         from .codecs import segment_delta_gaps, vbyte_encode_arrays
 
+        docs_all, tfs_all, dls_all, pos_all = (
+            post.ids, post.tfs, post.dls, post.pos
+        )
         g_of_row = np.zeros(n_rows, dtype=np.int64)
         g_of_row[g_row_starts] = 1
         g_of_row = np.cumsum(g_of_row) - 1
-        pg = np.repeat(g_of_row, lens)
-        if alive is not None:
-            if pos_all is not None:
-                # ragged purge: drop dead postings' position slices
-                # (repeat uses the PRE-filter tf values)
-                pos_all = pos_all[np.repeat(alive, tfs_all)]
-            docs_all, tfs_all, dls_all, pg = (
-                docs_all[alive], tfs_all[alive], dls_all[alive], pg[alive]
-            )
+        pg = np.repeat(g_of_row, np.diff(post.row_off))
         if not len(docs_all):
             return None
         order = np.lexsort((docs_all, pg))
@@ -602,7 +579,7 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
             # apply the posting permutation to the ragged position
             # stream: posting i's slice [old_start[i], old_start[i]+tf)
             # moves as a unit
-            c = tfs_all  # post-filter tf values, pre-sort order
+            c = tfs_all  # pre-sort order
             old_tok_starts = np.cumsum(c) - c
             c_p = c[order]
             new_tok_starts = np.cumsum(c_p) - c_p
@@ -654,43 +631,17 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
     def flush(tbl: "pa.Table") -> "pa.RecordBatch | None":
         terms = tbl.column("term").combine_chunks()
         shards = tbl.column("shard_id").to_numpy()
-        lens = tbl.column("n_docs").to_numpy().astype(np.int64)
-        total = int(lens.sum())
-        run_starts = np.r_[0, np.cumsum(lens)[:-1]]
-        # ONE decode per stream for the whole batch — the binary column's
-        # Arrow data buffer IS the concatenated stream
-        docs_stream, _ = _bin_stream(tbl, "docs_vb")
-        gaps = vbyte_decode(docs_stream, count=total)
-        docs_all = segment_delta_restore(gaps, run_starts, lens)
-        tfs_all = vbyte_decode(
-            _bin_stream(tbl, "tfs_vb")[0], count=total
-        ).astype(np.int64)
-        dls_all = vbyte_decode(
-            _bin_stream(tbl, "dls_vb")[0], count=total
-        ).astype(np.int64)
-        pos_all = None
-        if params.store_positions:
-            total_pos = int(tfs_all.sum())
-            pos_gaps = vbyte_decode(
-                _bin_stream(tbl, "pos_vb")[0], count=total_pos
-            )
-            post_tok_starts = np.cumsum(tfs_all) - tfs_all
-            pos_all = segment_delta_restore(
-                pos_gaps, post_tok_starts, tfs_all
-            )
-        change = _boundaries(tbl, terms, shards)
-        g_row_starts = np.flatnonzero(change)
-        alive = None
-        if tombstones is not None and len(tombstones[0]):
-            from .codecs import dead_mask
-
-            gseqs = np.repeat(
-                tbl.column("gseq").to_numpy().astype(np.int64), lens
-            )
-            alive = ~dead_mask(docs_all, gseqs, tombstones[0], tombstones[1])
+        # ONE decode per stream for the whole batch, dead copies purged
+        post = decode_blocks(
+            tbl.column("n_docs"), tbl.column("docs_vb"),
+            tfs=tbl.column("tfs_vb"), dls=tbl.column("dls_vb"),
+            pos=tbl.column("pos_vb") if params.store_positions else None,
+            gseq=tbl.column("gseq") if tombstones is not None else None,
+            tomb=tombstones,
+        )
+        g_row_starts = np.flatnonzero(_boundaries(tbl, terms, shards))
         return _flush_vectorized(
-            tbl.num_rows, terms, shards, lens, docs_all, tfs_all, dls_all,
-            g_row_starts, alive, pos_all=pos_all,
+            tbl.num_rows, terms, shards, post, g_row_starts
         )
 
     def gen(batches):

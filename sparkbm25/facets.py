@@ -26,11 +26,52 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .analysis import tokenize_py
-from .codecs import dead_mask, segment_delta_restore, vbyte_decode
 from .jobs import Index
 from .localrel import local_df
 
 FACET_SCHEMA = "query_id int, value string, n_docs long"
+
+
+def _matched_rows(q_tokens: dict[int, list[str]], blocks, side_pdf,
+                  tombstones: "tuple | None"):
+    """The match machinery shared by the facet/stats kernels: the
+    side's kind=0 values (sorted by doc id) and [(query_id, indices
+    into them)] — per query, the side rows of the live docs matching
+    >= 1 of its present terms (ids only; the tf streams never decode).
+    Queries matching no side row are absent."""
+    from .codecs import decode_blocks
+    from .index_query import (
+        _gseq_col,
+        _parse_side,
+        _sorted_blocks,
+        _term_slices,
+    )
+
+    if not blocks.num_rows or side_pdf.empty:
+        return None, []
+    _qual, tomb, (sids, vals) = _parse_side(side_pdf, False, tombstones)
+    if not len(sids):
+        return vals, []
+    blocks = _sorted_blocks(blocks)
+    post = decode_blocks(
+        blocks.column("n_docs"), blocks.column("docs_vbyte"),
+        gseq=_gseq_col(blocks), tomb=tomb,
+    )
+    ids_of = {
+        t: post.ids[lo:hi] for t, lo, hi in _term_slices(blocks, post.row_off)
+    }
+    hits = []
+    for qid, toks in q_tokens.items():
+        parts = [ids_of[t] for t in set(toks) if t in ids_of]
+        if not parts:
+            continue
+        matched = np.unique(np.concatenate(parts))
+        pos = np.searchsorted(sids, matched)
+        pos_c = np.minimum(pos, len(sids) - 1)
+        valid = (pos < len(sids)) & (sids[pos_c] == matched)
+        if valid.any():
+            hits.append((qid, pos[valid]))
+    return vals, hits
 
 
 def _facet_count_fn(q_tokens: dict[int, list[str]],
@@ -38,18 +79,18 @@ def _facet_count_fn(q_tokens: dict[int, list[str]],
     """Per-shard facet kernel over (blocks, side) frames.
 
     Blocks: posting blocks (term, n_docs, docs_vbyte[, gseq]) of one
-    doc-range shard. Side: this shard's rows — kind=0 attribute
-    rows (doc_id, value) for docs eligible to be counted (live + passing
-    any where= filter), kind=1 distributed tombstones (doc_id, seq)
-    overriding the closure pair past TOMBSTONE_BROADCAST_MAX.
+    doc-range shard, a pyarrow Table. Side: this shard's rows — kind=0
+    attribute rows (doc_id, value) for docs eligible to be counted
+    (live + passing any where= filter), kind=1 distributed tombstones
+    (doc_id, seq) overriding the closure pair past
+    TOMBSTONE_BROADCAST_MAX.
 
     Per query: matched ids = union of its present terms' (live) posting
     ids; counts = value_counts over the side values of the matched ids
     that HAVE a side row. Emits (query_id, value, n_docs) partials —
     final sums happen plan-side (groupBy over the tiny partials)."""
 
-    def fn(blocks_pdf: pd.DataFrame,
-           side_pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(blocks, side_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
                 "query_id": pd.Series(dtype="int32"),
@@ -57,48 +98,15 @@ def _facet_count_fn(q_tokens: dict[int, list[str]],
                 "n_docs": pd.Series(dtype="int64"),
             }
         )
-        if blocks_pdf.empty or side_pdf.empty:
+        vals, hits = _matched_rows(q_tokens, blocks, side_pdf, tombstones)
+        if not hits:
             return empty
-        kind = side_pdf["kind"].to_numpy()
-        attr_rows = kind == 0
-        if not attr_rows.any():
-            return empty
-        sids = side_pdf["doc_id"].to_numpy(dtype=np.int64)[attr_rows]
-        vals = side_pdf["value"].to_numpy()[attr_rows]
-        o = np.argsort(sids, kind="stable")
-        sids, vals = sids[o], vals[o]
-        tomb = tombstones
-        tm = kind == 1
-        if tm.any():
-            t_ids = side_pdf["doc_id"].to_numpy(dtype=np.int64)[tm]
-            t_seqs = side_pdf["seq"].to_numpy(dtype=np.int64)[tm]
-            to = np.argsort(t_ids)
-            tomb = (t_ids[to], t_seqs[to])
-        spans = _live_term_spans(blocks_pdf, tomb)
-        if spans is None:
-            return empty
-
         rows_q, rows_v, rows_n = [], [], []
-        for qid, toks in q_tokens.items():
-            parts = [a for t in set(toks) for a in spans.get(t, ())]
-            if not parts:
-                continue
-            matched = (
-                parts[0] if len(parts) == 1 else np.unique(
-                    np.concatenate(parts)
-                )
-            )
-            pos = np.searchsorted(sids, matched)
-            pos_c = np.minimum(pos, len(sids) - 1)
-            valid = (pos < len(sids)) & (sids[pos_c] == matched)
-            if not valid.any():
-                continue
-            vc = pd.Series(vals[pos[valid]]).value_counts(dropna=False)
+        for qid, ix in hits:
+            vc = pd.Series(vals[ix]).value_counts(dropna=False)
             rows_q.append(np.full(len(vc), qid, dtype=np.int32))
             rows_v.append(vc.index.to_numpy(dtype=object))
             rows_n.append(vc.to_numpy(dtype=np.int64))
-        if not rows_q:
-            return empty
         v_out = np.concatenate(rows_v)
         # pandas value_counts surfaces NULL attrs as NaN; emit real None
         # so Spark's string column carries NULL, matching SQL GROUP BY
@@ -129,8 +137,7 @@ def _stats_agg_fn(q_tokens: dict[int, list[str]],
     contract; float attributes may differ from a serial sum by ~1 ulp,
     absorbed by the driver's 6dp rounding)."""
 
-    def fn(blocks_pdf: pd.DataFrame,
-           side_pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(blocks, side_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
                 "query_id": pd.Series(dtype="int32"),
@@ -140,80 +147,20 @@ def _stats_agg_fn(q_tokens: dict[int, list[str]],
                 "mx": pd.Series(dtype="float64"),
             }
         )
-        if blocks_pdf.empty or side_pdf.empty:
+        vals, hits = _matched_rows(q_tokens, blocks, side_pdf, tombstones)
+        if not hits:
             return empty
-        kind = side_pdf["kind"].to_numpy()
-        attr_rows = kind == 0
-        if not attr_rows.any():
-            return empty
-        sids = side_pdf["doc_id"].to_numpy(dtype=np.int64)[attr_rows]
-        vals = side_pdf["value"].to_numpy(dtype=np.float64)[attr_rows]
-        o = np.argsort(sids, kind="stable")
-        sids, vals = sids[o], vals[o]
-        tomb = tombstones
-        tm = kind == 1
-        if tm.any():
-            t_ids = side_pdf["doc_id"].to_numpy(dtype=np.int64)[tm]
-            t_seqs = side_pdf["seq"].to_numpy(dtype=np.int64)[tm]
-            to = np.argsort(t_ids)
-            tomb = (t_ids[to], t_seqs[to])
-        spans = _live_term_spans(blocks_pdf, tomb)
-        if spans is None:
-            return empty
+        vals = np.asarray(vals, dtype=np.float64)
         rows = []
-        for qid, toks in q_tokens.items():
-            parts = [a for t in set(toks) for a in spans.get(t, ())]
-            if not parts:
-                continue
-            matched = (
-                parts[0] if len(parts) == 1 else np.unique(
-                    np.concatenate(parts)
-                )
-            )
-            pos = np.searchsorted(sids, matched)
-            pos_c = np.minimum(pos, len(sids) - 1)
-            valid = (pos < len(sids)) & (sids[pos_c] == matched)
-            if not valid.any():
-                continue
-            v = vals[pos[valid]]
+        for qid, ix in hits:
+            v = vals[ix]
             rows.append((qid, len(v), float(v.sum()),
                          float(v.min()), float(v.max())))
-        if not rows:
-            return empty
         return pd.DataFrame(
             rows, columns=["query_id", "n", "s", "mn", "mx"]
         ).astype({"query_id": "int32", "n": "int64"})
 
     return fn
-
-
-def _live_term_spans(blocks_pdf: pd.DataFrame, tomb: "tuple | None"):
-    """Decode a group's posting blocks into {term: [live doc-id array per
-    block]} — the shared match machinery of the facet/stats kernels
-    (ids only; the tf streams never decode)."""
-    n_arr = blocks_pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_arr.sum())
-    if total == 0:
-        return None
-    seg_starts = np.cumsum(n_arr) - n_arr
-    gaps = vbyte_decode(b"".join(blocks_pdf["docs_vbyte"]), total)
-    all_ids = segment_delta_restore(gaps, seg_starts, n_arr)
-    if tomb is not None and len(tomb[0]):
-        gseqs = np.repeat(blocks_pdf["gseq"].to_numpy(np.int64), n_arr)
-        alive = ~dead_mask(all_ids, gseqs, tomb[0], tomb[1])
-    else:
-        alive = None
-    terms_arr = blocks_pdf["term"].to_numpy()
-    spans: dict[str, list[np.ndarray]] = {}
-    for i in range(len(blocks_pdf)):
-        lo = int(seg_starts[i])
-        hi = lo + int(n_arr[i])
-        ids_i = all_ids[lo:hi]
-        if alive is not None:
-            ids_i = ids_i[alive[lo:hi]]
-        if len(ids_i):
-            spans.setdefault(terms_arr[i], []).append(ids_i)
-    return spans
 
 
 def _matched_agg_plan(

@@ -27,8 +27,10 @@ side-direct  when the kernel needs a side frame — `where=` qualifying
              shard, and each group reads its shard's blocks in-task
              (_direct_side_fn). Posting blocks never cross an exchange.
 
-One kernel family serves both strategies: the densified exact fold
-(_sharded_topk_fn) over one batched decode (_decode_tfn).
+Every route reads a shard's blocks with one reader (_read_shard_blocks,
+a pyarrow Table) and decodes them with one function
+(codecs.decode_blocks). One kernel family serves both strategies: the
+densified exact fold (_sharded_topk_fn) over _decode_tfn.
 strategy='blockmax' adds interval-level block-max pruning
 (_interval_prune) in front of the fold; the shapes the pruner refuses
 (exclude=, fields=) run the fold unpruned, exactly as 'sharded'.
@@ -37,22 +39,17 @@ strategy='blockmax' adds interval-level block-max pruning
 from __future__ import annotations
 
 import os
-import threading
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .analysis import parse_prefix_query, tokenize_py
 from .bm25 import idf as idf_fn
-from .codecs import (
-    dead_mask,
-    in_sorted as _in_sorted,
-    segment_delta_restore,
-    vbyte_decode,
-)
+from .codecs import decode_blocks, in_sorted as _in_sorted
 from .jobs import Index
 from .localrel import local_df
 from .query import topk_window
@@ -90,22 +87,41 @@ def _query_weights(ix: Index, queries: list[tuple[int, str]]):
 _PRUNE_EPS = 1e-9
 
 
-def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
+def _sorted_blocks(blocks: pa.Table, keys=("term",)) -> pa.Table:
+    """``blocks`` stably sorted by ``keys`` (ascending)."""
+    return blocks.take(
+        pc.sort_indices(blocks, sort_keys=[(c, "ascending") for c in keys])
+    )
+
+
+def _term_slices(blocks: pa.Table, row_off: np.ndarray):
+    """[(term, lo, hi)]: each term's slice of the decoded posting arrays
+    (codecs.decode_blocks) of a term-sorted block table; terms left with
+    no posting are absent."""
+    terms = blocks.column("term").to_numpy()
+    if not len(terms):
+        return []
+    first = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+    off = row_off[np.r_[first, len(terms)]]
+    return [
+        (terms[f], int(off[i]), int(off[i + 1]))
+        for i, f in enumerate(first) if off[i + 1] > off[i]
+    ]
+
+
+def _gseq_col(blocks: pa.Table):
+    return blocks.column("gseq") if "gseq" in blocks.column_names else None
+
+
+def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
                 tomb: "tuple | None" = None,
                 qual: "np.ndarray | None" = None,
                 fieldw: tuple | None = None,
                 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
-    """Decode a (sub)frame of posting blocks into {term: (doc_ids,
-    tf_norm)} with the masks applied; terms left with no posting are
-    absent. The one decode behind the dense kernel's scoring and
-    _interval_prune's seed.
-
-    BATCHED: varbyte streams are self-delimiting, so the whole frame
-    decodes in three numpy passes (docs via segment_delta_restore with
-    per-block segment starts — each block's first doc id is absolute)
-    instead of three calls per block; per-call numpy overhead on
-    ~128-value blocks dominated kernel time (measured 0.48 s of a
-    0.74 s group).
+    """Decode a block table into {term: (doc_ids, tf_norm)} with the
+    masks applied; terms left with no posting are absent. The one
+    decode behind the dense kernel's scoring and _interval_prune's seed
+    (one batched codecs.decode_blocks over the term-sorted table).
 
     ``fieldw`` ((split, w_title, w_body), index_bm25f_search) scores
     positional-split BM25F: per-posting title tf derives from the
@@ -114,65 +130,42 @@ def _decode_tfn(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
     weighted avgdl~. With integer-valued weights every weighted sum is
     exact in f64, bit-equal to the corpus-scan path (bm25f module doc).
 
-    ``tomb`` (per-group tombstones via the frame's gseq column) and
+    ``tomb`` (per-group tombstones via the table's gseq column) and
     ``qual`` (sorted `where=` qualifying ids: the filter narrows
     candidates, idf/avgdl stay global) drop dead and non-qualifying
     postings. For the prune seed this keeps the theta bound sound under
     deletes / filtered search: an unmasked seed could certify theta from
     a dead or non-qualifying doc's score, overstating the kth eligible
     score."""
-    pdf = pdf.sort_values("term", kind="stable", ignore_index=True)
-    terms_arr = pdf["term"].to_numpy()
-    n_arr = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_arr.sum())
-    if total == 0:
+    blocks = _sorted_blocks(blocks)
+    post = decode_blocks(
+        blocks.column("n_docs"), blocks.column("docs_vbyte"),
+        tfs=blocks.column("tfs_vbyte"), dls=blocks.column("dls_vbyte"),
+        pos=blocks.column("pos_vbyte") if fieldw is not None else None,
+        gseq=_gseq_col(blocks), tomb=tomb, qual=qual,
+    )
+    if not len(post.ids):
         return {}
-    seg_starts = np.zeros(len(n_arr), dtype=np.int64)
-    seg_starts[1:] = np.cumsum(n_arr)[:-1]
-    gaps = vbyte_decode(b"".join(pdf["docs_vbyte"]), total)
-    all_ids = segment_delta_restore(gaps, seg_starts, n_arr)
-    tfs_i = vbyte_decode(b"".join(pdf["tfs_vbyte"]), total)
-    dls = vbyte_decode(b"".join(pdf["dls_vbyte"]), total).astype(np.float64)
+    dls = post.dls.astype(np.float64)
     if fieldw is not None:
         split, w_t, w_b = fieldw
-        tok_counts = tfs_i.astype(np.int64)
-        n_tok = int(tok_counts.sum())
-        pos_gaps = vbyte_decode(b"".join(pdf["pos_vbyte"]), n_tok)
-        tok_starts = np.cumsum(tok_counts) - tok_counts
-        pos_all = segment_delta_restore(pos_gaps, tok_starts, tok_counts)
-        tf1 = np.add.reduceat(
-            (pos_all < split).astype(np.int64), tok_starts
-        )
-        tfs = w_t * tf1 + w_b * (tok_counts - tf1)
+        tok_starts = np.cumsum(post.tfs) - post.tfs
+        tf1 = np.add.reduceat((post.pos < split).astype(np.int64), tok_starts)
+        tfs = w_t * tf1 + w_b * (post.tfs - tf1)
         dls = (
             w_t * np.minimum(dls, float(split))
             + w_b * np.maximum(dls - split, 0.0)
         )
     else:
-        tfs = tfs_i.astype(np.float64)
+        tfs = post.tfs.astype(np.float64)
     tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-    term_first = np.flatnonzero(np.r_[True, terms_arr[1:] != terms_arr[:-1]])
-    post_off = np.r_[seg_starts[term_first], total]
-    m = None
-    if tomb is not None and len(tomb[0]):
-        gseqs = np.repeat(pdf["gseq"].to_numpy(np.int64), n_arr)
-        m = ~dead_mask(all_ids, gseqs, tomb[0], tomb[1])
-    if qual is not None:
-        mq = _in_sorted(all_ids, qual)
-        m = mq if m is None else (m & mq)
-    if m is not None:
-        # term slice offsets onto the masked arrays
-        post_off = np.r_[0, np.cumsum(m)][post_off]
-        all_ids, tfn = all_ids[m], tfn[m]
-    raw: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for i, tb in enumerate(term_first):
-        lo, hi = int(post_off[i]), int(post_off[i + 1])
-        if hi > lo:
-            raw[terms_arr[tb]] = (all_ids[lo:hi], tfn[lo:hi])
-    return raw
+    return {
+        t: (post.ids[lo:hi], tfn[lo:hi])
+        for t, lo, hi in _term_slices(blocks, post.row_off)
+    }
 
 
-def _interval_prune(pdf: pd.DataFrame,
+def _interval_prune(blocks: pa.Table,
                     q_terms: dict[int, list[tuple[str, float]]],
                     k1: float, b: float, avgdl: float, k: int,
                     mode: str,
@@ -246,25 +239,26 @@ def _interval_prune(pdf: pd.DataFrame,
 
     Returns None when nothing is excludable (the caller then runs the
     plain dense path with zero per-query overhead), else
-    (keep_rows boolean mask over pdf rows, interval bounds array,
+    (keep_rows boolean mask over the block rows, interval bounds array,
     {qid: live boolean vector} for queries with >= 1 dead interval).
     """
     from .bm25 import tf_norm_np
 
-    firsts = pdf["first_doc"].to_numpy(dtype=np.int64)
-    lasts = pdf["last_doc"].to_numpy(dtype=np.int64)
+    def col(name, dtype):
+        return np.asarray(blocks.column(name).to_numpy(), dtype=dtype)
+
+    firsts = col("first_doc", np.int64)
+    lasts = col("last_doc", np.int64)
     if mode == "derived":
-        maxt = tf_norm_np(pdf["max_tf"].to_numpy(dtype=np.int64),
-                          pdf["min_dl"].to_numpy(dtype=np.int64),
+        maxt = tf_norm_np(col("max_tf", np.int64), col("min_dl", np.int64),
                           avgdl, k1, b)
-        mint = tf_norm_np(pdf["min_tf"].to_numpy(dtype=np.int64),
-                          pdf["max_dl"].to_numpy(dtype=np.int64),
+        mint = tf_norm_np(col("min_tf", np.int64), col("max_dl", np.int64),
                           avgdl, k1, b)
     else:
-        maxt = pdf["max_tf_norm"].to_numpy(dtype=np.float64)
-        mint = pdf["min_tf_norm"].to_numpy(dtype=np.float64)
-    n_arr = pdf["n_docs"].to_numpy(dtype=np.int64)
-    terms_arr = pdf["term"].to_numpy()
+        maxt = col("max_tf_norm", np.float64)
+        mint = col("min_tf_norm", np.float64)
+    n_arr = col("n_docs", np.int64)
+    terms_arr = blocks.column("term").to_numpy()
     bounds = np.unique(np.concatenate([firsts, lasts + 1]))
     n_int = len(bounds) - 1
     if n_int < 1:
@@ -344,8 +338,8 @@ def _interval_prune(pdf: pd.DataFrame,
         bmx = float(B.max())
         if bmx > 0.0 and float(B.min()) < 0.5 * bmx:
             seed_qids.add(qid)
-    if "docs_vbyte" in pdf.columns and seed_qids:
-        seed_rows = np.zeros(len(pdf), dtype=bool)
+    if "docs_vbyte" in blocks.column_names and seed_qids:
+        seed_rows = np.zeros(blocks.num_rows, dtype=bool)
         for qid in seed_qids:
             for t, _w in present_of[qid]:
                 idx = blk_of[t]
@@ -355,7 +349,7 @@ def _interval_prune(pdf: pd.DataFrame,
                 seed_rows[idx[order[:take]]] = True
         n_seed = int(n_arr[seed_rows].sum())
         if 0 < n_seed <= max(0.25 * float(n_arr.sum()), 64.0 * k):
-            raw = _decode_tfn(pdf[seed_rows], k1, b, avgdl,
+            raw = _decode_tfn(blocks.filter(seed_rows), k1, b, avgdl,
                               tomb=tomb, qual=qual)
             if raw:
                 for qid in seed_qids:
@@ -453,7 +447,7 @@ def _interval_prune(pdf: pd.DataFrame,
     if not any_dead:
         return None
     # decode only blocks overlapping their term's live-union region
-    keep_rows = np.ones(len(pdf), dtype=bool)
+    keep_rows = np.ones(blocks.num_rows, dtype=bool)
     for t, lv in term_live.items():
         if lv is None:
             continue
@@ -585,7 +579,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             "/ search_after; run those shapes unpruned"
         )
 
-    def _run(pdf: pd.DataFrame,
+    def _run(blocks: pa.Table,
              qual: np.ndarray | None,
              tomb: "tuple | None",
              sidev: "tuple | None" = None) -> pd.DataFrame:
@@ -604,18 +598,20 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         }
         live_of: dict[int, np.ndarray] = {}
         int_bounds: np.ndarray | None = None
-        if prune_bounds is not None and len(pdf):
+        if not blocks.num_rows:
+            return empty
+        if prune_bounds is not None:
             pruned = _interval_prune(
-                pdf, q_terms, k1, b, avgdl, k, prune_bounds,
+                blocks, q_terms, k1, b, avgdl, k, prune_bounds,
                 and_need=and_need, tomb=tomb, qual=qual,
             )
             if pruned is not None:
                 keep_rows, int_bounds, live_of = pruned
-                if not keep_rows.all():
-                    pdf = pdf[keep_rows]
-                if not len(pdf):
+                if not keep_rows.any():
                     return empty
-        raw = _decode_tfn(pdf, k1, b, avgdl, tomb=tomb, qual=qual,
+                if not keep_rows.all():
+                    blocks = blocks.filter(keep_rows)
+        raw = _decode_tfn(blocks, k1, b, avgdl, tomb=tomb, qual=qual,
                           fieldw=fieldw)
         if not raw:
             return empty
@@ -836,26 +832,16 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             )
         return pd.DataFrame(out)
 
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _run(pdf, None, tombstones)
+    def topk(blocks: pa.Table) -> pd.DataFrame:
+        return _run(blocks, None, tombstones)
 
-    def topk_side(blocks_pdf: pd.DataFrame,
+    def topk_side(blocks: pa.Table,
                   side_pdf: pd.DataFrame) -> pd.DataFrame:
         # side form: side_pdf carries this shard's qualifying ids
-        # (kind=0) and/or distributed tombstones (kind=1)
-        qual, tomb = _parse_side(side_pdf, has_qual, tombstones)
-        sidev = None
-        if collapse:
-            kind_c = (
-                side_pdf["kind"].to_numpy()
-                if len(side_pdf) else np.empty(0, dtype=np.int64)
-            )
-            a = kind_c == 0
-            sids_c = side_pdf["doc_id"].to_numpy(dtype=np.int64)[a]
-            svals_c = side_pdf["value"].to_numpy()[a]
-            o = np.argsort(sids_c, kind="stable")
-            sidev = (sids_c[o], svals_c[o])
-        return _run(blocks_pdf, qual, tomb, sidev)
+        # (kind=0; with their collapse values) and/or distributed
+        # tombstones (kind=1)
+        qual, tomb, attrs = _parse_side(side_pdf, has_qual, tombstones)
+        return _run(blocks, qual, tomb, attrs if collapse else None)
 
     return topk_side if side else topk
 
@@ -865,15 +851,22 @@ def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
     """Split a shard's side frame (the kernel's kind-tagged side
     contract) into (sorted qualifying ids | None,
     tombstone (ids, seqs) pair — distributed rows override the
-    closure-shipped pair when present). kind=2 anchor rows only make
-    their shard a group of the side-direct plan and are ignored here."""
+    closure-shipped pair when present,
+    kind=0 (ids, values) sorted by id | None when the side carries no
+    ``value`` column). kind=2 anchor rows only make their shard a group
+    of the side-direct plan and are ignored here."""
     if len(side_pdf):
         kind = side_pdf["kind"].to_numpy()
         ids_side = side_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
     else:
         kind = np.empty(0, dtype=np.int64)
         ids_side = np.empty(0, dtype=np.int64)
-    qual = np.sort(ids_side[kind == 0]) if has_qual else None
+    a = kind == 0
+    qual = np.sort(ids_side[a]) if has_qual else None
+    attrs = None
+    if "value" in side_pdf.columns:
+        o = np.argsort(ids_side[a], kind="stable")
+        attrs = (ids_side[a][o], side_pdf["value"].to_numpy()[a][o])
     tomb = closure_tomb
     tm = kind == 1
     if tm.any():
@@ -881,7 +874,7 @@ def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
         t_seqs = side_pdf["seq"].to_numpy(dtype=np.int64)[tm]
         o = np.argsort(t_ids)
         tomb = (t_ids[o], t_seqs[o])
-    return qual, tomb
+    return qual, tomb, attrs
 
 
 def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
@@ -918,11 +911,11 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
     def gen(batches):
         for wpdf in batches:
             for i in wpdf["id"]:
-                pdf = _read_shard_blocks(
+                blocks = _read_shard_blocks(
                     entries[int(i)], cols, terms, need_gseq
                 )
-                if len(pdf):
-                    out = kernel(pdf)
+                if blocks.num_rows:
+                    out = kernel(blocks)
                     if len(out):
                         yield out
 
@@ -930,45 +923,45 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
 
 
 def _read_shard_blocks(entry: list, cols: list[str],
-                       terms: list[str], need_gseq: bool) -> pd.DataFrame:
+                       terms: list[str], need_gseq: bool) -> pa.Table:
     """pyarrow read of one shard's posting files ``entry`` ([(gseq,
     path), ...], layout-2 clustered tree) with the term filter pushed
     down to row groups (row groups are term-sorted within a bucket
-    file). use_threads=False: a task must stay inside its ONE Spark core
-    slot — arrow's default pool would use every host core, silently
-    oversubscribing executors (and faking low-core scaling
+    file) — the one block reader of the executor kernels and the
+    driver route. use_threads=False: a task must stay inside its ONE
+    Spark core slot — arrow's default pool would use every host core,
+    silently oversubscribing executors (and faking low-core scaling
     measurements). With ``need_gseq`` files read grouped by lineage seq
     and tagged with it, so per-group tombstone masking stays exact when
-    a delete must mask only older groups."""
+    a delete must mask only older groups. The table comes back as one
+    chunk per column (a file or row group per chunk made every kernel
+    filter several times slower)."""
     import pyarrow.dataset as pads
 
     if not entry:
-        return pd.DataFrame(
-            columns=cols + (["gseq"] if need_gseq else [])
-        )
+        return pa.table({
+            c: pa.array([], pa.null())
+            for c in cols + (["gseq"] if need_gseq else [])
+        })
     filt = pads.field("term").isin(terms)
-    if need_gseq:
-        by_gs: dict[int, list[str]] = {}
-        for g, p in entry:
-            by_gs.setdefault(int(g), []).append(p)
-        parts = []
-        for g, ps in sorted(by_gs.items()):
-            part = (
-                pads.dataset(ps, format="parquet")
-                .to_table(columns=cols, filter=filt, use_threads=False)
-                .to_pandas()
-            )
-            part["gseq"] = np.int64(g)
-            parts.append(part)
-        return (
-            parts[0] if len(parts) == 1
-            else pd.concat(parts, ignore_index=True)
+
+    def read(paths: list[str]) -> pa.Table:
+        return pads.dataset(paths, format="parquet").to_table(
+            columns=cols, filter=filt, use_threads=False
         )
-    return (
-        pads.dataset([p for _, p in entry], format="parquet")
-        .to_table(columns=cols, filter=filt, use_threads=False)
-        .to_pandas()
-    )
+
+    if not need_gseq:
+        return read([p for _, p in entry]).combine_chunks()
+    by_gs: dict[int, list[str]] = {}
+    for g, p in entry:
+        by_gs.setdefault(int(g), []).append(p)
+    parts = []
+    for g, ps in sorted(by_gs.items()):
+        part = read(ps)
+        parts.append(part.append_column(
+            "gseq", pa.array(np.full(part.num_rows, g, dtype=np.int64))
+        ))
+    return pa.concat_tables(parts).combine_chunks()
 
 
 def _collapse_window(shard_tops: DataFrame, k: int) -> DataFrame:
@@ -1015,10 +1008,10 @@ def _direct_side_fn(kernel_side, cols: list[str], terms: list[str],
     closure-shipped like the query terms)."""
 
     def fn(key: tuple, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = _read_shard_blocks(
+        blocks = _read_shard_blocks(
             file_map.get(int(key[0]), []), cols, terms, need_gseq
         )
-        return kernel_side(pdf, side_pdf)
+        return kernel_side(blocks, side_pdf)
 
     return fn
 
@@ -1046,7 +1039,7 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
         # global merge (_merge_tops). Size-guarded: falls through to the
         # distributed plan when the query set or its posting volume
         # exceeds the driver budget.
-        return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k, ix)
+        return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k)
     tops = ix.spark.range(len(fm), numPartitions=len(fm)).mapInPandas(
         _direct_topk_gen(kernel, cols, terms, fm, tomb),
         schema="query_id int, doc_id long, score double",
@@ -1066,8 +1059,6 @@ def _merge_tops(spark, parts: list, k: int) -> DataFrame:
     order (score DESC, doc_id ASC) and is a LocalRelation — collecting
     it launches no Spark job. A doc lives in one shard, so no (query,
     doc) pair repeats across parts."""
-    import pyarrow as pa
-
     def col(name, dtype):
         return np.concatenate([np.empty(0, dtype)] + [
             np.asarray(p[name], dtype=dtype) for p in parts
@@ -1103,44 +1094,6 @@ LOCAL_SEARCH_MAX_QUERIES = int(
 LOCAL_SEARCH_MAX_POSTINGS = int(
     os.environ.get("SPARKBM25_LOCAL_SEARCH_MAX_POSTINGS", "8000000")
 )
-# parquet footers the point path keeps per Index handle (LRU, so driver
-# memory stays bounded however many files an artifact grows to); an
-# artifact with at most this many files is warmed whole on first use.
-LOCAL_SEARCH_FOOTER_WARM_MAX_FILES = int(
-    os.environ.get("SPARKBM25_LOCAL_FOOTER_WARM_MAX_FILES", "4096")
-)
-
-
-class _FooterCache:
-    """LRU map of parquet path -> FileMetaData holding at most ``cap``
-    entries: ``Index._pq_meta``. Locked, because the shard reads (and
-    the warm pass) run on a thread pool."""
-
-    def __init__(self, cap: int):
-        self.cap = cap
-        self.warmed = False
-        self._lock = threading.Lock()
-        self._d: OrderedDict = OrderedDict()
-
-    def __len__(self) -> int:
-        with self._lock:
-            return len(self._d)
-
-    def get(self, path: str):
-        with self._lock:
-            md = self._d.get(path)
-            if md is not None:
-                self._d.move_to_end(path)
-            return md
-
-    def put(self, path: str, md) -> None:
-        with self._lock:
-            self._d[path] = md
-            self._d.move_to_end(path)
-            while len(self._d) > self.cap:
-                self._d.popitem(last=False)
-
-
 def _local_serve_ok(ix: Index, occ: dict, terms: list[str]) -> bool:
     """True when the query set is small enough to serve in-process: few
     queries AND a bounded total posting volume (df is driver-resident via
@@ -1152,116 +1105,33 @@ def _local_serve_ok(ix: Index, occ: dict, terms: list[str]) -> bool:
     return total <= LOCAL_SEARCH_MAX_POSTINGS
 
 
-def _read_blocks_meta_cached(entry: list, cols: list[str],
-                             terms: list[str], need_gseq: bool,
-                             meta_cache: _FooterCache) -> pd.DataFrame:
-    """Driver-side block read with per-path parquet FOOTER caching: the
-    footer parse dominated the per-file read cost on the point-query path
-    (~2-3 ms x ~100 files per call), and the artifact is immutable for a
-    handle's lifetime (same contract as Index._bucket_files /
-    _stats_cache; Index.refresh() clears this cache too). Row groups are
-    pre-selected with the cached term min/max stats, then rows filtered
-    to the exact term set — identical rows, in the same file order, as
-    the pads.dataset(filter=isin) read the executor kernels use."""
-    import bisect
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    tset = sorted(terms)
-    term_arr = pa.array(tset)
-    parts = []
-    gseq_vals = []
-    for gseq, path in entry:
-        md = meta_cache.get(path)
-        if md is None:
-            md = pq.read_metadata(path)
-            meta_cache.put(path, md)
-        term_ix = md.schema.names.index("term")
-        rgs = []
-        for i in range(md.num_row_groups):
-            st = md.row_group(i).column(term_ix).statistics
-            if st is None or not st.has_min_max:
-                rgs.append(i)
-                continue
-            # any query term inside [min, max]?
-            j = bisect.bisect_left(tset, st.min)
-            if j < len(tset) and tset[j] <= st.max:
-                rgs.append(i)
-        if not rgs:
-            continue
-        with pq.ParquetFile(path, metadata=md) as pf:
-            tbl = pf.read_row_groups(rgs, columns=cols, use_threads=False)
-        mask = pc.is_in(tbl["term"], value_set=term_arr)
-        tbl = tbl.filter(mask)
-        if tbl.num_rows:
-            parts.append(tbl.to_pandas())
-            gseq_vals.append(int(gseq))
-    if not parts:
-        return pd.DataFrame(columns=cols + (["gseq"] if need_gseq else []))
-    if need_gseq:
-        for p, g in zip(parts, gseq_vals):
-            p["gseq"] = np.int64(g)
-    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-
-
 def _local_search(spark, kernel, cols: list[str], terms: list[str],
-                  fm: dict, tomb: "tuple | None", k: int,
-                  ix: Index) -> DataFrame:
+                  fm: dict, tomb: "tuple | None", k: int) -> DataFrame:
     """Driver-side execution of the direct route: read each shard's block
-    files with pyarrow (threaded — the reads release the GIL), run the
-    unchanged per-shard kernel and merge the tops with _merge_tops, the
-    same merge the collected Spark plan ends in. Returns a LocalRelation
-    DataFrame; every call recomputes from the parquet artifact."""
+    files with _read_shard_blocks (threaded — the reads release the
+    GIL), run the unchanged per-shard kernel and merge the tops with
+    _merge_tops, the same merge the collected Spark plan ends in.
+    Returns a LocalRelation DataFrame; every call recomputes from the
+    parquet artifact."""
     from concurrent.futures import ThreadPoolExecutor
 
     need_gseq = tomb is not None and len(tomb[0]) > 0
-    meta_cache = getattr(ix, "_pq_meta", None)
-    if meta_cache is None:
-        meta_cache = ix._pq_meta = _FooterCache(
-            LOCAL_SEARCH_FOOTER_WARM_MAX_FILES
-        )
-    if not meta_cache.warmed:
-        meta_cache.warmed = True
-        # first local call: warm the WHOLE artifact's parquet footers once
-        # (threaded; ~2 ms each). A point-query workload touches fresh
-        # buckets per query, so per-call caching alone leaves every call
-        # cold; one warm pass makes the whole 20-call p50 sweep read data
-        # pages only. Gated by file count so a huge index falls back to
-        # per-call parsing (through the LRU) instead of a warm that the
-        # cache bound would evict again.
-        import pyarrow.parquet as pq
-
-        all_paths = [
-            p for lst in ix.shard_file_map().values() for _, p in lst
-        ]
-        if len(all_paths) <= meta_cache.cap:
-            def _warm(p):
-                try:
-                    meta_cache.put(p, pq.read_metadata(p))
-                except OSError:
-                    pass
-
-            with ThreadPoolExecutor(max_workers=16) as wpool:
-                list(wpool.map(_warm, all_paths))
-
     shards = sorted(fm)
 
     def read_shard(s):
-        return _read_blocks_meta_cached(
-            fm[s], cols, terms, need_gseq, meta_cache,
-        )
+        return _read_shard_blocks(fm[s], cols, terms, need_gseq)
 
     # reads threaded (pyarrow releases the GIL on data pages); kernels
     # sequential — the numpy fold's short ufunc bursts thrash under a
     # thread pool (measured: pooled read+kernel 0.50 s vs 0.28 s split)
     if len(shards) > 1:
         with ThreadPoolExecutor(max_workers=min(8, len(shards))) as pool:
-            pdfs = list(pool.map(read_shard, shards))
+            tables = list(pool.map(read_shard, shards))
     else:
-        pdfs = [read_shard(shards[0])]
-    return _merge_tops(spark, [kernel(pdf) for pdf in pdfs if len(pdf)], k)
+        tables = [read_shard(shards[0])]
+    return _merge_tops(
+        spark, [kernel(t) for t in tables if t.num_rows], k
+    )
 
 
 PHRASE_MATCH_SCHEMA = "query_id int, doc_id long, ptf int, dl int"
@@ -1297,7 +1167,7 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
 
     Tombstones mask per (id, group-seq) at decode, exactly like the
     scoring kernels."""
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
+    def topk(blocks: pa.Table) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
                 "query_id": pd.Series(dtype="int32"),
@@ -1306,51 +1176,24 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
                 "dl": pd.Series(dtype="int32"),
             }
         )
-        if pdf.empty:
+        if not blocks.num_rows:
             return empty
         # per-term doc order: blocks of one (term, shard) partition the
         # sorted posting list, so ordering by first_doc restores it
-        pdf = pdf.sort_values(["term", "first_doc"], kind="stable",
-                              ignore_index=True)
-        terms_arr = pdf["term"].to_numpy()
-        n_arr = pdf["n_docs"].to_numpy().astype(np.int64)
-        total = int(n_arr.sum())
-        if total == 0:
-            return empty
-        seg_starts = np.cumsum(n_arr) - n_arr
-        gaps = vbyte_decode(b"".join(pdf["docs_vbyte"]), total)
-        all_ids = segment_delta_restore(gaps, seg_starts, n_arr)
-        tfs = vbyte_decode(b"".join(pdf["tfs_vbyte"]), total).astype(np.int64)
-        dls = vbyte_decode(b"".join(pdf["dls_vbyte"]), total).astype(np.int64)
-        total_pos = int(tfs.sum())
-        pos_gaps = vbyte_decode(b"".join(pdf["pos_vbyte"]), total_pos)
-        tok_starts = np.cumsum(tfs) - tfs
-        pos_all = segment_delta_restore(pos_gaps, tok_starts, tfs)
-        alive = None
-        if tombstones is not None and len(tombstones[0]):
-            gseqs = np.repeat(pdf["gseq"].to_numpy(np.int64), n_arr)
-            alive = ~dead_mask(all_ids, gseqs, tombstones[0], tombstones[1])
-        # slice per term
+        blocks = _sorted_blocks(blocks, ("term", "first_doc"))
+        post = decode_blocks(
+            blocks.column("n_docs"), blocks.column("docs_vbyte"),
+            tfs=blocks.column("tfs_vbyte"), dls=blocks.column("dls_vbyte"),
+            pos=blocks.column("pos_vbyte"), gseq=_gseq_col(blocks),
+            tomb=tombstones,
+        )
+        tok_off = np.r_[0, np.cumsum(post.tfs)]
         tdata: dict[str, tuple] = {}
-        blk_change = np.r_[True, terms_arr[1:] != terms_arr[:-1]]
-        t_first = np.flatnonzero(blk_change)
-        t_post_off = np.r_[seg_starts[t_first], total]
-        for i, tb in enumerate(t_first):
-            lo, hi = int(t_post_off[i]), int(t_post_off[i + 1])
-            if hi <= lo:
-                continue
-            ids_t = all_ids[lo:hi]
-            tfs_t = tfs[lo:hi]
-            dls_t = dls[lo:hi]
-            p_lo = int(tok_starts[lo])
-            p_hi = p_lo + int(tfs_t.sum())
-            pos_t = pos_all[p_lo:p_hi]
-            if alive is not None:
-                sel = alive[lo:hi]
-                if not sel.any():
-                    continue
-                pos_t = pos_t[np.repeat(sel, tfs_t)]
-                ids_t, tfs_t, dls_t = ids_t[sel], tfs_t[sel], dls_t[sel]
+        for t, lo, hi in _term_slices(blocks, post.row_off):
+            ids_t = post.ids[lo:hi]
+            tfs_t = post.tfs[lo:hi]
+            dls_t = post.dls[lo:hi]
+            pos_t = post.pos[tok_off[lo]:tok_off[hi]]
             if np.any(ids_t[1:] < ids_t[:-1]):
                 # blocks of one (term, shard) ascend only WITHIN a lineage
                 # group; group doc ranges interleave (streamed appends),
@@ -1365,7 +1208,7 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
                 intra -= np.repeat(np.cumsum(cnt_o) - cnt_o, cnt_o)
                 pos_t = pos_t[np.repeat(starts_t[order], cnt_o) + intra]
                 ids_t, tfs_t, dls_t = ids_t[order], cnt_o, dls_t[order]
-            tdata[terms_arr[tb]] = (ids_t, tfs_t, dls_t, pos_t)
+            tdata[t] = (ids_t, tfs_t, dls_t, pos_t)
 
         rows_q, rows_d, rows_p, rows_l = [], [], [], []
         for qid, terms in q_phrases.items():
@@ -1470,8 +1313,9 @@ def index_phrase_search(
     plan (r06): each task pyarrow-reads its shard's files — including
     the heavy positional stream, which therefore never crosses an
     exchange — then the tiny (query, doc, phrase_tf) stream flows into
-    Catalyst scoring + top-k window, the only shuffle, exactly like
-    index_search's direct plan.
+    Catalyst scoring and the topk_window exchange, the plan's only
+    shuffle (index_search's direct plan instead merges its per-shard
+    tops in the driver, with no exchange).
 
     Returns (query_id, rank, doc_id, score); queries whose phrase matches
     nothing (or with an absent term) yield no rows."""

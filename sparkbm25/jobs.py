@@ -872,10 +872,6 @@ class Index:
         # direct-route file listing: appended groups add files, compaction
         # deletes them — a stale map would read the pre-refresh tree
         self._bucket_files.clear()
-        # point-query fast path's parquet footer cache (index_query
-        # _read_blocks_meta_cached, an LRU built on first use): same
-        # immutable-artifact contract
-        self._pq_meta = None
         self.manifest = read_manifest(self.index_dir)
         b = self.manifest["build"]
         self.n_docs = b["n_docs"]

@@ -2,91 +2,26 @@
 
 The reference's heavy kernels live in faiss C++/CUDA behind SWIG
 (faiss_gpu_index_cagra_builder.py:227-279 build; search_indices.py:30-39
-search); ours are numpy/pandas over Arrow batches — batch-level vectorized,
+search); ours are numpy over Arrow batches — batch-level vectorized,
 no per-row Python in the hot path (BASELINE.json input_hint requirement).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-
-from .analysis import tokenize_series
 
 # output schema of doc_term_freqs
 TF_SCHEMA = "doc_id long, doc_len int, term string, tf int"
 
 
-def _tf_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One Arrow batch (doc_id, text) -> (doc_id, doc_len, term, tf) rows.
-
-    Fully vectorized: tokenize the batch, flatten to one (doc_ix, term)
-    frame, and count duplicates with a C-level pandas groupby. No Python
-    loop over rows or tokens.
-    """
-    tok_lists = tokenize_series(pdf["text"])
-    lens = tok_lists.str.len().to_numpy(dtype=np.int64)
-    n_docs = len(pdf)
-    if n_docs == 0 or lens.sum() == 0:
-        return pd.DataFrame(
-            {
-                "doc_id": np.array([], dtype=np.int64),
-                "doc_len": np.array([], dtype=np.int32),
-                "term": np.array([], dtype=object),
-                "tf": np.array([], dtype=np.int32),
-            }
-        )
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    flat_terms = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists])
-    flat_doc = np.repeat(doc_ids, lens)
-    flat_dl = np.repeat(lens, lens)
-    # factorize + int lexsort instead of a string groupby: the pandas
-    # object-key groupby hashed every token string per row and owned most
-    # of the kernel's task time (r07 profile); run-length counting over
-    # (term_code, doc)-sorted rows produces the same (doc, term, tf)
-    # multiset (row order differs — every consumer aggregates)
-    codes, uniq = pd.factorize(flat_terms, sort=False)
-    order = np.lexsort((flat_doc, codes))
-    c_s = codes[order]
-    d_s = flat_doc[order]
-    total = len(c_s)
-    change = np.ones(total, dtype=bool)
-    change[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
-    starts = np.flatnonzero(change)
-    tf = (np.r_[starts[1:], total] - starts).astype(np.int32)
-    return pd.DataFrame(
-        {
-            "doc_id": d_s[starts],
-            "doc_len": flat_dl[order][starts].astype(np.int32),
-            "term": np.asarray(uniq, dtype=object)[c_s[starts]],
-            "tf": tf,
-        }
-    )
-
-
-def doc_term_freqs_gen(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas generator: (doc_id, text) batches -> TF_SCHEMA batches.
-
-    Per-doc term counting happens map-side inside the Arrow batch, so the
-    (doc_id, term, tf) stream that reaches any downstream shuffle is already
-    one row per distinct (doc, term) — the SPIMI "local inversion" step with
-    zero shuffle cost of its own.
-    """
-    for pdf in batches:
-        yield _tf_batch(pdf)
-
-
 def _tf_gen_arrow(batches):
-    """Arrow-native doc_term_freqs kernel (r07; mapInArrow): the token
-    stream stays one Arrow buffer (analysis.tokenize_flat_arrow) and the
-    vocabulary comes from dictionary_encode — no Python str object per
-    token, no object-array factorize. Emits the same (doc_id, doc_len,
-    term, tf) multiset as _tf_batch (row order differs; every consumer
-    aggregates or joins)."""
+    """doc_term_freqs kernel (mapInArrow): (doc_id, text) batches ->
+    one (doc_id, doc_len, term, tf) row per distinct (doc, term). The
+    token stream stays one Arrow buffer (analysis.tokenize_flat_arrow)
+    and the vocabulary comes from dictionary_encode — no Python str
+    object per token; tf is a run-length count over one (term, doc)
+    lexsort. Row order is unspecified (every consumer aggregates or
+    joins)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

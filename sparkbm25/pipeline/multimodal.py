@@ -22,10 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, payload binary, "
-    "width int, height int, n_frames int"
-)
 
 FEATURE_DIM = 16
 FEATURES_SCHEMA = f"doc_id long, media_type string, n_bytes int, features array<float>"

@@ -34,10 +34,6 @@ from .localrel import local_df
 from .analysis import tokenize_py, tokens_col
 from .jobs import Index
 
-SIG_SCHEMA = (
-    "query_id int, term string, fg_df long, df long, score double"
-)
-
 
 def index_significant_terms(
     ix: Index,

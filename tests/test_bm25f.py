@@ -213,13 +213,13 @@ def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
     queries = pool[:iq.LOCAL_SEARCH_MAX_QUERIES]
     ex = {queries[0][0]: pool[5][1].split()[0]}
     reads = []
-    real_read = iq._read_blocks_meta_cached
+    real_read = iq._read_shard_blocks
 
     def spy(entry, cols, *args, **kwargs):
         reads.append(tuple(cols))
         return real_read(entry, cols, *args, **kwargs)
 
-    monkeypatch.setattr(iq, "_read_blocks_meta_cached", spy)
+    monkeypatch.setattr(iq, "_read_shard_blocks", spy)
 
     def run(search, **kw):
         reads.clear()

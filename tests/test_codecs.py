@@ -141,3 +141,138 @@ def test_segment_binary_rejects_int32_offset_overflow():
     sizes = np.array([1 << 30, 1 << 30], dtype=np.int64)  # 2^31 bytes
     with pytest.raises(ValueError, match="int32"):
         segment_binary(np.zeros(1, dtype=np.uint8), sizes, np.array([0, 1]))
+
+
+def _random_block_rows(rng, gseq, ids_pool, block_size=16):
+    """One lineage group's posting blocks of a single term: per-block
+    streams from pack_blocks (docs, tfs) plus dls and per-posting
+    position streams, with the postings they encode."""
+    ids = np.sort(rng.choice(ids_pool, size=len(ids_pool) // 2,
+                             replace=False)).astype(np.int64)
+    tfs = rng.integers(1, 6, size=len(ids)).astype(np.int64)
+    dls = rng.integers(5, 400, size=len(ids)).astype(np.int64)
+    pos = [np.sort(rng.choice(400, size=int(t), replace=False))
+           for t in tfs]
+    rows = []
+    for blk in pack_blocks(ids, tfs, np.ones(len(ids)), block_size):
+        lo = blk["block_id"] * block_size
+        hi = lo + blk["n_docs"]
+        rows.append({
+            "n_docs": blk["n_docs"], "docs": blk["docs_vbyte"],
+            "tfs": blk["tfs_vbyte"], "dls": vbyte_encode(dls[lo:hi]),
+            "pos": vbyte_encode(np.concatenate(
+                [delta_encode(p) for p in pos[lo:hi]]
+            )),
+            "gseq": gseq,
+        })
+    return rows
+
+
+def _reference_decode(rows, tomb=None, qual=None):
+    """Per-block reference: unpack_block for ids/tfs, one vbyte_decode
+    for dls, per-posting cumsum for positions; masks per posting."""
+    ids_o, tfs_o, dls_o, pos_o, row_off = [], [], [], [], [0]
+    for r in rows:
+        ids, tfs = unpack_block(r["docs"], r["tfs"], r["n_docs"])
+        dls = vbyte_decode(r["dls"], r["n_docs"]).astype(np.int64)
+        flat = vbyte_decode(r["pos"], int(tfs.sum())).astype(np.int64)
+        cuts = np.cumsum(tfs)[:-1]
+        pos = [np.cumsum(g) for g in np.split(flat, cuts)]
+        for i in range(r["n_docs"]):
+            d = int(ids[i])
+            if tomb is not None and tomb.get(d, -1) >= r["gseq"]:
+                continue
+            if qual is not None and d not in qual:
+                continue
+            ids_o.append(d)
+            tfs_o.append(int(tfs[i]))
+            dls_o.append(int(dls[i]))
+            pos_o.extend(pos[i].tolist())
+        row_off.append(len(ids_o))
+    return ids_o, tfs_o, dls_o, pos_o, row_off
+
+
+def _to_table(rows):
+    import pyarrow as pa
+
+    return pa.table({
+        "n_docs": pa.array([r["n_docs"] for r in rows], pa.int32()),
+        "docs": pa.array([r["docs"] for r in rows], pa.binary()),
+        "tfs": pa.array([r["tfs"] for r in rows], pa.binary()),
+        "dls": pa.array([r["dls"] for r in rows], pa.binary()),
+        "pos": pa.array([r["pos"] for r in rows], pa.binary()),
+        "gseq": pa.array([r["gseq"] for r in rows], pa.int64()),
+    })
+
+
+def _decode(tbl, **kw):
+    from sparkbm25.codecs import decode_blocks
+
+    return decode_blocks(
+        tbl.column("n_docs"), tbl.column("docs"), tfs=tbl.column("tfs"),
+        dls=tbl.column("dls"), pos=tbl.column("pos"),
+        gseq=tbl.column("gseq"), **kw,
+    )
+
+
+def _assert_matches(got, want):
+    ids, tfs, dls, pos, row_off = want
+    assert got.ids.dtype == np.int64 and got.ids.tolist() == ids
+    assert got.tfs.tolist() == tfs
+    assert got.dls.tolist() == dls
+    assert got.pos.tolist() == pos
+    assert got.row_off.tolist() == row_off
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_decode_blocks_matches_per_block_reference(seed):
+    """The batched decoder against the per-block reference on two
+    lineage groups whose doc ranges interleave (and share re-ingested
+    ids): unmasked, a tombstone set that kills only the older group's
+    copies, and a qualifying-id mask with positions."""
+    rng = np.random.default_rng(seed)
+    pool = np.arange(0, 3000, 3, dtype=np.int64)
+    rows = (_random_block_rows(rng, 0, pool)
+            + _random_block_rows(rng, 1, pool))
+    tbl = _to_table(rows)
+    _assert_matches(_decode(tbl), _reference_decode(rows))
+
+    # delete seq 0: dead in group 0, a later re-ingest (group 1) lives
+    victims = np.sort(rng.choice(pool, size=300, replace=False))
+    seqs = np.zeros(len(victims), dtype=np.int64)
+    got = _decode(tbl, tomb=(victims, seqs))
+    want = _reference_decode(rows, tomb=dict.fromkeys(victims.tolist(), 0))
+    _assert_matches(got, want)
+    assert len(want[0]) < len(_reference_decode(rows)[0])
+    assert set(victims.tolist()) & set(want[0]), "group 1 copies survive"
+
+    qual = np.sort(rng.choice(pool, size=400, replace=False))
+    _assert_matches(_decode(tbl, qual=qual),
+                    _reference_decode(rows, qual=set(qual.tolist())))
+    _assert_matches(
+        _decode(tbl, tomb=(victims, seqs), qual=qual),
+        _reference_decode(rows, tomb=dict.fromkeys(victims.tolist(), 0),
+                          qual=set(qual.tolist())),
+    )
+
+
+def test_decode_blocks_sliced_multi_chunk_input():
+    """Arrow columns with several chunks and a non-zero slice offset
+    decode exactly like the rows they cover."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(7)
+    pool = np.arange(0, 2000, 2, dtype=np.int64)
+    rows = (_random_block_rows(rng, 0, pool)
+            + _random_block_rows(rng, 1, pool))
+    tbl = pa.concat_tables([_to_table(rows[:5]), _to_table(rows[5:])])
+    assert tbl.column("docs").num_chunks == 2
+    sliced = tbl.slice(3, len(rows) - 5)
+    assert sliced.column("docs").chunk(0).offset == 3
+    _assert_matches(_decode(sliced), _reference_decode(rows[3:-2]))
+    one_chunk = _to_table(rows).slice(2, 6)
+    assert one_chunk.column("docs").chunk(0).offset == 2
+    _assert_matches(_decode(one_chunk), _reference_decode(rows[2:8]))
+    qual = np.sort(rng.choice(pool, size=300, replace=False))
+    _assert_matches(_decode(sliced, qual=qual),
+                    _reference_decode(rows[3:-2], qual=set(qual.tolist())))

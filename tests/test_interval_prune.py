@@ -33,6 +33,7 @@ import glob
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from sparkbm25.build import BuildParams
@@ -47,13 +48,11 @@ from sparkbm25.oracle import OracleIndex
 
 
 def _mk_pdf(rows):
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "term", "first_doc", "last_doc", "n_docs",
-            "max_tf_norm", "min_tf_norm",
-        ],
-    )
+    cols = [
+        "term", "first_doc", "last_doc", "n_docs",
+        "max_tf_norm", "min_tf_norm",
+    ]
+    return pa.table({c: [r[i] for r in rows] for i, c in enumerate(cols)})
 
 
 def _prune(pdf, q_terms, k=3, mode="stored"):
@@ -320,9 +319,9 @@ def test_prune_fires_on_real_blocks(skewed, spark):
         .filter("term = 'alpha'")
         .select("term", "first_doc", "last_doc", "n_docs",
                 "max_tf_norm", "min_tf_norm")
-        .toPandas()
+        .toArrow()
     )
-    assert len(pdf) > 4  # multiple blocks so there is something to skip
+    assert pdf.num_rows > 4  # multiple blocks so there is something to skip
     out = _interval_prune(
         pdf, {1: [("alpha", 1.0)]}, k1=skewed.k1, b=skewed.b,
         avgdl=skewed.avgdl, k=10, mode="stored",

@@ -113,69 +113,3 @@ def test_values_relation_schema(spark, built):
     assert [f.dataType.simpleString() for f in df.schema.fields] == [
         "int", "int", "bigint", "double"
     ]
-
-
-def test_footer_cache_lru_cap_holds_and_results_identical(spark, built):
-    """The per-handle footer cache (Index._pq_meta) never holds more than
-    its cap; an artifact larger than the cap skips the warm pass and is
-    served through the LRU with results bit-identical to the uncapped
-    handle."""
-    ix_dir, _ = built
-    qs = make_queries(40)
-    batches = [qs[i:i + 2] for i in range(0, 12, 2)]
-    ix = Index(spark, ix_dir)
-    full = [_rows(iq.index_search(ix, b, k=10)) for b in batches]
-    n_files = sum(len(v) for v in ix.shard_file_map().values())
-    assert len(ix._pq_meta) == n_files  # uncapped: warmed whole
-
-    cap = 3
-    assert n_files > cap
-    saved = iq.LOCAL_SEARCH_FOOTER_WARM_MAX_FILES
-    iq.LOCAL_SEARCH_FOOTER_WARM_MAX_FILES = cap
-    try:
-        capped_ix = Index(spark, ix_dir)
-        capped = []
-        for b in batches:
-            capped.append(_rows(iq.index_search(capped_ix, b, k=10)))
-            assert 0 < len(capped_ix._pq_meta) <= cap
-    finally:
-        iq.LOCAL_SEARCH_FOOTER_WARM_MAX_FILES = saved
-    assert capped == full and all(full)
-    capped_ix.refresh()
-    assert capped_ix._pq_meta is None
-
-
-def test_footer_cache_thread_stress():
-    """The shard reads share one _FooterCache across a thread pool: with
-    many more threads than cores and a short switch interval, no get/put
-    interleaving raises or lets the cache outgrow its cap."""
-    import sys
-    import threading
-
-    cache = iq._FooterCache(cap=4)
-    errors = []
-
-    def hammer(t):
-        try:
-            for i in range(8000):
-                p = f"f{(i * 7 + t) % 11}"
-                if cache.get(p) is None:
-                    cache.put(p, p)
-                assert len(cache) <= cache.cap
-        except Exception as e:  # noqa: BLE001 - reported below
-            errors.append(e)
-
-    saved = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=hammer, args=(t,))
-                   for t in range(16)]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join(timeout=60)
-    finally:
-        sys.setswitchinterval(saved)
-    assert not any(th.is_alive() for th in threads)
-    assert not errors, errors[:3]
-    assert len(cache) <= cache.cap

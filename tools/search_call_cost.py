@@ -19,12 +19,18 @@ CPU from the figures. It also counts the Spark jobs and the tasks they
 ran (a skipped stage runs none) per call. One JSON line per call, then
 one summary line of medians per shape.
 
+``--num-shards`` and ``--num-term-buckets`` change the index shape
+(default: ``build_params(4)``, 4 shards x 8 term buckets); more of
+either means more, smaller parquet files per search call.
+
 Usage: python tools/search_call_cost.py [--seed N] [--calls N]
+       [--num-shards N] [--num-term-buckets N]
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import shutil
@@ -94,6 +100,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--seed", type=int, default=20001)
     ap.add_argument("--calls", type=int, default=10)
+    ap.add_argument("--num-shards", type=int, default=None)
+    ap.add_argument("--num-term-buckets", type=int, default=None)
     args = ap.parse_args()
     os.environ.setdefault("SPARKBM25_DRIVER_MEM", "3g")
 
@@ -109,7 +117,13 @@ def main() -> int:
     path = os.path.join(work, "corpus.parquet")
     inputs.write_parquet(inputs.transcripts(CONVS, args.seed), path)
     ix_dir = os.path.join(work, "ix")
-    jobs.build_index(spark.read.parquet(path), ix_dir, build_params(CORES),
+    params = build_params(CORES)
+    params = dataclasses.replace(
+        params,
+        num_shards=args.num_shards or params.num_shards,
+        num_term_buckets=args.num_term_buckets or params.num_term_buckets,
+    )
+    jobs.build_index(spark.read.parquet(path), ix_dir, params,
                      f"search_call_cost-{args.seed}")
     ix = jobs.Index(spark, ix_dir)
     texts = inputs.queries(N_QUERIES, args.seed)
@@ -126,7 +140,8 @@ def main() -> int:
                    if role == "jvm")
     st = sc.statusTracker()
     summary = {"cores": CORES, "convs": CONVS, "seed": args.seed,
-               "calls": args.calls}
+               "calls": args.calls, "num_shards": params.num_shards,
+               "num_term_buckets": params.num_term_buckets}
     for name, query_sets, kw in shapes:
         def call(i):
             return index_search(ix, query_sets[i % len(query_sets)], k=K,
