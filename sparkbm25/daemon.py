@@ -58,8 +58,8 @@ def install_zip_stat_cache() -> bool:
     just before its last re-read, and otherwise calls the original, which
     re-reads the directory. The stamp is taken BEFORE the read, so an
     archive rewritten during the read is re-read again on the next call.
-    session._package_zip rewrites sparkbm25_pyfiles.zip in place on every
-    get_spark, which changes its mtime and so forces the re-read.
+    An archive rewritten in place changes its mtime and so forces the
+    re-read (session._package_zip writes its zip once per driver process).
     Idempotent: a second call leaves the first replacement in place."""
     if sys.version_info >= (3, 13):
         return False

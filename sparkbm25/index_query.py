@@ -18,9 +18,10 @@ direct       one ``spark.range`` work item per shard feeds the kernel
              (mapInPandas). index_search collects the per-shard top-k
              (one job, one task per shard, no exchange) and merges it in
              the driver (_merge_tops); only tops past the driver row
-             budget keep the lazy topk_window exchange. A few queries
-             over a bounded posting volume run the same kernel in the
-             driver (_local_search), with no Spark job at all.
+             budget keep the lazy topk_window exchange. A call whose
+             posting volume is below the route crossover
+             (_serve_in_driver) runs the same kernel in the driver
+             (_local_search), with no Spark job at all.
 side-direct  when the kernel needs a side frame — `where=` qualifying
              ids, collapse values, or tombstones past
              TOMBSTONE_BROADCAST_MAX — only that frame is grouped by
@@ -165,6 +166,38 @@ def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
     }
 
 
+def _term_staircase(terms_arr: np.ndarray, lo: np.ndarray, hi: np.ndarray,
+                    maxt: np.ndarray, n_int: int, q_terms: set):
+    """Per-term interval max-upper-bound staircase, once per batch: block
+    j of term t spans intervals [lo[j], hi[j]) and raises M[t] there to
+    maxt[j]. Returns ({t: t's block rows, ascending}, {t: M_t}) for the
+    query terms with >= 1 block. One grouped pass: every block of a
+    query term expands to its interval indices and np.maximum.at folds
+    them into an (n_terms, n_int) array (max is exact, so M equals the
+    per-block slice-max sweep bit for bit)."""
+    uterms, code = np.unique(terms_arr, return_inverse=True)
+    hit = np.flatnonzero([t in q_terms for t in uterms])
+    if not len(hit):
+        return {}, {}
+    # dense code per query term present; -1 for the other terms' blocks
+    dense = np.full(len(uterms), -1)
+    dense[hit] = np.arange(len(hit))
+    rows = np.flatnonzero(dense[code] >= 0)
+    rcode = dense[code[rows]]
+    lens = hi[rows] - lo[rows]
+    rep = np.repeat(np.arange(len(rows)), lens)
+    ints = np.arange(len(rep)) - (np.cumsum(lens) - lens)[rep] + lo[rows][rep]
+    m = np.zeros((len(hit), n_int))
+    np.maximum.at(m, (rcode[rep], ints), maxt[rows][rep])
+    groups = np.split(
+        rows[np.argsort(rcode, kind="stable")],
+        np.cumsum(np.bincount(rcode, minlength=len(hit)))[:-1],
+    )
+    blk_of = {uterms[h]: g for h, g in zip(hit, groups)}
+    M = {uterms[h]: m[i] for i, h in enumerate(hit)}
+    return blk_of, M
+
+
 def _interval_prune(blocks: pa.Table,
                     q_terms: dict[int, list[tuple[str, float]]],
                     k1: float, b: float, avgdl: float, k: int,
@@ -186,8 +219,8 @@ def _interval_prune(blocks: pa.Table,
     - intervals: the merged doc-id ranges cut at every block's
       [first_doc, last_doc+1) boundary across the group's query terms.
     - per term t: M_t[i] = max upper-bound tf_norm over t's blocks
-      overlapping interval i (a per-block slice-max sweep — once per
-      BATCH, not per query).
+      overlapping interval i (one grouped pass, _term_staircase — once
+      per BATCH, not per query).
     - per query q: θ_q from a metadata-only bootstrap ("k docs
       provably score >= θ": some block of one occurrence term holds
       >= k postings each with lower bound L), refined by a bounded
@@ -265,18 +298,10 @@ def _interval_prune(blocks: pa.Table,
         return None
     lo = np.searchsorted(bounds, firsts, side="right") - 1
     hi = np.searchsorted(bounds, lasts + 1, side="left")
-    # per-term interval max-ub staircase (once per batch)
-    blk_of: dict[str, np.ndarray] = {}
-    M: dict[str, np.ndarray] = {}
-    for t in {t for tw in q_terms.values() for t, _w in tw}:
-        idx = np.flatnonzero(terms_arr == t)
-        if not len(idx):
-            continue
-        blk_of[t] = idx
-        m = np.zeros(n_int)
-        for j in idx:
-            np.maximum(m[lo[j]:hi[j]], maxt[j], out=m[lo[j]:hi[j]])
-        M[t] = m
+    blk_of, M = _term_staircase(
+        terms_arr, lo, hi, maxt, n_int,
+        {t for tw in q_terms.values() for t, _w in tw},
+    )
     if not M:
         return None
     # phase 1 — metadata-only theta per query ("k docs provably score
@@ -1019,26 +1044,25 @@ def _direct_side_fn(kernel_side, cols: list[str], terms: list[str],
 def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
                    fm: dict, tomb: "tuple | None", occ: dict,
                    k: int) -> DataFrame:
-    """The direct plan: one ``spark.range`` work item per shard feeding
-    the pyarrow-reading kernel (_direct_topk_gen). When the per-shard
-    tops fit the driver row budget (at most k rows per query per shard)
-    they are collected here — one job, one stage, one task per shard, no
-    exchange — and merged by _merge_tops into a LocalRelation. Over the
-    budget the global merge stays lazy: the topk_window exchange."""
-    if _local_serve_ok(ix, occ, terms):
-        # POINT-QUERY fast path (r07): for a few queries over a bounded
-        # posting volume, run the SAME per-shard kernel in the driver
-        # process — pyarrow block reads + numpy fold, zero Spark jobs.
-        # A single-query search through any distributed route pays a
-        # near-fixed ~0.6 s of task launch + Python-runner round trip
-        # (r06 floor analysis: a TRIVIAL 32-task mapInPandas + window
-        # costs 0.686 s on the bench host); the reference's query model
-        # is an in-process index probe (search_indices.py:30-39), and
-        # the vocabulary stats and shard file map are already
-        # driver-resident. Bit-exact: same kernel closure and the same
-        # global merge (_merge_tops). Size-guarded: falls through to the
-        # distributed plan when the query set or its posting volume
-        # exceeds the driver budget.
+    """The direct plan: below the route crossover the kernel runs in the
+    driver (_local_search); above it, one ``spark.range`` work item per
+    shard feeds the pyarrow-reading kernel (_direct_topk_gen). When the
+    per-shard tops fit the driver row budget (at most k rows per query
+    per shard) they are collected here — one job, one stage, one task
+    per shard, no exchange — and merged by _merge_tops into a
+    LocalRelation. Over the budget the global merge stays lazy: the
+    topk_window exchange."""
+    if _serve_in_driver(ix, occ, terms, fm):
+        # DRIVER route: the same per-shard kernel runs in this process —
+        # pyarrow block reads + numpy fold, zero Spark jobs — when the
+        # call's posting volume is below the route crossover
+        # (_serve_in_driver). A Spark job pays a near-fixed cost per
+        # call (task launch, Python-runner round trip, JIT) that only a
+        # large posting volume split over the shards wins back; the
+        # reference's query model is an in-process index probe
+        # (search_indices.py:30-39), and the vocabulary stats and shard
+        # file map are already driver-resident. Bit-exact: same kernel
+        # closure and the same global merge (_merge_tops).
         return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k)
     tops = ix.spark.range(len(fm), numPartitions=len(fm)).mapInPandas(
         _direct_topk_gen(kernel, cols, terms, fm, tomb),
@@ -1082,27 +1106,46 @@ def _merge_tops(spark, parts: list, k: int) -> DataFrame:
     }))
 
 
-# driver-side serve limits. The point-query fast path takes at most this
-# many queries, and at most this many postings across the fetched terms
-# (driver decode memory ~= 3 int64 arrays over the postings ~ 24 B each).
-# The postings budget is also the driver's row budget for the direct
-# plan's collected per-shard tops (queries x shards x k rows, ~24 B
-# each). Env-tunable; 0 queries disables the fast path outright.
-LOCAL_SEARCH_MAX_QUERIES = int(
-    os.environ.get("SPARKBM25_LOCAL_SEARCH_MAX_QUERIES", "4")
-)
+# driver-side memory guard: the driver route reads at most this many
+# postings across the fetched terms (decode memory ~= 3 int64 arrays over
+# the postings, ~24 B each). The postings budget is also the driver's row
+# budget for the direct plan's collected per-shard tops (queries x shards
+# x k rows, ~24 B each). Env-tunable.
 LOCAL_SEARCH_MAX_POSTINGS = int(
     os.environ.get("SPARKBM25_LOCAL_SEARCH_MAX_POSTINGS", "8000000")
 )
-def _local_serve_ok(ix: Index, occ: dict, terms: list[str]) -> bool:
-    """True when the query set is small enough to serve in-process: few
-    queries AND a bounded total posting volume (df is driver-resident via
-    the term-stats cache, so this check launches no job)."""
-    if len(occ) == 0 or len(occ) > LOCAL_SEARCH_MAX_QUERIES:
-        return False
+# wall-time break-even of the two direct routes, in postings folded. The
+# driver route costs ~W*c for a call folding W postings; the Spark route
+# ~F + W*c/p over p parallel shard tasks, so the driver is no slower
+# while W*(1 - 1/p) <= F/c. F/c is measured, not assumed:
+# bench_results/route_crossover.json (tools/route_crossover.py, local[4],
+# 1,000-25,000 conversations x 1/20/100 queries) puts it between 256k
+# and 795k postings (238k-795k in a second run); 435k sits near the
+# geometric middle of both intervals.
+CROSSOVER_POSTINGS = 435_000
+
+
+def _serve_in_driver(ix: Index, occ: dict, terms: list[str],
+                     fm: dict) -> bool:
+    """Route choice of the direct plan: True runs the call in the driver
+    (_local_search), False as one Spark task per shard. Reads only
+    driver-resident values — df from the term-stats cache and the shard
+    file map — so it launches no job.
+
+    W is the call's folded postings: Σdf per query occurrence (the fold
+    runs per query). With p = min(shards, defaultParallelism) parallel
+    tasks the driver wins on wall time while W*(1 - 1/p) <=
+    CROSSOVER_POSTINGS (always at p = 1); it always wins on CPU. The
+    memory guard caps the postings the driver reads (Σdf over the
+    distinct fetched terms) at LOCAL_SEARCH_MAX_POSTINGS."""
     stats = ix.term_stats_lookup(terms)
-    total = sum(v[0] for v in stats.values())
-    return total <= LOCAL_SEARCH_MAX_POSTINGS
+    if sum(v[0] for v in stats.values()) > LOCAL_SEARCH_MAX_POSTINGS:
+        return False
+    w = sum(stats[t][0] for tw in occ.values() for t, _w in tw if t in stats)
+    if w <= CROSSOVER_POSTINGS:
+        return True
+    p = min(len(fm), ix.spark.sparkContext.defaultParallelism)
+    return w * (1.0 - 1.0 / p) <= CROSSOVER_POSTINGS
 
 
 def _local_search(spark, kernel, cols: list[str], terms: list[str],
@@ -1588,20 +1631,23 @@ def index_search(
 
     Plan (module doc): every shard's kernel pyarrow-reads only the query
     terms' posting files of that shard, scores every query in numpy and
-    emits its local top-k. Without a side frame that is the direct plan
-    (one ``spark.range`` work item per shard, or the driver for a few
-    small queries); `where=`/`where_expr`/`collapse`, and tombstones past
+    emits its local top-k. Without a side frame that is the direct plan:
+    one ``spark.range`` work item per shard, or the driver process when
+    the call's posting volume (Σdf per query occurrence) is below the
+    measured route crossover (_serve_in_driver, CROSSOVER_POSTINGS);
+    `where=`/`where_expr`/`collapse`, and tombstones past
     TOMBSTONE_BROADCAST_MAX, take the side-direct plan. An index whose
     posting layout predates 2 is refused (Index.shard_file_map);
     ``compact_index`` upgrades it.
 
-    Execution: a direct-plan call whose per-shard tops fit the driver
-    row budget (queries x shards x k <= LOCAL_SEARCH_MAX_POSTINGS), like
-    a call served in the driver, runs its Spark job INSIDE this function
-    and returns computed results as a LocalRelation (collecting it
-    launches no job; session confs set around the collect no longer
-    reach the search). Over the budget, and on the side-direct plan,
-    the returned DataFrame is lazy and the work runs at its action.
+    Execution: a direct-plan call served in the driver, and one whose
+    per-shard tops fit the driver row budget (queries x shards x k <=
+    LOCAL_SEARCH_MAX_POSTINGS), runs INSIDE this function (the latter as
+    one Spark job) and returns computed results as a LocalRelation
+    (collecting it launches no job; session confs set around the collect
+    no longer reach the search). Over the budget, and on the side-direct
+    plan, the returned DataFrame is lazy and the work runs at its
+    action.
 
     strategy:
       "sharded"     (default) exact dense scoring: each shard task decodes

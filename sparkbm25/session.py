@@ -9,11 +9,22 @@ for local[N] testing.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+_ZIP_PATH: str | None = None
+
+
+def _remove_own_dir(path: str, pid: int) -> None:
+    # a forked child inherits atexit handlers; only the writer removes
+    if os.getpid() == pid:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _package_zip() -> str:
@@ -23,16 +34,28 @@ def _package_zip() -> str:
     the package arrives via ``spark-submit --py-files sparkbm25.zip``. When a
     session is created programmatically we replicate that with addPyFile so
     Arrow kernels can ``import sparkbm25`` inside executors.
+
+    The zip is written once per process, into a directory of its own
+    (removed at exit), and later calls return the same path: two drivers
+    starting together on one host must not overwrite each other's zip
+    (Spark refuses a re-added file whose contents changed), and one
+    process adds one unchanged file however many sessions it starts.
     """
+    global _ZIP_PATH
+    if _ZIP_PATH is not None and os.path.exists(_ZIP_PATH):
+        return _ZIP_PATH
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), "sparkbm25_pyfiles.zip")
+    out_dir = tempfile.mkdtemp(prefix="sparkbm25_pyfiles_")
+    atexit.register(_remove_own_dir, out_dir, os.getpid())
+    out = os.path.join(out_dir, "sparkbm25_pyfiles.zip")
     with zipfile.ZipFile(out, "w") as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             for fn in filenames:
                 if fn.endswith(".py"):
                     full = os.path.join(dirpath, fn)
                     zf.write(full, os.path.relpath(full, root))
+    _ZIP_PATH = out
     return out
 
 
@@ -76,13 +99,15 @@ class low_latency:
     shrinking it is always safe and worth ~7% (r06 same-session sf0.1
     local[32]: default 0.714 s, AQE-off 0.684, AQE-off+sp4 0.637).
 
-    Since the direct route merges its per-shard tops in the driver, an
-    index_search whose tops fit the driver row budget runs its one job
-    inside the index_search call, so a context around the collect does
-    not reach it (and the job has no exchange for either setting to
-    act on). The settings still reach the lazy plans: side-direct
-    (`where=`, collapse, distributed tombstones), phrase search and
-    direct searches over the budget.
+    The settings reach no direct-plan index_search whose tops fit the
+    driver row budget. Below the route crossover
+    (index_query._serve_in_driver) such a call runs in the driver with
+    no Spark job at all; above it, it runs its one job inside the
+    index_search call (a context around the collect comes too late, and
+    the job has no exchange for either setting to act on). The settings
+    still reach the lazy plans: side-direct (`where=`, collapse,
+    distributed tombstones), phrase search and direct searches over the
+    budget.
 
     Absolute-floor note (r06): a TRIVIAL 32-task mapInPandas + window +
     count measures 0.686 s on the bench host vs 0.136 s for a JVM-only

@@ -210,7 +210,7 @@ def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
     corpus, d = f_built
     ix = Index(spark, d)
     pool = make_queries(12)
-    queries = pool[:iq.LOCAL_SEARCH_MAX_QUERIES]
+    queries = pool[:4]
     ex = {queries[0][0]: pool[5][1].split()[0]}
     reads = []
     real_read = iq._read_shard_blocks
@@ -220,6 +220,7 @@ def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
         return real_read(entry, cols, *args, **kwargs)
 
     monkeypatch.setattr(iq, "_read_shard_blocks", spy)
+    monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: True)
 
     def run(search, **kw):
         reads.clear()

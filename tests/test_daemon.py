@@ -68,7 +68,7 @@ def test_unchanged_archive_not_reread_rewritten_archive_reread(zip_on_path):
     # mtime tells it apart. Bump it so a coarse filesystem clock cannot
     # hide the rewrite.
     old = os.stat(archive)
-    _write_zip(archive, "2")  # rewritten in place, as _package_zip does
+    _write_zip(archive, "2")  # rewritten in place
     os.utime(archive, ns=(old.st_atime_ns, old.st_mtime_ns + 10**9))
     new = os.stat(archive)
     assert (new.st_size, new.st_ino) == (old.st_size, old.st_ino)

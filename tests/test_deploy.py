@@ -76,3 +76,37 @@ def test_spark_submit_py_files_zip_is_self_contained(tmp_path):
     assert marker, r.stdout[-1500:] + r.stderr[-1500:]
     # the module really came from the zip, not the repo checkout
     assert REPO not in marker[0]
+
+
+ZIP_PROBE = r"""
+import os
+from sparkbm25.session import _package_zip
+
+a = _package_zip()
+st = os.stat(a)
+b = _package_zip()
+st2 = os.stat(b)
+print("ZIP", a, b == a, (st.st_mtime_ns, st.st_ino) == (st2.st_mtime_ns, st2.st_ino))
+"""
+
+
+def test_package_zip_is_per_process(tmp_path):
+    """Each driver process writes the shipped zip once, into its own
+    directory: two processes on one host get different paths with the
+    same basename (neither overwrites the other's zip), and a second
+    call in one process returns the same file without rewriting it."""
+    env = {**os.environ, "PYTHONPATH": REPO, "TMPDIR": str(tmp_path)}
+    outs = []
+    for _ in range(2):
+        r = subprocess.run([sys.executable, "-c", ZIP_PROBE],
+                           capture_output=True, text=True, env=env)
+        assert r.returncode == 0, r.stderr
+        line = [l for l in r.stdout.splitlines() if l.startswith("ZIP ")]
+        _, path, same, unchanged = line[0].split()
+        assert same == "True" and unchanged == "True", line
+        outs.append(path)
+    assert outs[0] != outs[1]
+    assert {os.path.basename(p) for p in outs} == {"sparkbm25_pyfiles.zip"}
+    assert all(p.startswith(str(tmp_path)) for p in outs)
+    # each process removed its own directory at exit
+    assert not any(os.path.exists(p) for p in outs)

@@ -6,12 +6,16 @@ Arrow hop costs ~0.9 s per batch nearly independent of core count
 (measured 0.90 s at local[8] vs 1.13 s at local[2] on a 2.2M-turn index)
 — the fixed term that capped q100 batch-scaling efficiency at ~0.70
 (VERDICT r04 #4). Contract pinned here: rank identity with the
-pure-Python OracleIndex on the direct and side-direct plans; under the
-driver row budget the direct plan is one Spark job (one task per shard)
-merged in the driver, over it one Exchange (the topk_window merge), with
-identical rows on both sides; and a layout-1 index refused until
-compact_index upgrades it.
+pure-Python OracleIndex on the direct and side-direct plans; the route
+rule (_serve_in_driver) on both sides of the crossover, with a call below
+it served in the driver (no Spark job) and bit-identical to the Spark
+route; on the Spark route, under the driver row budget the direct plan is
+one Spark job (one task per shard) merged in the driver, over it one
+Exchange (the topk_window merge), with identical rows on both sides; and
+a layout-1 index refused until compact_index upgrades it.
 """
+
+from types import SimpleNamespace
 
 import pytest
 
@@ -71,10 +75,11 @@ def _assert_oracle(got, want):
 
 
 def _distributed(monkeypatch):
-    # few-query calls are served in the driver; 0 forces the Spark plan
+    # calls below the route crossover are served in the driver; this
+    # forces the Spark route
     import sparkbm25.index_query as iq
 
-    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", 0)
+    monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: False)
 
 
 def test_direct_is_default_and_bit_exact(built, oracle40):
@@ -337,6 +342,99 @@ def test_empty_results_launch_no_job(built, spark_jobs):
             lambda: index_search(built, k=5, **kw).collect()
         )
         assert rows == [] and jobs == [], (kw, jobs)
+
+
+# --- the route rule: driver below the posting crossover, Spark above --------
+
+class _StatsIx:
+    """The two driver-resident inputs _serve_in_driver reads: df from
+    the term-stats cache and the session's default parallelism."""
+
+    def __init__(self, df: dict, parallelism: int):
+        self.df = df
+        self.spark = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=parallelism)
+        )
+
+    def term_stats_lookup(self, terms):
+        return {t: (self.df[t], 1.0) for t in terms if t in self.df}
+
+
+def _route(monkeypatch, df, occ, n_shards, parallelism=4,
+           crossover=1000, max_postings=10**6):
+    import sparkbm25.index_query as iq
+
+    monkeypatch.setattr(iq, "CROSSOVER_POSTINGS", crossover)
+    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_POSTINGS", max_postings)
+    terms = sorted({t for tw in occ.values() for t, _ in tw})
+    fm = {s: [] for s in range(n_shards)}
+    return iq._serve_in_driver(_StatsIx(df, parallelism), occ, terms, fm)
+
+
+def test_route_rule_both_sides_of_crossover(monkeypatch):
+    one = {1: [("a", 1.0)]}
+    # under the crossover: driver
+    assert _route(monkeypatch, {"a": 900}, one, n_shards=4)
+    # over it: W * (1 - 1/p) = 3000 * 3/4 > 1000 -> Spark
+    assert not _route(monkeypatch, {"a": 3000}, one, n_shards=4)
+    # W above the crossover, but W * (1 - 1/4) = 900 below it: the Spark
+    # route's split over 4 tasks does not win back its fixed cost
+    assert _route(monkeypatch, {"a": 1200}, one, n_shards=4)
+    # W counts every query occurrence: the fold runs per query, so three
+    # occurrences of a 600-posting term weigh 1800 (1350 after the split)
+    three = {1: [("a", 1.0), ("a", 1.0)], 2: [("a", 1.0)]}
+    assert not _route(monkeypatch, {"a": 600}, three, n_shards=4)
+    assert _route(monkeypatch, {"a": 300}, three, n_shards=4)
+    # p = min(shards, defaultParallelism): 1900 * 1/2 is under the
+    # crossover, 1900 * 7/8 over it
+    assert _route(monkeypatch, {"a": 1900}, one, n_shards=2)
+    assert _route(monkeypatch, {"a": 1900}, one, n_shards=8, parallelism=2)
+    assert not _route(monkeypatch, {"a": 1900}, one, n_shards=8,
+                      parallelism=8)
+
+
+def test_route_rule_p1_always_driver(monkeypatch):
+    one = {1: [("a", 1.0)]}
+    assert _route(monkeypatch, {"a": 10**5}, one, n_shards=1)
+    assert _route(monkeypatch, {"a": 10**5}, one, n_shards=8,
+                  parallelism=1)
+
+
+def test_route_rule_memory_guard_wins(monkeypatch):
+    # the postings budget refuses the driver even far below the crossover,
+    # and at p = 1
+    one = {1: [("a", 1.0), ("b", 1.0)]}
+    df = {"a": 60, "b": 50}
+    assert _route(monkeypatch, df, one, n_shards=4, crossover=10**6,
+                  max_postings=110)
+    assert not _route(monkeypatch, df, one, n_shards=4, crossover=10**6,
+                      max_postings=100)
+    assert not _route(monkeypatch, df, one, n_shards=1, crossover=10**6,
+                      max_postings=100)
+
+
+def test_hundred_query_call_runs_in_driver(built, oracle40, monkeypatch,
+                                          spark_jobs):
+    """A 100-query call on the fixture index is far below the crossover:
+    it launches no Spark job, from the call through the collect, and is
+    rank-identical to the oracle. Forcing the Spark route gives the same
+    rows bit for bit."""
+    qs = make_queries(100)
+    index_search(built, qs[:1], k=5)  # warm the vocabulary
+    for kw in ({}, {"strategy": "blockmax"}, {"min_match": 2}):
+        rows, jobs = spark_jobs(
+            lambda: _rows(index_search(built, qs, k=8, **kw))
+        )
+        assert jobs == [], (kw, jobs)
+        okw = {"min_match": 2} if "min_match" in kw else {}
+        _assert_oracle(rows, oracle40.search_all(qs, k=8, **okw))
+        with monkeypatch.context() as m:
+            _distributed(m)
+            spark_rows, jobs = spark_jobs(
+                lambda: _rows(index_search(built, qs, k=8, **kw))
+            )
+        assert len(jobs) == 1, (kw, jobs)
+        assert spark_rows == rows, kw
 
 
 # --- round 6: SIDE-DIRECT — filtered search without a blocks exchange

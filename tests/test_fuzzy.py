@@ -99,7 +99,7 @@ def test_fuzzy_routes_and_strategies_agree(spark, built, oracle,
 
     base = run()  # three queries: served in the driver
     others = {"blockmax": run(strategy="blockmax")}
-    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", 0)
+    monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: False)
     others["spark"] = run()
     for label, got in others.items():
         assert [g[:3] for g in got] == [b[:3] for b in base], label

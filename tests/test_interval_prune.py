@@ -165,6 +165,103 @@ def test_unit_conjunctive_unreachable_need_all_dead():
     assert not live_of[1].any()
 
 
+def _staircase_loop(terms_arr, lo, hi, maxt, n_int, q_terms):
+    """The per-block slice-max sweep _term_staircase replaced: the
+    reference for its grouped pass."""
+    blk_of, M = {}, {}
+    for t in q_terms:
+        idx = np.flatnonzero(terms_arr == t)
+        if not len(idx):
+            continue
+        blk_of[t] = idx
+        m = np.zeros(n_int)
+        for j in idx:
+            np.maximum(m[lo[j]:hi[j]], maxt[j], out=m[lo[j]:hi[j]])
+        M[t] = m
+    return blk_of, M
+
+
+def _two_group_blocks(rng, n_terms=6):
+    """Random block metadata shaped like a shard streamed in two lineage
+    groups: within a group a term's blocks tile disjoint ascending doc
+    ranges, and the two groups' ranges interleave, so one term's blocks
+    overlap across groups. Rows come in (gseq, term) file order."""
+    rows = []
+    for gseq, (start, stop) in enumerate([(0, 4000), (1500, 6000)]):
+        for t in range(n_terms):
+            cuts = np.sort(rng.choice(np.arange(start + 1, stop),
+                                      size=int(rng.integers(0, 6)),
+                                      replace=False))
+            edges = np.r_[start, cuts, stop]
+            for a, b in zip(edges[:-1], edges[1:]):
+                if rng.random() < 0.3:
+                    continue  # a doc range where the term has no block
+                first = int(a + rng.integers(0, max(1, (b - a) // 3)))
+                last = int(b - 1 - rng.integers(0, max(1, (b - a) // 3)))
+                hi_ub = float(rng.random() * 4.0)
+                rows.append((f"t{t}", max(first, int(a)), max(last, first),
+                             int(rng.integers(1, 129)), hi_ub,
+                             hi_ub * float(rng.random()), gseq))
+    tbl = _mk_pdf([r[:6] for r in rows])
+    return tbl.append_column("gseq", pa.array([r[6] for r in rows]))
+
+
+def test_term_staircase_matches_per_block_loop():
+    """The grouped staircase (np.maximum.at over every block's interval
+    range) equals the per-block loop bit for bit — max is exact — on
+    random two-group shards whose blocks for one term overlap, and
+    _interval_prune's whole output is unchanged by the swap."""
+    import sparkbm25.index_query as iq
+
+    rng = np.random.default_rng(7)
+    overlapped = 0
+    for trial in range(40):
+        tbl = _two_group_blocks(rng)
+        if not tbl.num_rows:
+            continue
+        terms_arr = tbl.column("term").to_numpy()
+        firsts = tbl.column("first_doc").to_numpy()
+        lasts = tbl.column("last_doc").to_numpy()
+        gseq = tbl.column("gseq").to_numpy()
+        for t in set(terms_arr):
+            sel = terms_arr == t
+            a = sel & (gseq == 0)
+            b = sel & (gseq == 1)
+            if a.any() and b.any() and (
+                firsts[b].min() <= lasts[a].max()
+            ):
+                overlapped += 1
+        bounds = np.unique(np.concatenate([firsts, lasts + 1]))
+        lo = np.searchsorted(bounds, firsts, side="right") - 1
+        hi = np.searchsorted(bounds, lasts + 1, side="left")
+        maxt = tbl.column("max_tf_norm").to_numpy()
+        q_terms = {f"t{i}" for i in rng.choice(8, size=4, replace=False)}
+        got = iq._term_staircase(terms_arr, lo, hi, maxt,
+                                 len(bounds) - 1, q_terms)
+        want = _staircase_loop(terms_arr, lo, hi, maxt,
+                               len(bounds) - 1, q_terms)
+        for g, w in zip(got, want):
+            assert g.keys() == w.keys()
+            for t in w:
+                assert g[t].dtype == w[t].dtype
+                assert np.array_equal(g[t], w[t])
+        qs = {1: [(t, 1.0) for t in sorted(q_terms)][:2],
+              2: [(t, 0.5) for t in sorted(q_terms)][2:]}
+        for k in (1, 5):
+            new = _prune(tbl, qs, k=k)
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(iq, "_term_staircase", _staircase_loop)
+                old = _prune(tbl, qs, k=k)
+            assert (new is None) == (old is None)
+            if new is not None:
+                assert np.array_equal(new[0], old[0])
+                assert np.array_equal(new[1], old[1])
+                assert new[2].keys() == old[2].keys()
+                for q in old[2]:
+                    assert np.array_equal(new[2][q], old[2][q])
+    assert overlapped > 20  # the shape under test really occurred
+
+
 def test_blockmax_masked_bit_exact_skewed(skewed, spark, tmp_path):
     """Tombstones and where= filters now COMPOSE with the interval
     pruner (r06-late): the seed decode applies the kernel's exact masks

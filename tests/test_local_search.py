@@ -1,6 +1,6 @@
-"""Point-query fast path (r07): driver-side serve of small direct-route
-searches must be BIT-IDENTICAL to the distributed routes on every shape it
-accepts, and must fall back cleanly when gated off."""
+"""Driver route: the driver-side serve of direct-route searches below the
+route crossover must be BIT-IDENTICAL to the distributed routes on every
+shape it accepts, and must fall back cleanly when gated off."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,12 +30,9 @@ def _rows(df):
 
 def _ab(ix, queries, **kw):
     a = _rows(iq.index_search(ix, queries, k=10, **kw))
-    saved = iq.LOCAL_SEARCH_MAX_QUERIES
-    iq.LOCAL_SEARCH_MAX_QUERIES = 0
-    try:
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(iq, "_serve_in_driver", lambda *a: False)
         b = _rows(iq.index_search(ix, queries, k=10, **kw))
-    finally:
-        iq.LOCAL_SEARCH_MAX_QUERIES = saved
     return a, b
 
 
@@ -86,13 +83,17 @@ def test_local_matches_distributed_under_tombstones(spark, built):
     assert not any(r[2] in dead for r in a)
 
 
-def test_gates_route_away(spark, built):
+def test_gates_route_away(spark, built, monkeypatch):
     ix_dir, _ = built
     ix = Index(spark, ix_dir)
     qs = make_queries(40)
-    # too many queries -> the distributed route serves (still correct)
-    many = _rows(iq.index_search(ix, qs[:10], k=10))
-    assert many
+    # past the route crossover -> the distributed route serves (still
+    # correct, same rows)
+    local = _rows(iq.index_search(ix, qs[:10], k=10))
+    with monkeypatch.context() as m:
+        m.setattr(iq, "CROSSOVER_POSTINGS", 0)
+        many = _rows(iq.index_search(ix, qs[:10], k=10))
+    assert many and many == local
     # posting-volume cap: force 0 -> falls through, same results
     saved = iq.LOCAL_SEARCH_MAX_POSTINGS
     iq.LOCAL_SEARCH_MAX_POSTINGS = 0

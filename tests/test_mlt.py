@@ -128,11 +128,12 @@ def test_indexed_mlt_rank_identical(spark, docs, mlt_ix):
 
 
 def test_indexed_mlt_routes_bit_identical(spark, mlt_ix, monkeypatch):
-    # three sources fit the in-driver serve; 0 forces the Spark plan
+    # three sources fit the in-driver serve; the patch forces the Spark
+    # plan
     import sparkbm25.index_query as iq
 
     a = _rows(mlt.index_more_like_this(mlt_ix, LIKE, k=K))
-    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", 0)
+    monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: False)
     b = _rows(mlt.index_more_like_this(mlt_ix, LIKE, k=K))
     assert a == b and a
 

@@ -89,9 +89,9 @@ def test_routes_bit_identical(built, monkeypatch):
     cur = _cursors(page1, K)
     qs2 = [(qid, txt) for qid, txt in QS if qid in cur]
     # the in-driver serve vs the distributed direct plan
-    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", len(qs2))
+    monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: True)
     d = _by_query(index_search(built, qs2, k=K, search_after=cur))
-    monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_QUERIES", 0)
+    monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: False)
     e = _by_query(index_search(built, qs2, k=K, search_after=cur))
     assert d == e and d
 

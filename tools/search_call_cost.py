@@ -5,9 +5,15 @@ conversations, ~11k turns, ``perfbench`` ``build_params(4)`` on
 ``local[4]``) and times three call shapes, 10 measured calls each after
 warm-up calls:
 
-- ``point``: one query, served in the driver process;
+- ``point``: one query;
 - ``blockmax``: 20 queries, ``strategy="blockmax"``;
 - ``batch``: the 100-query set, default strategy.
+
+``index_query._serve_in_driver`` picks each call's route from its
+posting volume: on the default index all three shapes are below the
+route crossover and run in the driver process (0 Spark jobs); a call
+above it runs one Spark job with one task per shard
+(``tools/route_crossover.py`` measures both routes).
 
 A call is ``index_search(...).collect()``. Around each call it reads
 ``/proc`` for utime + stime of the driver (this process), the JVM and the
