@@ -13,7 +13,8 @@ Package layout
 - ``bm25``       the scoring math shared by engine, oracle and SQL generators
 - ``codecs``     delta-gap + variable-byte posting compression (numpy kernels)
 - ``build``      distributed index construction (SPIMI via salted two-stage agg)
-- ``query``      top-k BM25: score-all DataFrame path + block-max pruned path
+- ``query``      top-k BM25: score-all DataFrame path (``index_query``: the
+                 prebuilt-index path)
 - ``oracle``     transparent pure-Python reference engine (rank-identity oracle)
 - ``fixtures``   deterministic synthetic transcript/query corpora (seed 42)
 - ``jobs``       idempotent job manifests, per-partition lineage, resume

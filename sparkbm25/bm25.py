@@ -20,8 +20,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-
 K1 = 1.2
 B = 0.75
 
@@ -32,14 +30,6 @@ def idf(df_t: float, n_docs: float) -> float:
 
 def tf_norm(tf: float, doc_len: float, avgdl: float, k1: float = K1, b: float = B) -> float:
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * doc_len / avgdl))
-
-
-def tf_norm_np(
-    tf: np.ndarray, doc_len: np.ndarray, avgdl: float, k1: float = K1, b: float = B
-) -> np.ndarray:
-    tf = tf.astype(np.float64)
-    dl = doc_len.astype(np.float64)
-    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 # --- SQL fragments (ANSI, valid in both Spark SQL and DuckDB) -------------

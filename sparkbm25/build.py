@@ -24,7 +24,7 @@ Scale design (the part that must survive 10^12 turns):
   merge task memory is bounded by ``shard_span`` — the sizing knob recorded
   in the manifest (the analog of the reference's closed-form memory
   estimate, app/utils/memory.py:14-59). Range shards also give blocks tight
-  ``first_doc/last_doc`` ranges for query-time skipping.
+  ``first_doc/last_doc`` ranges.
 - **Two compact shuffles total.** (1) docs by salted key — raw text, smaller
   than its exploded postings; (2) packed binary runs by (term, shard) —
   already delta-friendly sorted arrays, not rows. The merge group receives
@@ -69,11 +69,12 @@ RUN_SCHEMA = (
 )
 
 # Block metadata carries BOTH the precomputed tf_norm bounds under the
-# build-time (k1, b) — bit-exact fast path for default-parameter queries —
-# and the RAW (max_tf, min_tf, min_dl, max_dl) integers, from which a
-# sound upper/lower contribution bound is derivable at query time for ANY
+# build-time (k1, b) and the RAW (max_tf, min_tf, min_dl, max_dl)
+# integers, from which a sound contribution bound is derivable for ANY
 # (k1, b) in range (tf_norm is monotone increasing in tf and decreasing
-# in dl), so block-max pruning survives query-time parameter overrides.
+# in dl). No search reads these bound columns today (every query shape
+# runs the dense fold over the posting streams); phrase search reads
+# first_doc to restore posting order.
 # pos_vbyte (optional, BuildParams.store_positions) is the positional
 # stream: per posting, its token positions as first-absolute + gaps
 # varbyte, concatenated in posting order (tf values per posting).

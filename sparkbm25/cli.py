@@ -72,8 +72,7 @@ def _query(args) -> int:
                 )
             vals = val.split(",")
             where[col] = vals if len(vals) > 1 else vals[0]
-    out = index_search(ix, [(0, args.query)], k=args.k,
-                       strategy=args.strategy, where=where)
+    out = index_search(ix, [(0, args.query)], k=args.k, where=where)
     for r in out.orderBy("rank").collect():
         print(f"{r.rank}\t{r.doc_id}\t{r.score:.6f}")
     return 0
@@ -205,8 +204,6 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--where", action="append", default=None,
                    help="attribute filter col=value (repeatable; "
                         "comma-separated values = membership)")
-    q.add_argument("--strategy", default="sharded",
-                   choices=["sharded", "blockmax"])
     q.add_argument("--cores", type=int, default=None)
     q.set_defaults(fn=_query)
 

@@ -5,8 +5,8 @@ core/index_builder/faiss/ivf_pq_build_cagra_config.py:14-56 configures PQ
 compression of the stored index; vectors_dataset.py:113-128 packs values into
 opaque binary buffers reinterpreted zero-copy). Here the payload is posting
 lists: sorted doc_ids stored as varbyte(delta-gaps) and tfs stored as varbyte,
-split into fixed-size blocks each carrying (first/last doc_id, max tf-norm
-upper bound) so the query engine can prune undecoded blocks (block-max WAND).
+split into fixed-size blocks each carrying (first/last doc_id, tf-norm
+bounds) metadata beside the payload.
 
 All kernels are numpy-vectorized over whole arrays (no per-value Python in
 the hot loop beyond a <=10-iteration byte-position loop), matching the

@@ -165,14 +165,13 @@ def hybrid_rrf_topk_indexed(
     n_each: int = 50,
     rrf_k: int = RRF_K,
     n_probe: int | None = None,
-    strategy: str = "sharded",
 ) -> DataFrame:
     """Hybrid top-k served entirely from persisted artifacts: the BM25
-    leg from the posting index (`index_search` — direct route, pruned
-    strategies all available) and the dense leg from the IVF artifact
-    (`ann_index_search` — partition-pruned probes). ``query_vecs`` maps
-    each probe_vec_id to its vector (host-side, one per query — the same
-    bounded driver state as the query texts).
+    leg from the posting index (`index_search`, exact dense fold) and
+    the dense leg from the IVF artifact (`ann_index_search` —
+    partition-pruned probes). ``query_vecs`` maps each probe_vec_id to
+    its vector (host-side, one per query — the same bounded driver
+    state as the query texts).
 
     With full probing (n_probe = n_centroids) this is rank-identical to
     :func:`hybrid_rrf_topk`; at partial probe the dense leg is ANN and
@@ -188,7 +187,6 @@ def hybrid_rrf_topk_indexed(
         ix,
         [(qid, text) for qid, text, _p in queries],
         k=n_each,
-        strategy=strategy,
     ).select("query_id", "doc_id", "rank")
     dense_topk = similarity.ann_index_search(
         spark,

@@ -1,5 +1,4 @@
-"""Top-k BM25 over the prebuilt compressed index — EXACT, optionally
-block-max pruned.
+"""Top-k BM25 over the prebuilt compressed index — EXACT.
 
 The reference's search entry point loads a serialized index and answers
 top-k per query (benchmarking/search/search_indices.py:13-55). Ours is a
@@ -9,8 +8,7 @@ exactly its shard's blocks with pyarrow, scores every query of the
 batch in numpy and emits its local top-k. A doc lives in one shard, so
 per-shard scoring is exact, and results are rank-identical to the
 pure-Python OracleIndex (the reference only promises recall; the north
-rule demands identity, so any pruning here is *sound*, not
-approximate).
+rule demands identity: every matching posting is scored).
 
 Two plans serve every query shape:
 
@@ -30,11 +28,11 @@ side-direct  when the kernel needs a side frame — `where=` qualifying
 
 Every route reads a shard's blocks with one reader (_read_shard_blocks,
 a pyarrow Table) and decodes them with one function
-(codecs.decode_blocks). One kernel family serves both strategies: the
-densified exact fold (_sharded_topk_fn) over _decode_tfn.
-strategy='blockmax' adds interval-level block-max pruning
-(_interval_prune) in front of the fold; the shapes the pruner refuses
-(exclude=, fields=) run the fold unpruned, exactly as 'sharded'.
+(codecs.decode_blocks). One kernel serves every query shape: the
+densified exact fold (_sharded_topk_fn) over _decode_tfn. No block is
+skipped, so a search reads only the posting columns (term, n_docs and
+the doc/tf/dl streams, plus positions for fields=), never the stored
+block bounds.
 """
 
 from __future__ import annotations
@@ -76,16 +74,13 @@ def _query_weights(ix: Index, queries: list[tuple[int, str]]):
     occ: dict[int, list[tuple[str, float]]] = {}
     for qid, ts in toks.items():
         present = [
-            (t, idf_fn(stats[t][0], ix.n_docs))
+            (t, idf_fn(stats[t], ix.n_docs))
             for t in ts
             if t in stats  # absent term contributes nothing (oracle skips)
         ]
         if present:
             occ[qid] = present
     return occ
-
-
-_PRUNE_EPS = 1e-9
 
 
 def _sorted_blocks(blocks: pa.Table, keys=("term",)) -> pa.Table:
@@ -121,8 +116,8 @@ def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
                 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
     """Decode a block table into {term: (doc_ids, tf_norm)} with the
     masks applied; terms left with no posting are absent. The one
-    decode behind the dense kernel's scoring and _interval_prune's seed
-    (one batched codecs.decode_blocks over the term-sorted table).
+    decode behind the dense kernel's scoring (one batched
+    codecs.decode_blocks over the term-sorted table).
 
     ``fieldw`` ((split, w_title, w_body), index_bm25f_search) scores
     positional-split BM25F: per-posting title tf derives from the
@@ -134,10 +129,7 @@ def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
     ``tomb`` (per-group tombstones via the table's gseq column) and
     ``qual`` (sorted `where=` qualifying ids: the filter narrows
     candidates, idf/avgdl stay global) drop dead and non-qualifying
-    postings. For the prune seed this keeps the theta bound sound under
-    deletes / filtered search: an unmasked seed could certify theta from
-    a dead or non-qualifying doc's score, overstating the kth eligible
-    score."""
+    postings."""
     blocks = _sorted_blocks(blocks)
     post = decode_blocks(
         blocks.column("n_docs"), blocks.column("docs_vbyte"),
@@ -166,323 +158,6 @@ def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
     }
 
 
-def _term_staircase(terms_arr: np.ndarray, lo: np.ndarray, hi: np.ndarray,
-                    maxt: np.ndarray, n_int: int, q_terms: set):
-    """Per-term interval max-upper-bound staircase, once per batch: block
-    j of term t spans intervals [lo[j], hi[j]) and raises M[t] there to
-    maxt[j]. Returns ({t: t's block rows, ascending}, {t: M_t}) for the
-    query terms with >= 1 block. One grouped pass: every block of a
-    query term expands to its interval indices and np.maximum.at folds
-    them into an (n_terms, n_int) array (max is exact, so M equals the
-    per-block slice-max sweep bit for bit)."""
-    uterms, code = np.unique(terms_arr, return_inverse=True)
-    hit = np.flatnonzero([t in q_terms for t in uterms])
-    if not len(hit):
-        return {}, {}
-    # dense code per query term present; -1 for the other terms' blocks
-    dense = np.full(len(uterms), -1)
-    dense[hit] = np.arange(len(hit))
-    rows = np.flatnonzero(dense[code] >= 0)
-    rcode = dense[code[rows]]
-    lens = hi[rows] - lo[rows]
-    rep = np.repeat(np.arange(len(rows)), lens)
-    ints = np.arange(len(rep)) - (np.cumsum(lens) - lens)[rep] + lo[rows][rep]
-    m = np.zeros((len(hit), n_int))
-    np.maximum.at(m, (rcode[rep], ints), maxt[rows][rep])
-    groups = np.split(
-        rows[np.argsort(rcode, kind="stable")],
-        np.cumsum(np.bincount(rcode, minlength=len(hit)))[:-1],
-    )
-    blk_of = {uterms[h]: g for h, g in zip(hit, groups)}
-    M = {uterms[h]: m[i] for i, h in enumerate(hit)}
-    return blk_of, M
-
-
-def _interval_prune(blocks: pa.Table,
-                    q_terms: dict[int, list[tuple[str, float]]],
-                    k1: float, b: float, avgdl: float, k: int,
-                    mode: str,
-                    and_need: dict[int, int] | None = None,
-                    tomb: "tuple | None" = None,
-                    qual: "np.ndarray | None" = None):
-    """Interval-level block-max pruning for the DENSE kernel (the
-    answer to BENCH_BOOL_AB.json, where a per-block WAND kernel's Python
-    call overhead lost to dense scoring even when its bounds could pay:
-    run the bounds analysis VECTORIZED over doc-range INTERVALS and feed
-    the surviving blocks to the unchanged densified fold — pruned search
-    that degrades to dense-kernel speed, never below it, when the data
-    gives the bounds nothing to exclude).
-
-    The block-max idea is Ding & Suel's (SIGIR'11); the interval
-    formulation makes it batch-friendly:
-
-    - intervals: the merged doc-id ranges cut at every block's
-      [first_doc, last_doc+1) boundary across the group's query terms.
-    - per term t: M_t[i] = max upper-bound tf_norm over t's blocks
-      overlapping interval i (one grouped pass, _term_staircase — once
-      per BATCH, not per query).
-    - per query q: θ_q from a metadata-only bootstrap ("k docs
-      provably score >= θ": some block of one occurrence term holds
-      >= k postings each with lower bound L), refined by a bounded
-      seed decode (phase 2 below);
-      bound vector B_q[i] = Σ over q's occurrences (t, w) of w*M_t[i];
-      live_q = B_q >= θ_q - |θ_q|·EPS.
-    - decode only blocks overlapping the live-interval UNION of the
-      queries that use the block's term (an all-live query must not
-      resurrect dead blocks of terms it never references); mask each
-      query's final candidates to its own live intervals.
-
-    Exactness: a doc d in a q-dead interval i has true q-score
-    <= B_q[i] < θ_q - |θ_q|·EPS < θ_q <= true kth score, so it can
-    neither enter q's top-k nor tie its boundary. A doc in a q-live
-    interval keeps EVERY contribution: each of its blocks overlaps its
-    (live) interval and is therefore decoded, and the densified fold
-    adds kept docs' contributions in the identical qpos order — scores
-    bit-equal to the unpruned kernel.
-
-    ``and_need`` ({qid: required distinct matched-term count}) makes
-    the analysis CONJUNCTIVE-AWARE for those queries (mode='and' /
-    min_match):
-
-    - coverage liveness: an interval where fewer than ``need`` distinct
-      query terms have ANY overlapping block cannot hold an eligible
-      doc (a doc's posting for t lies inside one of t's blocks), so it
-      is dead regardless of θ;
-    - θ bootstrap: the metadata-only single-term phase is SKIPPED (its
-      k counted docs may not be eligible — θ would overstate the kth
-      ELIGIBLE score); the seed refinement counts per-doc DECODED
-      distinct-term coverage and takes the kth-largest decoded score
-      among PROVABLY eligible docs (decoded coverage >= need implies
-      true coverage >= need; the decoded score is still an
-      underestimate), which lower-bounds the true kth eligible score;
-    - exactness: a doc in a q-live interval keeps every contribution
-      AND its full coverage count (every term the query uses has all
-      its blocks overlapping that live interval decoded), so the
-      kernel's coverage test and fold are bit-exact there; q-dead
-      intervals are masked only after the coverage selection.
-
-    ``tomb`` / ``qual`` (the kernel's exact tombstone pair / sorted
-    qualifying ids) compose soundly: block upper bounds stay valid (a
-    superset bound), the metadata-only θ phase is SKIPPED (its counted
-    docs may be dead or non-qualifying), and the seed decode applies
-    the SAME masks the main decode will (``_decode_tfn(tomb=, qual=)``)
-    so every θ-certifying doc is a real eligible candidate. The live
-    mask applies after the kernel's own masking, so surviving docs are
-    bit-exact as in the clean shape.
-
-    Returns None when nothing is excludable (the caller then runs the
-    plain dense path with zero per-query overhead), else
-    (keep_rows boolean mask over the block rows, interval bounds array,
-    {qid: live boolean vector} for queries with >= 1 dead interval).
-    """
-    from .bm25 import tf_norm_np
-
-    def col(name, dtype):
-        return np.asarray(blocks.column(name).to_numpy(), dtype=dtype)
-
-    firsts = col("first_doc", np.int64)
-    lasts = col("last_doc", np.int64)
-    if mode == "derived":
-        maxt = tf_norm_np(col("max_tf", np.int64), col("min_dl", np.int64),
-                          avgdl, k1, b)
-        mint = tf_norm_np(col("min_tf", np.int64), col("max_dl", np.int64),
-                          avgdl, k1, b)
-    else:
-        maxt = col("max_tf_norm", np.float64)
-        mint = col("min_tf_norm", np.float64)
-    n_arr = col("n_docs", np.int64)
-    terms_arr = blocks.column("term").to_numpy()
-    bounds = np.unique(np.concatenate([firsts, lasts + 1]))
-    n_int = len(bounds) - 1
-    if n_int < 1:
-        return None
-    lo = np.searchsorted(bounds, firsts, side="right") - 1
-    hi = np.searchsorted(bounds, lasts + 1, side="left")
-    blk_of, M = _term_staircase(
-        terms_arr, lo, hi, maxt, n_int,
-        {t for tw in q_terms.values() for t, _w in tw},
-    )
-    if not M:
-        return None
-    # phase 1 — metadata-only theta per query ("k docs provably score
-    # >= theta": a prefix of ONE term's blocks, ordered by lower bound
-    # desc, holds >= k postings)
-    theta_of: dict[int, float] = {}
-    present_of: dict[int, list[tuple[str, float]]] = {}
-    need_of: dict[int, int] = {}
-    for qid, tw in q_terms.items():
-        present = [(t, w) for t, w in tw if t in M]
-        if not present:
-            continue
-        present_of[qid] = present
-        need_of[qid] = (and_need or {}).get(qid, 1)
-        theta = 0.0
-        masked = (tomb is not None and len(tomb[0]) > 0) or qual is not None
-        if need_of[qid] <= 1 and not masked:
-            # metadata bootstrap is OR-only: for a conjunctive query its
-            # k counted docs may not be eligible (theta would overstate
-            # the kth ELIGIBLE score) — those queries get theta from the
-            # coverage-aware seed phase below, or coverage-only liveness
-            for t, w in present:
-                idx = blk_of[t]
-                L, nn = w * mint[idx], n_arr[idx]
-                order = np.argsort(-L, kind="stable")
-                cum = np.cumsum(nn[order])
-                hit = np.flatnonzero(cum >= k)
-                if len(hit):
-                    theta = max(theta, float(L[order[hit[0]]]))
-        theta_of[qid] = theta
-    if not present_of:
-        return None
-    # phase 2 — SEED refinement (two-phase block-max): the metadata
-    # bootstrap certifies only ONE term's contribution, so for
-    # multi-term queries theta sits far below the true kth score and
-    # excludes little. Decode each query term's highest-upper-bound
-    # blocks once (a bounded seed), accumulate each query's scores over
-    # the decoded postings, and take the kth-largest as theta'.
-    # Soundness: every decoded candidate is a real doc and its
-    # accumulated score omits at most some of its own contributions
-    # (an UNDERestimate), and a subset's kth order statistic never
-    # exceeds the full set's — so theta' <= the true kth score.
-    # Accumulation order may differ from the final fold by ~ulp; the
-    # relative _PRUNE_EPS margin on the live test absorbs that.
-    # seed-worthiness gate (pure COST heuristic — skipping a seed only
-    # leaves theta at its looser metadata/zero value, never unsound):
-    # even a PERFECT theta (<= true kth <= max interval bound) can only
-    # kill intervals whose bound sits below it, so when a query's bound
-    # staircase is flat the seed decode is guaranteed wasted work —
-    # exactly the prune-hostile shape, where the masked seed cost was
-    # the measured 16% overhead vs the dense kernel (BENCH_PRUNE_AB)
-    B_of: dict[int, np.ndarray] = {}
-    seed_qids = set()
-    for qid, present in present_of.items():
-        B = np.zeros(n_int)
-        for t, w in present:
-            B += w * M[t]
-        B_of[qid] = B
-        bmx = float(B.max())
-        if bmx > 0.0 and float(B.min()) < 0.5 * bmx:
-            seed_qids.add(qid)
-    if "docs_vbyte" in blocks.column_names and seed_qids:
-        seed_rows = np.zeros(blocks.num_rows, dtype=bool)
-        for qid in seed_qids:
-            for t, _w in present_of[qid]:
-                idx = blk_of[t]
-                order = np.argsort(-maxt[idx], kind="stable")
-                cum = np.cumsum(n_arr[idx][order])
-                take = int(np.searchsorted(cum, 4 * k)) + 1
-                seed_rows[idx[order[:take]]] = True
-        n_seed = int(n_arr[seed_rows].sum())
-        if 0 < n_seed <= max(0.25 * float(n_arr.sum()), 64.0 * k):
-            raw = _decode_tfn(blocks.filter(seed_rows), k1, b, avgdl,
-                              tomb=tomb, qual=qual)
-            if raw:
-                for qid in seed_qids:
-                    present = present_of[qid]
-                    parts = [
-                        (raw[t][0], w, raw[t][1])
-                        for t, w in present if t in raw
-                    ]
-                    if not parts:
-                        continue
-                    # per-term seed ids are unique but NOT sorted across
-                    # blocks (lineage groups interleave doc ranges)
-                    ids_c = (
-                        np.sort(parts[0][0]) if len(parts) == 1
-                        else np.unique(
-                            np.concatenate([p[0] for p in parts])
-                        )
-                    )
-                    if len(ids_c) < k:
-                        continue
-                    sc = np.zeros(len(ids_c))
-                    for pids, w, ptfn in parts:
-                        sc[np.searchsorted(ids_c, pids)] += w * ptfn
-                    need = need_of[qid]
-                    if need > 1:
-                        # conjunctive: only docs whose DECODED distinct-
-                        # term coverage already proves eligibility may
-                        # certify theta (true coverage >= decoded)
-                        cov = np.zeros(len(ids_c), dtype=np.int32)
-                        for t in {t for t, _w in present}:
-                            got = raw.get(t)
-                            if got is not None:
-                                cov[np.searchsorted(ids_c, got[0])] += 1
-                        elig = cov >= need
-                        if int(elig.sum()) < k:
-                            continue
-                        sc = sc[elig]
-                    th2 = float(-np.partition(-sc, k - 1)[k - 1])
-                    if th2 > theta_of[qid]:
-                        theta_of[qid] = th2
-    # phase 3 — live intervals per query under the refined theta
-    live_of: dict[int, np.ndarray] = {}
-    # per-TERM live union: a block needs decoding only where some query
-    # USING ITS TERM is live — an all-live query must not resurrect the
-    # dead blocks of terms it never references
-    term_live: dict[str, np.ndarray | None] = {}  # None = live everywhere
-    any_dead = False
-    for qid, present in present_of.items():
-        theta = theta_of[qid]
-        need = need_of[qid]
-        cov_ok: np.ndarray | None = None
-        if need > 1:
-            tset = {t for t, _w in present}
-            if len(tset) < need:
-                # too few group-present terms: no doc here can cover —
-                # every interval is dead for this query (its terms join
-                # the union as all-dead, so blocks used by no other
-                # query are dropped)
-                live = np.zeros(n_int, dtype=bool)
-                any_dead = True
-                live_of[qid] = live
-                for t, _w in present:
-                    if term_live.get(t, ...) is ...:
-                        term_live[t] = live.copy()
-                continue
-            # interval coverage: a doc in interval i can match at most
-            # the distinct terms with >= 1 block overlapping i
-            C = np.zeros(n_int, dtype=np.int32)
-            for t in tset:
-                C += (M[t] > 0.0)
-            cov_ok = C >= need
-        if theta <= 0.0 and (cov_ok is None or cov_ok.all()):
-            for t, _w in present:
-                term_live[t] = None
-            continue
-        if theta > 0.0:
-            B = B_of[qid]
-            live = B >= theta - abs(theta) * _PRUNE_EPS
-            if cov_ok is not None:
-                live = live & cov_ok
-        else:
-            live = cov_ok
-        if live.all():
-            for t, _w in present:
-                term_live[t] = None
-            continue
-        any_dead = True
-        live_of[qid] = live
-        for t, _w in present:
-            prev = term_live.get(t, ...)
-            if prev is ...:
-                term_live[t] = live.copy()
-            elif prev is not None:
-                prev |= live
-    if not any_dead:
-        return None
-    # decode only blocks overlapping their term's live-union region
-    keep_rows = np.ones(blocks.num_rows, dtype=bool)
-    for t, lv in term_live.items():
-        if lv is None:
-            continue
-        c = np.zeros(n_int + 1, dtype=np.int64)
-        np.cumsum(lv, out=c[1:])
-        idx = blk_of[t]
-        keep_rows[idx] = (c[hi[idx]] - c[lo[idx]]) > 0
-    return keep_rows, bounds, live_of
-
-
 def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                      k1: float, b: float, avgdl: float, k: int,
                      side: bool = False,
@@ -491,7 +166,6 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                      and_need: dict[int, int] | None = None,
                      exclude: dict[int, list[str]] | None = None,
                      fieldw: tuple | None = None,
-                     prune_bounds: str | None = None,
                      after: dict[int, tuple[float, int]] | None = None,
                      collapse: bool = False):
     """Per-shard exact scoring kernel: decode each query term's blocks ONCE,
@@ -543,19 +217,6 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     scoring column; group-locality makes the exclusion test exact for
     the same reason as coverage.
 
-    ``prune_bounds`` ('derived' | 'stored') activates interval-level
-    block-max pruning (see _interval_prune): blocks provably unable to
-    affect any query's top-k are skipped BEFORE the batched decode, and
-    each query's candidates are masked to its own live doc-range
-    intervals. Exact (scores of surviving docs are the bitwise-unchanged
-    dense fold); requires the blockmax metadata columns in the group and
-    composes with ``and_need`` (conjunctive queries get coverage
-    liveness + a coverage-aware seed theta; the live mask applies AFTER
-    the coverage selection, so surviving docs keep exact counts and
-    scores) and with the tombstone / qualifying masks. It refuses
-    ``exclude``, ``fieldw`` and ``after``: index_search runs those
-    shapes unpruned on either strategy.
-
     ``fieldw`` ((split, w_title, w_body)) scores positional-split BM25F;
     _decode_tfn derives the per-field tf from the positions stream.
 
@@ -590,19 +251,6 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             "cursor mask could resurface a page-1 group via its "
             "second-best doc"
         )
-    if prune_bounds is not None and (
-        exclude or fieldw is not None or after
-    ):
-        # exclusion: a partial decode cannot PROVE a doc does not
-        # contain a MUST_NOT term, so a seed theta could count
-        # ineligible docs; field weights: the bounds need the
-        # positional split; cursors: theta counts pre-cursor docs.
-        # (tombstones / where= DO compose: the kernel holds their exact
-        # masks and the seed decode applies them — _interval_prune doc.)
-        raise ValueError(
-            "prune_bounds does not compose with exclude / field weights "
-            "/ search_after; run those shapes unpruned"
-        )
 
     def _run(blocks: pa.Table,
              qual: np.ndarray | None,
@@ -621,21 +269,8 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         w_of: dict[str, float] = {
             t: w for tw in q_terms.values() for t, w in tw
         }
-        live_of: dict[int, np.ndarray] = {}
-        int_bounds: np.ndarray | None = None
         if not blocks.num_rows:
             return empty
-        if prune_bounds is not None:
-            pruned = _interval_prune(
-                blocks, q_terms, k1, b, avgdl, k, prune_bounds,
-                and_need=and_need, tomb=tomb, qual=qual,
-            )
-            if pruned is not None:
-                keep_rows, int_bounds, live_of = pruned
-                if not keep_rows.any():
-                    return empty
-                if not keep_rows.all():
-                    blocks = blocks.filter(keep_rows)
         raw = _decode_tfn(blocks, k1, b, avgdl, tomb=tomb, qual=qual,
                           fieldw=fieldw)
         if not raw:
@@ -660,12 +295,6 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             return empty
         uids_g = np.unique(np.concatenate(score_ids))
         U = len(uids_g)
-        # interval index of each universe doc (pruning active only):
-        # one searchsorted per batch serves every query's live-mask
-        u_int = (
-            np.searchsorted(int_bounds, uids_g, side="right") - 1
-            if live_of else None
-        )
         heavy_at = max(1, U // 8)
         dense: dict[str, np.ndarray] = {}
         sparse: dict[str, tuple[np.ndarray, np.ndarray]] = {}
@@ -764,9 +393,6 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                     nz = np.flatnonzero(scores)  # contributions > 0
                 if ex_pos is not None and len(nz):
                     nz = nz[~_in_sorted(nz, ex_pos)]
-                live = live_of.get(qid)
-                if live is not None and len(nz):
-                    nz = nz[live[u_int[nz]]]
                 if not len(nz):
                     continue
                 sc = scores[nz]
@@ -794,9 +420,6 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                 sel = and_pos if and_pos is not None else cand
                 if ex_pos is not None and len(sel):
                     sel = sel[~_in_sorted(sel, ex_pos)]
-                live = live_of.get(qid)
-                if live is not None and len(sel):
-                    sel = sel[live[u_int[sel]]]
                 if not len(sel):
                     continue
                 if sel is not cand:
@@ -1139,9 +762,9 @@ def _serve_in_driver(ix: Index, occ: dict, terms: list[str],
     memory guard caps the postings the driver reads (Σdf over the
     distinct fetched terms) at LOCAL_SEARCH_MAX_POSTINGS."""
     stats = ix.term_stats_lookup(terms)
-    if sum(v[0] for v in stats.values()) > LOCAL_SEARCH_MAX_POSTINGS:
+    if sum(stats.values()) > LOCAL_SEARCH_MAX_POSTINGS:
         return False
-    w = sum(stats[t][0] for tw in occ.values() for t, _w in tw if t in stats)
+    w = sum(stats[t] for tw in occ.values() for t, _w in tw if t in stats)
     if w <= CROSSOVER_POSTINGS:
         return True
     p = min(len(fm), ix.spark.sparkContext.defaultParallelism)
@@ -1489,10 +1112,10 @@ def index_prefix_search(
         present: list[tuple[str, float]] = []
         for t, is_pref in toks:
             if is_pref:
-                for term, df, _mtn in exp.get(t, ()):
+                for term, df in exp.get(t, ()):
                     present.append((term, idf_fn(df, ix.n_docs)))
-            elif (v := stats.get(t)) is not None:
-                present.append((t, idf_fn(v[0], ix.n_docs)))
+            elif (df := stats.get(t)) is not None:
+                present.append((t, idf_fn(df, ix.n_docs)))
         if present:
             occ[qid] = present
     return index_search(ix, queries, k=k, _resolved=occ, **kwargs)
@@ -1565,7 +1188,7 @@ def index_fuzzy_search(
     for qid, toks in parsed.items():
         present = [
             (term, idf_fn(df, ix.n_docs))
-            for t in toks for term, df, _mtn in exp.get(t, ())
+            for t in toks for term, df in exp.get(t, ())
         ]
         if present:
             occ[qid] = present
@@ -1597,9 +1220,7 @@ def index_bm25f_search(
     Delegates to index_search's dense kernel, so
     where=/k1/b/tombstones/mode/min_match/exclude all compose; with
     integer-valued weights results are bit-identical to the corpus-scan
-    path pre-rounding. Field-weighted search is never pruned: on
-    'blockmax' it runs the same unpruned fold, and reads the same
-    columns, as 'sharded'.
+    path pre-rounding.
 
     Reference analog: search params applied at query time over a
     prebuilt artifact (benchmarking/search/search_indices.py:16-39) —
@@ -1649,19 +1270,12 @@ def index_search(
     plan, the returned DataFrame is lazy and the work runs at its
     action.
 
-    strategy:
-      "sharded"     (default) exact dense scoring: each shard task decodes
-                    every block of the query terms once and folds every
-                    query over it.
-      "blockmax"    block-max pruning: only blocks that can affect the
-                    top-k are decoded; exact. The bounds analysis runs
-                    vectorized over doc-range intervals
-                    (_interval_prune) and the surviving blocks feed the
-                    same densified fold, so it degrades to 'sharded'
-                    speed when the bounds exclude nothing. Composes
-                    with where=/k1/b/tombstones/mode/min_match. With
-                    exclude= or fields= nothing is pruned: the call
-                    runs exactly as 'sharded'.
+    `strategy` is "sharded" (default) or "blockmax"; both run the same
+    exact dense scoring, where each shard's kernel decodes every block
+    of the query terms once and folds every query over it. "blockmax"
+    is accepted for callers written when it selected a block-max
+    pruned kernel; it no longer changes the plan, the columns read or
+    the results.
 
     `where` restricts the top-k to docs whose stored attributes match
     every predicate: `{"lang": "en"}` (equality) or `{"source": ["web",
@@ -1681,10 +1295,7 @@ def index_search(
     `k1`/`b` override the BM25 shape parameters at QUERY time without a
     rebuild — tf and doc lengths are stored raw, tf_norm is computed in
     the kernel, and idf/avgdl don't depend on k1/b (the reference sweeps
-    its search-time knob the same way, benchmarks.yml ef_search). The
-    blockmax strategy derives sound pruning bounds for the effective
-    (k1, b) from each block's raw (max_tf, min_tf, min_dl, max_dl)
-    metadata.
+    its search-time knob the same way, benchmarks.yml ef_search).
 
     `mode` selects the boolean semantics over the query's tokens:
     "or" (default) ranks any doc matching >= 1 token; "and" ranks only
@@ -1693,25 +1304,17 @@ def index_search(
     sums (an AND hit matches every term, so its OR and AND scores are
     bitwise identical); the doc-range sharding makes the coverage test
     group-local (see _sharded_topk_fn). Composes with
-    where=/k1/b/tombstones. On 'blockmax' the interval pruner adds
-    coverage liveness (an interval where fewer distinct query terms
-    have blocks than required is dead) and a coverage-aware seed theta
-    (_interval_prune). iid-Zipf text is prune-hostile (block bounds
-    sit near actual scores, θ excludes little), so there 'blockmax'
-    runs at 'sharded' speed; it pays on skewed real-text tf where block
-    maxima discriminate.
+    where=/k1/b/tombstones.
 
-    `min_match` (mode='or', either strategy) is Lucene's
-    minimum-should-match: rank only docs matching >= that many DISTINCT
-    query tokens. A token absent from the corpus can never match, so a
-    query whose corpus-present distinct tokens number fewer than
-    min_match is unsatisfiable and returns no rows. min_match=1 is
-    plain OR; min_match >= the distinct-token count behaves like
-    mode='and'. Scores are the unchanged full BM25 sums of the
-    surviving docs; the coverage test is group-local and exact, same
-    as mode='and' (see _sharded_topk_fn). Composes with where=/k1/b/
-    tombstones/exclude, and rides the interval pruner on 'blockmax'
-    exactly like mode='and'.
+    `min_match` (mode='or') is Lucene's minimum-should-match: rank only
+    docs matching >= that many DISTINCT query tokens. A token absent
+    from the corpus can never match, so a query whose corpus-present
+    distinct tokens number fewer than min_match is unsatisfiable and
+    returns no rows. min_match=1 is plain OR; min_match >= the
+    distinct-token count behaves like mode='and'. Scores are the
+    unchanged full BM25 sums of the surviving docs; the coverage test
+    is group-local and exact, same as mode='and' (see
+    _sharded_topk_fn). Composes with where=/k1/b/tombstones/exclude.
 
     `exclude` is Lucene's MUST_NOT: {query_id: "tokens ..."} — docs
     containing ANY of that query's excluded tokens are dropped from its
@@ -1722,11 +1325,9 @@ def index_search(
     construction) — except under prefix expansion, where excluding one
     of a wildcard's own expansions ("w07*" minus "w0777") is legitimate
     and simply drops that token's docs. The kernel drops excluded docs
-    after the fold. A partial decode cannot prove that a doc lacks a
-    MUST_NOT term, so a prune seed theta could count ineligible docs:
-    on 'blockmax' an excluded query runs unpruned, exactly as
-    'sharded'. Composes with mode/min_match/where=/k1/b/tombstones and
-    with prefix search (exclusion tokens are exact, never expanded).
+    after the fold. Composes with mode/min_match/where=/k1/b/tombstones
+    and with prefix search (exclusion tokens are exact, never
+    expanded).
 
     `search_after` is OpenSearch's stateless cursor pagination:
     {query_id: (score, doc_id)} — return the top-k candidates STRICTLY
@@ -1737,10 +1338,8 @@ def index_search(
     folded scores in the kernel BEFORE local top-k extraction (each
     shard's survivors are the true after-cursor leaders), and the
     float equality is sound because cursors come from the engine's
-    own bit-exact scores. 'sharded' strategy only (a pruning
-    strategy's theta bootstrap counts docs the cursor excludes, so
-    theta could exceed the true kth-after-cursor score); composes with
-    where=/mode/min_match/exclude/k1/b/tombstones.
+    own bit-exact scores. Composes with where=/mode/min_match/exclude/
+    k1/b/tombstones.
 
     `collapse` is OpenSearch's FIELD COLLAPSING: name a stored
     attribute (BuildParams(attr_cols=...)) and each query's top-k
@@ -1756,11 +1355,9 @@ def index_search(
     two-window merge picks each group's global best then ranks them.
     Exact: a group in the global collapsed top-k has < k groups ahead
     of it inside its best doc's shard, so that shard emits it.
-    'sharded' strategy only (a pruning theta that counts k same-group
-    docs overstates the collapsed kth score); composes with where=/
-    where_expr/mode/min_match/exclude/k1/b/fields/tombstones; refuses
-    search_after (a doc-level cursor could resurface a page-1 group
-    via its second-best doc).
+    Composes with where=/where_expr/mode/min_match/exclude/k1/b/fields/
+    tombstones; refuses search_after (a doc-level cursor could
+    resurface a page-1 group via its second-best doc).
 
     `_resolved` (internal) bypasses _query_weights with a pre-expanded
     occurrence map — the prefix-search entry point resolves wildcard
@@ -1907,14 +1504,6 @@ def index_search(
             if not excl_map:
                 excl_map = None
     if search_after:
-        if strategy != "sharded":
-            # the pruned strategies' theta bootstrap counts docs the
-            # cursor excludes (theta could exceed the true kth-after-
-            # cursor score), so pruning is unsound under a cursor
-            raise ValueError(
-                "search_after (cursor pagination) is served by the "
-                "'sharded' strategy only"
-            )
         for qid, cur in search_after.items():
             if (
                 not isinstance(cur, tuple) or len(cur) != 2
@@ -1926,13 +1515,6 @@ def index_search(
                     f"doc_id: int) pairs; query {qid} has {cur!r}"
                 )
     if collapse is not None:
-        if strategy != "sharded":
-            # a pruning theta bootstrap may count k docs of one collapse
-            # group, overstating the collapsed kth score — unsound
-            raise ValueError(
-                "collapse (field collapsing) is served by the 'sharded' "
-                "strategy only"
-            )
         if search_after:
             raise ValueError(
                 "search_after does not compose with collapse: a doc-"
@@ -1967,28 +1549,13 @@ def index_search(
     cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
     if fw is not None:
         cols.append("pos_vbyte")
-    prune = None
-    if strategy == "blockmax" and not excl_map and fw is None:
-        # interval-pruned dense kernel (_interval_prune doc): conjunctive
-        # queries compose via coverage liveness + the coverage-aware seed
-        # theta, tombstones / where= via the mask-exact seed decode. A
-        # MUST-NOT or field-weighted shape cannot bound a seed theta, so
-        # it runs the same kernel unpruned — exactly 'sharded'.
-        # k1/b overrides derive the bounds from the RAW per-block
-        # integers under the effective parameters; the precomputed
-        # tf_norm bounds are then not read.
-        prune = "stored" if (eff_k1, eff_b) == (ix.k1, ix.b) else "derived"
-        cols += ["first_doc", "last_doc"] + (
-            ["max_tf_norm", "min_tf_norm"] if prune == "stored"
-            else ["max_tf", "min_tf", "min_dl", "max_dl"]
-        )
     # collapse values ride the side frame exactly like qualifying ids
     has_qual = bool(where) or where_expr is not None or collapse is not None
     needs_side = has_qual or use_cotomb
     kern = _sharded_topk_fn(
         occ, eff_k1, eff_b, eff_avgdl, k, side=needs_side,
         has_qual=has_qual, tombstones=tomb, and_need=and_need,
-        exclude=excl_map, fieldw=fw, prune_bounds=prune,
+        exclude=excl_map, fieldw=fw,
         after=search_after, collapse=collapse is not None,
     )
     if not needs_side:

@@ -687,7 +687,7 @@ class Index:
         self.posting_layout: int = int(b.get("posting_layout", 1))
         self._bucket_files: dict[int, dict[int, list[tuple[int, str]]]] = {}
         self._dfs: dict[str, DataFrame] = {}
-        self._stats_cache: dict[str, tuple[int, float] | None] = {}
+        self._stats_cache: dict[str, int | None] = {}
         self._stats_preloaded = False
 
     def _load(self, name: str) -> DataFrame:
@@ -704,10 +704,8 @@ class Index:
     # driver by query traffic instead of corpus vocabulary
     STATS_PRELOAD_MAX_TERMS = 4_000_000
 
-    def term_stats_lookup(
-        self, terms: list[str]
-    ) -> dict[str, tuple[int, float]]:
-        """Driver-side (df, max_tf_norm) for query terms, cached on the
+    def term_stats_lookup(self, terms: list[str]) -> dict[str, int]:
+        """Driver-side {term: df} for query terms, cached on the
         handle: the first call preloads the whole vocabulary when it is
         small enough, so WARM single-query searches launch zero extra Spark
         jobs (the reference's query path is one index.search call,
@@ -720,16 +718,15 @@ class Index:
                 n_terms = self.term_stats().count()
                 self.manifest["build"]["n_terms"] = n_terms
             if n_terms <= self.STATS_PRELOAD_MAX_TERMS:
-                for r in self.term_stats().select(
-                    "term", "df", "max_tf_norm"
-                ).collect():
-                    self._stats_cache[r.term] = (r.df, r.max_tf_norm)
+                for r in self.term_stats().select("term", "df").collect():
+                    self._stats_cache[r.term] = r.df
                 self._stats_preloaded = True
         missing = [t for t in terms if t not in self._stats_cache]
         if missing and not self._stats_preloaded:
             found = {
-                r.term: (r.df, r.max_tf_norm)
+                r.term: r.df
                 for r in self.term_stats()
+                .select("term", "df")
                 .filter(F.col("term").isin(missing))
                 .collect()
             }
@@ -748,9 +745,9 @@ class Index:
 
     def prefix_expand(
         self, stems: list[str], max_expansions: int | None = None
-    ) -> dict[str, list[tuple[str, int, float]]]:
+    ) -> dict[str, list[tuple[str, int]]]:
         """Vocabulary expansion for wildcard query tokens: stem ->
-        [(term, df, max_tf_norm), ...] over every indexed term starting
+        [(term, df), ...] over every indexed term starting
         with the stem, returned in term-ASC order (the engine's
         deterministic fold order for a prefix's expansions).
 
@@ -776,9 +773,9 @@ class Index:
     def fuzzy_expand(
         self, stems: list[str], max_dist: int = 1,
         max_expansions: int | None = None,
-    ) -> dict[str, list[tuple[str, int, float]]]:
+    ) -> dict[str, list[tuple[str, int]]]:
         """Vocabulary expansion for FUZZY query tokens: stem ->
-        [(term, df, max_tf_norm), ...] over every indexed term within
+        [(term, df), ...] over every indexed term within
         ``max_dist`` unit-cost edits (Levenshtein) of the stem — the
         stem itself included at distance 0 when indexed. Same cap
         contract and preloaded-cache / windowed-plan split as
@@ -806,7 +803,7 @@ class Index:
     def _vocab_expand(
         self, stems: list[str], py_match, plan_cond,
         max_expansions: int | None,
-    ) -> dict[str, list[tuple[str, int, float]]]:
+    ) -> dict[str, list[tuple[str, int]]]:
         """Shared vocabulary-expansion body (prefix_expand /
         fuzzy_expand): the match predicate is the only difference, so
         cap order and the cache/plan routing cannot diverge."""
@@ -817,14 +814,14 @@ class Index:
         stems = sorted(set(stems))
         if not self._stats_preloaded:
             self.term_stats_lookup([])  # trigger the preload attempt
-        out: dict[str, list[tuple[str, int, float]]] = {s: [] for s in stems}
+        out: dict[str, list[tuple[str, int]]] = {s: [] for s in stems}
         if self._stats_preloaded:
-            for t, v in self._stats_cache.items():
-                if v is None:
+            for t, df in self._stats_cache.items():
+                if df is None:
                     continue
                 for s in stems:
                     if py_match(t, s):
-                        out[s].append((t, v[0], v[1]))
+                        out[s].append((t, df))
         else:
             # big-vocabulary path: apply the per-stem cap IN the plan (a
             # window over the broadcast stem join) so the driver receives
@@ -841,7 +838,7 @@ class Index:
             )
             j = (
                 self.term_stats()
-                .select("term", "df", "max_tf_norm")
+                .select("term", "df")
                 .join(F.broadcast(stem_df), plan_cond())
             )
             if max_expansions is not None:
@@ -852,7 +849,7 @@ class Index:
                     F.col("rn") <= max_expansions
                 )
             for r in j.collect():
-                out[r.stem].append((r.term, r.df, r.max_tf_norm))
+                out[r.stem].append((r.term, r.df))
         for s, lst in out.items():
             if max_expansions is not None and len(lst) > max_expansions:
                 lst.sort(key=lambda e: (-e[1], e[0]))

@@ -42,7 +42,7 @@ Two engine paths, mirroring bm25_topk's:
 - :func:`index_more_like_this` — artifact-served: source texts from the
   stored-text doc_stats (store_text=True builds), df from the
   term_stats artifact via the driver-cached lookup, then ONE
-  index_search at k+1 (every strategy/route available) and a window
+  index_search at k+1 (either route) and a window
   re-cut after dropping the source row. Zero corpus passes.
 
 :func:`more_like_this_sql` is the DuckDB oracle for the driver gate.
@@ -201,13 +201,12 @@ def index_more_like_this(
     max_terms: int = 10,
     min_tf: int = 1,
     min_df: int = 1,
-    strategy: str = "sharded",
 ) -> DataFrame:
     """Artifact-served MLT: source text from the stored-text doc_stats,
     df from the term_stats artifact (driver-cached lookup — zero Spark
-    jobs warm), candidates from ONE `index_search` at k+1 (either
-    strategy), then drop each source's own row and re-cut ranks in
-    a window over the <= k+1-row result. Rank-identical to
+    jobs warm), candidates from ONE `index_search` at k+1, then drop
+    each source's own row and re-cut ranks in a window over the
+    <= k+1-row result. Rank-identical to
     :func:`more_like_this` on the same corpus (untombstoned; with
     tombstones df stays build-time global — the standard Lucene posture
     — while dead docs drop out of candidates).
@@ -234,13 +233,13 @@ def index_more_like_this(
         return _empty_result(ix.spark)
     all_terms = sorted({t for c in src_tf.values() for t in c})
     stats = ix.term_stats_lookup(all_terms)
-    dfs = {t: int(s[0]) for t, s in stats.items() if s is not None}
+    dfs = {t: int(df) for t, df in stats.items()}
     sel = select_terms(src_tf, dfs, ix.n_docs, max_terms, min_tf, min_df)
     if not sel:
         return _empty_result(ix.spark)
     lids = sorted(sel)
     queries = [(i, " ".join(sel[lid])) for i, lid in enumerate(lids)]
-    res = index_search(ix, queries, k=k + 1, strategy=strategy)
+    res = index_search(ix, queries, k=k + 1)
     pm = local_df(
         ix.spark, [(i, lid) for i, lid in enumerate(lids)],
         "query_id int, like_id long",

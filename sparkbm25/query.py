@@ -10,12 +10,12 @@ returning distance-ordered ids). Two engine paths exist:
   Catalyst optimizes end-to-end: Arrow tf kernel → broadcast join with the
   (tiny) query-term side → hash aggregate → window top-k.
 - ``index_search`` (sparkbm25.index_query): reads the prebuilt compressed
-  posting index and prunes with block-max metadata — the scale path.
+  posting index and folds each shard's decoded postings — the scale path.
 
 Determinism contract (rank-identity with the oracle):
 - duplicate query terms contribute once PER OCCURRENCE, and per-doc scores
   accumulate in query token order (canonical fold — the same bit-exact-tie
-  guarantee the four indexed strategies carry: two docs whose BM25 doubles
+  guarantee the indexed kernel carries: two docs whose BM25 doubles
   are exactly equal must not rank-flip on a 1-ulp summation-order
   difference, the fuzz-seed-23 class)
 - absent terms contribute nothing

@@ -4,7 +4,7 @@ top hits relative to the background corpus (the OpenSearch
 = the top-k_hits result set, the production posture because an
 unbounded foreground is a full corpus re-scan).
 
-Artifact-served like more-like-this: ONE `index_search` (any strategy /
+Artifact-served like more-like-this: ONE `index_search` (either
 route) supplies the foreground doc set, the stored text (store_text
 doc_stats) supplies its terms, and the term_stats artifact supplies
 background document frequencies — nothing re-reads the raw corpus at
@@ -42,7 +42,6 @@ def index_significant_terms(
     max_terms: int = 10,
     min_df: int = 1,
     include_query_terms: bool = False,
-    strategy: str = "sharded",
 ) -> DataFrame:
     """Per query: the ``max_terms`` most significant terms of its top
     ``k_hits`` result docs — (query_id, term, fg_df, df, score) where
@@ -85,8 +84,7 @@ def index_significant_terms(
             "df comes from build-time term_stats); run compact_index "
             "first to fold tombstones into the stats"
         )
-    hits = index_search(ix, queries, k=k_hits,
-                        strategy=strategy).select("query_id", "doc_id")
+    hits = index_search(ix, queries, k=k_hits).select("query_id", "doc_id")
     texts = ix.fetch_text(hits).select("query_id", "doc_id", "text")
     # foreground size per query (<= k_hits; short result lists shrink it)
     qn = texts.groupBy("query_id").agg(F.count("*").alias("n_hits"))

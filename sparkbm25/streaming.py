@@ -173,8 +173,9 @@ def finalize_stream(spark: SparkSession, index_dir: str) -> None:
 
     n_docs MUST move together with term_stats: with frozen base N and
     recomputed df, a term appearing in more docs than the base corpus gets
-    df > N and a NEGATIVE idf — which breaks the nonnegative-contribution
-    assumption every block-max pruning bound relies on. After this update
+    df > N and a NEGATIVE idf — which breaks the positive-contribution
+    assumption the scoring kernels' candidate selection relies on (a
+    matched doc's score is nonzero). After this update
     df <= n_docs always holds, so idf >= ln(1 + 0.5/(df+0.5)) > 0.
     avgdl stays frozen by contract (tf normalization drift is handled by
     periodic full rebuild, like segment-merge policies)."""
@@ -189,7 +190,7 @@ def finalize_stream(spark: SparkSession, index_dir: str) -> None:
     # rows only: an id ingested twice while both copies are live
     # (base/stream overlap, or one doc in two epochs' files) would silently
     # double-count in every query path and violate the
-    # one-posting-per-(term,doc) invariant the block-max bounds and the
+    # one-posting-per-(term,doc) invariant the scoring fold and the
     # merge kernel's strictly-increasing check rely on. A re-ingested
     # previously-DELETED id is legal: its old copy is tombstone-masked
     # (dead), so exactly one live copy remains. Mirrors
@@ -212,8 +213,8 @@ def finalize_stream(spark: SparkSession, index_dir: str) -> None:
         )
     # frozen-stats universe keeps ALL copies (dead ones included) until a
     # compaction purges them — df counts dead postings too, so n_docs must
-    # as well or idf could go negative (df > N breaks the nonnegative-
-    # contribution assumption the pruning bounds rely on)
+    # as well or idf could go negative (df > N breaks the positive-
+    # contribution assumption the scoring kernels rely on)
     total_docs = int(ds_all.count())
     m["streamed_total_docs"] = total_docs
     m["build"]["n_docs"] = max(int(m["build"]["n_docs"]), int(total_docs))
@@ -577,8 +578,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         # re-block, doc_stats drops the dead rows, and the corpus stats
         # (n_docs, avgdl) are RECOMPUTED over the survivors so idf/tf_norm
         # reflect the alive corpus — block metadata is re-derived with the
-        # new avgdl inside the same merge kernel, so pruning bounds stay
-        # consistent with scoring. No tombstones -> bit-exact compaction
+        # new avgdl inside the same merge kernel, so the stored block
+        # bounds stay consistent with scoring. No tombstones -> bit-exact compaction
         # (the original contract, still pinned by tests).
         tdir_tomb = os.path.join(index_dir, TOMBSTONES_DIR)
         n_deleted = int((m.get("metrics") or {}).get("n_deleted", 0))
@@ -696,7 +697,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         if tomb is not None:
             # frozen corpus stats roll forward to the alive corpus (the
             # row-count audit ran pre-swap); tombstones cleared below
-            # re-enables blockmax
             m["build"]["n_docs"] = new_n_docs
             m["build"]["avgdl"] = new_avgdl
             m["metrics"]["n_deleted"] = 0

@@ -56,7 +56,7 @@ def index_suggest(
     for tid, tok in sorted(set(pairs)):
         cands = [
             (levenshtein_py(term, tok), -df, term, df)
-            for term, df, _mtf in exp.get(tok, ())
+            for term, df in exp.get(tok, ())
         ]
         cands.sort()
         rows.extend(

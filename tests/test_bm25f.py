@@ -178,9 +178,9 @@ def test_indexed_bm25f_refusals(spark, f_built, tmp_path):
 
 
 def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
-    """BM25F on strategy='blockmax' (field-weighted shapes run the dense
-    kernel unpruned) must match the sharded kernel bit-for-bit,
-    composing with overrides and boolean surfaces."""
+    """BM25F on strategy='blockmax' (the same dense fold as 'sharded')
+    must match the sharded kernel bit-for-bit, composing with overrides
+    and boolean surfaces."""
     from sparkbm25.index_query import index_bm25f_search
     from sparkbm25.jobs import Index
 
@@ -198,11 +198,13 @@ def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
 
 def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
                                                        monkeypatch):
-    """`blockmax` with exclude= or fields= cannot prune (a partial decode
-    cannot bound a seed theta for them), so it runs the dense fold
-    unpruned: on the driver route it must read exactly the `sharded`
-    call's columns — no block-bound columns — and return the `sharded`
-    rows bit for bit, rank-identical to the pure-Python oracles."""
+    """No query shape reads the block-bound columns: `blockmax` runs the
+    same dense fold as `sharded`, so on the driver route it must read
+    exactly the `sharded` call's columns — none of first_doc/last_doc/
+    max_tf*/min_tf*/min_dl/max_dl — and return the `sharded` rows bit
+    for bit, rank-identical to the pure-Python oracles. Shapes: plain
+    OR, min_match=2, mode='and', a k1/b override, exclude= and
+    fields=."""
     import sparkbm25.index_query as iq
     from sparkbm25.jobs import Index
     from sparkbm25.oracle import OracleIndex
@@ -229,20 +231,29 @@ def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
         return rows, set(reads)
 
     docs = [(r.doc_id, r.text) for r in corpus.collect()]
-    oracle_ex = OracleIndex.build(docs).search_all(queries, k=K, exclude=ex)
-    for search, oracle in (
-        (lambda *a, **kw: iq.index_search(*a, exclude=ex, **kw), oracle_ex),
-        (iq.index_bm25f_search, _py_bm25f(docs, queries, K)),
-    ):
-        want, want_cols = run(search, strategy="sharded")
-        got, got_cols = run(search, strategy="blockmax")
-        assert got_cols == want_cols and len(got_cols) == 1
+    oracle = OracleIndex.build(docs)
+    shapes = [
+        (iq.index_search, {}),
+        (iq.index_search, {"min_match": 2}),
+        (iq.index_search, {"mode": "and"}),
+        (iq.index_search, {"k1": 0.9, "b": 0.4}),
+        (iq.index_search, {"exclude": ex}),
+    ]
+    cases = [
+        (search, kw, oracle.search_all(queries, k=K, **kw))
+        for search, kw in shapes
+    ]
+    cases.append((iq.index_bm25f_search, {}, _py_bm25f(docs, queries, K)))
+    for search, kw, want_oracle in cases:
+        want, want_cols = run(search, strategy="sharded", **kw)
+        got, got_cols = run(search, strategy="blockmax", **kw)
+        assert got_cols == want_cols and len(got_cols) == 1, kw
         assert not set(next(iter(got_cols))) & {
             "first_doc", "last_doc", "max_tf_norm", "min_tf_norm",
             "max_tf", "min_tf", "min_dl", "max_dl",
-        }
-        assert got == want and got
-        oracle = sorted(oracle)
-        assert [g[:3] for g in got] == [w[:3] for w in oracle]
-        for g, w in zip(got, oracle):
+        }, kw
+        assert got == want and got, kw
+        want_oracle = sorted(want_oracle)
+        assert [g[:3] for g in got] == [w[:3] for w in want_oracle], kw
+        for g, w in zip(got, want_oracle):
             assert g[3] == pytest.approx(w[3], rel=1e-9)

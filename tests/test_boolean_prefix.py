@@ -124,9 +124,8 @@ def test_and_mode_refused_off_sharded(spark, built):
 
 
 def test_and_mode_blockmax_rank_identical(spark, built, oracle):
-    """Round 6: mode='and' on the pruned strategy (candidate-driven
-    conjunctive retrieval) — bit-identical to sharded, including under
-    a k1/b override (derived bounds)."""
+    """mode='and' on strategy='blockmax' — bit-identical to sharded,
+    including under a k1/b override."""
     ix = Index(spark, built)
     queries = make_queries(30)
     for kw in ({}, {"k1": 0.8, "b": 0.25}):
@@ -245,10 +244,14 @@ def test_prefix_expand_spark_path_agrees(spark, built):
 
 def test_prefix_expand_cap_order(spark, built):
     """The per-stem cap keeps the HIGHEST-df expansions (df desc, term
-    asc), returned term-asc."""
+    asc), returned term-asc; each expansion is a (term, df) pair."""
     ix = Index(spark, built)
     full = ix.prefix_expand(["w0"])["w0"]
     capped = ix.prefix_expand(["w0"], max_expansions=3)["w0"]
+    assert all(
+        len(e) == 2 and ix.term_stats_lookup([e[0]]) == {e[0]: e[1]}
+        for e in full
+    )
     assert len(capped) == 3 and len(full) > 3
     by_rank = sorted(full, key=lambda e: (-e[1], e[0]))[:3]
     assert sorted(by_rank) == capped

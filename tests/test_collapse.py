@@ -10,7 +10,8 @@ Contract pinned here:
   to the attribute — on the side-direct plan, bit-identical scores;
 - composes with where=, mode='and', exclude, and k1/b overrides;
 - NULL attribute values collapse into one group;
-- refuses: unstored attribute, non-sharded strategies, search_after.
+- strategy='blockmax' returns the 'sharded' rows;
+- refuses: unstored attribute, search_after.
 
 Reference analog: the reference service exposes no collapsing — this
 widens SURVEY §2.5 T1 the way facets do (the "best hit per
@@ -160,8 +161,11 @@ def test_collapse_refusals(built):
     ix, _corpus = built
     with pytest.raises(ValueError, match="not stored"):
         index_search(ix, QS, k=K, collapse="nope")
-    with pytest.raises(ValueError, match="sharded"):
-        index_search(ix, QS, k=K, collapse="conv_id", strategy="blockmax")
+    got = {
+        s: _rows(index_search(ix, QS, k=K, collapse="conv_id", strategy=s))
+        for s in ("sharded", "blockmax")
+    }
+    assert got["blockmax"] == got["sharded"] and got["sharded"]
     with pytest.raises(ValueError, match="search_after"):
         index_search(ix, QS, k=K, collapse="conv_id",
                      search_after={QS[0][0]: (1.0, 5)})

@@ -204,9 +204,11 @@ def test_layout1_index_refused_until_compacted(spark, tmp_path,
                                                monkeypatch):
     """A pre-0.8 (layout-1) index fails in one place,
     Index.shard_file_map, for every search surface (phrase search:
-    test_phrase_slop); compact_index is the one migration. The tuned
-    blockmax query after compaction needs the raw block bounds, so it
-    shows compaction wrote them."""
+    test_phrase_slop); compact_index is the one migration. After it
+    the compacted files carry the full block layout (bound columns
+    included) and a tuned k1/b query stays oracle-identical."""
+    import pyarrow.parquet as pq
+
     import sparkbm25.build as build_mod
     from sparkbm25.facets import index_facets
     from sparkbm25.streaming import compact_index
@@ -233,6 +235,11 @@ def test_layout1_index_refused_until_compacted(spark, tmp_path,
     compact_index(spark, d)
     ix = Index(spark, d)
     assert ix.posting_layout == 2
+    path = next(p for lst in ix.shard_file_map().values() for _, p in lst)
+    assert {
+        "first_doc", "last_doc", "max_tf_norm", "min_tf_norm",
+        "max_tf", "min_tf", "min_dl", "max_dl",
+    } <= set(pq.read_schema(path).names)
     ora = OracleIndex.build([(r.doc_id, r.text) for r in corpus.collect()])
     _assert_oracle(_rows(index_search(ix, QS, k=8)),
                    ora.search_all(QS, k=8))
@@ -357,7 +364,7 @@ class _StatsIx:
         )
 
     def term_stats_lookup(self, terms):
-        return {t: (self.df[t], 1.0) for t in terms if t in self.df}
+        return {t: self.df[t] for t in terms if t in self.df}
 
 
 def _route(monkeypatch, df, occ, n_shards, parallelism=4,

@@ -142,14 +142,13 @@ def test_indexed_hybrid_rank_identical_at_full_probe(
         .collect()
     }
     want = _rows(hybrid.hybrid_rrf_topk(docs, emb, HQ, k=K, n_each=N_EACH))
-    for strategy in ("sharded", "blockmax"):
-        got = _rows(
-            hybrid.hybrid_rrf_topk_indexed(
-                spark, ix, ann_dir, HQ, query_vecs,
-                k=K, n_each=N_EACH, n_probe=8, strategy=strategy,
-            )
+    got = _rows(
+        hybrid.hybrid_rrf_topk_indexed(
+            spark, ix, ann_dir, HQ, query_vecs,
+            k=K, n_each=N_EACH, n_probe=8,
         )
-        assert got == want, strategy
+    )
+    assert got == want
 
 
 def test_indexed_missing_probe_vec_raises(spark, artifacts):

@@ -260,10 +260,10 @@ def test_index_search_filtered_rank_identical(spark, tmp_path):
 
 
 def test_blockmax_unified_filters_tuning_tombstones(spark, tmp_path):
-    """The PRUNED path survives production traffic (VERDICT r04 #2): the
-    blockmax strategy must stay rank-identical to the oracle with (a)
-    `where=` filters, (b) query-time k1/b overrides (bounds derived from
-    raw block metadata), (c) tombstones, and (d) all three at once."""
+    """strategy='blockmax' under production traffic (VERDICT r04 #2):
+    rank-identical to the oracle with (a) `where=` filters, (b)
+    query-time k1/b overrides, (c) tombstones, and (d) all three at
+    once."""
     import numpy as np
 
     pdf = make_transcripts_pdf(60)
@@ -289,13 +289,13 @@ def test_blockmax_unified_filters_tuning_tombstones(spark, tmp_path):
     got = index_search(ix, queries, k=K, strategy="blockmax",
                        where={"role": "user"}).collect()
     _assert_rank_identical(got, want)
-    # (b) tuned blockmax == tuned oracle (derived bounds)
+    # (b) tuned blockmax == tuned oracle
     want = ora.search_all(queries, k=K, k1=0.9, b=0.4)
     got = index_search(ix, queries, k=K, strategy="blockmax",
                        k1=0.9, b=0.4).collect()
     _assert_rank_identical(got, want)
 
-    # (c) tombstones: blockmax stays pruned AND correct
+    # (c) tombstones: blockmax stays correct
     from sparkbm25.jobs import delete_docs
 
     rng = np.random.default_rng(11)
@@ -353,9 +353,9 @@ def test_index_search_where_expr_range(spark, tmp_path):
 
 def test_index_search_query_time_k1_b_override(spark, built, oracle):
     """k1/b overridden at query time (no rebuild) must be rank-identical
-    to the oracle scored with the same parameters, for both strategies —
-    blockmax derives sound pruning bounds for the effective (k1, b) from
-    the raw per-block (max_tf, min_tf, min_dl, max_dl) metadata."""
+    to the oracle scored with the same parameters, for both strategies
+    (tf and doc lengths are stored raw; tf_norm is computed in the
+    kernel)."""
     d, _ = built
     ix = Index(spark, d)
     queries = make_queries(20)

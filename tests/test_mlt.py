@@ -119,12 +119,8 @@ def mlt_ix(spark, docs, tmp_path_factory):
 
 def test_indexed_mlt_rank_identical(spark, docs, mlt_ix):
     want = _rows(mlt.more_like_this(docs, LIKE, k=K, max_terms=10))
-    for strategy in ("sharded", "blockmax"):
-        got = _rows(
-            mlt.index_more_like_this(mlt_ix, LIKE, k=K, max_terms=10,
-                                     strategy=strategy)
-        )
-        assert got == want, strategy
+    got = _rows(mlt.index_more_like_this(mlt_ix, LIKE, k=K, max_terms=10))
+    assert got == want
 
 
 def test_indexed_mlt_routes_bit_identical(spark, mlt_ix, monkeypatch):

@@ -331,12 +331,12 @@ def test_exclude_rejects_exhaustive(spark, built):
                      strategy="exhaustive")
 
 
-# --- round 6: the pruned (blockmax) strategy serves the boolean surfaces ----
+# --- strategy='blockmax' serves the boolean surfaces -------------------------
 
 def test_msm_exclude_blockmax_rank_identical(spark, built, oracle):
     """min_match / exclude / their composition on strategy='blockmax'
-    must be bit-identical to 'sharded' — same kernels' canonical fold,
-    pruned candidate generation."""
+    must be bit-identical to 'sharded' — the same kernel's canonical
+    fold."""
     ix = Index(spark, built)
     queries = make_queries(30)
     ex = {qid: queries[(i + 5) % len(queries)][1].split()[0]
@@ -363,7 +363,7 @@ def test_msm_exclude_blockmax_rank_identical(spark, built, oracle):
 
 def test_exclude_blockmax_with_where_filter(spark, corpus, tmp_path):
     """exclude + where= on blockmax rides the side-direct plan (the
-    dense kernel, unpruned) and must agree with sharded exactly."""
+    dense kernel) and must agree with sharded exactly."""
     d = str(tmp_path / "ixbwf")
     params = BuildParams(num_shards=6, salt_factor=2, num_term_buckets=8,
                          lineage_groups=3, doc_id_scheme="conv_seq",

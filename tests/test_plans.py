@@ -144,7 +144,7 @@ def test_cosine_pairs_plan_single_shuffle(spark):
 
 
 def test_blockmax_exclude_plan_one_kernel_two_exchanges(built):
-    """blockmax + exclude (the dense kernel, unpruned) on the side-direct
+    """blockmax + exclude (the dense kernel) on the side-direct
     plan keeps the one-kernel shape: exactly one shard-grouped kernel
     (FlatMapGroupsInPandas) and two exchanges total (side groupBy +
     final skinny top-k window) — the legacy DataFrame 3-phase plan this

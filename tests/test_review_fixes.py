@@ -50,7 +50,8 @@ def test_malformed_conv_id_clear_error(spark, tmp_path):
 
 def test_stream_growth_keeps_idf_positive_and_blockmax_sound(spark, tmp_path):
     """Streamed docs can push a term's df above the base N; finalize must
-    lift n_docs so idf stays positive, or blockmax pruning turns unsound."""
+    lift n_docs so idf stays positive, or the kernels' positive-
+    contribution candidate selection turns unsound."""
     from sparkbm25.streaming import append_batch, finalize_stream
 
     base = [(i, f"zz base{i % 5} w{i}") for i in range(10)]

@@ -15,8 +15,8 @@ Contract pinned here:
 - chaining cursors walks the full result list with no gaps or dups;
 - composes with filters, mode='and', exclude, and k1/b overrides
   (anything the dense kernel serves);
-- blockmax refuses (its theta bootstrap counts pre-cursor docs, so
-  pruning under a cursor is unsound); malformed cursors refuse.
+- strategy='blockmax' serves cursors with rows equal to 'sharded';
+  malformed cursors refuse.
 
 Reference analog: the reference serves paged queries purely through
 its harness's repeated top-k calls (benchmarking/search/
@@ -139,9 +139,14 @@ def test_composes_with_boolean_and_overrides(built):
 
 
 def test_refusals(built):
-    with pytest.raises(ValueError, match="sharded"):
-        index_search(built, QS, k=K, strategy="blockmax",
-                     search_after={QS[0][0]: (1.0, 5)})
+    cur = _cursors(_by_query(index_search(built, QS, k=K)), K)
+    assert cur
+    page2 = {
+        s: _by_query(index_search(built, QS, k=K, strategy=s,
+                                  search_after=cur))
+        for s in ("sharded", "blockmax")
+    }
+    assert page2["blockmax"] == page2["sharded"] and page2["sharded"]
     with pytest.raises(ValueError, match="cursor"):
         index_search(built, QS, k=K, search_after={QS[0][0]: (1.0, "x")})
     with pytest.raises(ValueError, match="cursor"):

@@ -318,7 +318,7 @@ def test_compact_index_preserves_results(spark, corpora, tmp_path):
         for r in index_search(ix2, queries, k=15).collect()
     )
     assert after == before  # bit-exact: scores AND ranks
-    # blockmax strategy still sound on the compacted layout
+    # blockmax strategy agrees on the compacted layout
     after_bm = sorted(
         (r.query_id, r.rank, r.doc_id, r.score)
         for r in index_search(ix2, queries, k=15, strategy="blockmax").collect()
@@ -464,10 +464,10 @@ def test_event_time_watermark_exceeding_gap_refused(spark, tmp_path):
 def test_delete_docs_then_compact_purges(spark, corpora, tmp_path):
     """Tombstone lifecycle: (1) logical deletes exclude docs from every
     search immediately (frozen stats — oracle with allowed=alive on the
-    ORIGINAL corpus), blockmax falling back soundly; (2) compaction
-    physically purges postings + doc_stats, rolls n_docs/avgdl forward to
-    the alive corpus (results == oracle REBUILT on alive docs), clears
-    tombstones and re-enables blockmax."""
+    ORIGINAL corpus), blockmax included; (2) compaction physically
+    purges postings + doc_stats, rolls n_docs/avgdl forward to the alive
+    corpus (results == oracle REBUILT on alive docs) and clears
+    tombstones."""
     import numpy as np
 
     from sparkbm25.build import BuildParams
@@ -506,8 +506,7 @@ def test_delete_docs_then_compact_purges(spark, corpora, tmp_path):
     ), "logical delete: sharded"
     assert not ({r.doc_id for r in
                  index_search(ix, queries, k=10).collect()} & dead)
-    # blockmax stays PRUNED under tombstones (round-5 unification): the
-    # kernel masks dead postings and bootstraps θ from live-count decodes
+    # blockmax under tombstones: the kernel masks dead postings
     got_bm = sorted(
         (r.query_id, r.rank, r.doc_id)
         for r in index_search(ix, queries, k=10,
@@ -726,8 +725,7 @@ def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
         for r in index_search(ix2, queries, k=10).collect()
     )
     assert got_dist == want
-    # blockmax over the distributed-tombstone side (pruned dense kernel
-    # with a mask-exact seed theta) must agree too
+    # blockmax over the distributed-tombstone side must agree too
     got_bm = sorted(
         (r.query_id, r.rank, r.doc_id)
         for r in index_search(ix2, queries, k=10,

@@ -116,9 +116,9 @@ def main() -> int:
         def serve(ix, occ, terms, fm):
             stats = ix.term_stats_lookup(terms)
             seen.update(
-                W=sum(stats[t][0] for tw in occ.values() for t, _ in tw
+                W=sum(stats[t] for tw in occ.values() for t, _ in tw
                       if t in stats),
-                W_distinct=sum(v[0] for v in stats.values()),
+                W_distinct=sum(stats.values()),
                 p=min(len(fm), sc.defaultParallelism),
                 rule_route="driver" if rule(ix, occ, terms, fm) else "spark",
             )

@@ -1,5 +1,5 @@
 """sf1 (5.5M-turn) bench points for the round-5/6 query surfaces
-(r05 verdict #5): phrase / facets / fuzzy / prefix / boolean-pruned /
+(r05 verdict #5): phrase / facets / fuzzy / prefix / boolean /
 indexed BM25F / filtered (side-grouped direct), at a small and a big
 scale so each surface gets a 10x-linearity reading.
 
@@ -106,7 +106,7 @@ def bench_scale(spark, n_convs: int, cpus: int) -> dict:
     out["bm25f20_indexed_s"] = t(index_bm25f_search, ix, queries[:20], k=10)
     out["filtered20_sidedirect_s"] = t(index_search, ix, queries[:20],
                                        k=10, where={"role": "user"})
-    # r06-late surfaces: interval-pruned blockmax, field collapsing,
+    # r06-late surfaces: blockmax (the dense fold), field collapsing,
     # cursor pagination, histogram + stats aggregations
     from sparkbm25.facets import index_histogram, index_stats
 
