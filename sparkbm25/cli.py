@@ -73,7 +73,9 @@ def _query(args) -> int:
             vals = val.split(",")
             where[col] = vals if len(vals) > 1 else vals[0]
     out = index_search(ix, [(0, args.query)], k=args.k, where=where)
-    for r in out.orderBy("rank").collect():
+    # one query: sorting the collected rows by rank in Python keeps a
+    # driver-route result out of the JVM (no plan, no sort job)
+    for r in sorted(out.collect(), key=lambda r: r.rank):
         print(f"{r.rank}\t{r.doc_id}\t{r.score:.6f}")
     return 0
 

@@ -19,7 +19,10 @@ direct       one ``spark.range`` work item per shard feeds the kernel
              budget keep the lazy topk_window exchange. A call whose
              posting volume is below the route crossover
              (_serve_in_driver) runs the same kernel in the driver
-             (_local_search), with no Spark job at all.
+             (_local_search), with no Spark job at all. A merged result
+             is a LocalFrame (localrel): its collect() reads the Arrow
+             top-k in Python, and the JVM frame is built only when a
+             JVM operator asks for it.
 side-direct  when the kernel needs a side frame — `where=` qualifying
              ids, collapse values, or tombstones past
              TOMBSTONE_BROADCAST_MAX — only that frame is grouped by
@@ -50,7 +53,7 @@ from .analysis import parse_prefix_query, tokenize_py
 from .bm25 import idf as idf_fn
 from .codecs import decode_blocks, in_sorted as _in_sorted
 from .jobs import Index
-from .localrel import local_df
+from .localrel import LocalFrame, local_df
 from .query import topk_window
 
 
@@ -673,8 +676,8 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
     per-shard tops fit the driver row budget (at most k rows per query
     per shard) they are collected here — one job, one stage, one task
     per shard, no exchange — and merged by _merge_tops into a
-    LocalRelation. Over the budget the global merge stays lazy: the
-    topk_window exchange."""
+    driver-resident LocalFrame. Over the budget the global merge stays
+    lazy: the topk_window exchange."""
     if _serve_in_driver(ix, occ, terms, fm):
         # DRIVER route: the same per-shard kernel runs in this process —
         # pyarrow block reads + numpy fold, zero Spark jobs — when the
@@ -685,7 +688,8 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
         # reference's query model is an in-process index probe
         # (search_indices.py:30-39), and the vocabulary stats and shard
         # file map are already driver-resident. Bit-exact: same kernel
-        # closure and the same global merge (_merge_tops).
+        # closure and the same global merge (_merge_tops). The result
+        # stays in this process: collecting it crosses no JVM boundary.
         return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k)
     tops = ix.spark.range(len(fm), numPartitions=len(fm)).mapInPandas(
         _direct_topk_gen(kernel, cols, terms, fm, tomb),
@@ -703,8 +707,10 @@ def _merge_tops(spark, parts: list, k: int) -> DataFrame:
     """Global top-k merge of per-shard tops in the driver: ``parts`` are
     pandas frames or Arrow tables of (query_id, doc_id, score); the
     result keeps rank <= k per query under topk_window's exact total
-    order (score DESC, doc_id ASC) and is a LocalRelation — collecting
-    it launches no Spark job. A doc lives in one shard, so no (query,
+    order (score DESC, doc_id ASC) and is a LocalFrame over the merged
+    Arrow table: collect(), toArrow() and count() read it in this process
+    (no JVM round trip), and a JVM operator on it builds the
+    LocalRelation on demand. A doc lives in one shard, so no (query,
     doc) pair repeats across parts."""
     def col(name, dtype):
         return np.concatenate([np.empty(0, dtype)] + [
@@ -721,7 +727,7 @@ def _merge_tops(spark, parts: list, k: int) -> DataFrame:
     first[1:] = q[1:] != q[:-1]
     rank = np.arange(len(q)) - np.flatnonzero(first)[np.cumsum(first) - 1]
     keep = rank < k
-    return spark.createDataFrame(pa.table({
+    return LocalFrame(spark, pa.table({
         "query_id": pa.array(q[keep], pa.int32()),
         "rank": pa.array(rank[keep] + 1, pa.int32()),
         "doc_id": pa.array(d[keep], pa.int64()),
@@ -777,8 +783,9 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
     files with _read_shard_blocks (threaded — the reads release the
     GIL), run the unchanged per-shard kernel and merge the tops with
     _merge_tops, the same merge the collected Spark plan ends in.
-    Returns a LocalRelation DataFrame; every call recomputes from the
-    parquet artifact."""
+    Returns a LocalFrame: the call does all its work here, and collecting
+    the result reads the merged Arrow table without a JVM round trip.
+    Every call recomputes from the parquet artifact."""
     from concurrent.futures import ThreadPoolExecutor
 
     need_gseq = tomb is not None and len(tomb[0]) > 0
@@ -1264,11 +1271,14 @@ def index_search(
     Execution: a direct-plan call served in the driver, and one whose
     per-shard tops fit the driver row budget (queries x shards x k <=
     LOCAL_SEARCH_MAX_POSTINGS), runs INSIDE this function (the latter as
-    one Spark job) and returns computed results as a LocalRelation
-    (collecting it launches no job; session confs set around the collect
-    no longer reach the search). Over the budget, and on the side-direct
-    plan, the returned DataFrame is lazy and the work runs at its
-    action.
+    one Spark job) and returns the computed results as a driver-resident
+    LocalFrame (localrel): collect(), toArrow() and count() read its
+    Arrow table in Python with no JVM round trip, so session confs set
+    around the collect no longer reach the search. A JVM operator on the
+    result (join, filter, orderBy, write) builds the JVM LocalRelation
+    on demand. An empty result is such a frame too. Over the budget, and
+    on the side-direct plan, the returned DataFrame is lazy and the work
+    runs at its action.
 
     `strategy` is "sharded" (default) or "blockmax"; both run the same
     exact dense scoring, where each shard's kernel decodes every block

@@ -83,10 +83,11 @@ class low_latency:
     few hundred rows through two exchanges and pays ~0.2 s of stage
     sequencing for nothing (measured: p50 0.61 s -> 0.43 s with AQE off at
     local[8]). These are SESSION-scoped runtime confs applied at ACTION
-    time, so wrap the .collect()/.count(), not the index_search() call::
+    time, so on a lazy plan wrap the action, not the index_search()
+    call::
 
         with low_latency(spark):
-            hits = index_search(ix, [(0, "query text")]).collect()
+            hits = index_search(ix, [(0, "query text")], where=w).collect()
 
     ``shuffle_partitions`` shaves a further ~30 ms on SMALL indexes by
     shrinking the two tiny exchanges, but on the EXCHANGE route it also
@@ -100,14 +101,15 @@ class low_latency:
     local[32]: default 0.714 s, AQE-off 0.684, AQE-off+sp4 0.637).
 
     The settings reach no direct-plan index_search whose tops fit the
-    driver row budget. Below the route crossover
-    (index_query._serve_in_driver) such a call runs in the driver with
-    no Spark job at all; above it, it runs its one job inside the
-    index_search call (a context around the collect comes too late, and
-    the job has no exchange for either setting to act on). The settings
-    still reach the lazy plans: side-direct (`where=`, collapse,
-    distributed tombstones), phrase search and direct searches over the
-    budget.
+    driver row budget: such a call does all its work inside
+    index_search, so there is nothing to wrap. Below the route crossover
+    (index_query._serve_in_driver) it runs in the driver with no Spark
+    job, and its result's collect() reads the merged Arrow top-k in
+    Python (no JVM at all); above it, it runs its one job inside the
+    call, and that job has no exchange for either setting to act on.
+    The settings still reach the lazy plans: side-direct (`where=`,
+    collapse, distributed tombstones), phrase search and direct searches
+    over the budget.
 
     Absolute-floor note (r06): a TRIVIAL 32-task mapInPandas + window +
     count measures 0.686 s on the bench host vs 0.136 s for a JVM-only

@@ -100,7 +100,8 @@ def _plan(df):
 def _assert_one_job_merged_in_driver(spark_jobs, ix, qs, **kw):
     """Under the driver row budget the direct plan runs its one job inside
     index_search — one stage, one task per shard, no exchange — and the
-    result is a LocalRelation whose collect launches no job."""
+    result is a driver-resident frame (a LocalTableScan once its JVM
+    frame is built) whose collect launches no job."""
     fm = ix.shard_file_map()
     df, jobs = spark_jobs(lambda: index_search(ix, qs, **kw))
     assert jobs == [[len(fm)]], jobs
@@ -339,16 +340,70 @@ def test_driver_merge_matches_window_and_oracle(spark, built_ties, tmp_path,
     )
 
 
-def test_empty_results_launch_no_job(built, spark_jobs):
-    """A query set with nothing to score returns a typed 0-row
-    LocalRelation: no Spark job from the call through the collect."""
+def _refuse_jvm_frames(monkeypatch):
+    """Building a JVM frame from driver rows now raises: a call that
+    still does it pays the createDataFrame -> collect round trip."""
+    from pyspark.sql.session import SparkSession
+
+    def refuse(*a, **kw):
+        raise AssertionError("createDataFrame: driver rows sent to the JVM")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+
+
+def test_empty_results_launch_no_job(built, spark_jobs, monkeypatch):
+    """A query set with nothing to score returns a typed 0-row local
+    frame: no Spark job and no JVM frame from the call through the
+    collect."""
     index_search(built, [(0, "w0001")], k=5)  # warm the vocabulary
+    _refuse_jvm_frames(monkeypatch)
     for kw in ({"queries": [(0, "zzabsentzz")]},
                {"queries": [(0, "w0001 zzabsentzz")], "min_match": 2}):
         rows, jobs = spark_jobs(
             lambda: index_search(built, k=5, **kw).collect()
         )
         assert rows == [] and jobs == [], (kw, jobs)
+
+
+def test_driver_route_results_make_no_jvm_round_trip(spark, built, corpus40,
+                                                     oracle40, tmp_path,
+                                                     monkeypatch,
+                                                     spark_jobs):
+    """A driver-route call's result stays in Python: with
+    createDataFrame refused, index_search(...).collect() still returns
+    the oracle-identical rows, with no Spark job, for a point call, a
+    100-query call, min_match=2, a tombstoned index and an all-OOV
+    query."""
+    import shutil
+
+    td = str(tmp_path / "route_tomb")
+    shutil.copytree(built.index_dir, td)
+    ids = sorted(r.doc_id for r in corpus40.collect())
+    victims = ids[::7]
+    delete_docs(spark, td, victims)
+    tix = Index(spark, td)
+    assert 0 < tix.n_deleted() <= TOMBSTONE_BROADCAST_MAX
+    live = set(ids) - set(victims)
+    qs = make_queries(100)
+    cases = [
+        (built, QS[:1], {}, {}),
+        (built, qs, {}, {}),
+        (built, qs, {"min_match": 2}, {"min_match": 2}),
+        (tix, QS, {}, {"allowed": live}),
+    ]
+    for handle in (built, tix):  # warm the vocabulary and tombstones
+        index_search(handle, QS[:1], k=8)
+    _refuse_jvm_frames(monkeypatch)
+    for handle, queries, kw, okw in cases:
+        rows, jobs = spark_jobs(
+            lambda: _rows(index_search(handle, queries, k=8, **kw))
+        )
+        assert jobs == [], (kw, jobs)
+        _assert_oracle(rows, oracle40.search_all(queries, k=8, **okw))
+    rows, jobs = spark_jobs(
+        lambda: index_search(built, [(0, "zzabsentzz")], k=8).collect()
+    )
+    assert rows == [] and jobs == [], jobs
 
 
 # --- the route rule: driver below the posting crossover, Spark above --------
