@@ -100,7 +100,6 @@ if __name__ == "__main__":
         import pandas  # noqa: F401
         import pyarrow  # noqa: F401
         import pyarrow.compute  # noqa: F401
-        import pyarrow.dataset  # noqa: F401
         import pyarrow.parquet  # noqa: F401
     except Exception:  # pragma: no cover - environment-dependent
         pass

@@ -13,39 +13,44 @@ rule demands identity: every matching posting is scored).
 Two plans serve every query shape:
 
 direct       one ``spark.range`` work item per shard feeds the kernel
-             (mapInPandas). index_search collects the per-shard top-k
+             (mapInArrow). index_search collects the per-shard top-k
              (one job, one task per shard, no exchange) and merges it in
              the driver (_merge_tops); only tops past the driver row
              budget keep the lazy topk_window exchange. A call whose
              posting volume is below the route crossover
              (_serve_in_driver) runs the same kernel in the driver
-             (_local_search), with no Spark job at all. A merged result
-             is a LocalFrame (localrel): its collect() reads the Arrow
-             top-k in Python, and the JVM frame is built only when a
-             JVM operator asks for it.
+             (_local_search), shard after shard in the calling thread,
+             with no Spark job at all. A merged result is a LocalFrame
+             (localrel): its collect() reads the Arrow top-k in Python,
+             and the JVM frame is built only when a JVM operator asks
+             for it.
 side-direct  when the kernel needs a side frame — `where=` qualifying
              ids, collapse values, or tombstones past
              TOMBSTONE_BROADCAST_MAX — only that frame is grouped by
              shard, and each group reads its shard's blocks in-task
              (_direct_side_fn). Posting blocks never cross an exchange.
 
-Every route reads a shard's blocks with one reader (_read_shard_blocks,
-a pyarrow Table) and decodes them with one function
+Every route reads a shard's blocks with one reader (_read_shard_blocks:
+pq.ParquetFile per file, row groups pruned by their term statistics, a
+pyarrow Table out) and decodes them with one function
 (codecs.decode_blocks). One kernel serves every query shape: the
-densified exact fold (_sharded_topk_fn) over _decode_tfn. No block is
-skipped, so a search reads only the posting columns (term, n_docs and
-the doc/tf/dl streams, plus positions for fields=), never the stored
-block bounds.
+densified exact fold (_sharded_topk_fn) over _decode_tfn, which emits
+its per-shard top-k as an Arrow record batch; only the side-direct
+plan's applyInPandas converts it to pandas. No block is skipped, so a
+search reads only the posting columns (term, n_docs and the doc/tf/dl
+streams, plus positions for fields=), never the stored block bounds.
 """
 
 from __future__ import annotations
 
 import os
+from bisect import bisect_left
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -244,7 +249,13 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     fold; per-group emission of the local collapsed top-k is globally
     exact (a group in the global collapsed top-k has < k groups ahead
     of it inside its best doc's shard — any group ahead there is ahead
-    globally too, its global best being >= its shard-local best)."""
+    globally too, its global best being >= its shard-local best).
+
+    Returns ``topk(blocks)``: an Arrow record batch of the shard's tops
+    (query_id int32, doc_id int64, score float64 [, value string]), or
+    None when nothing matches; with ``side``, ``topk_side(blocks,
+    side_pdf)`` returns the same rows as the pandas frame applyInPandas
+    needs."""
     if collapse and not (side and has_qual):
         raise ValueError("collapse requires the side frame "
                          "(attribute rows double as qualifying ids)")
@@ -255,29 +266,23 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             "second-best doc"
         )
 
+    schema = pa.schema([("query_id", pa.int32()), ("doc_id", pa.int64()),
+                        ("score", pa.float64())]
+                       + ([("value", pa.string())] if collapse else []))
+
     def _run(blocks: pa.Table,
              qual: np.ndarray | None,
              tomb: "tuple | None",
-             sidev: "tuple | None" = None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-                **(
-                    {"value": pd.Series(dtype="object")} if collapse else {}
-                ),
-            }
-        )
+             sidev: "tuple | None" = None) -> "pa.RecordBatch | None":
         w_of: dict[str, float] = {
             t: w for tw in q_terms.values() for t, w in tw
         }
         if not blocks.num_rows:
-            return empty
+            return None
         raw = _decode_tfn(blocks, k1, b, avgdl, tomb=tomb, qual=qual,
                           fieldw=fieldw)
         if not raw:
-            return empty
+            return None
         # group doc universe; HYBRID per-term representation: a dense
         # contribution column only for HEAVY terms (df >= universe/8 — the
         # head of the Zipf where the dense fold's O(universe) streaming
@@ -295,7 +300,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         # would only inflate the dense columns' width
         score_ids = [ids for t, (ids, _) in raw.items() if t in w_of]
         if not score_ids:
-            return empty
+            return None
         uids_g = np.unique(np.concatenate(score_ids))
         U = len(uids_g)
         heavy_at = max(1, U // 8)
@@ -466,33 +471,31 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             rows_d.append(ids_nz[keep])
             rows_s.append(sc[keep])
         if not rows_q:
-            return empty
-        out = {
-            "query_id": np.concatenate(rows_q),
-            "doc_id": np.concatenate(rows_d),
-            "score": np.concatenate(rows_s),
-        }
+            return None
+        out = [np.concatenate(rows_q), np.concatenate(rows_d),
+               np.concatenate(rows_s)]
         if collapse:
-            v_out = np.concatenate(rows_v)
             # pandas surfaces NULL attrs as NaN; emit real None so the
             # Spark string column carries NULL (one NULL collapse group,
             # matching SQL PARTITION BY)
-            out["value"] = np.array(
-                [None if (v is None or v != v) else v for v in v_out],
-                dtype=object,
-            )
-        return pd.DataFrame(out)
+            out.append([None if (v is None or v != v) else v
+                        for v in np.concatenate(rows_v)])
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(out, schema)],
+            schema=schema,
+        )
 
-    def topk(blocks: pa.Table) -> pd.DataFrame:
+    def topk(blocks: pa.Table) -> "pa.RecordBatch | None":
         return _run(blocks, None, tombstones)
 
     def topk_side(blocks: pa.Table,
                   side_pdf: pd.DataFrame) -> pd.DataFrame:
         # side form: side_pdf carries this shard's qualifying ids
         # (kind=0; with their collapse values) and/or distributed
-        # tombstones (kind=1)
+        # tombstones (kind=1); applyInPandas wants a pandas frame
         qual, tomb, attrs = _parse_side(side_pdf, has_qual, tombstones)
-        return _run(blocks, qual, tomb, attrs if collapse else None)
+        out = _run(blocks, qual, tomb, attrs if collapse else None)
+        return (out if out is not None else schema.empty_table()).to_pandas()
 
     return topk_side if side else topk
 
@@ -530,9 +533,10 @@ def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
 
 def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
                      fm: dict, tombstones: "tuple | None"):
-    """DIRECT-plan mapInPandas body: each task reads its shard's parquet
+    """DIRECT-plan mapInArrow body: each task reads its shard's parquet
     files straight from the index dir via pyarrow (layout 2's
-    shard-clustered files) and runs the per-shard kernel on them.
+    shard-clustered files), runs the per-shard kernel on them and yields
+    its Arrow record batch of tops (a shard with no match yields none).
 
     Why: a scan->kernel exchange + JVM->Python Arrow hop costs ~0.9 s
     per batch nearly INDEPENDENT of core count (measured 0.90 s at
@@ -560,59 +564,75 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
     terms = list(terms)
 
     def gen(batches):
-        for wpdf in batches:
-            for i in wpdf["id"]:
-                blocks = _read_shard_blocks(
-                    entries[int(i)], cols, terms, need_gseq
-                )
-                if blocks.num_rows:
-                    out = kernel(blocks)
-                    if len(out):
-                        yield out
+        for work in batches:
+            for i in work.column("id").to_pylist():
+                out = kernel(_read_shard_blocks(entries[i], cols, terms,
+                                                need_gseq))
+                if out is not None:
+                    yield out
 
     return gen
 
 
 def _read_shard_blocks(entry: list, cols: list[str],
                        terms: list[str], need_gseq: bool) -> pa.Table:
-    """pyarrow read of one shard's posting files ``entry`` ([(gseq,
-    path), ...], layout-2 clustered tree) with the term filter pushed
-    down to row groups (row groups are term-sorted within a bucket
-    file) — the one block reader of the executor kernels and the
-    driver route. use_threads=False: a task must stay inside its ONE
-    Spark core slot — arrow's default pool would use every host core,
-    silently oversubscribing executors (and faking low-core scaling
-    measurements). With ``need_gseq`` files read grouped by lineage seq
-    and tagged with it, so per-group tombstone masking stays exact when
-    a delete must mask only older groups. The table comes back as one
-    chunk per column (a file or row group per chunk made every kernel
-    filter several times slower)."""
-    import pyarrow.dataset as pads
-
+    """The one block reader of every route: the rows of ``terms`` in one
+    shard's posting files ``entry`` ([(gseq, path), ...], layout-2
+    clustered tree), in file order. Per file it reads only the row
+    groups whose ``term`` min/max statistics can hold a query term (row
+    groups are term-sorted within a bucket file; missing statistics
+    count as "may hold"), then keeps the query terms' rows.
+    use_threads=False: a task must stay inside its ONE Spark core slot —
+    arrow's default pool would use every host core, silently
+    oversubscribing executors (and faking low-core scaling
+    measurements). With ``need_gseq`` files are read grouped by lineage
+    seq and tagged with it, so per-group tombstone masking stays exact
+    when a delete must mask only older groups. The table comes back as
+    one chunk per column (a file or row group per chunk made every
+    kernel filter several times slower); a call that matches no row
+    returns the files' typed empty table."""
     if not entry:
         return pa.table({
             c: pa.array([], pa.null())
             for c in cols + (["gseq"] if need_gseq else [])
         })
-    filt = pads.field("term").isin(terms)
-
-    def read(paths: list[str]) -> pa.Table:
-        return pads.dataset(paths, format="parquet").to_table(
-            columns=cols, filter=filt, use_threads=False
-        )
-
-    if not need_gseq:
-        return read([p for _, p in entry]).combine_chunks()
-    by_gs: dict[int, list[str]] = {}
-    for g, p in entry:
-        by_gs.setdefault(int(g), []).append(p)
-    parts = []
-    for g, ps in sorted(by_gs.items()):
-        part = read(ps)
-        parts.append(part.append_column(
-            "gseq", pa.array(np.full(part.num_rows, g, dtype=np.int64))
+    want = sorted(terms)
+    if need_gseq:
+        entry = sorted(entry, key=lambda e: int(e[0]))
+    parts, schema = [], None
+    for g, path in entry:
+        with pq.ParquetFile(path) as f:
+            md = f.metadata
+            if schema is None:
+                schema = pa.schema([f.schema_arrow.field(c) for c in cols])
+            ti = md.schema.names.index("term")
+            keep = []
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(ti).statistics
+                if st is not None and st.has_min_max:
+                    j = bisect_left(want, st.min)
+                    if j == len(want) or want[j] > st.max:
+                        continue
+                keep.append(i)
+            if not keep:
+                continue
+            part = f.read_row_groups(keep, columns=cols, use_threads=False)
+        if need_gseq:
+            part = part.append_column(
+                "gseq", pa.array(np.full(part.num_rows, int(g), np.int64))
+            )
+        parts.append(part)
+    if need_gseq:
+        schema = schema.append(pa.field("gseq", pa.int64()))
+    if parts:
+        blocks = pa.concat_tables(parts)
+        blocks = blocks.filter(pc.is_in(
+            blocks.column("term"),
+            value_set=pa.array(want, schema.field("term").type),
         ))
-    return pa.concat_tables(parts).combine_chunks()
+        if blocks.num_rows:
+            return blocks.combine_chunks()
+    return schema.empty_table()
 
 
 def _collapse_window(shard_tops: DataFrame, k: int) -> DataFrame:
@@ -691,7 +711,7 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
         # closure and the same global merge (_merge_tops). The result
         # stays in this process: collecting it crosses no JVM boundary.
         return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k)
-    tops = ix.spark.range(len(fm), numPartitions=len(fm)).mapInPandas(
+    tops = ix.spark.range(len(fm), numPartitions=len(fm)).mapInArrow(
         _direct_topk_gen(kernel, cols, terms, fm, tomb),
         schema="query_id int, doc_id long, score double",
     )
@@ -705,7 +725,7 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
 
 def _merge_tops(spark, parts: list, k: int) -> DataFrame:
     """Global top-k merge of per-shard tops in the driver: ``parts`` are
-    pandas frames or Arrow tables of (query_id, doc_id, score); the
+    Arrow record batches or tables of (query_id, doc_id, score); the
     result keeps rank <= k per query under topk_window's exact total
     order (score DESC, doc_id ASC) and is a LocalFrame over the merged
     Arrow table: collect(), toArrow() and count() read it in this process
@@ -714,7 +734,7 @@ def _merge_tops(spark, parts: list, k: int) -> DataFrame:
     doc) pair repeats across parts."""
     def col(name, dtype):
         return np.concatenate([np.empty(0, dtype)] + [
-            np.asarray(p[name], dtype=dtype) for p in parts
+            np.asarray(p.column(name), dtype=dtype) for p in parts
         ])
 
     q = col("query_id", np.int32)
@@ -748,8 +768,8 @@ LOCAL_SEARCH_MAX_POSTINGS = int(
 # ~F + W*c/p over p parallel shard tasks, so the driver is no slower
 # while W*(1 - 1/p) <= F/c. F/c is measured, not assumed:
 # bench_results/route_crossover.json (tools/route_crossover.py, local[4],
-# 1,000-25,000 conversations x 1/20/100 queries) puts it between 256k
-# and 795k postings (238k-795k in a second run); 435k sits near the
+# 1,000-25,000 conversations x 1/20/100 queries) puts it between 238k
+# and 795k postings (256k-795k in an earlier run); 435k sits near the
 # geometric middle of both intervals.
 CROSSOVER_POSTINGS = 435_000
 
@@ -780,31 +800,18 @@ def _serve_in_driver(ix: Index, occ: dict, terms: list[str],
 def _local_search(spark, kernel, cols: list[str], terms: list[str],
                   fm: dict, tomb: "tuple | None", k: int) -> DataFrame:
     """Driver-side execution of the direct route: read each shard's block
-    files with _read_shard_blocks (threaded — the reads release the
-    GIL), run the unchanged per-shard kernel and merge the tops with
-    _merge_tops, the same merge the collected Spark plan ends in.
+    files with _read_shard_blocks, run the unchanged per-shard kernel
+    and merge the tops with _merge_tops, the same merge the collected
+    Spark plan ends in. Shards run one after another in this thread: a
+    call below the route crossover reads a few small files, so a
+    per-call thread pool cost more CPU than it saved wall time.
     Returns a LocalFrame: the call does all its work here, and collecting
     the result reads the merged Arrow table without a JVM round trip.
     Every call recomputes from the parquet artifact."""
-    from concurrent.futures import ThreadPoolExecutor
-
     need_gseq = tomb is not None and len(tomb[0]) > 0
-    shards = sorted(fm)
-
-    def read_shard(s):
-        return _read_shard_blocks(fm[s], cols, terms, need_gseq)
-
-    # reads threaded (pyarrow releases the GIL on data pages); kernels
-    # sequential — the numpy fold's short ufunc bursts thrash under a
-    # thread pool (measured: pooled read+kernel 0.50 s vs 0.28 s split)
-    if len(shards) > 1:
-        with ThreadPoolExecutor(max_workers=min(8, len(shards))) as pool:
-            tables = list(pool.map(read_shard, shards))
-    else:
-        tables = [read_shard(shards[0])]
-    return _merge_tops(
-        spark, [kernel(t) for t in tables if t.num_rows], k
-    )
+    tops = [kernel(_read_shard_blocks(fm[s], cols, terms, need_gseq))
+            for s in sorted(fm)]
+    return _merge_tops(spark, [t for t in tops if t is not None], k)
 
 
 PHRASE_MATCH_SCHEMA = "query_id int, doc_id long, ptf int, dl int"
@@ -840,17 +847,9 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
 
     Tombstones mask per (id, group-seq) at decode, exactly like the
     scoring kernels."""
-    def topk(blocks: pa.Table) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "ptf": pd.Series(dtype="int32"),
-                "dl": pd.Series(dtype="int32"),
-            }
-        )
+    def topk(blocks: pa.Table) -> "pa.RecordBatch | None":
         if not blocks.num_rows:
-            return empty
+            return None
         # per-term doc order: blocks of one (term, shard) partition the
         # sorted posting list, so ordering by first_doc restores it
         blocks = _sorted_blocks(blocks, ("term", "first_doc"))
@@ -946,14 +945,11 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
             rows_p.append(ptf[nz].astype(np.int32))
             rows_l.append(dl_of[nz].astype(np.int32))
         if not rows_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(rows_q),
-                "doc_id": np.concatenate(rows_d),
-                "ptf": np.concatenate(rows_p),
-                "dl": np.concatenate(rows_l),
-            }
+            return None
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(c)) for c in
+             (rows_q, rows_d, rows_p, rows_l)],
+            ["query_id", "doc_id", "ptf", "dl"],
         )
 
     return topk
@@ -1039,7 +1035,7 @@ def index_phrase_search(
             "docs_vbyte", "tfs_vbyte", "dls_vbyte", "pos_vbyte"]
     # range-scan work items (see _direct_topk_gen: pure-JVM input, file
     # lists in the closure — no PythonRDD scan)
-    matched = spark.range(len(fm), numPartitions=len(fm)).mapInPandas(
+    matched = spark.range(len(fm), numPartitions=len(fm)).mapInArrow(
         _direct_topk_gen(
             _phrase_match_fn(q_phrases, tombstones=tomb, slop=slop),
             cols, terms, fm, tomb,

@@ -121,7 +121,7 @@ def test_direct_plan_single_exchange(built, monkeypatch, spark_jobs):
     monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_POSTINGS", 0)
     plan = _plan(index_search(built, QS[:3], k=5))
     assert plan.count("Exchange") == 1, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
 
 
@@ -171,7 +171,7 @@ def test_direct_blockmax_bit_exact_and_single_exchange(built, oracle40,
     monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_POSTINGS", 0)
     plan = _plan(index_search(built, QS[:3], k=5, strategy="blockmax"))
     assert plan.count("Exchange") == 1, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_direct_blockmax_tuned_bit_exact(built):

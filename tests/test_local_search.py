@@ -2,6 +2,8 @@
 route crossover must be BIT-IDENTICAL to the distributed routes on every
 shape it accepts, and must fall back cleanly when gated off."""
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,3 +116,39 @@ def test_values_relation_schema(spark, built):
     assert [f.dataType.simpleString() for f in df.schema.fields] == [
         "int", "int", "bigint", "double"
     ]
+
+
+def test_driver_route_builds_no_pandas_frame_and_no_thread(spark, built,
+                                                           monkeypatch):
+    """The driver route reads, scores and merges in Arrow and numpy in the
+    calling thread: no pandas frame is built and no thread is started
+    (the Spark route stays row-identical through the _ab tests)."""
+    ix_dir, _ = built
+    ix = Index(spark, ix_dir)
+    qs = make_queries(40)[:5]
+    want = _rows(iq.index_search(ix, qs, k=10))  # warms the handle caches
+    served = []
+    real_local = iq._local_search
+    monkeypatch.setattr(iq, "_local_search",
+                        lambda *a: served.append(1) or real_local(*a))
+    caller = threading.current_thread()
+    started = []
+    real_start = threading.Thread.start
+
+    def start(self):
+        if threading.current_thread() is caller:
+            started.append(self.name)
+        return real_start(self)
+
+    def refuse(*a, **kw):
+        raise AssertionError("pandas DataFrame built on the driver route")
+
+    before = threading.active_count()
+    with monkeypatch.context() as m:
+        m.setattr(threading.Thread, "start", start)
+        m.setattr(iq.pd, "DataFrame", refuse)
+        got = _rows(iq.index_search(ix, qs, k=10))
+    assert threading.active_count() == before
+    assert started == []
+    assert served == [1]
+    assert got == want

@@ -185,6 +185,7 @@ def test_cotomb_plan_side_direct(built, spark, tmp_path, monkeypatch):
         assert plan.count("FlatMapGroupsInPandas") == 1, plan
         assert plan.count("FlatMapCoGroupsInPandas") == 0, plan
         assert "MapInPandas" not in plan, plan
+        assert "MapInArrow" not in plan, plan
         assert df.count() > 0
 
 

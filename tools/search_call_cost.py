@@ -2,8 +2,7 @@
 
 Builds the benchmark's clean ``search`` index (1,000 fixture
 conversations, ~11k turns, ``perfbench`` ``build_params(4)`` on
-``local[4]``) and times three call shapes, 10 measured calls each after
-warm-up calls:
+``local[4]``) and times three call shapes, 10 measured calls each:
 
 - ``point``: one query;
 - ``blockmax``: 20 queries, ``strategy="blockmax"``;
@@ -24,6 +23,12 @@ GC, netty, ...). Threads and workers that exit during a call drop their
 CPU from the figures. It also counts the Spark jobs and the tasks they
 ran (a skipped stage runs none) per call. One JSON line per call, then
 one summary line of medians per shape.
+
+Before the first measured call it runs warm-up calls of every shape and
+then waits until the JVM's JIT compiler threads have been idle for
+``SETTLE_QUIET_S`` (at most ``SETTLE_MAX_S``): compilation left over
+from the index build would otherwise be charged to the first shape
+measured.
 
 ``--num-shards`` and ``--num-term-buckets`` change the index shape
 (default: ``build_params(4)``, 4 shards x 8 term buckets); more of
@@ -56,6 +61,9 @@ CONVS = 1000
 N_QUERIES = 100
 BLOCKMAX_SIZE = 20
 WARMUP = 3
+SETTLE_POLL_S = 0.25
+SETTLE_QUIET_S = 1.0
+SETTLE_MAX_S = 30.0
 
 
 def _thread_group(comm: str) -> str:
@@ -100,6 +108,26 @@ def _delta(before: dict, after: dict) -> dict[str, float]:
 
 def _snapshot(jvm_pid: int):
     return _tree(), _jvm_threads(jvm_pid)
+
+
+def _jit_cpu_s(jvm_pid: int) -> float:
+    return sum(cpu for group, cpu in _jvm_threads(jvm_pid).values()
+               if group == "jit")
+
+
+def _settle(jvm_pid: int) -> float:
+    """Wait until the JIT compiler threads' CPU stops rising for
+    SETTLE_QUIET_S (or SETTLE_MAX_S passes); returns the seconds waited."""
+    t0 = last_change = time.monotonic()
+    last = _jit_cpu_s(jvm_pid)
+    while time.monotonic() - t0 < SETTLE_MAX_S:
+        time.sleep(SETTLE_POLL_S)
+        now, cpu = time.monotonic(), _jit_cpu_s(jvm_pid)
+        if cpu != last:
+            last, last_change = cpu, now
+        elif now - last_change >= SETTLE_QUIET_S:
+            break
+    return time.monotonic() - t0
 
 
 def main() -> int:
@@ -148,20 +176,23 @@ def main() -> int:
     summary = {"cores": CORES, "convs": CONVS, "seed": args.seed,
                "calls": args.calls, "num_shards": params.num_shards,
                "num_term_buckets": params.num_term_buckets}
-    for name, query_sets, kw in shapes:
-        def call(i):
-            return index_search(ix, query_sets[i % len(query_sets)], k=K,
-                                **kw).collect()
 
+    def call(query_sets, kw, i):
+        return index_search(ix, query_sets[i % len(query_sets)], k=K,
+                            **kw).collect()
+
+    for _name, query_sets, kw in shapes:
         for i in range(WARMUP):
-            call(i)
+            call(query_sets, kw, i)
+    summary["settle_s"] = round(_settle(jvm_pid), 2)
+    for name, query_sets, kw in shapes:
         lines = []
         for i in range(args.calls):
             group = f"search_call_cost_{name}_{i}"
             sc.setJobGroup(group, group)
             procs0, threads0 = _snapshot(jvm_pid)
             t0 = time.perf_counter()
-            rows = call(WARMUP + i)
+            rows = call(query_sets, kw, WARMUP + i)
             wall = time.perf_counter() - t0
             procs1, threads1 = _snapshot(jvm_pid)
             sc._jsc.clearJobGroup()
