@@ -15,8 +15,9 @@ happens inside the kernel, so a group emits at most |distinct values|
 rows per query regardless of how many docs matched. The blocks never
 shuffle; output is partial-aggregate-sized, no broadcast, no collect.
 Composes with where=/where_expr (the side is pre-filtered, docs without
-a side row can't be counted) and with per-group tombstones (dead copies
-are masked at decode, exactly like the scoring kernels)."""
+a side row can't be counted) and with per-group tombstones: the kernel
+gets the index's tombstone pair in its closure and masks dead copies at
+decode, exactly like the scoring kernels."""
 
 from __future__ import annotations
 
@@ -35,10 +36,10 @@ FACET_SCHEMA = "query_id int, value string, n_docs long"
 def _matched_rows(q_tokens: dict[int, list[str]], blocks, side_pdf,
                   tombstones: "tuple | None"):
     """The match machinery shared by the facet/stats kernels: the
-    side's kind=0 values (sorted by doc id) and [(query_id, indices
-    into them)] — per query, the side rows of the live docs matching
-    >= 1 of its present terms (ids only; the tf streams never decode).
-    Queries matching no side row are absent."""
+    side's values (sorted by doc id) and [(query_id, indices into
+    them)] — per query, the side rows of the live docs matching >= 1 of
+    its present terms (ids only; the tf streams never decode). Queries
+    matching no side row are absent."""
     from .codecs import decode_blocks
     from .index_query import (
         _gseq_col,
@@ -49,13 +50,11 @@ def _matched_rows(q_tokens: dict[int, list[str]], blocks, side_pdf,
 
     if not blocks.num_rows or side_pdf.empty:
         return None, []
-    _qual, tomb, (sids, vals) = _parse_side(side_pdf, False, tombstones)
-    if not len(sids):
-        return vals, []
+    sids, vals = _parse_side(side_pdf)
     blocks = _sorted_blocks(blocks)
     post = decode_blocks(
         blocks.column("n_docs"), blocks.column("docs_vbyte"),
-        gseq=_gseq_col(blocks), tomb=tomb,
+        gseq=_gseq_col(blocks), tomb=tombstones,
     )
     ids_of = {
         t: post.ids[lo:hi] for t, lo, hi in _term_slices(blocks, post.row_off)
@@ -79,11 +78,10 @@ def _facet_count_fn(q_tokens: dict[int, list[str]],
     """Per-shard facet kernel over (blocks, side) frames.
 
     Blocks: posting blocks (term, n_docs, docs_vbyte[, gseq]) of one
-    doc-range shard, a pyarrow Table. Side: this shard's rows — kind=0
-    attribute rows (doc_id, value) for docs eligible to be counted
-    (live + passing any where= filter), kind=1 distributed tombstones
-    (doc_id, seq) overriding the closure pair past
-    TOMBSTONE_BROADCAST_MAX.
+    doc-range shard, a pyarrow Table. Side: this shard's attribute rows
+    (doc_id, value) for docs eligible to be counted (live + passing any
+    where= filter). ``tombstones`` is the index's (ids, seqs) pair; the
+    decode drops dead copies with it.
 
     Per query: matched ids = union of its present terms' (live) posting
     ids; counts = value_counts over the side values of the matched ids
@@ -128,8 +126,8 @@ def _facet_count_fn(q_tokens: dict[int, list[str]],
 def _stats_agg_fn(q_tokens: dict[int, list[str]],
                   tombstones: "tuple | None" = None):
     """Per-shard STATS kernel (ES stats-aggregation analog):
-    same match computation as the facet kernel, but the side's kind=0
-    rows carry a NUMERIC value and the emission is one partial
+    same match computation as the facet kernel, but the side rows
+    carry a NUMERIC value and the emission is one partial
     (n, sum, min, max) row per query — final folds happen plan-side.
     Docs without a side row (NULL attr, filtered out) are not counted,
     matching the SQL oracle's inner join. float64 partial sums are
@@ -175,8 +173,8 @@ def _matched_agg_plan(
 ):
     """Shared plan assembly for the match-set aggregations (facets /
     histogram / stats / cardinality / count): tokenize + merge dup query
-    ids, build the attribute side (doc_id, shard_id, value, kind, seq)
-    from live filtered doc_stats with ``value_col`` as the value
+    ids, build the attribute side (doc_id, shard_id, value) from live
+    filtered doc_stats with ``value_col`` as the value
     expression, run the kernel on index_query's side-direct plan (the
     side grouped by shard, blocks pyarrow-read in-task), and return
     (partials DataFrame | None, empty DataFrame). Exact: every countable
@@ -184,11 +182,8 @@ def _matched_agg_plan(
     count. ``drop_null_value`` excludes NULL attribute values from the
     side (ES histogram/stats ignore docs missing the field; facets keep
     a NULL bucket)."""
-    # late imports: TOMBSTONE_BROADCAST_MAX must be read at call time
-    # (tests lower it to force the distributed path), and the where=
-    # contract is the one filtered search uses — shared helper
+    # late import: the where= contract is the one filtered search uses
     from .index_query import _direct_side_fn, filtered_live_stats
-    from .jobs import TOMBSTONE_BROADCAST_MAX
     from .xxhash64 import spark_pmod_bucket
 
     spark = ix.spark
@@ -211,31 +206,16 @@ def _matched_agg_plan(
     if drop_null_value:
         side_src = side_src.filter(value_col.isNotNull())
 
-    n_del = ix.n_deleted()
-    use_cotomb = n_del > TOMBSTONE_BROADCAST_MAX
-    tomb = ix.tombstones_pair() if (n_del and not use_cotomb) else None
-    val_type = side_src.select(value_col.alias("value")).schema[0].dataType
+    tomb = ix.tombstones_pair() if ix.n_deleted() else None
     side = side_src.select(
         "doc_id",
         F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
         value_col.alias("value"),
-        F.lit(0).alias("kind"),
-        F.lit(0).cast("long").alias("seq"),
     )
-    if use_cotomb:
-        side = side.unionByName(
-            ix.tombstones_df().select(
-                "doc_id",
-                F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
-                F.lit(None).cast(val_type).alias("value"),
-                F.lit(1).alias("kind"),
-                F.col("del_seq").alias("seq"),
-            )
-        )
     partials = side.groupBy("shard_id").applyInPandas(
         _direct_side_fn(
             kern_factory(q_tokens, tomb), ["term", "n_docs", "docs_vbyte"],
-            terms, fm, need_gseq=n_del > 0,
+            terms, fm, need_gseq=tomb is not None,
         ),
         schema=out_schema,
     )

@@ -25,10 +25,15 @@ direct       one ``spark.range`` work item per shard feeds the kernel
              and the JVM frame is built only when a JVM operator asks
              for it.
 side-direct  when the kernel needs a side frame — `where=` qualifying
-             ids, collapse values, or tombstones past
-             TOMBSTONE_BROADCAST_MAX — only that frame is grouped by
+             ids or collapse values — only that frame is grouped by
              shard, and each group reads its shard's blocks in-task
              (_direct_side_fn). Posting blocks never cross an exchange.
+
+Deletes take no plan of their own: every kernel (search, phrase and the
+aggregations) gets the index's tombstone pair (Index.tombstones_pair,
+read once per handle with pyarrow) in its closure and masks dead
+postings at decode, so a tombstoned search with no filter runs the
+direct plan like any other.
 
 Every route reads a shard's blocks with one reader (_read_shard_blocks:
 pq.ParquetFile per file, row groups pruned by their term statistics, a
@@ -169,7 +174,6 @@ def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
 def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                      k1: float, b: float, avgdl: float, k: int,
                      side: bool = False,
-                     has_qual: bool = False,
                      tombstones: "tuple | None" = None,
                      and_need: dict[int, int] | None = None,
                      exclude: dict[int, list[str]] | None = None,
@@ -195,16 +199,13 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     one top-k extraction. Memory: one column per distinct matched term over
     <= group-doc-count doubles — bounded by the doc-range grouping.
 
-    Masking inputs (all optional, composable):
-    - ``tombstones`` — closure-shipped (sorted ids, per-id max del_seq)
-      pair for SMALL delete sets; per-group deadness via codecs.dead_mask
-      with the block's ``gseq`` column.
+    Masking inputs (both optional, composable):
+    - ``tombstones`` — the index's (sorted ids, per-id max del_seq)
+      pair, shipped in the closure; per-group deadness via
+      codecs.dead_mask with the block's ``gseq`` column.
     - ``side`` — the kernel takes ``(blocks, side)`` frames, the side
-      being this shard's rows of (doc_id, kind, seq): kind=0 rows are
-      `where=` qualifying ids (active when ``has_qual``), kind=1 rows are
-      DISTRIBUTED tombstones (the no-driver-array path for large delete
-      sets; they override the closure pair, index_search routes one
-      source at a time), kind=2 rows are shard anchors (_parse_side).
+      being this shard's `where=` qualifying ids (doc_id[, value]);
+      postings of other docs are dropped (_parse_side).
 
     ``and_need`` activates COVERAGE semantics for the listed queries:
     {query_id: required distinct matched-term count}. Because a doc's
@@ -238,9 +239,9 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     cursor comes from this engine's own bit-exact scores).
 
     ``collapse`` activates FIELD COLLAPSING (OpenSearch `collapse`):
-    the side's kind=0 rows carry a ``value`` column (the stored
-    attribute of every eligible doc — they double as the qualifying
-    set, so ``collapse`` implies ``side`` + ``has_qual``); after each
+    the side rows carry a ``value`` column (the stored attribute of
+    every eligible doc — they double as the qualifying set, so
+    ``collapse`` implies ``side``); after each
     query's fold, candidates sort by the total order (score DESC,
     doc_id ASC) and only the FIRST doc per
     distinct value survives (NULL is one group), up to k — each group
@@ -256,7 +257,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     None when nothing matches; with ``side``, ``topk_side(blocks,
     side_pdf)`` returns the same rows as the pandas frame applyInPandas
     needs."""
-    if collapse and not (side and has_qual):
+    if collapse and not side:
         raise ValueError("collapse requires the side frame "
                          "(attribute rows double as qualifying ids)")
     if collapse and after:
@@ -272,14 +273,13 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
 
     def _run(blocks: pa.Table,
              qual: np.ndarray | None,
-             tomb: "tuple | None",
-             sidev: "tuple | None" = None) -> "pa.RecordBatch | None":
+             vals: np.ndarray | None = None) -> "pa.RecordBatch | None":
         w_of: dict[str, float] = {
             t: w for tw in q_terms.values() for t, w in tw
         }
         if not blocks.num_rows:
             return None
-        raw = _decode_tfn(blocks, k1, b, avgdl, tomb=tomb, qual=qual,
+        raw = _decode_tfn(blocks, k1, b, avgdl, tomb=tombstones, qual=qual,
                           fieldw=fieldw)
         if not raw:
             return None
@@ -446,8 +446,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                 # distinct side value (candidates ⊆ qual ⊆ side ids, so
                 # every candidate has a value; NULL/NaN is one group via
                 # use_na_sentinel=False), first k groups in rank order
-                sids_s, svals_s = sidev
-                gv = svals_s[np.searchsorted(sids_s, ids_nz)]
+                gv = vals[np.searchsorted(qual, ids_nz)]
                 order = np.lexsort((ids_nz, -sc))
                 codes, _u = pd.factorize(
                     pd.Series(gv[order], dtype="object"),
@@ -486,49 +485,27 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         )
 
     def topk(blocks: pa.Table) -> "pa.RecordBatch | None":
-        return _run(blocks, None, tombstones)
+        return _run(blocks, None)
 
     def topk_side(blocks: pa.Table,
                   side_pdf: pd.DataFrame) -> pd.DataFrame:
-        # side form: side_pdf carries this shard's qualifying ids
-        # (kind=0; with their collapse values) and/or distributed
-        # tombstones (kind=1); applyInPandas wants a pandas frame
-        qual, tomb, attrs = _parse_side(side_pdf, has_qual, tombstones)
-        out = _run(blocks, qual, tomb, attrs if collapse else None)
+        # side form: side_pdf carries this shard's qualifying ids (with
+        # their collapse values); applyInPandas wants a pandas frame
+        qual, vals = _parse_side(side_pdf)
+        out = _run(blocks, qual, vals)
         return (out if out is not None else schema.empty_table()).to_pandas()
 
     return topk_side if side else topk
 
 
-def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
-                closure_tomb: "tuple | None"):
-    """Split a shard's side frame (the kernel's kind-tagged side
-    contract) into (sorted qualifying ids | None,
-    tombstone (ids, seqs) pair — distributed rows override the
-    closure-shipped pair when present,
-    kind=0 (ids, values) sorted by id | None when the side carries no
-    ``value`` column). kind=2 anchor rows only make their shard a group
-    of the side-direct plan and are ignored here."""
-    if len(side_pdf):
-        kind = side_pdf["kind"].to_numpy()
-        ids_side = side_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-    else:
-        kind = np.empty(0, dtype=np.int64)
-        ids_side = np.empty(0, dtype=np.int64)
-    a = kind == 0
-    qual = np.sort(ids_side[a]) if has_qual else None
-    attrs = None
-    if "value" in side_pdf.columns:
-        o = np.argsort(ids_side[a], kind="stable")
-        attrs = (ids_side[a][o], side_pdf["value"].to_numpy()[a][o])
-    tomb = closure_tomb
-    tm = kind == 1
-    if tm.any():
-        t_ids = ids_side[tm]
-        t_seqs = side_pdf["seq"].to_numpy(dtype=np.int64)[tm]
-        o = np.argsort(t_ids)
-        tomb = (t_ids[o], t_seqs[o])
-    return qual, tomb, attrs
+def _parse_side(side_pdf: pd.DataFrame):
+    """A shard's side frame as (its doc ids sorted, their ``value``
+    column in the same order | None when the side carries none)."""
+    ids = side_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
+    o = np.argsort(ids, kind="stable")
+    vals = (side_pdf["value"].to_numpy()[o]
+            if "value" in side_pdf.columns else None)
+    return ids[o], vals
 
 
 def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
@@ -590,7 +567,8 @@ def _read_shard_blocks(entry: list, cols: list[str],
     when a delete must mask only older groups. The table comes back as
     one chunk per column (a file or row group per chunk made every
     kernel filter several times slower); a call that matches no row
-    returns the files' typed empty table."""
+    returns the files' typed empty table. Index.term_stats_lookup reads
+    the term_stats rows of uncached terms with it too."""
     if not entry:
         return pa.table({
             c: pa.array([], pa.null())
@@ -662,21 +640,20 @@ def _collapse_window(shard_tops: DataFrame, k: int) -> DataFrame:
 def _direct_side_fn(kernel_side, cols: list[str], terms: list[str],
                     file_map: dict, need_gseq: bool):
     """SIDE-DIRECT plan body (r06): applyInPandas over the SIDE frame
-    alone — qualifying ids / facet attribute rows / distributed
-    tombstones / shard anchors, grouped by shard — with each group's
-    posting blocks pyarrow-read IN-TASK from the shard-clustered layout.
-    The blocks never cross an exchange; only the small side does. This
-    is how `where=` filtered search, collapse, distributed tombstones
+    alone — qualifying ids or facet attribute rows, grouped by shard —
+    with each group's posting blocks pyarrow-read IN-TASK from the
+    shard-clustered layout. The blocks never cross an exchange; only
+    the small side does. This is how `where=` filtered search, collapse
     and the match-set aggregations consume the direct layout; the
-    kernel takes ``(blocks, side)`` frames.
+    kernel takes ``(blocks, side)`` frames and masks tombstones with
+    the pair in its own closure (``need_gseq`` tags the blocks for it).
 
     Validity: every group key is a WHOLE shard (the side is keyed by
-    shard_shift), and a shard absent from the side is skipped. That is
-    exact when the side lists every qualifying / countable doc; a side
-    of tombstones alone carries one kind=2 anchor row per shard instead
-    (index_search). ``file_map`` is the tiny driver-side {shard_id:
-    [(gseq, path), ...]} listing (n_shards entries of strings —
-    closure-shipped like the query terms)."""
+    shard_shift), and a shard absent from the side is skipped, which
+    is exact because the side lists every qualifying / countable doc.
+    ``file_map`` is the tiny driver-side {shard_id: [(gseq, path),
+    ...]} listing (n_shards entries of strings — closure-shipped like
+    the query terms)."""
 
     def fn(key: tuple, side_pdf: pd.DataFrame) -> pd.DataFrame:
         blocks = _read_shard_blocks(
@@ -989,7 +966,6 @@ def index_phrase_search(
     Returns (query_id, rank, doc_id, score); queries whose phrase matches
     nothing (or with an absent term) yield no rows."""
     from .bm25 import idf as idf_py
-    from .jobs import TOMBSTONE_BROADCAST_MAX
     from .query import tf_norm_col
     from .xxhash64 import spark_pmod_bucket
 
@@ -1007,13 +983,7 @@ def index_phrase_search(
         raise ValueError(f"b must be in [0, 1], got {eff_b}")
     if not isinstance(slop, int) or slop < 0:
         raise ValueError(f"slop must be an int >= 0, got {slop!r}")
-    n_del = ix.n_deleted()
-    if n_del > TOMBSTONE_BROADCAST_MAX:
-        raise ValueError(
-            f"{n_del} tombstoned docs exceed the closure-mask threshold; "
-            "compact_index before phrase search"
-        )
-    tomb = ix.tombstones_pair() if n_del else None
+    tomb = ix.tombstones_pair() if ix.n_deleted() else None
     q_phrases: dict[int, list[str]] = {}
     for qid, text in phrases:
         toks = tokenize_py(text)
@@ -1259,8 +1229,9 @@ def index_search(
     one ``spark.range`` work item per shard, or the driver process when
     the call's posting volume (Σdf per query occurrence) is below the
     measured route crossover (_serve_in_driver, CROSSOVER_POSTINGS);
-    `where=`/`where_expr`/`collapse`, and tombstones past
-    TOMBSTONE_BROADCAST_MAX, take the side-direct plan. An index whose
+    `where=`/`where_expr`/`collapse` take the side-direct plan.
+    Tombstones change no plan: the kernel masks dead postings with the
+    index's tombstone pair, shipped in its closure. An index whose
     posting layout predates 2 is refused (Index.shard_file_map);
     ``compact_index`` upgrades it.
 
@@ -1369,19 +1340,13 @@ def index_search(
     occurrence map — the prefix-search entry point resolves wildcard
     tokens against the vocabulary and delegates everything else here.
     """
-    from .jobs import TOMBSTONE_BROADCAST_MAX
     from .xxhash64 import spark_pmod_bucket
 
     if strategy not in ("sharded", "blockmax"):
         raise ValueError(
             f"strategy must be 'sharded' or 'blockmax', got {strategy!r}"
         )
-    n_del = ix.n_deleted()
-    # small delete sets ship into kernels as closure (ids, del_seq) arrays;
-    # large ones ride the side frame as kind=1 rows grouped by shard
-    # exactly like `where=` qualifying ids — no driver array, no size cap
-    use_cotomb = n_del > TOMBSTONE_BROADCAST_MAX
-    tomb = ix.tombstones_pair() if (n_del and not use_cotomb) else None
+    tomb = ix.tombstones_pair() if ix.n_deleted() else None
     eff_k1 = ix.k1 if k1 is None else float(k1)
     eff_b = ix.b if b is None else float(b)
     # range-validate the shape parameters: b > 1 makes the tf_norm
@@ -1556,15 +1521,13 @@ def index_search(
     if fw is not None:
         cols.append("pos_vbyte")
     # collapse values ride the side frame exactly like qualifying ids
-    has_qual = bool(where) or where_expr is not None or collapse is not None
-    needs_side = has_qual or use_cotomb
+    side = bool(where) or where_expr is not None or collapse is not None
     kern = _sharded_topk_fn(
-        occ, eff_k1, eff_b, eff_avgdl, k, side=needs_side,
-        has_qual=has_qual, tombstones=tomb, and_need=and_need,
-        exclude=excl_map, fieldw=fw,
+        occ, eff_k1, eff_b, eff_avgdl, k, side=side, tombstones=tomb,
+        and_need=and_need, exclude=excl_map, fieldw=fw,
         after=search_after, collapse=collapse is not None,
     )
-    if not needs_side:
+    if not side:
         return _direct_search(ix, kern, cols, terms, fm, tomb, occ, k)
     # SIDE-DIRECT: only the side frame is grouped by shard; each group
     # pyarrow-reads its shard's blocks in-task (_direct_side_fn)
@@ -1572,40 +1535,13 @@ def index_search(
         [F.col(collapse).cast("string").alias("value")]
         if collapse is not None else []
     )
-    sides = []
-    if has_qual:
-        sides.append(filtered_live_stats(ix, where, where_expr).select(
-            "doc_id",
-            F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
-            F.lit(0).alias("kind"),
-            F.lit(0).cast("long").alias("seq"),
-            *val_cols,
-        ))
-    if use_cotomb:
-        sides.append(ix.tombstones_df().select(
-            "doc_id",
-            F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
-            F.lit(1).alias("kind"),
-            F.col("del_seq").alias("seq"),
-            *(
-                [F.lit(None).cast("string").alias("value")]
-                if collapse is not None else []
-            ),
-        ))
-        if not has_qual:
-            # the side-direct plan skips every shard absent from the side,
-            # which is exact only when the side lists the qualifying docs;
-            # a tombstone-only side would drop tombstone-free shards, so
-            # it carries one kind=2 anchor row per shard the query reads
-            sides.append(local_df(
-                spark, [(0, s, 2, 0) for s in sorted(fm)],
-                "doc_id long, shard_id long, kind int, seq long",
-            ))
-    side = sides[0]
-    for extra in sides[1:]:
-        side = side.unionByName(extra)
-    shard_tops = side.groupBy("shard_id").applyInPandas(
-        _direct_side_fn(kern, cols, terms, fm, need_gseq=bool(n_del)),
+    side_df = filtered_live_stats(ix, where, where_expr).select(
+        "doc_id",
+        F.shiftright("doc_id", ix.shard_shift).alias("shard_id"),
+        *val_cols,
+    )
+    shard_tops = side_df.groupBy("shard_id").applyInPandas(
+        _direct_side_fn(kern, cols, terms, fm, need_gseq=tomb is not None),
         schema=(
             "query_id int, doc_id long, score double"
             + (", value string" if collapse is not None else "")

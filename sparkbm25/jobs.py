@@ -27,17 +27,21 @@ external catalog commit (Iceberg) through the same protocol.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import shutil
 import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import CasConflict, get_catalog
-from .localrel import local_df
+from .localrel import LocalFrame, local_df
 
 from .build import (
     BuildParams,
@@ -259,36 +263,56 @@ def artifact_lock(index_dir: str, tag: str):
 
 
 TOMBSTONES_DIR = "tombstones"
-# driver-side tombstone threshold for SEARCH masking: small delete sets
-# ride into kernels as sorted (id, del_seq) closure arrays (16 B/id via
-# Arrow — the p50-friendly path); past the threshold search switches to
-# the fully distributed side-direct path (tombstones grouped by the
-# doc-range shard key, exactly like `where=` qualifying ids) — no driver
-# array, no cap, no refusal.
-TOMBSTONE_BROADCAST_MAX = int(
-    os.environ.get("SPARKBM25_TOMBSTONE_BROADCAST_MAX", "1000000")
-)
 # legacy (pre-0.6) tombstone rows carry no del_seq: they mask the id in
 # EVERY group, old behavior preserved (the undelete flow they relied on is
 # superseded by per-group seqs)
 LEGACY_DEL_SEQ = 1 << 62
 
-TOMBSTONE_SCHEMA = "doc_id long, del_seq long"
+TOMBSTONE_SCHEMA = pa.schema([("doc_id", pa.int64()), ("del_seq", pa.int64())])
 
 
-def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame:
-    """(doc_id, del_seq) rows — del_seq is the per-id MAX delete sequence
-    (one row per id). Legacy files without the column read as null and
-    coalesce to LEGACY_DEL_SEQ (mask everywhere)."""
-    tdir = os.path.join(index_dir, TOMBSTONES_DIR)
-    return (
-        spark.read.schema(TOMBSTONE_SCHEMA).parquet(tdir)
-        .withColumn(
-            "del_seq", F.coalesce("del_seq", F.lit(LEGACY_DEL_SEQ))
-        )
-        .groupBy("doc_id")
-        .agg(F.max("del_seq").alias("del_seq"))
-    )
+def _parquet_files(path: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+def _read_parquet(path: str, columns: list[str] | None = None) -> pa.Table:
+    """One parquet file read in the calling thread — no pyarrow.dataset
+    and no Arrow thread pool, the style of index_query's block reader."""
+    with pq.ParquetFile(path) as f:
+        return f.read(columns=columns, use_threads=False)
+
+
+def tombstone_pair(index_dir: str) -> tuple[np.ndarray, np.ndarray]:
+    """The one tombstone reader: (ids, seqs), the sorted int64 ids of
+    ``tombstones/`` with each id's MAX delete seq, read in the driver
+    with pyarrow under TOMBSTONE_SCHEMA. Legacy files without the
+    del_seq column coalesce to LEGACY_DEL_SEQ (mask everywhere). Every
+    search, phrase and aggregation kernel gets this pair in its closure,
+    and compact_index purges with it (16 B per id)."""
+    ids, seqs = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for path in _parquet_files(os.path.join(index_dir, TOMBSTONES_DIR)):
+        t = _read_parquet(path)
+        if "del_seq" not in t.column_names:  # legacy (pre-0.6) file
+            t = t.append_column("del_seq", pa.nulls(t.num_rows, pa.int64()))
+        # delete_docs writes del_seq as a Spark int literal (int32)
+        t = t.select(TOMBSTONE_SCHEMA.names).cast(TOMBSTONE_SCHEMA)
+        ids.append(t.column("doc_id").to_numpy())
+        seqs.append(t.column("del_seq").fill_null(LEGACY_DEL_SEQ).to_numpy())
+    ids, seqs = np.concatenate(ids), np.concatenate(seqs)
+    order = np.lexsort((seqs, ids))
+    ids, seqs = ids[order], seqs[order]
+    last = np.ones(len(ids), dtype=bool)  # an id's max seq sorts last
+    last[:-1] = ids[1:] != ids[:-1]
+    return ids[last], seqs[last]
+
+
+def read_tombstones(spark: SparkSession, index_dir: str,
+                    pair: tuple | None = None) -> DataFrame:
+    """(doc_id, del_seq) rows, one per id — a LocalFrame over
+    tombstone_pair (or the given ``pair``) for the JVM joins that need
+    it (live_doc_stats_df)."""
+    ids, seqs = tombstone_pair(index_dir) if pair is None else pair
+    return LocalFrame(spark, pa.table({"doc_id": ids, "del_seq": seqs}))
 
 
 def group_seq_expr(m: dict) -> F.Column:
@@ -308,12 +332,14 @@ def group_seq_expr(m: dict) -> F.Column:
 
 
 def live_doc_stats_df(
-    spark: SparkSession, index_dir: str, m: dict, ds: DataFrame | None = None
+    spark: SparkSession, index_dir: str, m: dict, ds: DataFrame | None = None,
+    pair: tuple | None = None,
 ) -> DataFrame:
     """doc_stats restricted to LIVE rows under per-group tombstones: row
     (doc_id, group) is dead iff a tombstone (doc_id, s) has s >= seq(group).
     A re-ingested doc keeps exactly its newest copy. Plain equi-join on
-    doc_id — distributed, no driver materialization."""
+    doc_id against the tombstone LocalFrame (``pair``, when the caller
+    already holds it, else read here)."""
     if ds is None:
         ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
     n_del = int((m.get("metrics") or {}).get("n_deleted", 0))
@@ -321,7 +347,7 @@ def live_doc_stats_df(
         os.path.join(index_dir, TOMBSTONES_DIR)
     ):
         return ds
-    tomb = read_tombstones(spark, index_dir)
+    tomb = read_tombstones(spark, index_dir, pair)
     return (
         ds.join(tomb, "doc_id", "left")
         .filter(
@@ -343,6 +369,11 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> dict:
     immediately, while its old postings stay masked until the purge.
     Deleting an absent id is a no-op by masking. ``doc_ids``: an int
     iterable or a DataFrame with doc_id.
+
+    Memory: searches mask with the (id, del_seq) pair in the driver, 16 B
+    per tombstoned id until compact_index purges them (compaction needs
+    the same pair); PySpark broadcasts a task closure over 1 MiB instead
+    of sending it with each task.
 
     Returns the updated manifest (metrics.n_deleted = distinct tombstoned
     ids on disk; superseded ids stay counted until compaction clears them)."""
@@ -371,8 +402,8 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> dict:
         df = df.withColumn("del_seq", F.lit(del_seq))
         tdir = os.path.join(index_dir, TOMBSTONES_DIR)
         df.write.mode("append").parquet(tdir)
-        n = spark.read.parquet(tdir).select("doc_id").distinct().count()
-        m.setdefault("metrics", {})["n_deleted"] = int(n)
+        n = len(tombstone_pair(index_dir)[0])
+        m.setdefault("metrics", {})["n_deleted"] = n
         m["seq_counter"] = del_seq
         _write_manifest(index_dir, m)
         return m
@@ -706,30 +737,40 @@ class Index:
 
     def term_stats_lookup(self, terms: list[str]) -> dict[str, int]:
         """Driver-side {term: df} for query terms, cached on the
-        handle: the first call preloads the whole vocabulary when it is
-        small enough, so WARM single-query searches launch zero extra Spark
-        jobs (the reference's query path is one index.search call,
-        search_indices.py:30-39). Terms absent from the index are cached as
-        absent. The index artifact is immutable; after finalize_stream use
-        refresh()/a new Index (streaming.py docs)."""
+        handle and read with pyarrow (no Spark job): the first call
+        preloads the whole vocabulary when it is small enough, so warm
+        single-query searches run in the driver alone (the reference's
+        query path is one index.search call, search_indices.py:30-39);
+        past STATS_PRELOAD_MAX_TERMS missing terms are read with the
+        block reader's term filter (row groups pruned by statistics).
+        Terms absent from the index are cached as absent. The index
+        artifact is immutable; after finalize_stream use refresh()/a new
+        Index (streaming.py docs)."""
+        tdir = os.path.join(self.index_dir, "term_stats")
         if not self._stats_preloaded and not self._stats_cache:
+            files = _parquet_files(tdir)
             n_terms = self.manifest["build"].get("n_terms")
-            if n_terms is None:  # pre-0.3 manifest: metadata-only count
-                n_terms = self.term_stats().count()
+            if n_terms is None:  # pre-0.3 manifest: parquet footer counts
+                n_terms = sum(pq.read_metadata(p).num_rows for p in files)
                 self.manifest["build"]["n_terms"] = n_terms
             if n_terms <= self.STATS_PRELOAD_MAX_TERMS:
-                for r in self.term_stats().select("term", "df").collect():
-                    self._stats_cache[r.term] = r.df
+                for p in files:
+                    tbl = _read_parquet(p, ["term", "df"])
+                    self._stats_cache.update(zip(
+                        tbl.column("term").to_pylist(),
+                        tbl.column("df").to_pylist(),
+                    ))
                 self._stats_preloaded = True
         missing = [t for t in terms if t not in self._stats_cache]
         if missing and not self._stats_preloaded:
-            found = {
-                r.term: r.df
-                for r in self.term_stats()
-                .select("term", "df")
-                .filter(F.col("term").isin(missing))
-                .collect()
-            }
+            from .index_query import _read_shard_blocks
+
+            # row groups pruned by their term statistics, then is_in
+            tbl = _read_shard_blocks([(0, p) for p in _parquet_files(tdir)],
+                                     ["term", "df"], missing, False)
+            found = dict(zip(
+                tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
+            ))
             # bound the lazy cache: a long-lived handle serving arbitrary
             # queries must not grow without limit (absent/garbage terms
             # especially) — evict wholesale past the cap, it's just a cache
@@ -908,8 +949,6 @@ class Index:
         is one filesystem walk per bucket, cached on the handle (the
         artifact is immutable for a handle's lifetime, same contract as
         the stats cache)."""
-        import glob
-
         if self.posting_layout < 2:
             raise ValueError(
                 "shard_file_map needs posting layout >= 2 (engine >= "
@@ -946,25 +985,13 @@ class Index:
 
     def tombstones_pair(self):
         """(ids, seqs): sorted int64 doc ids with their per-id MAX delete
-        seq — the closure-shipped search mask for small delete sets (the
-        distributed side path takes over past TOMBSTONE_BROADCAST_MAX;
-        index_search routes). Cached; refresh() reloads after
-        delete/compact."""
-        import numpy as np
-
+        seq (tombstone_pair) — the search mask every kernel gets in its
+        closure. Cached; refresh() reloads after delete/compact."""
         if getattr(self, "_tombstones", None) is None:
-            if self.n_deleted() == 0:
-                self._tombstones = (
-                    np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-                )
-            else:
-                pdf = read_tombstones(
-                    self.spark, self.index_dir
-                ).toPandas()  # Arrow: ~16 B/id, no Row objects
-                ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-                seqs = pdf["del_seq"].to_numpy(dtype=np.int64)
-                order = np.argsort(ids)
-                self._tombstones = (ids[order], seqs[order])
+            self._tombstones = (
+                tombstone_pair(self.index_dir) if self.n_deleted()
+                else (np.empty(0, np.int64), np.empty(0, np.int64))
+            )
         return self._tombstones
 
     def tombstones_array(self):
@@ -972,16 +999,13 @@ class Index:
         ids only; per-group masking uses tombstones_pair()."""
         return self.tombstones_pair()[0]
 
-    def tombstones_df(self) -> DataFrame:
-        """(doc_id, del_seq) DataFrame — the distributed masking side."""
-        return read_tombstones(self.spark, self.index_dir)
-
     def live_doc_stats(self) -> DataFrame:
         """doc_stats restricted to live rows under per-group tombstones —
         what filtered search and stored-field fetch must read (a
         re-ingested doc has a dead old row and a live new one)."""
         return live_doc_stats_df(
-            self.spark, self.index_dir, self.manifest, self.doc_stats()
+            self.spark, self.index_dir, self.manifest, self.doc_stats(),
+            self.tombstones_pair(),
         )
 
     def term_stats(self) -> DataFrame:

@@ -108,8 +108,7 @@ class low_latency:
     Python (no JVM at all); above it, it runs its one job inside the
     call, and that job has no exchange for either setting to act on.
     The settings still reach the lazy plans: side-direct (`where=`,
-    collapse, distributed tombstones), phrase search and direct searches
-    over the budget.
+    collapse), phrase search and direct searches over the budget.
 
     Absolute-floor note (r06): a TRIVIAL 32-task mapInPandas + window +
     count measures 0.686 s on the bench host vs 0.136 s for a JVM-only

@@ -562,8 +562,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                 "repair/rebuild before compacting"
             )
         params, stats = _stats_from_manifest(m)
-        import numpy as np
-
         from .jobs import TOMBSTONES_DIR, group_seq_expr
 
         pdir = os.path.join(index_dir, "postings")
@@ -590,18 +588,16 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         ds = ds_all.drop("group")
         new_avgdl = stats.avgdl
         if n_deleted and os.path.exists(tdir_tomb):
-            from .jobs import live_doc_stats_df, read_tombstones
+            from .jobs import live_doc_stats_df, tombstone_pair
 
             # per-group deadness: a tombstone (id, s) kills copies only in
             # groups with seq <= s, so a doc re-ingested after its delete
             # keeps exactly its newest copy through the purge
-            tomb_pdf = read_tombstones(spark, index_dir).toPandas()
-            t_ids = tomb_pdf["doc_id"].to_numpy(dtype=np.int64)
-            t_seqs = tomb_pdf["del_seq"].to_numpy(dtype=np.int64)
-            order = np.argsort(t_ids)
-            tomb = (t_ids[order], t_seqs[order])
-            n_tomb_ids = len(t_ids)
-            ds = live_doc_stats_df(spark, index_dir, m, ds_all).drop("group")
+            tomb = tombstone_pair(index_dir)
+            n_tomb_ids = len(tomb[0])
+            ds = live_doc_stats_df(
+                spark, index_dir, m, ds_all, tomb
+            ).drop("group")
             row = ds.agg(
                 F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
             ).first()

@@ -23,12 +23,7 @@ from sparkbm25.build import BuildParams
 from sparkbm25.corpus import add_doc_id
 from sparkbm25.fixtures import MICRO_DOCS, make_queries, make_transcripts_pdf
 from sparkbm25.index_query import index_search
-from sparkbm25.jobs import (
-    TOMBSTONE_BROADCAST_MAX,
-    Index,
-    build_index,
-    delete_docs,
-)
+from sparkbm25.jobs import Index, build_index, delete_docs
 from sparkbm25.oracle import OracleIndex
 
 QS = make_queries(25) + [(900, "w0001 w0001 w0003")]
@@ -312,7 +307,7 @@ def test_driver_merge_matches_window_and_oracle(spark, built_ties, tmp_path,
     victims = [4, 7, 11, 12]
     delete_docs(spark, td, victims)
     tix = Index(spark, td)
-    assert 0 < tix.n_deleted() <= TOMBSTONE_BROADCAST_MAX  # closure masks
+    assert tix.n_deleted() > 0
     ora = OracleIndex.build(docs)
     live = {i for i, _ in docs} - set(victims)
     cases = [
@@ -382,7 +377,7 @@ def test_driver_route_results_make_no_jvm_round_trip(spark, built, corpus40,
     victims = ids[::7]
     delete_docs(spark, td, victims)
     tix = Index(spark, td)
-    assert 0 < tix.n_deleted() <= TOMBSTONE_BROADCAST_MAX
+    assert tix.n_deleted() > 0
     live = set(ids) - set(victims)
     qs = make_queries(100)
     cases = [
@@ -528,14 +523,12 @@ def test_direct_filtered_side_grouped_bit_identical(built_attrs, oracle40):
                        oracle40.search_all(QS, k=8, allowed=users, **okw))
 
 
-def test_direct_filtered_with_distributed_tombstones(spark, built_attrs,
-                                                     oracle40, tmp_path,
-                                                     monkeypatch):
-    """side-direct composes with the distributed tombstone side
-    (kind=1 rows) — forced via TOMBSTONE_BROADCAST_MAX=1."""
+def test_direct_filtered_with_tombstone_mask(spark, built_attrs, oracle40,
+                                             tmp_path):
+    """side-direct (where=) composes with the closure tombstone mask:
+    the side lists the live qualifying docs, the kernel drops the dead
+    postings."""
     import shutil as _sh
-
-    import sparkbm25.jobs as J
 
     corpus, ix0 = built_attrs
     d = str(tmp_path / "ixsdt")
@@ -543,8 +536,7 @@ def test_direct_filtered_with_distributed_tombstones(spark, built_attrs,
     rows = corpus.collect()
     victims = [r.doc_id for r in rows[:12]]
     delete_docs(spark, d, victims)
-    monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 1)
-    ix = J.Index(spark, d)
+    ix = Index(spark, d)
     allowed = {r.doc_id for r in rows if r.role == "user"} - set(victims)
     got = _rows(index_search(ix, QS, k=8, where={"role": "user"}))
     _assert_oracle(got, oracle40.search_all(QS, k=8, allowed=allowed))

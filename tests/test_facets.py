@@ -114,19 +114,16 @@ def test_facets_with_tombstones(spark, corpus, rows, tmp_path):
     assert got == want
 
 
-def test_facets_distributed_tombstones(spark, corpus, rows, tmp_path,
-                                       monkeypatch):
-    """Facets under the distributed tombstone path: kind=1 side rows mask
-    dead copies at decode (the live side alone is not enough for a
+def test_facets_tombstone_mask(spark, corpus, rows, tmp_path):
+    """Facets under the closure tombstone mask: the kernel masks dead
+    copies at decode (the live side alone is not enough for a
     re-ingest's dead old postings, so the kernel's mask must engage)."""
-    import sparkbm25.jobs as J
     from sparkbm25.jobs import delete_docs
 
     d = str(tmp_path / "ixfacetdtx")
     build_index(corpus, d, PARAMS, source_fingerprint="facetdt")
     victims = sorted(r[0] for r in rows)[:15]
     delete_docs(spark, d, victims)
-    monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 1)
     ix = Index(spark, d)
     queries = make_queries(10)
     want = _py_facets(

@@ -162,18 +162,13 @@ def test_blockmax_prune_bit_exact_skewed(skewed, skewed_oracle):
         _assert_oracle(bm, skewed_oracle.search_all(QS, k=10, **kw))
 
 
-def test_blockmax_cotomb_side_direct_oracle(skewed, skewed_oracle, spark,
-                                           monkeypatch):
-    """Distributed tombstones with no `where=` ride the side-direct plan:
-    the side is the tombstone rows plus one kind=2 anchor row per shard.
-    Forced here with TOMBSTONE_BROADCAST_MAX=1, deleting the hot docs —
-    all in ONE shard. Every strategy, and exclude=, must stay
-    rank-identical to the oracle over the live docs; hits from the
-    tombstone-free shard pin the anchor rows (without them that shard
-    is absent from the side and its docs are lost)."""
+def test_blockmax_tombstoned_hot_shard_oracle(skewed, skewed_oracle, spark):
+    """Tombstones with no `where=` run the direct plan with the closure
+    mask. The hot docs are deleted — all in ONE shard. Every strategy,
+    and exclude=, must stay rank-identical to the oracle over the live
+    docs, with hits from the tombstone-free shards."""
     import shutil
 
-    import sparkbm25.jobs as J
     from sparkbm25.jobs import delete_docs
 
     d2 = skewed.index_dir + "_cotomb"
@@ -182,7 +177,6 @@ def test_blockmax_cotomb_side_direct_oracle(skewed, skewed_oracle, spark,
     # delete the hot tail (the top-scoring docs)
     victims = [i << 20 for i in range(1500, 1600)]
     delete_docs(spark, d2, victims)
-    monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 1)
     ix = Index(spark, d2)
     shift = ix.shard_shift
     tomb_shards = {v >> shift for v in victims}

@@ -250,14 +250,10 @@ def test_exclude_with_tombstones(spark, corpus, tmp_path, oracle):
     _assert_rank_identical(got, want)
 
 
-def test_msm_exclude_distributed_tombstones(spark, corpus, tmp_path,
-                                            oracle, monkeypatch):
-    """min_match and exclude under the DISTRIBUTED tombstone path
-    (n_deleted > TOMBSTONE_BROADCAST_MAX, forced to 1): tombstones
-    ride the side frame as kind=1 rows and must interact correctly with
-    the coverage count and the exclusion positions, on both
-    strategies."""
-    import sparkbm25.jobs as J
+def test_msm_exclude_tombstone_mask(spark, corpus, tmp_path, oracle):
+    """min_match and exclude under the closure tombstone mask: dead
+    postings are dropped at decode, before the coverage count and the
+    exclusion positions, on both strategies."""
     from sparkbm25.jobs import delete_docs
 
     d = str(tmp_path / "ixdtx")
@@ -265,7 +261,6 @@ def test_msm_exclude_distributed_tombstones(spark, corpus, tmp_path,
     all_ids = [r.doc_id for r in corpus.collect()]
     victims = all_ids[:10]
     delete_docs(spark, d, victims)
-    monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 1)
     ix = Index(spark, d)
     alive = set(all_ids) - set(victims)
     queries = make_queries(15)

@@ -164,29 +164,34 @@ def test_blockmax_exclude_plan_one_kernel_two_exchanges(built):
     assert df.count() > 0
 
 
-def test_cotomb_plan_side_direct(built, spark, tmp_path, monkeypatch):
-    """Distributed tombstones with no `where=` ride the side-direct plan
-    (tombstone rows + one anchor row per shard): one shard-grouped
-    kernel, no cogroup — the posting blocks never cross an exchange."""
+def test_tombstoned_search_plan_direct(built, spark, tmp_path, monkeypatch):
+    """A tombstoned search with no `where=` runs the direct plan: the
+    kernel masks dead postings with the tombstone pair in its closure,
+    so no side frame is grouped by shard — in the driver, and on the
+    Spark route past the driver row budget (the mapInArrow scan)."""
     import shutil
 
+    import sparkbm25.index_query as iq
     import sparkbm25.jobs as J
-    from sparkbm25.index_query import index_search
 
-    d = str(tmp_path / "cotomb_plan")
+    d = str(tmp_path / "tomb_plan")
     shutil.copytree(built.index_dir, d)
     victim = built.live_doc_stats().select("doc_id").first().doc_id
     J.delete_docs(spark, d, [victim])
-    monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 0)
-    for strategy in ("sharded", "blockmax"):
-        df = index_search(Index(spark, d), [(0, "w0001 w0002")], k=5,
-                          strategy=strategy)
-        plan = _plan(df)
-        assert plan.count("FlatMapGroupsInPandas") == 1, plan
-        assert plan.count("FlatMapCoGroupsInPandas") == 0, plan
-        assert "MapInPandas" not in plan, plan
-        assert "MapInArrow" not in plan, plan
-        assert df.count() > 0
+    ix = Index(spark, d)
+    for spark_route in (False, True):
+        if spark_route:
+            monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: False)
+            monkeypatch.setattr(iq, "LOCAL_SEARCH_MAX_POSTINGS", 0)
+        for strategy in ("sharded", "blockmax"):
+            df = iq.index_search(ix, [(0, "w0001 w0002")], k=5,
+                                 strategy=strategy)
+            plan = _plan(df)
+            assert "FlatMapGroupsInPandas" not in plan, plan
+            assert "FlatMapCoGroupsInPandas" not in plan, plan
+            assert ("MapInArrow" in plan) == spark_route, plan
+            assert df.count() > 0
+            assert victim not in {r.doc_id for r in df.collect()}
 
 
 def test_filtered_search_plan_cogroup_no_broadcast(spark, tmp_path):

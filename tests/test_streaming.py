@@ -675,14 +675,14 @@ def test_reingest_of_doc_with_base_postings(spark, corpora, tmp_path):
     assert hits3 == set()
 
 
-def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
-    """Past the closure threshold the tombstones ride the side-direct
-    plan (kind=1 side rows, plus one kind=2 anchor row per shard when no
-    `where=` side lists the qualifying docs) — no driver-side array, no
-    cap: results must be identical to the closure path and to the
-    oracle, and compose with `where=` filters (both kinds in one side
-    frame)."""
-    import sparkbm25.jobs as J
+def test_tombstone_mask_oracle_identity(spark, corpora, tmp_path,
+                                        monkeypatch):
+    """Every seventh doc deleted on a two-group index: the closure
+    tombstone mask gives the oracle's live-doc results in the driver
+    and on the Spark route (the pair shipped with each task), on both
+    strategies, and composes with `where=` filters on the side-direct
+    plan."""
+    import sparkbm25.index_query as iq
     from sparkbm25.build import BuildParams
     from sparkbm25.fixtures import make_queries
     from sparkbm25.index_query import index_search
@@ -711,28 +711,26 @@ def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
     )
 
     ix = Index(spark, d)
-    got_closure = sorted(
+    got_driver = sorted(
         (r.query_id, r.rank, r.doc_id)
         for r in index_search(ix, queries, k=10).collect()
     )
-    assert got_closure == want
+    assert got_driver == want
 
-    # force the distributed path (threshold below the delete-set size)
-    monkeypatch.setattr(J, "TOMBSTONE_BROADCAST_MAX", 1)
-    ix2 = Index(spark, d)
-    got_dist = sorted(
+    # the Spark route: the mask rides each task's closure
+    monkeypatch.setattr(iq, "_serve_in_driver", lambda *a: False)
+    got_spark = sorted(
         (r.query_id, r.rank, r.doc_id)
-        for r in index_search(ix2, queries, k=10).collect()
+        for r in index_search(ix, queries, k=10).collect()
     )
-    assert got_dist == want
-    # blockmax over the distributed-tombstone side must agree too
+    assert got_spark == want
     got_bm = sorted(
         (r.query_id, r.rank, r.doc_id)
-        for r in index_search(ix2, queries, k=10,
+        for r in index_search(ix, queries, k=10,
                               strategy="blockmax").collect()
     )
     assert got_bm == want
-    # composes with where= (qual kind=0 + tombstones kind=1 in one side)
+    # composes with where= (live qualifying side + closure mask)
     allowed_user = {int(r.doc_id) for r in rows if r.role == "user"} - dead
     want_f = sorted(
         (q, rk, di) for q, rk, di, _s in
@@ -740,7 +738,7 @@ def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
     )
     got_f = sorted(
         (r.query_id, r.rank, r.doc_id)
-        for r in index_search(ix2, queries, k=10,
+        for r in index_search(ix, queries, k=10,
                               where={"role": "user"}).collect()
     )
     assert got_f == want_f
