@@ -23,8 +23,8 @@ Scale design (the part that must survive 10^12 turns):
   A (term, shard) posting list is bounded by the shard's doc count, so the
   merge task memory is bounded by ``shard_span`` — the sizing knob recorded
   in the manifest (the analog of the reference's closed-form memory
-  estimate, app/utils/memory.py:14-59). Range shards also give blocks tight
-  ``first_doc/last_doc`` ranges.
+  estimate, app/utils/memory.py:14-59). Range shards also let a search
+  task read one shard's postings and its docs' lengths side by side.
 - **Two compact shuffles total.** (1) docs by salted key — raw text, smaller
   than its exploded postings; (2) packed binary runs by (term, shard) —
   already delta-friendly sorted arrays, not rows. The merge group receives
@@ -41,12 +41,22 @@ faiss_index_build_service.py:165-238):
 
     index_dir/
       manifest.json                    build params, stats, lineage, metrics
-      doc_stats/group=G/               (doc_id, doc_len [, text])
+      doc_stats/group=G/shard_id=S/    (doc_id, doc_len [, text] [, attrs]):
+                                       each doc's length stored once, in
+                                       its doc-range shard — the norms
+                                       the search kernels gather
       postings/group=G/term_bucket=B/shard_id=S/   block rows
-                                       (BLOCK_SCHEMA; posting layout 2 —
-                                       shard-clustered files; layout-1
-                                       indexes lack the shard_id level)
-      term_stats/                      (term, df, cf, max_tf_norm)
+                                       (BLOCK_SCHEMA; posting layout 3)
+      term_stats/                      (term, df, cf)
+
+Posting layout 3 keeps per block only what a search decodes or orders by:
+the doc-id gaps, the tfs, the positions and ``first_doc`` (phrase search
+orders a term's blocks by it). A doc's length is not repeated in its
+postings: kernels read it from the shard's ``doc_stats`` rows
+(index_query._read_shard_norms), like Lucene's per-document norms.
+Layouts 1 and 2 (a per-posting length stream and block bound columns;
+layout 1 also lacks the shard_id directory level) are read only by
+``compact_index``, the one migration.
 """
 
 from __future__ import annotations
@@ -65,24 +75,21 @@ from .codecs import BLOCK_SIZE
 
 RUN_SCHEMA = (
     "term string, shard_id long, n_docs int, "
-    "docs_vb binary, tfs_vb binary, dls_vb binary, pos_vb binary"
+    "docs_vb binary, tfs_vb binary, pos_vb binary"
 )
 
-# Block metadata carries BOTH the precomputed tf_norm bounds under the
-# build-time (k1, b) and the RAW (max_tf, min_tf, min_dl, max_dl)
-# integers, from which a sound contribution bound is derivable for ANY
-# (k1, b) in range (tf_norm is monotone increasing in tf and decreasing
-# in dl). No search reads these bound columns today (every query shape
-# runs the dense fold over the posting streams); phrase search reads
-# first_doc to restore posting order.
-# pos_vbyte (optional, BuildParams.store_positions) is the positional
-# stream: per posting, its token positions as first-absolute + gaps
-# varbyte, concatenated in posting order (tf values per posting).
+# Posting layout 3 block row: the streams a search decodes plus the
+# block's first_doc (phrase search orders a term's blocks by it) and
+# sum_tf (term_stats' cf). docs_vbyte holds the doc ids as first-absolute
+# + gaps varbyte, tfs_vbyte the tfs; pos_vbyte (optional,
+# BuildParams.store_positions) holds per posting its token positions as
+# first-absolute + gaps varbyte, concatenated in posting order (tf values
+# per posting). No doc length and no score bound is stored per posting or
+# block: the kernels gather lengths from doc_stats and fold every posting.
 BLOCK_SCHEMA = (
     "term string, shard_id long, block_id int, n_docs int, "
-    "first_doc long, last_doc long, max_tf_norm double, min_tf_norm double, "
-    "sum_tf long, max_tf long, min_tf long, min_dl long, max_dl long, "
-    "docs_vbyte binary, tfs_vbyte binary, dls_vbyte binary, pos_vbyte binary"
+    "first_doc long, sum_tf long, "
+    "docs_vbyte binary, tfs_vbyte binary, pos_vbyte binary"
 )
 
 
@@ -151,7 +158,7 @@ class BuildParams:
     def validate(self) -> None:
         if self.block_size < 8:
             raise ValueError("block_size must be >= 8")
-        reserved = {"doc_id", "doc_len", "text", "group"}
+        reserved = {"doc_id", "doc_len", "text", "group", "shard_id"}
         bad = reserved & set(self.attr_cols)
         if bad:
             raise ValueError(
@@ -330,7 +337,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                 continue
             doc_ids = rb.column(0).to_numpy()
             flat_doc = np.repeat(doc_ids, lens_d)
-            flat_dl = np.repeat(lens_d, lens_d)
             dic = pc.dictionary_encode(flat)
             codes = dic.indices.to_numpy().astype(np.int64)
             uniq = dic.dictionary
@@ -342,7 +348,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             order = np.lexsort((flat_doc, tcode))
             tcode_s = tcode[order]
             doc_s = flat_doc[order]
-            dl_s = flat_dl[order]
             # posting boundaries: (term, doc) change; tf = occurrences
             pchange = np.ones(total, dtype=bool)
             pchange[1:] = (tcode_s[1:] != tcode_s[:-1]) | (
@@ -351,7 +356,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             p_starts = np.flatnonzero(pchange)
             tfs = (np.r_[p_starts[1:], total] - p_starts).astype(np.uint64)
             docs = doc_s[p_starts]
-            dls = dl_s[p_starts].astype(np.uint64)
             post_tcode = tcode_s[p_starts]
             shards = docs >> shard_shift
             n_post = len(p_starts)
@@ -366,7 +370,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             gaps = segment_delta_gaps(docs, starts)
             docs_buf, docs_sz = vbyte_encode_arrays(gaps)
             tfs_buf, tfs_sz = vbyte_encode_arrays(tfs)
-            dls_buf, dls_sz = vbyte_encode_arrays(dls)
             n_runs = len(starts)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -375,13 +378,10 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                     pa.array(lens.astype(np.int32), type=pa.int32()),
                     segment_binary(docs_buf, docs_sz, starts),
                     segment_binary(tfs_buf, tfs_sz, starts),
-                    segment_binary(dls_buf, dls_sz, starts),
                     pa.nulls(n_runs, pa.binary()),
                 ],
-                names=[
-                    "term", "shard_id", "n_docs",
-                    "docs_vb", "tfs_vb", "dls_vb", "pos_vb",
-                ],
+                names=["term", "shard_id", "n_docs",
+                       "docs_vb", "tfs_vb", "pos_vb"],
             )
 
     def gen_pos(batches) -> "Iterator":
@@ -405,7 +405,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                 continue
             doc_ids = rb.column(0).to_numpy()
             flat_doc = np.repeat(doc_ids, lens_d)
-            flat_dl = np.repeat(lens_d, lens_d)
             tok_starts = np.cumsum(lens_d) - lens_d
             flat_pos = np.arange(total, dtype=np.int64) - np.repeat(
                 tok_starts, lens_d
@@ -422,7 +421,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             order = np.lexsort((flat_pos, flat_doc, tcode))
             tcode_s = tcode[order]
             doc_s = flat_doc[order]
-            dl_s = flat_dl[order]
             pos_s = flat_pos[order]
             # posting boundaries: (term, doc) change; tf = positions/posting
             pchange = np.ones(total, dtype=bool)
@@ -433,7 +431,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             p_lens = np.r_[p_starts[1:], total] - p_starts
             post_doc = doc_s[p_starts]
             post_tf = p_lens.astype(np.uint64)
-            post_dl = dl_s[p_starts].astype(np.uint64)
             post_tcode = tcode_s[p_starts]
             post_shard = post_doc >> shard_shift
             n_post = len(p_starts)
@@ -448,7 +445,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             gaps = segment_delta_gaps(post_doc, r_starts)
             docs_buf, docs_sz = vbyte_encode_arrays(gaps)
             tfs_buf, tfs_sz = vbyte_encode_arrays(post_tf)
-            dls_buf, dls_sz = vbyte_encode_arrays(post_dl)
             # positions: per-posting delta restart (first absolute)
             pos_gaps = segment_delta_gaps(pos_s, p_starts)
             pos_buf, pos_sz = vbyte_encode_arrays(pos_gaps)
@@ -462,30 +458,25 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                     pa.array(r_lens.astype(np.int32), type=pa.int32()),
                     segment_binary(docs_buf, docs_sz, r_starts),
                     segment_binary(tfs_buf, tfs_sz, r_starts),
-                    segment_binary(dls_buf, dls_sz, r_starts),
                     segment_binary(pos_buf, pos_sz, tok_run_starts),
                 ],
-                names=[
-                    "term", "shard_id", "n_docs",
-                    "docs_vb", "tfs_vb", "dls_vb", "pos_vb",
-                ],
+                names=["term", "shard_id", "n_docs",
+                       "docs_vb", "tfs_vb", "pos_vb"],
             )
 
     return gen_pos if store_positions else gen
 
 _BLOCK_COLS = [
-    "term", "shard_id", "block_id", "n_docs", "first_doc", "last_doc",
-    "max_tf_norm", "min_tf_norm", "sum_tf",
-    "max_tf", "min_tf", "min_dl", "max_dl",
-    "docs_vbyte", "tfs_vbyte", "dls_vbyte", "pos_vbyte",
+    "term", "shard_id", "block_id", "n_docs", "first_doc", "sum_tf",
+    "docs_vbyte", "tfs_vbyte", "pos_vbyte",
 ]
 
 
-def _make_merge_gen(params: BuildParams, avgdl: float,
+def _make_merge_gen(params: BuildParams,
                     tombstones: "tuple | None" = None):
     """Stage-2 kernel: a PARTITION-WISE merge over runs sorted so every
-    (term, shard_id) group is contiguous within its partition (layout 2
-    sorts (shard_id, term); the gen only needs group contiguity).
+    (term, shard_id) group is contiguous within its partition (the
+    build sorts (shard_id, term); the gen only needs group contiguity).
 
     ``tombstones`` — (sorted int64 doc ids, per-id max delete seq) —
     physically PURGES dead copies while re-blocking: a posting from a run
@@ -510,13 +501,13 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
 
     from .codecs import decode_blocks
 
-    k1, b, bs = params.k1, params.b, params.block_size
+    bs = params.block_size
 
     def _flush_vectorized(n_rows: int, terms, shards, post,
                           g_row_starts) -> "pa.RecordBatch | None":
         """Merge vectorized ACROSS groups: one global (group, doc)
-        lexsort replaces any per-(term, shard) loop, block aggregates
-        come from reduceat at block starts, and every vbyte stream is
+        lexsort replaces any per-(term, shard) loop, sum_tf comes from
+        reduceat at block starts, and every vbyte stream is
         encoded in ONE call then offset-sliced per block. Byte-identical
         output to the former per-group path: segment_delta_gaps at block
         starts == per-block delta_encode, and slice boundaries land on
@@ -534,9 +525,7 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
         token boundaries."""
         from .codecs import segment_delta_gaps, vbyte_encode_arrays
 
-        docs_all, tfs_all, dls_all, pos_all = (
-            post.ids, post.tfs, post.dls, post.pos
-        )
+        docs_all, tfs_all, pos_all = post.ids, post.tfs, post.pos
         g_of_row = np.zeros(n_rows, dtype=np.int64)
         g_of_row[g_row_starts] = 1
         g_of_row = np.cumsum(g_of_row) - 1
@@ -546,7 +535,6 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
         order = np.lexsort((docs_all, pg))
         d = docs_all[order]
         t_ = tfs_all[order]
-        l_ = dls_all[order]
         pg_s = pg[order]
         same_g = pg_s[1:] == pg_s[:-1]
         bad = same_g & (np.diff(d) <= 0)
@@ -556,11 +544,6 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
             raise ValueError(
                 f"duplicate doc_id in postings of term={term_bad!r}"
             )
-        tfn = (
-            t_.astype(np.float64)
-            * (k1 + 1.0)
-            / (t_ + k1 * (1.0 - b + b * l_.astype(np.float64) / avgdl))
-        )
         n = len(d)
         g_start_idx = np.flatnonzero(np.r_[True, ~same_g])
         g_counts = np.diff(np.r_[g_start_idx, n])
@@ -568,14 +551,11 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
             g_start_idx, g_counts
         )
         b_starts = np.flatnonzero(pos_in_g % bs == 0)
-        b_lens = np.diff(np.r_[b_starts, n])
-        b_ends = b_starts + b_lens
         bg = pg_s[b_starts]
         first_rows = g_row_starts[bg]
         gaps_b = segment_delta_gaps(d, b_starts)
         docs_buf, docs_sz = vbyte_encode_arrays(gaps_b)
         tfs_buf, tfs_sz = vbyte_encode_arrays(t_.astype(np.uint64))
-        dls_buf, dls_sz = vbyte_encode_arrays(l_.astype(np.uint64))
         if pos_all is not None:
             # apply the posting permutation to the ragged position
             # stream: posting i's slice [old_start[i], old_start[i]+tf)
@@ -600,19 +580,11 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
                 terms.take(pa.array(first_rows)),
                 pa.array(shards[first_rows], type=pa.int64()),
                 pa.array((pos_in_g[b_starts] // bs).astype(np.int32)),
-                pa.array(b_lens.astype(np.int32)),
+                pa.array(np.diff(np.r_[b_starts, n]).astype(np.int32)),
                 pa.array(d[b_starts], type=pa.int64()),
-                pa.array(d[b_ends - 1], type=pa.int64()),
-                pa.array(np.maximum.reduceat(tfn, b_starts)),
-                pa.array(np.minimum.reduceat(tfn, b_starts)),
                 pa.array(np.add.reduceat(t_, b_starts), type=pa.int64()),
-                pa.array(np.maximum.reduceat(t_, b_starts), type=pa.int64()),
-                pa.array(np.minimum.reduceat(t_, b_starts), type=pa.int64()),
-                pa.array(np.minimum.reduceat(l_, b_starts), type=pa.int64()),
-                pa.array(np.maximum.reduceat(l_, b_starts), type=pa.int64()),
                 segment_binary(docs_buf, docs_sz, b_starts),
                 segment_binary(tfs_buf, tfs_sz, b_starts),
-                segment_binary(dls_buf, dls_sz, b_starts),
                 pos_col,
             ],
             names=_BLOCK_COLS,
@@ -635,7 +607,7 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
         # ONE decode per stream for the whole batch, dead copies purged
         post = decode_blocks(
             tbl.column("n_docs"), tbl.column("docs_vb"),
-            tfs=tbl.column("tfs_vb"), dls=tbl.column("dls_vb"),
+            tfs=tbl.column("tfs_vb"),
             pos=tbl.column("pos_vb") if params.store_positions else None,
             gseq=tbl.column("gseq") if tombstones is not None else None,
             tomb=tombstones,
@@ -696,7 +668,7 @@ def build_postings(
     share a (shard_id, term_bucket) hash key, so every run group still
     merges whole, and a write task owns whole (bucket, shard) combos, so
     the partitionBy("term_bucket", "shard_id") write stays
-    shard-CLUSTERED — layout 2 — with no extra shuffle.)"""
+    shard-CLUSTERED (layout 2 onward) with no extra shuffle.)"""
     n_parts = params.num_shards * params.salt_factor
     salted = corpus.select("doc_id", "text").repartition(
         n_parts, F.pmod(F.xxhash64("doc_id"), F.lit(n_parts))
@@ -722,34 +694,43 @@ def build_postings(
     blocks = (
         runs.repartition(merged_parts, F.col("shard_id"), bucket)
         .sortWithinPartitions("shard_id", "term")
-        .mapInArrow(_make_merge_gen(params, stats.avgdl), schema=BLOCK_SCHEMA)
+        .mapInArrow(_make_merge_gen(params), schema=BLOCK_SCHEMA)
     )
     return blocks.withColumn(
         "term_bucket", F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets))
     )
 
 
-# Physical postings layout generation. 2 (engine >= 0.8) adds a shard_id
+# Physical postings layout generation. 2 (engine >= 0.8) added a shard_id
 # directory level under each term_bucket: group=G/term_bucket=B/shard_id=S/
-# — shard-CLUSTERED files, so a search task can read exactly its shard's
+# — shard-CLUSTERED files, so a search task reads exactly its shard's
 # blocks straight from shared storage (index_query's direct and
 # side-direct plans: no scan->kernel exchange, no JVM->Python Arrow hop).
-# Search refuses layout 1 indexes (Index.shard_file_map); appends into
-# them stay layout 1 (mixed directory depths would break Spark partition
-# discovery), and compaction rewrites the whole tree so it upgrades to 2
-# — the one migration.
-POSTING_LAYOUT = 2
+# 3 (engine >= 0.10) drops the per-posting doc-length stream and the block
+# bound columns, and co-locates doc_stats by shard the same way
+# (doc_stats/group=G/shard_id=S/): the kernels gather each doc's length
+# from its shard's doc_stats rows. Search, appends and resumed builds
+# refuse older layouts (mixed directory depths would also break Spark
+# partition discovery); compaction rewrites the whole tree, so it is the
+# one migration.
+POSTING_LAYOUT = 3
 
 
-def write_group_blocks(
-    blocks: DataFrame, dest: str, layout: int = POSTING_LAYOUT,
-    mode: str = "overwrite",
-) -> None:
-    """Write one lineage group's block rows under the given layout."""
-    cols = (
-        ["term_bucket", "shard_id"] if layout >= 2 else ["term_bucket"]
-    )
-    blocks.write.partitionBy(*cols).mode(mode).parquet(dest)
+def write_group_blocks(blocks: DataFrame, dest: str) -> None:
+    """Write one lineage group's block rows, clustered by (term_bucket,
+    shard_id) directories."""
+    blocks.write.partitionBy("term_bucket", "shard_id").mode(
+        "overwrite"
+    ).parquet(dest)
+
+
+def write_doc_stats(docs: DataFrame, dest: str, shard_shift: int) -> None:
+    """Write one group's doc_stats rows under ``shard_id=S`` directories
+    (shard_id = doc_id >> shard_shift, the postings' shard key), so a
+    search task reads its shard's doc lengths without touching the rest."""
+    docs.withColumn(
+        "shard_id", F.shiftright(F.col("doc_id"), shard_shift)
+    ).write.partitionBy("shard_id").mode("overwrite").parquet(dest)
 
 
 def term_stats_from_blocks(blocks: DataFrame) -> DataFrame:
@@ -758,7 +739,6 @@ def term_stats_from_blocks(blocks: DataFrame) -> DataFrame:
     return blocks.groupBy("term").agg(
         F.sum("n_docs").cast("long").alias("df"),
         F.sum("sum_tf").cast("long").alias("cf"),
-        F.max("max_tf_norm").alias("max_tf_norm"),
     )
 
 

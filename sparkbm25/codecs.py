@@ -5,8 +5,8 @@ core/index_builder/faiss/ivf_pq_build_cagra_config.py:14-56 configures PQ
 compression of the stored index; vectors_dataset.py:113-128 packs values into
 opaque binary buffers reinterpreted zero-copy). Here the payload is posting
 lists: sorted doc_ids stored as varbyte(delta-gaps) and tfs stored as varbyte,
-split into fixed-size blocks each carrying (first/last doc_id, tf-norm
-bounds) metadata beside the payload.
+split into fixed-size blocks, each restarting the delta at its first doc
+id so it decodes on its own.
 
 All kernels are numpy-vectorized over whole arrays (no per-value Python in
 the hot loop beyond a <=10-iteration byte-position loop), matching the
@@ -60,9 +60,11 @@ def dead_mask(ids: np.ndarray, gseqs,
 _VB_BOUNDS = np.uint64(1) << (np.uint64(7) * np.arange(1, 10, dtype=np.uint64))
 
 
-def vbyte_encode_with_sizes(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Encode and also return per-value byte counts (for segment slicing:
-    one encode call can serve millions of tiny runs — per-run encode calls
+def vbyte_encode_arrays(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Encode to one varbyte stream (a uint8 ndarray — Arrow-native
+    callers wrap it zero-copy in a BinaryArray data buffer, r07) and
+    return the per-value byte counts with it (for segment slicing: one
+    encode call can serve millions of tiny runs — per-run encode calls
     would dominate at SPIMI scale).
 
     Byte counts come from ONE searchsorted against the 2^(7k) thresholds
@@ -72,14 +74,6 @@ def vbyte_encode_with_sizes(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     and tfs are overwhelmingly single-byte, so the old all-values masked
     scatter paid 2-10 full-array passes for a 1-2 pass job (r07; 2.7x on
     the build's measured stream mix, bit-identical)."""
-    buf, nbytes = vbyte_encode_arrays(values)
-    return buf.tobytes(), nbytes
-
-
-def vbyte_encode_arrays(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """vbyte_encode_with_sizes returning the encoded stream as a uint8
-    ndarray instead of bytes — Arrow-native callers wrap it zero-copy in
-    a BinaryArray data buffer (r07)."""
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
         return np.zeros(0, dtype=np.uint8), np.zeros(0, dtype=np.int64)
@@ -142,21 +136,10 @@ def segment_delta_restore(gaps: np.ndarray, seg_starts: np.ndarray,
         return c - np.repeat(base, seg_lens)
 
 
-def slice_bytes(buf: bytes, value_sizes: np.ndarray,
-                seg_lens: np.ndarray) -> list[bytes]:
-    """Split one encoded stream into per-segment byte strings using the
-    per-value byte counts."""
-    seg_bytes = np.add.reduceat(
-        value_sizes, np.r_[0, np.cumsum(seg_lens)[:-1]]
-    ) if len(seg_lens) else np.zeros(0, dtype=np.int64)
-    ends = np.cumsum(seg_bytes)
-    starts = ends - seg_bytes
-    return [buf[s:e] for s, e in zip(starts, ends)]
-
-
 def vbyte_encode(values: np.ndarray) -> bytes:
-    """Encode a uint64-able non-negative int array to varbyte bytes."""
-    return vbyte_encode_with_sizes(values)[0]
+    """Encode a uint64-able non-negative int array to varbyte bytes (the
+    benchmark's codec ceiling checks its round trip with it)."""
+    return vbyte_encode_arrays(values)[0].tobytes()
 
 
 def vbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
@@ -192,63 +175,6 @@ def vbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
     return vals
 
 
-def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
-    """Strictly-increasing int64 array -> first value + gaps (gap >= 1).
-    The first value may be negative (hash64 ids); it is stored
-    two's-complement-reinterpreted as uint64, which cancels exactly in
-    delta_decode's mod-2^64 cumsum."""
-    a = np.asarray(sorted_ids, dtype=np.int64)
-    if a.size == 0:
-        return a.astype(np.uint64)
-    gaps = np.empty(a.size, dtype=np.uint64)
-    gaps[0] = a[0].astype(np.uint64)
-    d = np.diff(a)
-    if (d <= 0).any():
-        raise ValueError("doc ids must be strictly increasing for delta-gap")
-    gaps[1:] = d.astype(np.uint64)
-    return gaps
-
-
-def delta_decode(gaps: np.ndarray) -> np.ndarray:
-    # uint64 cumsum is mod 2^64; the int64 view restores signed absolutes
-    return np.cumsum(gaps.astype(np.uint64)).astype(np.int64)
-
-
-def pack_blocks(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    tf_norm_ub: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-):
-    """Split one term's postings (doc_id-sorted) into compressed blocks.
-
-    Yields dicts: block_id, n_docs, first_doc, last_doc, max_tf_norm,
-    docs_vbyte (delta-gap varbyte within block), tfs_vbyte.
-    Per-block delta restart (first value of each block is absolute) makes
-    blocks independently decodable — required for block skipping.
-    """
-    n = doc_ids.shape[0]
-    for bi, lo in enumerate(range(0, n, block_size)):
-        hi = min(lo + block_size, n)
-        ids = doc_ids[lo:hi]
-        yield {
-            "block_id": bi,
-            "n_docs": int(hi - lo),
-            "first_doc": int(ids[0]),
-            "last_doc": int(ids[-1]),
-            "max_tf_norm": float(tf_norm_ub[lo:hi].max()),
-            "docs_vbyte": vbyte_encode(delta_encode(ids)),
-            "tfs_vbyte": vbyte_encode(tfs[lo:hi]),
-        }
-
-
-def unpack_block(docs_vbyte: bytes, tfs_vbyte: bytes, n_docs: int):
-    """Decode one block -> (doc_ids int64, tfs int64)."""
-    ids = delta_decode(vbyte_decode(docs_vbyte, n_docs))
-    tfs = vbyte_decode(tfs_vbyte, n_docs).astype(np.int64)
-    return ids, tfs
-
-
 def _bin_stream(col) -> np.ndarray:
     """The concatenated values of an Arrow binary column as one uint8
     ndarray view: the column's data buffer holds every value's bytes
@@ -272,24 +198,23 @@ def _int_col(col) -> np.ndarray:
 
 class Postings(NamedTuple):
     """Decoded postings of a run of blocks, masks applied. Input row i's
-    surviving postings are ``[row_off[i], row_off[i + 1])`` of ``ids``,
-    ``tfs`` and ``dls``; ``pos`` holds each surviving posting's tf
-    positions, in posting order."""
+    surviving postings are ``[row_off[i], row_off[i + 1])`` of ``ids``
+    and ``tfs``; ``pos`` holds each surviving posting's tf positions, in
+    posting order."""
     ids: np.ndarray
     tfs: np.ndarray | None
-    dls: np.ndarray | None
     pos: np.ndarray | None
     row_off: np.ndarray
 
 
-def decode_blocks(n_docs, docs, tfs=None, dls=None, pos=None, gseq=None,
+def decode_blocks(n_docs, docs, tfs=None, pos=None, gseq=None,
                   tomb: "tuple | None" = None,
                   qual: "np.ndarray | None" = None) -> Postings:
     """Batched decode of posting blocks (or build runs) given as Arrow
     columns: ``n_docs`` postings per row, the binary streams the caller
     read (``docs`` delta-gapped with a per-row restart, optional ``tfs``,
-    ``dls``, and ``pos`` with a per-posting restart, which needs
-    ``tfs``), and the per-row lineage ``gseq``.
+    and ``pos`` with a per-posting restart, which needs ``tfs``), and
+    the per-row lineage ``gseq``.
 
     Varbyte streams are self-delimiting, so each stream decodes in one
     numpy pass straight from its Arrow data buffer instead of one call
@@ -306,11 +231,9 @@ def decode_blocks(n_docs, docs, tfs=None, dls=None, pos=None, gseq=None,
     ids = segment_delta_restore(
         vbyte_decode(_bin_stream(docs), total), starts, n_arr
     )
-    tf = dl = p = None
+    tf = p = None
     if tfs is not None:
         tf = vbyte_decode(_bin_stream(tfs), total).astype(np.int64)
-    if dls is not None:
-        dl = vbyte_decode(_bin_stream(dls), total).astype(np.int64)
     if pos is not None:
         p = segment_delta_restore(
             vbyte_decode(_bin_stream(pos), int(tf.sum())),
@@ -330,5 +253,4 @@ def decode_blocks(n_docs, docs, tfs=None, dls=None, pos=None, gseq=None,
             p = p[np.repeat(keep, tf)]
         ids = ids[keep]
         tf = tf[keep] if tf is not None else None
-        dl = dl[keep] if dl is not None else None
-    return Postings(ids, tf, dl, p, row_off)
+    return Postings(ids, tf, p, row_off)

@@ -201,7 +201,7 @@ def _matched_agg_plan(
     buckets = sorted(
         {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
     )
-    fm = ix.shard_file_map(buckets)  # refuses posting layout < 2
+    fm = ix.shard_file_map(buckets)  # refuses posting layout < 3
     side_src = filtered_live_stats(ix, where, where_expr)
     if drop_null_value:
         side_src = side_src.filter(value_col.isNotNull())

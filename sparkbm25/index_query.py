@@ -2,10 +2,11 @@
 
 The reference's search entry point loads a serialized index and answers
 top-k per query (benchmarking/search/search_indices.py:13-55). Ours is a
-per-shard index probe: posting layout 2 clusters each term bucket's
-files by doc-range shard (Index.shard_file_map), so a kernel reads
-exactly its shard's blocks with pyarrow, scores every query of the
-batch in numpy and emits its local top-k. A doc lives in one shard, so
+per-shard index probe: posting layout 3 clusters each term bucket's
+files and the doc_stats rows by doc-range shard (Index.shard_file_map,
+Index.norm_file_map), so a kernel reads exactly its shard's blocks and
+its docs' lengths with pyarrow, scores every query of the batch in
+numpy and emits its local top-k. A doc lives in one shard, so
 per-shard scoring is exact, and results are rank-identical to the
 pure-Python OracleIndex (the reference only promises recall; the north
 rule demands identity: every matching posting is scored).
@@ -38,12 +39,16 @@ direct plan like any other.
 Every route reads a shard's blocks with one reader (_read_shard_blocks:
 pq.ParquetFile per file, row groups pruned by their term statistics, a
 pyarrow Table out) and decodes them with one function
-(codecs.decode_blocks). One kernel serves every query shape: the
+(codecs.decode_blocks). Doc lengths are not stored per posting: the
+shard's norms ((doc id, doc length) arrays, _read_shard_norms; the
+driver route caches them per shard on the Index handle, a Spark task
+reads its own shard's) are gathered for the postings that survive the
+masks (_gather_norms). One kernel serves every query shape: the
 densified exact fold (_sharded_topk_fn) over _decode_tfn, which emits
 its per-shard top-k as an Arrow record batch; only the side-direct
 plan's applyInPandas converts it to pandas. No block is skipped, so a
-search reads only the posting columns (term, n_docs and the doc/tf/dl
-streams, plus positions for fields=), never the stored block bounds.
+search reads only term, n_docs and the doc-id and tf streams (plus
+positions for fields=).
 """
 
 from __future__ import annotations
@@ -122,7 +127,51 @@ def _gseq_col(blocks: pa.Table):
     return blocks.column("gseq") if "gseq" in blocks.column_names else None
 
 
-def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
+def _read_shard_norms(entry: list) -> tuple[np.ndarray, np.ndarray]:
+    """One shard's norms from its doc_stats files ``entry`` ([(gseq,
+    path), ...], Index.norm_file_map): (doc ids sorted ascending as
+    int64, their doc lengths as int32). An id present in several lineage
+    groups (re-ingested after a delete) keeps the row of its newest
+    group, the only copy whose postings survive the tombstone mask.
+    Read like _read_shard_blocks: pq.ParquetFile per file, in the
+    calling thread."""
+    ids, lens, seqs = [np.empty(0, np.int64)], [np.empty(0, np.int32)], [
+        np.empty(0, np.int64)]
+    for g, path in entry:
+        with pq.ParquetFile(path) as f:
+            t = f.read(columns=["doc_id", "doc_len"], use_threads=False)
+        ids.append(t.column("doc_id").to_numpy().astype(np.int64))
+        lens.append(t.column("doc_len").to_numpy().astype(np.int32))
+        seqs.append(np.full(t.num_rows, int(g), np.int64))
+    ids, lens = np.concatenate(ids), np.concatenate(lens)
+    order = np.lexsort((np.concatenate(seqs), ids))
+    ids, lens = ids[order], lens[order]
+    last = np.ones(len(ids), dtype=bool)  # an id's newest group sorts last
+    last[:-1] = ids[1:] != ids[:-1]
+    return ids[last], lens[last]
+
+
+def _gather_norms(norms: tuple, ids: np.ndarray) -> np.ndarray:
+    """Doc lengths (float64) of the posting doc ids ``ids`` from a
+    shard's norms; raises when a posting's doc has no doc_stats row
+    (a corrupt or partially copied index), never scores it with a
+    made-up length."""
+    n_ids, n_lens = norms
+    pos = np.searchsorted(n_ids, ids)
+    if len(ids) and (
+        not len(n_ids)
+        or not np.array_equal(n_ids[np.minimum(pos, len(n_ids) - 1)], ids)
+    ):
+        bad = ids[~_in_sorted(ids, n_ids)]
+        raise ValueError(
+            f"{len(bad)} postings have no doc_stats row (first doc_id "
+            f"{int(bad[0])}); the index's doc_stats and postings disagree"
+        )
+    return n_lens[pos].astype(np.float64)
+
+
+def _decode_tfn(blocks: pa.Table, norms: tuple, k1: float, b: float,
+                avgdl: float,
                 tomb: "tuple | None" = None,
                 qual: "np.ndarray | None" = None,
                 fieldw: tuple | None = None,
@@ -130,7 +179,9 @@ def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
     """Decode a block table into {term: (doc_ids, tf_norm)} with the
     masks applied; terms left with no posting are absent. The one
     decode behind the dense kernel's scoring (one batched
-    codecs.decode_blocks over the term-sorted table).
+    codecs.decode_blocks over the term-sorted table). Each surviving
+    posting's doc length is gathered from the shard's ``norms``
+    (_read_shard_norms) after the masks.
 
     ``fieldw`` ((split, w_title, w_body), index_bm25f_search) scores
     positional-split BM25F: per-posting title tf derives from the
@@ -146,13 +197,13 @@ def _decode_tfn(blocks: pa.Table, k1: float, b: float, avgdl: float,
     blocks = _sorted_blocks(blocks)
     post = decode_blocks(
         blocks.column("n_docs"), blocks.column("docs_vbyte"),
-        tfs=blocks.column("tfs_vbyte"), dls=blocks.column("dls_vbyte"),
+        tfs=blocks.column("tfs_vbyte"),
         pos=blocks.column("pos_vbyte") if fieldw is not None else None,
         gseq=_gseq_col(blocks), tomb=tomb, qual=qual,
     )
     if not len(post.ids):
         return {}
-    dls = post.dls.astype(np.float64)
+    dls = _gather_norms(norms, post.ids)
     if fieldw is not None:
         split, w_t, w_b = fieldw
         tok_starts = np.cumsum(post.tfs) - post.tfs
@@ -252,11 +303,12 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     of it inside its best doc's shard — any group ahead there is ahead
     globally too, its global best being >= its shard-local best).
 
-    Returns ``topk(blocks)``: an Arrow record batch of the shard's tops
+    Returns ``topk(blocks, norms)`` (``norms``: the shard's
+    _read_shard_norms pair): an Arrow record batch of the shard's tops
     (query_id int32, doc_id int64, score float64 [, value string]), or
     None when nothing matches; with ``side``, ``topk_side(blocks,
-    side_pdf)`` returns the same rows as the pandas frame applyInPandas
-    needs."""
+    side_pdf, norms)`` returns the same rows as the pandas frame
+    applyInPandas needs."""
     if collapse and not side:
         raise ValueError("collapse requires the side frame "
                          "(attribute rows double as qualifying ids)")
@@ -271,7 +323,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
                         ("score", pa.float64())]
                        + ([("value", pa.string())] if collapse else []))
 
-    def _run(blocks: pa.Table,
+    def _run(blocks: pa.Table, norms: tuple,
              qual: np.ndarray | None,
              vals: np.ndarray | None = None) -> "pa.RecordBatch | None":
         w_of: dict[str, float] = {
@@ -279,8 +331,8 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         }
         if not blocks.num_rows:
             return None
-        raw = _decode_tfn(blocks, k1, b, avgdl, tomb=tombstones, qual=qual,
-                          fieldw=fieldw)
+        raw = _decode_tfn(blocks, norms, k1, b, avgdl, tomb=tombstones,
+                          qual=qual, fieldw=fieldw)
         if not raw:
             return None
         # group doc universe; HYBRID per-term representation: a dense
@@ -484,15 +536,15 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
             schema=schema,
         )
 
-    def topk(blocks: pa.Table) -> "pa.RecordBatch | None":
-        return _run(blocks, None)
+    def topk(blocks: pa.Table, norms: tuple) -> "pa.RecordBatch | None":
+        return _run(blocks, norms, None)
 
-    def topk_side(blocks: pa.Table,
-                  side_pdf: pd.DataFrame) -> pd.DataFrame:
+    def topk_side(blocks: pa.Table, side_pdf: pd.DataFrame,
+                  norms: tuple) -> pd.DataFrame:
         # side form: side_pdf carries this shard's qualifying ids (with
         # their collapse values); applyInPandas wants a pandas frame
         qual, vals = _parse_side(side_pdf)
-        out = _run(blocks, qual, vals)
+        out = _run(blocks, norms, qual, vals)
         return (out if out is not None else schema.empty_table()).to_pandas()
 
     return topk_side if side else topk
@@ -509,11 +561,13 @@ def _parse_side(side_pdf: pd.DataFrame):
 
 
 def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
-                     fm: dict, tombstones: "tuple | None"):
+                     fm: dict, tombstones: "tuple | None", nm: dict):
     """DIRECT-plan mapInArrow body: each task reads its shard's parquet
-    files straight from the index dir via pyarrow (layout 2's
-    shard-clustered files), runs the per-shard kernel on them and yields
-    its Arrow record batch of tops (a shard with no match yields none).
+    files straight from the index dir via pyarrow (layout 3's
+    shard-clustered files), runs the per-shard kernel on them with the
+    shard's norms (read from ``nm``, Index.norm_file_map, only when a
+    block matched) and yields its Arrow record batch of tops (a shard
+    with no match yields none).
 
     Why: a scan->kernel exchange + JVM->Python Arrow hop costs ~0.9 s
     per batch nearly INDEPENDENT of core count (measured 0.90 s at
@@ -536,15 +590,20 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
     JVM; the file map ships once per task in this closure, like the
     query weights already do."""
     need_gseq = tombstones is not None and len(tombstones[0]) > 0
-    entries = [fm[s] for s in sorted(fm)]
+    shards = sorted(fm)
+    entries = [fm[s] for s in shards]
+    norm_entries = [nm.get(s, []) for s in shards]
     cols = list(cols)
     terms = list(terms)
 
     def gen(batches):
         for work in batches:
             for i in work.column("id").to_pylist():
-                out = kernel(_read_shard_blocks(entries[i], cols, terms,
-                                                need_gseq))
+                blocks = _read_shard_blocks(entries[i], cols, terms,
+                                            need_gseq)
+                if not blocks.num_rows:
+                    continue
+                out = kernel(blocks, _read_shard_norms(norm_entries[i]))
                 if out is not None:
                     yield out
 
@@ -554,7 +613,7 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
 def _read_shard_blocks(entry: list, cols: list[str],
                        terms: list[str], need_gseq: bool) -> pa.Table:
     """The one block reader of every route: the rows of ``terms`` in one
-    shard's posting files ``entry`` ([(gseq, path), ...], layout-2
+    shard's posting files ``entry`` ([(gseq, path), ...], layout-3
     clustered tree), in file order. Per file it reads only the row
     groups whose ``term`` min/max statistics can hold a query term (row
     groups are term-sorted within a bucket file; missing statistics
@@ -638,15 +697,18 @@ def _collapse_window(shard_tops: DataFrame, k: int) -> DataFrame:
 
 
 def _direct_side_fn(kernel_side, cols: list[str], terms: list[str],
-                    file_map: dict, need_gseq: bool):
+                    file_map: dict, need_gseq: bool,
+                    norm_map: dict | None = None):
     """SIDE-DIRECT plan body (r06): applyInPandas over the SIDE frame
     alone — qualifying ids or facet attribute rows, grouped by shard —
     with each group's posting blocks pyarrow-read IN-TASK from the
     shard-clustered layout. The blocks never cross an exchange; only
     the small side does. This is how `where=` filtered search, collapse
     and the match-set aggregations consume the direct layout; the
-    kernel takes ``(blocks, side)`` frames and masks tombstones with
-    the pair in its own closure (``need_gseq`` tags the blocks for it).
+    kernel takes ``(blocks, side)`` frames — plus the shard's norms
+    when ``norm_map`` (Index.norm_file_map) is given, as scoring needs —
+    and masks tombstones with the pair in its own closure
+    (``need_gseq`` tags the blocks for it).
 
     Validity: every group key is a WHOLE shard (the side is keyed by
     shard_shift), and a shard absent from the side is skipped, which
@@ -656,10 +718,14 @@ def _direct_side_fn(kernel_side, cols: list[str], terms: list[str],
     the query terms)."""
 
     def fn(key: tuple, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        blocks = _read_shard_blocks(
-            file_map.get(int(key[0]), []), cols, terms, need_gseq
-        )
-        return kernel_side(blocks, side_pdf)
+        s = int(key[0])
+        blocks = _read_shard_blocks(file_map.get(s, []), cols, terms,
+                                    need_gseq)
+        if norm_map is None:
+            return kernel_side(blocks, side_pdf)
+        norms = _read_shard_norms(norm_map.get(s, []) if blocks.num_rows
+                                  else [])
+        return kernel_side(blocks, side_pdf, norms)
 
     return fn
 
@@ -687,9 +753,9 @@ def _direct_search(ix: Index, kernel, cols: list[str], terms: list[str],
         # file map are already driver-resident. Bit-exact: same kernel
         # closure and the same global merge (_merge_tops). The result
         # stays in this process: collecting it crosses no JVM boundary.
-        return _local_search(ix.spark, kernel, cols, terms, fm, tomb, k)
+        return _local_search(ix, kernel, cols, terms, fm, tomb, k)
     tops = ix.spark.range(len(fm), numPartitions=len(fm)).mapInArrow(
-        _direct_topk_gen(kernel, cols, terms, fm, tomb),
+        _direct_topk_gen(kernel, cols, terms, fm, tomb, ix.norm_file_map()),
         schema="query_id int, doc_id long, score double",
     )
     if len(occ) * len(fm) * k <= LOCAL_SEARCH_MAX_POSTINGS:
@@ -774,21 +840,25 @@ def _serve_in_driver(ix: Index, occ: dict, terms: list[str],
     return w * (1.0 - 1.0 / p) <= CROSSOVER_POSTINGS
 
 
-def _local_search(spark, kernel, cols: list[str], terms: list[str],
+def _local_search(ix: Index, kernel, cols: list[str], terms: list[str],
                   fm: dict, tomb: "tuple | None", k: int) -> DataFrame:
     """Driver-side execution of the direct route: read each shard's block
     files with _read_shard_blocks, run the unchanged per-shard kernel
-    and merge the tops with _merge_tops, the same merge the collected
-    Spark plan ends in. Shards run one after another in this thread: a
-    call below the route crossover reads a few small files, so a
-    per-call thread pool cost more CPU than it saved wall time.
-    Returns a LocalFrame: the call does all its work here, and collecting
-    the result reads the merged Arrow table without a JVM round trip.
-    Every call recomputes from the parquet artifact."""
+    with the shard's norms (cached on the handle, Index.shard_norms) and
+    merge the tops with _merge_tops, the same merge the collected Spark
+    plan ends in. Shards run one after another in this thread: a call
+    below the route crossover reads a few small files, so a per-call
+    thread pool cost more CPU than it saved wall time. Returns a
+    LocalFrame: the call does all its work here, and collecting the
+    result reads the merged Arrow table without a JVM round trip. Every
+    call recomputes its postings from the parquet artifact."""
     need_gseq = tomb is not None and len(tomb[0]) > 0
-    tops = [kernel(_read_shard_blocks(fm[s], cols, terms, need_gseq))
-            for s in sorted(fm)]
-    return _merge_tops(spark, [t for t in tops if t is not None], k)
+    tops = []
+    for s in sorted(fm):
+        blocks = _read_shard_blocks(fm[s], cols, terms, need_gseq)
+        if blocks.num_rows:
+            tops.append(kernel(blocks, ix.shard_norms(s)))
+    return _merge_tops(ix.spark, [t for t in tops if t is not None], k)
 
 
 PHRASE_MATCH_SCHEMA = "query_id int, doc_id long, ptf int, dl int"
@@ -823,8 +893,9 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
     forward walk bit-for-bit.
 
     Tombstones mask per (id, group-seq) at decode, exactly like the
-    scoring kernels."""
-    def topk(blocks: pa.Table) -> "pa.RecordBatch | None":
+    scoring kernels; doc lengths are gathered from the shard's ``norms``
+    after the mask."""
+    def topk(blocks: pa.Table, norms: tuple) -> "pa.RecordBatch | None":
         if not blocks.num_rows:
             return None
         # per-term doc order: blocks of one (term, shard) partition the
@@ -832,16 +903,16 @@ def _phrase_match_fn(q_phrases: dict[int, list[str]],
         blocks = _sorted_blocks(blocks, ("term", "first_doc"))
         post = decode_blocks(
             blocks.column("n_docs"), blocks.column("docs_vbyte"),
-            tfs=blocks.column("tfs_vbyte"), dls=blocks.column("dls_vbyte"),
-            pos=blocks.column("pos_vbyte"), gseq=_gseq_col(blocks),
-            tomb=tombstones,
+            tfs=blocks.column("tfs_vbyte"), pos=blocks.column("pos_vbyte"),
+            gseq=_gseq_col(blocks), tomb=tombstones,
         )
+        post_dls = _gather_norms(norms, post.ids).astype(np.int64)
         tok_off = np.r_[0, np.cumsum(post.tfs)]
         tdata: dict[str, tuple] = {}
         for t, lo, hi in _term_slices(blocks, post.row_off):
             ids_t = post.ids[lo:hi]
             tfs_t = post.tfs[lo:hi]
-            dls_t = post.dls[lo:hi]
+            dls_t = post_dls[lo:hi]
             pos_t = post.pos[tok_off[lo]:tok_off[hi]]
             if np.any(ids_t[1:] < ids_t[:-1]):
                 # blocks of one (term, shard) ascend only WITHIN a lineage
@@ -1002,13 +1073,13 @@ def index_phrase_search(
     if not fm:
         return empty
     cols = ["term", "n_docs", "first_doc",
-            "docs_vbyte", "tfs_vbyte", "dls_vbyte", "pos_vbyte"]
+            "docs_vbyte", "tfs_vbyte", "pos_vbyte"]
     # range-scan work items (see _direct_topk_gen: pure-JVM input, file
     # lists in the closure — no PythonRDD scan)
     matched = spark.range(len(fm), numPartitions=len(fm)).mapInArrow(
         _direct_topk_gen(
             _phrase_match_fn(q_phrases, tombstones=tomb, slop=slop),
-            cols, terms, fm, tomb,
+            cols, terms, fm, tomb, ix.norm_file_map(),
         ),
         schema=PHRASE_MATCH_SCHEMA,
     )
@@ -1232,7 +1303,7 @@ def index_search(
     `where=`/`where_expr`/`collapse` take the side-direct plan.
     Tombstones change no plan: the kernel masks dead postings with the
     index's tombstone pair, shipped in its closure. An index whose
-    posting layout predates 2 is refused (Index.shard_file_map);
+    posting layout predates 3 is refused (Index.shard_file_map);
     ``compact_index`` upgrades it.
 
     Execution: a direct-plan call served in the driver, and one whose
@@ -1514,10 +1585,10 @@ def index_search(
     buckets = sorted(
         {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
     )
-    fm = ix.shard_file_map(buckets)  # refuses posting layout < 2
+    fm = ix.shard_file_map(buckets)  # refuses posting layout < 3
     if not fm:
         return local_df(spark, [], out_schema)
-    cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
+    cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte"]
     if fw is not None:
         cols.append("pos_vbyte")
     # collapse values ride the side frame exactly like qualifying ids
@@ -1541,7 +1612,8 @@ def index_search(
         *val_cols,
     )
     shard_tops = side_df.groupBy("shard_id").applyInPandas(
-        _direct_side_fn(kern, cols, terms, fm, need_gseq=tomb is not None),
+        _direct_side_fn(kern, cols, terms, fm, need_gseq=tomb is not None,
+                        norm_map=ix.norm_file_map()),
         schema=(
             "query_id int, doc_id long, score double"
             + (", value string" if collapse is not None else "")

@@ -44,6 +44,7 @@ from .catalog import CasConflict, get_catalog
 from .localrel import LocalFrame, local_df
 
 from .build import (
+    POSTING_LAYOUT,
     BuildParams,
     CorpusStats,
     StageTimer,
@@ -51,6 +52,7 @@ from .build import (
     compute_corpus_stats,
     params_dict,
     term_stats_from_blocks,
+    write_doc_stats,
     write_group_blocks,
 )
 
@@ -521,6 +523,10 @@ def _build_index_locked(
         with timer.time("stats"):
             stats = stats_override or compute_corpus_stats(corpus, params)
         m["build"] = params_dict(params, stats)
+        if stats_override is not None:
+            # total_tokens may describe another corpus (e.g. base + future
+            # stream): finalize's tokenizer guard cannot compare with it
+            m["build"]["stats_override"] = True
         _cas_publish(index_dir, m, token)
     else:
         b = m["build"]
@@ -528,6 +534,12 @@ def _build_index_locked(
             raise ValueError(
                 "manifest predates the shard_shift layout (engine < 0.2); "
                 "rebuild the index with the current engine"
+            )
+        if int(b.get("posting_layout", 1)) < POSTING_LAYOUT:
+            raise ValueError(
+                f"cannot resume a build of posting layout "
+                f"{b.get('posting_layout', 1)} (this engine writes layout "
+                f"{POSTING_LAYOUT}); rebuild the index into a fresh directory"
             )
         stats = CorpusStats(
             n_docs=b["n_docs"], avgdl=b["avgdl"], min_doc=b["min_doc"],
@@ -584,24 +596,19 @@ def _build_index_locked(
             with timer.time(f"group_{g}"):
                 from .analysis import tokens_col
 
-                (
+                write_doc_stats(
                     sub.select(
                         "doc_id",
                         F.size(tokens_col("text")).alias("doc_len"),
                         *(["text"] if params.store_text else []),
                         *params.attr_cols,
-                    ).write.mode("overwrite").parquet(d_stage)
+                    ),
+                    d_stage, stats.shard_shift,
                 )
                 r_stage = os.path.join(staging, "runs", f"group={g}")
                 blocks = build_postings(sub, params, stats,
                                         spill_dir=r_stage)
-                # resumed pre-0.8 builds keep their layout-1 tree: mixed
-                # directory depths break Spark partition discovery (fresh
-                # manifests record POSTING_LAYOUT via params_dict)
-                write_group_blocks(
-                    blocks, g_stage,
-                    layout=int(m["build"].get("posting_layout", 1)),
-                )
+                write_group_blocks(blocks, g_stage)
                 shutil.rmtree(r_stage, ignore_errors=True)
             # publish gate: only the claim holder may move staged output
             # into the artifact and update the manifest
@@ -643,10 +650,23 @@ def _build_index_locked(
                 F.sum(
                     F.length("docs_vbyte")
                     + F.length("tfs_vbyte")
-                    + F.length("dls_vbyte")
                     + F.coalesce(F.length("pos_vbyte"), F.lit(0))
                 ).alias("payload_bytes"),
+                F.sum("sum_tf").alias("tokens"),
             ).first()
+            # tokenizer guard: the kernels score with the JVM-tokenized
+            # doc_stats lengths while stage 1 counts postings with the
+            # Python tokenizer; total_tokens is the JVM count of the same
+            # corpus, so any disagreement would skew every score silently
+            tokens = int(size_row.tokens or 0)
+            if (not m["build"].get("stats_override")
+                    and tokens != stats.total_tokens):
+                raise ValueError(
+                    f"postings hold {tokens} tokens but the corpus stats "
+                    f"count {stats.total_tokens}: the Python and JVM "
+                    "tokenizers disagree, so stored doc lengths would not "
+                    "match the postings"
+                )
             m["metrics"]["total_postings"] = int(size_row.postings or 0)
             m["metrics"]["total_blocks"] = int(size_row.blocks or 0)
             m["metrics"]["payload_bytes"] = int(size_row.payload_bytes or 0)
@@ -691,7 +711,12 @@ def _build_index_locked(
 
 
 class Index:
-    """Handle over a built index directory (the query engine's input)."""
+    """Handle over a built index directory (the query engine's input).
+
+    Driver memory: besides the vocabulary cache and the tombstone pair,
+    a handle caches the norms (doc id + doc length, 12 B per doc) of
+    every shard a driver-route search has touched; refresh() drops
+    them."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.index_dir = index_dir
@@ -713,10 +738,12 @@ class Index:
         self.shard_shift: int | None = b.get("shard_shift")
         self.block_size: int = b.get("block_size", 128)
         # physical postings layout generation (build.POSTING_LAYOUT):
-        # >= 2 means shard-clustered files, which every search plan reads
-        # (shard_file_map); pre-0.8 indexes report 1 and need compaction
+        # every search plan reads layout 3 (shard_file_map); older
+        # indexes need compaction
         self.posting_layout: int = int(b.get("posting_layout", 1))
         self._bucket_files: dict[int, dict[int, list[tuple[int, str]]]] = {}
+        self._norm_files: dict[int, list[tuple[int, str]]] | None = None
+        self._norms: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._dfs: dict[str, DataFrame] = {}
         self._stats_cache: dict[str, int | None] = {}
         self._stats_preloaded = False
@@ -910,6 +937,8 @@ class Index:
         # direct-route file listing: appended groups add files, compaction
         # deletes them — a stale map would read the pre-refresh tree
         self._bucket_files.clear()
+        self._norm_files = None
+        self._norms.clear()
         self.manifest = read_manifest(self.index_dir)
         b = self.manifest["build"]
         self.n_docs = b["n_docs"]
@@ -936,10 +965,24 @@ class Index:
             for g, rec in (self.manifest.get("completed_groups") or {}).items()
         }
 
+    def _group_seqs_of_paths(self, pattern: str) -> dict[int, list]:
+        """{shard_id: [(group_seq, path), ...]} of the files matching the
+        glob ``pattern`` (a group=G/.../shard_id=S/ tree)."""
+        seq_of = self.group_seqs()
+        out: dict[int, list[tuple[int, str]]] = {}
+        for path in glob.glob(pattern):
+            parts = dict(
+                seg.split("=", 1) for seg in path.split(os.sep) if "=" in seg
+            )
+            out.setdefault(int(parts["shard_id"]), []).append(
+                (seq_of.get(parts["group"], 0), path)
+            )
+        return out
+
     def shard_file_map(
         self, buckets: "list[int] | None" = None
     ) -> dict[int, list[tuple[int, str]]]:
-        """{shard_id: [(group_seq, file_path), ...]} for layout-2 postings,
+        """{shard_id: [(group_seq, file_path), ...]} for layout-3 postings,
         restricted to the given term_bucket dirs (None = all buckets).
 
         This is every search plan's work-item source: each search
@@ -949,39 +992,50 @@ class Index:
         is one filesystem walk per bucket, cached on the handle (the
         artifact is immutable for a handle's lifetime, same contract as
         the stats cache)."""
-        if self.posting_layout < 2:
+        if self.posting_layout < POSTING_LAYOUT:
             raise ValueError(
-                "shard_file_map needs posting layout >= 2 (engine >= "
-                "0.8); rebuild or compact this index first"
+                f"search needs posting layout >= {POSTING_LAYOUT} (engine "
+                f">= 0.10), this index has layout {self.posting_layout}; "
+                "compact it first (streaming.compact_index)"
             )
         if buckets is None:
             buckets = list(range(self.num_term_buckets))
-        seq_of = {
-            g: int(info.get("seq", 0))
-            for g, info in self.manifest["completed_groups"].items()
-        }
         out: dict[int, list[tuple[int, str]]] = {}
         for bkt in buckets:
             cached = self._bucket_files.get(bkt)
             if cached is None:
-                cached = {}
-                pat = os.path.join(
-                    self.index_dir, "postings", "group=*",
-                    f"term_bucket={bkt}", "shard_id=*", "*.parquet",
-                )
-                for path in glob.glob(pat):
-                    parts = dict(
-                        seg.split("=", 1)
-                        for seg in path.split(os.sep)
-                        if "=" in seg
+                cached = self._bucket_files[bkt] = self._group_seqs_of_paths(
+                    os.path.join(
+                        self.index_dir, "postings", "group=*",
+                        f"term_bucket={bkt}", "shard_id=*", "*.parquet",
                     )
-                    s = int(parts["shard_id"])
-                    gseq = seq_of.get(parts["group"], 0)
-                    cached.setdefault(s, []).append((gseq, path))
-                self._bucket_files[bkt] = cached
+                )
             for s, lst in cached.items():
                 out.setdefault(s, []).extend(lst)
         return out
+
+    def norm_file_map(self) -> dict[int, list[tuple[int, str]]]:
+        """{shard_id: [(group_seq, file_path), ...]} of the doc_stats
+        files (doc_stats/group=G/shard_id=S/) — where a search task reads
+        its shard's doc lengths (index_query._read_shard_norms). One
+        filesystem walk, cached on the handle like shard_file_map."""
+        if self._norm_files is None:
+            self._norm_files = self._group_seqs_of_paths(os.path.join(
+                self.index_dir, "doc_stats", "group=*", "shard_id=*",
+                "*.parquet",
+            ))
+        return self._norm_files
+
+    def shard_norms(self, shard: int) -> tuple[np.ndarray, np.ndarray]:
+        """One shard's norms, (sorted doc ids, their doc lengths), read
+        once per handle for the driver route (12 B per doc)."""
+        if shard not in self._norms:
+            from .index_query import _read_shard_norms
+
+            self._norms[shard] = _read_shard_norms(
+                self.norm_file_map().get(shard, [])
+            )
+        return self._norms[shard]
 
     def tombstones_pair(self):
         """(ids, seqs): sorted int64 doc ids with their per-id MAX delete

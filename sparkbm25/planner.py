@@ -19,8 +19,10 @@ from .build import BuildParams
 
 # empirical constants (measured on the synthetic corpus; order-of-magnitude
 # is what matters for sizing, exactly like the reference's 1.1 fudge factor)
-BYTES_PER_POSTING_RAW = 16  # int64 doc + int32 tf + int32 dl in runs
-BYTES_PER_POSTING_COMPRESSED = 4.5  # delta-varbyte docs + vbyte tf/dl
+BYTES_PER_POSTING_RAW = 16  # int64 doc + int64 tf per decoded posting
+# delta-varbyte docs + vbyte tfs + block and file overhead; an upper bound
+# since posting layout 3 (3.46 B/posting on the benchmark index)
+BYTES_PER_POSTING_COMPRESSED = 4.5
 OVERHEAD = 1.2  # arrow/pandas copies inside kernels (reference uses 1.1)
 
 

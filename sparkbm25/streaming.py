@@ -36,6 +36,7 @@ from .build import (
     CorpusStats,
     build_postings,
     term_stats_from_blocks,
+    write_doc_stats,
     write_group_blocks,
 )
 from .jobs import read_manifest, _write_manifest
@@ -81,13 +82,24 @@ def append_batch(
     time); the next compaction purges the dead copy and keeps this one.
     The lock also serializes the manifest read-modify-write against
     concurrent delete_docs (an unlocked rewrite could clobber a
-    just-appended tombstone file or n_deleted)."""
+    just-appended tombstone file or n_deleted).
+
+    An index of an older posting layout is refused: the new group would
+    be written in layout 3 beside it, and search reads layout 3 only;
+    compact_index upgrades it first."""
     from .jobs import artifact_lock
 
     with artifact_lock(index_dir, f"append:{epoch_id}"):
         m = read_manifest(index_dir)
         if m is None:
             raise FileNotFoundError(f"no base index manifest at {index_dir}")
+        layout = int(m["build"].get("posting_layout", 1))
+        if layout < POSTING_LAYOUT:
+            raise ValueError(
+                f"index at {index_dir} has posting layout {layout}; compact "
+                f"it first (compact_index writes layout {POSTING_LAYOUT}) "
+                "before appending"
+            )
         params, stats = _stats_from_manifest(m)
         g = f"stream_{epoch_id}"
         prior = m["completed_groups"].get(g)
@@ -98,26 +110,21 @@ def append_batch(
         gdir = os.path.join(index_dir, "postings", f"group={g}")
         ddir = os.path.join(index_dir, "doc_stats", f"group={g}")
         t0 = time.time()
-        (
+        write_doc_stats(
             corpus_batch.select(
                 "doc_id",
                 F.size(tokens_col("text")).alias("doc_len"),
                 *(["text"] if params.store_text else []),
                 *params.attr_cols,
-            ).write.mode("overwrite").parquet(ddir)
+            ),
+            ddir, stats.shard_shift,
         )
         r_tmp = os.path.join(index_dir, f"_runs_spill_{g}")
         try:
             blocks = build_postings(
                 corpus_batch, params, stats, spill_dir=r_tmp
             )
-            # match the INDEX's existing layout: shard-dir files appended
-            # into a layout-1 tree would give heterogeneous partition
-            # depths, which Spark's partition discovery rejects;
-            # compaction upgrades
-            write_group_blocks(
-                blocks, gdir, layout=int(m["build"].get("posting_layout", 1))
-            )
+            write_group_blocks(blocks, gdir)
         finally:
             # failed epochs must not leak spill dirs under index_dir
             shutil.rmtree(r_tmp, ignore_errors=True)
@@ -517,13 +524,18 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     block fragmentation all grow linearly with uptime.
 
     ZERO retokenization, corpus never re-read: a block's binary payload
-    (first-absolute + positive-gaps varbyte, codecs.delta_encode) is
-    byte-compatible with a stage-2 merge RUN (codecs.segment_delta_gaps of
-    a single segment), so compaction is read blocks (all groups) → project
-    to RUN_SCHEMA → the SAME repartition(term, shard)+sortWithinPartitions
-    + streaming-merge kernel the build uses (build._make_merge_gen) → one
-    group. Scales like the build's stage 2 alone: one compact shuffle of
-    compressed runs, ~4 B/posting.
+    (first-absolute + positive-gaps varbyte) is byte-compatible with a
+    stage-2 merge RUN (codecs.segment_delta_gaps of a single segment), so
+    compaction is read blocks (all groups) → project to RUN_SCHEMA → the
+    SAME repartition(term, shard)+sortWithinPartitions + streaming-merge
+    kernel the build uses (build._make_merge_gen) → one group. Scales
+    like the build's stage 2 alone: one compact shuffle of compressed
+    runs, ~3 B/posting.
+
+    It is also the one posting-layout migration: the projection reads
+    only the doc-id, tf and position streams, which every layout stores
+    the same way, and the output (postings and shard-partitioned
+    doc_stats) is written in layout 3 whatever the input's layout.
 
     Audits before swap: merged posting count must equal the sum over input
     groups (the merge kernel additionally raises on any cross-group
@@ -575,18 +587,16 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         # segment-merge model): dead postings are dropped during the
         # re-block, doc_stats drops the dead rows, and the corpus stats
         # (n_docs, avgdl) are RECOMPUTED over the survivors so idf/tf_norm
-        # reflect the alive corpus — block metadata is re-derived with the
-        # new avgdl inside the same merge kernel, so the stored block
-        # bounds stay consistent with scoring. No tombstones -> bit-exact compaction
-        # (the original contract, still pinned by tests).
+        # reflect the alive corpus. No tombstones -> the same postings and
+        # doc_stats rows (the original contract, still pinned by tests).
         tdir_tomb = os.path.join(index_dir, TOMBSTONES_DIR)
         n_deleted = int((m.get("metrics") or {}).get("n_deleted", 0))
         tomb = None
         n_tomb_ids = 0
         dsdir = os.path.join(index_dir, "doc_stats")
         ds_all = spark.read.parquet(dsdir)
-        ds = ds_all.drop("group")
-        new_avgdl = stats.avgdl
+        # layout 3 trees carry the shard_id directory level, older ones not
+        ds = ds_all.drop("group", "shard_id")
         if n_deleted and os.path.exists(tdir_tomb):
             from .jobs import live_doc_stats_df, tombstone_pair
 
@@ -597,7 +607,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             n_tomb_ids = len(tomb[0])
             ds = live_doc_stats_df(
                 spark, index_dir, m, ds_all, tomb
-            ).drop("group")
+            ).drop("group", "shard_id")
             row = ds.agg(
                 F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
             ).first()
@@ -611,7 +621,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             "term", "shard_id", "n_docs",
             F.col("docs_vbyte").alias("docs_vb"),
             F.col("tfs_vbyte").alias("tfs_vb"),
-            F.col("dls_vbyte").alias("dls_vb"),
             *([F.col("pos_vbyte").alias("pos_vb")]
               if params.store_positions else []),
             group_seq_expr(m).alias("gseq")
@@ -620,13 +629,13 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         merged_parts = max(params.num_shards, 8)
         # hash on the two write-partition columns (same scheme as
         # build_postings): no child sampling — the blocks scan runs once —
-        # and the write stays shard-clustered (layout 2)
+        # and the write stays shard-clustered
         bucket = F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets))
         new_blocks = (
             runs.repartition(merged_parts, F.col("shard_id"), bucket)
             .sortWithinPartitions("shard_id", "term")
             .mapInArrow(
-                _make_merge_gen(params, new_avgdl, tombstones=tomb),
+                _make_merge_gen(params, tombstones=tomb),
                 schema=BLOCK_SCHEMA,
             )
             .withColumn(
@@ -634,9 +643,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                 F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets)),
             )
         )
-        # compaction rewrites the WHOLE postings tree, so it always writes
-        # (and the manifest below records) the current layout — a layout-1
-        # index upgrades to the shard-clustered layout here
+        # compaction rewrites the WHOLE postings and doc_stats trees, so
+        # it always writes (and the manifest below records) the current
+        # layout — an older index upgrades to layout 3 here
         write_group_blocks(
             new_blocks, os.path.join(sdir, "postings", "group=compacted")
         )
@@ -659,9 +668,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                 )
         # doc_stats: collapse the per-group layout into one group too
         # (already tombstone-filtered when purging)
-        ds.write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sdir, "doc_stats", "group=compacted"))
+        write_doc_stats(
+            ds, os.path.join(sdir, "doc_stats", "group=compacted"),
+            stats.shard_shift,
+        )
         if tomb is not None:
             # purge audit BEFORE the destructive swap: the staged doc_stats
             # must hold exactly the alive corpus — a mismatch aborts while

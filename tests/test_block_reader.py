@@ -21,7 +21,7 @@ from sparkbm25.jobs import Index, build_index, delete_docs
 from sparkbm25.streaming import append_batch, finalize_stream
 from sparkbm25.xxhash64 import spark_pmod_bucket
 
-COLS = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
+COLS = ["term", "n_docs", "docs_vbyte", "tfs_vbyte"]
 
 
 def _dataset_read(entry, cols, terms, need_gseq):

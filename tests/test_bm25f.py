@@ -198,12 +198,12 @@ def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
 
 def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
                                                        monkeypatch):
-    """No query shape reads the block-bound columns: `blockmax` runs the
-    same dense fold as `sharded`, so on the driver route it must read
-    exactly the `sharded` call's columns — none of first_doc/last_doc/
-    max_tf*/min_tf*/min_dl/max_dl — and return the `sharded` rows bit
-    for bit, rank-identical to the pure-Python oracles. Shapes: plain
-    OR, min_match=2, mode='and', a k1/b override, exclude= and
+    """`blockmax` runs the same dense fold as `sharded`, so on the
+    driver route it must read exactly the `sharded` call's columns —
+    term, n_docs and the doc-id and tf streams (plus positions for
+    fields=), never first_doc or sum_tf — and return the `sharded` rows
+    bit for bit, rank-identical to the pure-Python oracles. Shapes:
+    plain OR, min_match=2, mode='and', a k1/b override, exclude= and
     fields=."""
     import sparkbm25.index_query as iq
     from sparkbm25.jobs import Index
@@ -248,10 +248,9 @@ def test_blockmax_unpruned_shapes_read_sharded_columns(spark, f_built,
         want, want_cols = run(search, strategy="sharded", **kw)
         got, got_cols = run(search, strategy="blockmax", **kw)
         assert got_cols == want_cols and len(got_cols) == 1, kw
-        assert not set(next(iter(got_cols))) & {
-            "first_doc", "last_doc", "max_tf_norm", "min_tf_norm",
-            "max_tf", "min_tf", "min_dl", "max_dl",
-        }, kw
+        assert set(next(iter(got_cols))) == {
+            "term", "n_docs", "docs_vbyte", "tfs_vbyte",
+        } | ({"pos_vbyte"} if search is iq.index_bm25f_search else set()), kw
         assert got == want and got, kw
         want_oracle = sorted(want_oracle)
         assert [g[:3] for g in got] == [w[:3] for w in want_oracle], kw

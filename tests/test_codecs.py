@@ -9,16 +9,44 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from sparkbm25.build import segment_binary
 from sparkbm25.codecs import (
-    delta_decode,
-    delta_encode,
-    pack_blocks,
-    unpack_block,
+    decode_blocks,
+    segment_delta_gaps,
+    segment_delta_restore,
     vbyte_decode,
     vbyte_encode,
+    vbyte_encode_arrays,
 )
 
 EDGE_GAPS = [1, 127, 128, 16383, 16384, 2**28]
+
+
+def _delta_roundtrip(ids: np.ndarray) -> np.ndarray:
+    """One segment through segment_delta_gaps + varbyte and back."""
+    zero = np.array([0], dtype=np.int64)
+    gaps = segment_delta_gaps(ids, zero)
+    buf, _ = vbyte_encode_arrays(gaps)
+    return segment_delta_restore(
+        vbyte_decode(buf.tobytes(), len(ids)), zero,
+        np.array([len(ids)], dtype=np.int64),
+    )
+
+
+def _encode_blocks(ids: np.ndarray, tfs: np.ndarray, block_size: int):
+    """One term's postings cut into blocks the way the merge writes them:
+    (n_docs, docs, tfs) Arrow columns, each block's doc ids restarting
+    the delta at its first id, one varbyte stream per column sliced per
+    block (segment_binary)."""
+    import pyarrow as pa
+
+    starts = np.arange(0, len(ids), block_size, dtype=np.int64)
+    n_docs = np.diff(np.r_[starts, len(ids)]).astype(np.int32)
+    docs_buf, docs_sz = vbyte_encode_arrays(segment_delta_gaps(ids, starts))
+    tfs_buf, tfs_sz = vbyte_encode_arrays(tfs)
+    return (pa.array(n_docs, pa.int32()),
+            segment_binary(docs_buf, docs_sz, starts),
+            segment_binary(tfs_buf, tfs_sz, starts))
 
 
 def test_vbyte_roundtrip_edges():
@@ -52,19 +80,21 @@ def test_vbyte_roundtrip_property(xs):
 
 def test_delta_roundtrip():
     ids = np.array([0, 1, 128, 16511, 16512, 2**40], dtype=np.int64)
-    assert delta_decode(delta_encode(ids)).tolist() == ids.tolist()
+    assert _delta_roundtrip(ids).tolist() == ids.tolist()
+    neg = np.array([-(2**62), -5, 0, 2**62], dtype=np.int64)  # hash64 ids
+    assert _delta_roundtrip(neg).tolist() == neg.tolist()
 
 
 def test_delta_rejects_nonincreasing():
     with pytest.raises(ValueError):
-        delta_encode(np.array([1, 1, 2]))
+        segment_delta_gaps(np.array([1, 1, 2]), np.array([0]))
 
 
 @settings(max_examples=100, deadline=None)
 @given(st.sets(st.integers(min_value=0, max_value=2**50), min_size=1, max_size=500))
 def test_delta_roundtrip_property(xs):
     ids = np.array(sorted(xs), dtype=np.int64)
-    assert delta_decode(delta_encode(ids)).tolist() == ids.tolist()
+    assert _delta_roundtrip(ids).tolist() == ids.tolist()
 
 
 @settings(max_examples=100, deadline=None)
@@ -76,54 +106,49 @@ def test_delta_roundtrip_property(xs):
     )
 )
 def test_segment_codec_roundtrip(segments):
-    from sparkbm25.codecs import (
-        segment_delta_gaps,
-        segment_delta_restore,
-        slice_bytes,
-        vbyte_encode_with_sizes,
-    )
+    import pyarrow as pa
 
     segs = [np.array(sorted(s), dtype=np.int64) for s in segments]
     values = np.concatenate(segs)
     lens = np.array([len(s) for s in segs], dtype=np.int64)
     starts = np.r_[0, np.cumsum(lens)[:-1]]
     gaps = segment_delta_gaps(values, starts)
-    buf, sizes = vbyte_encode_with_sizes(gaps)
+    buf, sizes = vbyte_encode_arrays(gaps)
     # whole-stream restore
     restored = segment_delta_restore(
-        vbyte_decode(buf, count=len(values)), starts, lens
+        vbyte_decode(buf.tobytes(), count=len(values)), starts, lens
     )
     assert restored.tolist() == values.tolist()
     # per-segment slices decode independently
-    for piece, seg in zip(slice_bytes(buf, sizes, lens), segs):
+    pieces = segment_binary(buf, sizes, starts).to_pylist()
+    for piece, seg in zip(pieces, segs):
         got = np.cumsum(vbyte_decode(piece, count=len(seg)).astype(np.int64))
         assert got.tolist() == seg.tolist()
+    # and in one batched decode, as the kernels read them
+    post = decode_blocks(pa.array(lens), segment_binary(buf, sizes, starts))
+    assert post.ids.tolist() == values.tolist()
+    assert post.row_off.tolist() == np.r_[starts, len(values)].tolist()
 
 
-def test_pack_unpack_blocks():
+def test_block_streams_roundtrip():
+    """One term's postings cut into 128-posting blocks round-trip through
+    decode_blocks: ids, tfs, per-block posting counts and each block's
+    first doc id."""
     n = 300
     rng = np.random.default_rng(0)
     ids = np.cumsum(rng.integers(1, 1000, size=n)).astype(np.int64)
     tfs = rng.integers(1, 50, size=n).astype(np.int64)
-    ub = rng.random(n)
-    blocks = list(pack_blocks(ids, tfs, ub, block_size=128))
-    assert [b["n_docs"] for b in blocks] == [128, 128, 44]
-    got_ids, got_tfs = [], []
-    for b in blocks:
-        i, t = unpack_block(b["docs_vbyte"], b["tfs_vbyte"], b["n_docs"])
-        got_ids.extend(i.tolist())
-        got_tfs.extend(t.tolist())
-        lo = b["block_id"] * 128
-        assert b["first_doc"] == ids[lo]
-        assert b["max_tf_norm"] == pytest.approx(ub[lo : lo + b["n_docs"]].max())
-    assert got_ids == ids.tolist()
-    assert got_tfs == tfs.tolist()
+    n_docs, docs, tf_col = _encode_blocks(ids, tfs, 128)
+    assert n_docs.to_pylist() == [128, 128, 44]
+    post = decode_blocks(n_docs, docs, tfs=tf_col)
+    assert post.ids.tolist() == ids.tolist()
+    assert post.tfs.tolist() == tfs.tolist()
+    assert post.pos is None
+    assert post.row_off.tolist() == [0, 128, 256, 300]
+    assert post.ids[post.row_off[:-1]].tolist() == ids[[0, 128, 256]].tolist()
 
 
 def test_segment_binary_slices_one_stream():
-    from sparkbm25.build import segment_binary
-    from sparkbm25.codecs import vbyte_encode_arrays
-
     vals = np.array([1, 300, 2, 70000, 5], dtype=np.uint64)
     buf, sizes = vbyte_encode_arrays(vals)
     arr = segment_binary(buf, sizes, np.array([0, 2, 4]))
@@ -136,8 +161,6 @@ def test_segment_binary_slices_one_stream():
 def test_segment_binary_rejects_int32_offset_overflow():
     """Arrow binary offsets are int32; a stream past 2^31 - 1 bytes must
     raise, not wrap into a corrupt array."""
-    from sparkbm25.build import segment_binary
-
     sizes = np.array([1 << 30, 1 << 30], dtype=np.int64)  # 2^31 bytes
     with pytest.raises(ValueError, match="int32"):
         segment_binary(np.zeros(1, dtype=np.uint8), sizes, np.array([0, 1]))
@@ -145,36 +168,36 @@ def test_segment_binary_rejects_int32_offset_overflow():
 
 def _random_block_rows(rng, gseq, ids_pool, block_size=16):
     """One lineage group's posting blocks of a single term: per-block
-    streams from pack_blocks (docs, tfs) plus dls and per-posting
-    position streams, with the postings they encode."""
+    doc-id and tf streams (_encode_blocks) plus per-posting position
+    streams, with the postings they encode."""
     ids = np.sort(rng.choice(ids_pool, size=len(ids_pool) // 2,
                              replace=False)).astype(np.int64)
     tfs = rng.integers(1, 6, size=len(ids)).astype(np.int64)
-    dls = rng.integers(5, 400, size=len(ids)).astype(np.int64)
     pos = [np.sort(rng.choice(400, size=int(t), replace=False))
            for t in tfs]
+    n_docs, docs, tf_col = _encode_blocks(ids, tfs, block_size)
     rows = []
-    for blk in pack_blocks(ids, tfs, np.ones(len(ids)), block_size):
-        lo = blk["block_id"] * block_size
-        hi = lo + blk["n_docs"]
+    for bi, (n, d, t) in enumerate(zip(n_docs.to_pylist(), docs.to_pylist(),
+                                        tf_col.to_pylist())):
+        lo = bi * block_size
         rows.append({
-            "n_docs": blk["n_docs"], "docs": blk["docs_vbyte"],
-            "tfs": blk["tfs_vbyte"], "dls": vbyte_encode(dls[lo:hi]),
-            "pos": vbyte_encode(np.concatenate(
-                [delta_encode(p) for p in pos[lo:hi]]
-            )),
+            "n_docs": n, "docs": d, "tfs": t,
+            "pos": vbyte_encode(np.concatenate([
+                segment_delta_gaps(p, np.array([0])) for p in pos[lo:lo + n]
+            ])),
             "gseq": gseq,
         })
     return rows
 
 
 def _reference_decode(rows, tomb=None, qual=None):
-    """Per-block reference: unpack_block for ids/tfs, one vbyte_decode
-    for dls, per-posting cumsum for positions; masks per posting."""
-    ids_o, tfs_o, dls_o, pos_o, row_off = [], [], [], [], [0]
+    """Per-block reference: one vbyte_decode + cumsum per block for ids,
+    one vbyte_decode for tfs, per-posting cumsum for positions; masks
+    per posting."""
+    ids_o, tfs_o, pos_o, row_off = [], [], [], [0]
     for r in rows:
-        ids, tfs = unpack_block(r["docs"], r["tfs"], r["n_docs"])
-        dls = vbyte_decode(r["dls"], r["n_docs"]).astype(np.int64)
+        ids = np.cumsum(vbyte_decode(r["docs"], r["n_docs"]).astype(np.int64))
+        tfs = vbyte_decode(r["tfs"], r["n_docs"]).astype(np.int64)
         flat = vbyte_decode(r["pos"], int(tfs.sum())).astype(np.int64)
         cuts = np.cumsum(tfs)[:-1]
         pos = [np.cumsum(g) for g in np.split(flat, cuts)]
@@ -186,10 +209,9 @@ def _reference_decode(rows, tomb=None, qual=None):
                 continue
             ids_o.append(d)
             tfs_o.append(int(tfs[i]))
-            dls_o.append(int(dls[i]))
             pos_o.extend(pos[i].tolist())
         row_off.append(len(ids_o))
-    return ids_o, tfs_o, dls_o, pos_o, row_off
+    return ids_o, tfs_o, pos_o, row_off
 
 
 def _to_table(rows):
@@ -199,27 +221,22 @@ def _to_table(rows):
         "n_docs": pa.array([r["n_docs"] for r in rows], pa.int32()),
         "docs": pa.array([r["docs"] for r in rows], pa.binary()),
         "tfs": pa.array([r["tfs"] for r in rows], pa.binary()),
-        "dls": pa.array([r["dls"] for r in rows], pa.binary()),
         "pos": pa.array([r["pos"] for r in rows], pa.binary()),
         "gseq": pa.array([r["gseq"] for r in rows], pa.int64()),
     })
 
 
 def _decode(tbl, **kw):
-    from sparkbm25.codecs import decode_blocks
-
     return decode_blocks(
         tbl.column("n_docs"), tbl.column("docs"), tfs=tbl.column("tfs"),
-        dls=tbl.column("dls"), pos=tbl.column("pos"),
-        gseq=tbl.column("gseq"), **kw,
+        pos=tbl.column("pos"), gseq=tbl.column("gseq"), **kw,
     )
 
 
 def _assert_matches(got, want):
-    ids, tfs, dls, pos, row_off = want
+    ids, tfs, pos, row_off = want
     assert got.ids.dtype == np.int64 and got.ids.tolist() == ids
     assert got.tfs.tolist() == tfs
-    assert got.dls.tolist() == dls
     assert got.pos.tolist() == pos
     assert got.row_off.tolist() == row_off
 

@@ -1,5 +1,5 @@
 """Direct search plans over the shard-clustered posting layout
-(posting_layout 2, engine >= 0.8).
+(posting_layout 2 onward, engine >= 0.8; layout 3 since 0.10).
 
 The direct plan exists because a scan->kernel exchange + JVM->Python
 Arrow hop costs ~0.9 s per batch nearly independent of core count
@@ -12,7 +12,7 @@ it served in the driver (no Spark job) and bit-identical to the Spark
 route; on the Spark route, under the driver row budget the direct plan is
 one Spark job (one task per shard) merged in the driver, over it one
 Exchange (the topk_window merge), with identical rows on both sides; and
-a layout-1 index refused until compact_index upgrades it.
+a layout-1 index refused until compact_index upgrades it to layout 3.
 """
 
 from types import SimpleNamespace
@@ -78,7 +78,7 @@ def _distributed(monkeypatch):
 
 
 def test_direct_is_default_and_bit_exact(built, oracle40):
-    assert built.posting_layout >= 2
+    assert built.posting_layout == 3
     _assert_oracle(_rows(index_search(built, QS, k=8)),
                    oracle40.search_all(QS, k=8))
 
@@ -196,16 +196,15 @@ def test_layout1_index_falls_back_and_refuses_direct(built, spark,
                    oracle40.search_all(QS[:5], k=8))
 
 
-def test_layout1_index_refused_until_compacted(spark, tmp_path,
-                                               monkeypatch):
+def test_layout1_index_refused_until_compacted(spark, tmp_path):
     """A pre-0.8 (layout-1) index fails in one place,
     Index.shard_file_map, for every search surface (phrase search:
     test_phrase_slop); compact_index is the one migration. After it
-    the compacted files carry the full block layout (bound columns
-    included) and a tuned k1/b query stays oracle-identical."""
+    the compacted files carry exactly the layout-3 block columns and a
+    tuned k1/b query stays oracle-identical."""
     import pyarrow.parquet as pq
+    from legacy_layout import rewrite_as_legacy
 
-    import sparkbm25.build as build_mod
     from sparkbm25.facets import index_facets
     from sparkbm25.streaming import compact_index
 
@@ -213,15 +212,14 @@ def test_layout1_index_refused_until_compacted(spark, tmp_path,
         spark.createDataFrame(make_transcripts_pdf(30)), "conv_seq"
     ).select("doc_id", "text", "role")
     d = str(tmp_path / "ix_layout1")
-    with monkeypatch.context() as m:
-        m.setattr(build_mod, "POSTING_LAYOUT", 1)
-        build_index(
-            corpus, d,
-            BuildParams(num_shards=4, salt_factor=2, num_term_buckets=4,
-                        lineage_groups=2, doc_id_scheme="conv_seq",
-                        attr_cols=("role",), store_positions=True),
-            "layout1",
-        )
+    build_index(
+        corpus, d,
+        BuildParams(num_shards=4, salt_factor=2, num_term_buckets=4,
+                    lineage_groups=2, doc_id_scheme="conv_seq",
+                    attr_cols=("role",), store_positions=True),
+        "layout1",
+    )
+    rewrite_as_legacy(d, 1)
     ix = Index(spark, d)
     assert ix.posting_layout == 1
     with pytest.raises(ValueError, match="compact"):
@@ -230,12 +228,12 @@ def test_layout1_index_refused_until_compacted(spark, tmp_path,
         index_facets(ix, QS[:5], by="role")
     compact_index(spark, d)
     ix = Index(spark, d)
-    assert ix.posting_layout == 2
+    assert ix.posting_layout == 3
     path = next(p for lst in ix.shard_file_map().values() for _, p in lst)
-    assert {
-        "first_doc", "last_doc", "max_tf_norm", "min_tf_norm",
-        "max_tf", "min_tf", "min_dl", "max_dl",
-    } <= set(pq.read_schema(path).names)
+    assert set(pq.read_schema(path).names) == {
+        "term", "block_id", "n_docs", "first_doc", "sum_tf",
+        "docs_vbyte", "tfs_vbyte", "pos_vbyte",
+    }
     ora = OracleIndex.build([(r.doc_id, r.text) for r in corpus.collect()])
     _assert_oracle(_rows(index_search(ix, QS, k=8)),
                    ora.search_all(QS, k=8))

@@ -16,15 +16,10 @@ import pandas as pd
 import pytest
 
 from sparkbm25.build import BuildParams, _make_merge_gen
-from sparkbm25.codecs import (
-    segment_delta_gaps,
-    vbyte_encode,
-    vbyte_encode_with_sizes,
-)
+from sparkbm25.codecs import segment_delta_gaps, vbyte_encode
 
 
-def _ref_group_blocks(term, shard_id, docs, tfs, dls, pos_flat,
-                      k1, b, bs, avgdl):
+def _ref_group_blocks(term, shard_id, docs, tfs, pos_flat, bs):
     """The former per-group merge loop (reference semantics)."""
     order = np.argsort(docs, kind="stable")
     counts = tfs.astype(np.int64)
@@ -36,11 +31,7 @@ def _ref_group_blocks(term, shard_id, docs, tfs, dls, pos_flat,
     )
     pos_flat = pos_flat[np.repeat(starts[order], c_p) + within]
     pos_ends = np.cumsum(c_p)
-    docs, tfs, dls = docs[order], tfs[order], dls[order]
-    tfn = (
-        tfs.astype(np.float64) * (k1 + 1.0)
-        / (tfs + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
-    )
+    docs, tfs = docs[order], tfs[order]
     n = docs.size
     rows = []
     for bi, lo in enumerate(range(0, n, bs)):
@@ -54,15 +45,10 @@ def _ref_group_blocks(term, shard_id, docs, tfs, dls, pos_flat,
         )
         rows.append((
             term, int(shard_id), bi, int(hi - lo),
-            int(docs[lo]), int(docs[hi - 1]),
-            float(tfn[lo:hi].max()), float(tfn[lo:hi].min()),
-            int(tfs[lo:hi].sum()), int(tfs[lo:hi].max()),
-            int(tfs[lo:hi].min()), int(dls[lo:hi].min()),
-            int(dls[lo:hi].max()),
+            int(docs[lo]), int(tfs[lo:hi].sum()),
             vbyte_encode(segment_delta_gaps(
                 docs[lo:hi], np.array([0], dtype=np.int64))),
             vbyte_encode(tfs[lo:hi].astype(np.uint64)),
-            vbyte_encode(dls[lo:hi].astype(np.uint64)),
             pos_vbyte,
         ))
     return rows
@@ -72,7 +58,7 @@ def _make_runs(rng, n_groups=7, max_runs=4, max_docs=37):
     """Synthetic RUN_SCHEMA rows (sorted by (shard, term) like the real
     exchange), with a positions stream per posting."""
     rows = []
-    truth = {}  # (term, shard) -> (docs, tfs, dls, pos_flat)
+    truth = {}  # (term, shard) -> (docs, tfs, pos_flat)
     for g in range(n_groups):
         term = f"t{g % 4:02d}_{g}"
         shard = g % 3
@@ -80,13 +66,11 @@ def _make_runs(rng, n_groups=7, max_runs=4, max_docs=37):
                               replace=False)
         all_docs.sort()
         tfs = rng.integers(1, 6, len(all_docs))
-        dls = rng.integers(5, 400, len(all_docs))
         pos = np.concatenate([
             np.sort(rng.choice(1000, size=t, replace=False)) for t in tfs
         ])
         truth[(term, shard)] = (all_docs.astype(np.int64),
                                 tfs.astype(np.int64),
-                                dls.astype(np.int64),
                                 pos.astype(np.int64))
         # split into 1..max_runs doc-disjoint sorted runs
         n_runs = int(rng.integers(1, max_runs + 1))
@@ -96,7 +80,7 @@ def _make_runs(rng, n_groups=7, max_runs=4, max_docs=37):
             sel = assign == r
             if not sel.any():
                 continue
-            d, t, l = all_docs[sel], tfs[sel], dls[sel]
+            d, t = all_docs[sel], tfs[sel]
             p = np.concatenate([
                 pos[tok_starts[i]:tok_starts[i] + tfs[i]]
                 for i in np.flatnonzero(sel)
@@ -107,7 +91,6 @@ def _make_runs(rng, n_groups=7, max_runs=4, max_docs=37):
                 "docs_vb": vbyte_encode(
                     segment_delta_gaps(d.astype(np.int64), seg0)),
                 "tfs_vb": vbyte_encode(t.astype(np.uint64)),
-                "dls_vb": vbyte_encode(l.astype(np.uint64)),
                 "pos_vb": vbyte_encode(segment_delta_gaps(
                     p.astype(np.int64),
                     (np.cumsum(t) - t).astype(np.int64))),
@@ -123,7 +106,7 @@ def test_vectorized_positional_merge_matches_group_loop(seed):
     runs, truth = _make_runs(rng)
     params = BuildParams(store_positions=True, block_size=8,
                          lineage_groups=1)
-    gen = _make_merge_gen(params, avgdl=37.5)
+    gen = _make_merge_gen(params)
     import pyarrow as pa
 
     rb = pa.RecordBatch.from_pandas(runs.drop(columns=["gseq"]),
@@ -131,10 +114,9 @@ def test_vectorized_positional_merge_matches_group_loop(seed):
     out = pd.concat([o.to_pandas() for o in gen(iter([rb]))],
                     ignore_index=True)
     ref_rows = []
-    for (term, shard), (d, t, l, p) in truth.items():
+    for (term, shard), (d, t, p) in truth.items():
         ref_rows.extend(_ref_group_blocks(
-            term, shard, d, t, l, p,
-            params.k1, params.b, params.block_size, 37.5))
+            term, shard, d, t, p, params.block_size))
     ref = pd.DataFrame(ref_rows, columns=list(out.columns))
     key = ["term", "shard_id", "block_id"]
     out = out.sort_values(key).reset_index(drop=True)
@@ -157,7 +139,7 @@ def test_vectorized_positional_merge_with_tombstones():
     seqs = np.ones(len(victims), dtype=np.int64)
     params = BuildParams(store_positions=True, block_size=8,
                          lineage_groups=1)
-    gen = _make_merge_gen(params, avgdl=37.5, tombstones=(victims, seqs))
+    gen = _make_merge_gen(params, tombstones=(victims, seqs))
     import pyarrow as pa
 
     rb = pa.RecordBatch.from_pandas(runs, preserve_index=False)
@@ -165,7 +147,7 @@ def test_vectorized_positional_merge_with_tombstones():
                     ignore_index=True)
     ref_rows = []
     vset = set(victims.tolist())
-    for (term, shard), (d, t, l, p) in truth.items():
+    for (term, shard), (d, t, p) in truth.items():
         keep = np.array([dd not in vset for dd in d])
         if not keep.any():
             continue
@@ -175,8 +157,7 @@ def test_vectorized_positional_merge_with_tombstones():
             for i in np.flatnonzero(keep)
         ])
         ref_rows.extend(_ref_group_blocks(
-            term, shard, d[keep], t[keep], l[keep], p_keep,
-            params.k1, params.b, params.block_size, 37.5))
+            term, shard, d[keep], t[keep], p_keep, params.block_size))
     ref = pd.DataFrame(ref_rows, columns=list(out.columns))
     key = ["term", "shard_id", "block_id"]
     out = out.sort_values(key).reset_index(drop=True)

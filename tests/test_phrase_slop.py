@@ -245,18 +245,17 @@ def test_phrase_direct_route_bit_identical(spark, built, docs, slop):
     assert "FlatMapGroupsInPandas" not in plan, plan
 
 
-def test_phrase_direct_refused_on_layout1(spark, corpus, docs, tmp_path,
-                                          monkeypatch):
+def test_phrase_direct_refused_on_layout1(spark, corpus, docs, tmp_path):
     """A layout-1 index has no per-shard posting files for the direct
     plan, and no other phrase plan exists: phrase search refuses it until
-    compact_index rewrites the postings as layout 2."""
-    import sparkbm25.build as build_mod
+    compact_index rewrites the postings as layout 3."""
+    from legacy_layout import rewrite_as_legacy
+
     from sparkbm25.streaming import compact_index
 
     d = str(tmp_path / "ixl1")
-    with monkeypatch.context() as m:
-        m.setattr(build_mod, "POSTING_LAYOUT", 1)
-        build_index(corpus, d, PARAMS, source_fingerprint="phl1")
+    build_index(corpus, d, PARAMS, source_fingerprint="phl1")
+    rewrite_as_legacy(d, 1)
     ix = Index(spark, d)
     assert ix.posting_layout == 1
     phrases = _phrases_with_gaps(docs)
@@ -264,6 +263,6 @@ def test_phrase_direct_refused_on_layout1(spark, corpus, docs, tmp_path,
         index_phrase_search(ix, phrases, k=K, slop=1)
     compact_index(spark, d)
     ix = Index(spark, d)
-    assert ix.posting_layout == 2
+    assert ix.posting_layout == 3
     _cmp(index_phrase_search(ix, phrases, k=K, slop=1).collect(),
          _slop_oracle(docs, phrases, k=K, slop=1))

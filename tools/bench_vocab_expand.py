@@ -57,7 +57,6 @@ def main() -> None:
                         1, (F.col("id") % 13 + 3).cast("int")),
                 ).alias("term"),
                 (F.col("h") % 9973 + 1).cast("long").alias("df"),
-                F.lit(1.5).alias("max_tf_norm"),
             )
             .dropDuplicates(["term"])
         )
