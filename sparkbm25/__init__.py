@@ -22,7 +22,7 @@ Package layout
                  multimodal column plumbing
 """
 
-__version__ = "0.10"  # bump on ANY index-layout change (0.10: posting_layout 3 — doc lengths stored once per doc in shard-partitioned doc_stats, no per-posting dl stream, no block bound columns, no tf-norm bound in term_stats; 0.9.1: entry index stores n_chars for histogram/stats aggregations [no layout change, cache-key refresh]; 0.9: spill-free hash-partitioned merge default, indexed BM25F + pruned boolean surfaces [no layout change, cache-key refresh]; 0.8: shard-clustered posting files [posting_layout 2] + direct no-exchange search route; 0.7: raw per-block tf and doc-length bounds + optional positional stream; 0.6: per-group tombstones)
+__version__ = "0.10.1"  # bump on ANY index-layout change (0.10.1: BuildParams drops the opt-in runs materialization field, so every job_id changes [no layout change, cache-key refresh]; 0.10: posting_layout 3 — doc lengths stored once per doc in shard-partitioned doc_stats, no per-posting dl stream, no block bound columns, no tf-norm bound in term_stats; 0.9.1: entry index stores n_chars for histogram/stats aggregations [no layout change, cache-key refresh]; 0.9: hash-partitioned merge default, runs no longer materialized, indexed BM25F + pruned boolean surfaces [no layout change, cache-key refresh]; 0.8: shard-clustered posting files [posting_layout 2] + direct no-exchange search route; 0.7: raw per-block tf and doc-length bounds + optional positional stream; 0.6: per-group tombstones)
 
 K1 = 1.2
 B = 0.75

@@ -145,15 +145,6 @@ class BuildParams:
     # proximity queries at ~1 extra byte per token occurrence
     store_positions: bool = False
     tokenizer: str = "ascii_alnum_lower"
-    # materialize stage-1 SPIMI runs to staging parquet before the merge
-    # exchange. OFF by default: the merge partitions by HASH on
-    # (shard_id, term_bucket) — no sampling, so stage 1 runs exactly once
-    # and pipelines straight into the shuffle (measured at sf0.1: the r05
-    # spill cost −32% build throughput and 2× peak RSS vs this path).
-    # Turn ON for very long builds on shared storage where a durable
-    # stage boundary (resume the merge without re-tokenizing) is worth a
-    # full extra write+read of the runs.
-    spill_runs: bool = False
 
     def validate(self) -> None:
         if self.block_size < 8:
@@ -180,12 +171,32 @@ class CorpusStats:
     min_doc: int
     max_doc: int
     shard_shift: int  # shard_id = doc_id >> shard_shift (arithmetic shift)
-    total_tokens: int = 0
     extras: dict = field(default_factory=dict)
 
     @property
     def shard_span(self) -> int:
         return 1 << self.shard_shift
+
+
+def _stats_from_manifest(m: dict) -> tuple[BuildParams, CorpusStats]:
+    """The build params and frozen corpus stats a manifest records
+    (params_dict) — what appends, compaction and a resumed build reuse."""
+    b = m["build"]
+    params = BuildParams(
+        k1=b["k1"], b=b["b"], block_size=b["block_size"],
+        num_shards=b["num_shards"], salt_factor=b["salt_factor"],
+        num_term_buckets=b["num_term_buckets"],
+        lineage_groups=b["lineage_groups"],
+        doc_id_scheme=b["doc_id_scheme"], store_text=b["store_text"],
+        attr_cols=tuple(b.get("attr_cols") or ()),
+        store_positions=bool(b.get("store_positions", False)),
+    )
+    stats = CorpusStats(
+        n_docs=b["n_docs"], avgdl=b["avgdl"], min_doc=b["min_doc"],
+        max_doc=b["max_doc"], shard_shift=b["shard_shift"],
+        extras=b.get("extras", {}),
+    )
+    return params, stats
 
 
 def compute_corpus_stats(corpus: DataFrame, params: BuildParams) -> CorpusStats:
@@ -207,7 +218,6 @@ def compute_corpus_stats(corpus: DataFrame, params: BuildParams) -> CorpusStats:
         F.count(F.when(F.col("doc_id").isNull(), 1)).alias("null_ids"),
         F.count("doc_id").alias("n"),
         F.avg(F.size(tokens_col("text"))).alias("avgdl"),
-        F.sum(F.size(tokens_col("text"))).alias("tot"),
         F.min("doc_id").alias("lo"),
         F.max("doc_id").alias("hi"),
     ]
@@ -284,44 +294,34 @@ def compute_corpus_stats(corpus: DataFrame, params: BuildParams) -> CorpusStats:
         min_doc=int(row.lo),
         max_doc=int(row.hi),
         shard_shift=shift,
-        total_tokens=int(row.tot),
         extras=extras,
     )
 
 
 def _make_runs_gen(shard_shift: int, store_positions: bool = False):
-    """Stage-1 kernel: corpus batches -> COMPRESSED sorted runs per
-    (term, shard).
+    """Stage-1 kernel (mapInArrow): corpus batches -> COMPRESSED sorted
+    runs per (term, shard).
 
-    Vectorized end-to-end: tf as a run-length count over one lexsort by
-    (term, doc_id) of the Arrow token stream, run boundaries where
-    (term, shard) changes, then ONE varbyte encode call
-    per stream for the whole batch with per-run byte slicing — runs ship at
-    ~3-4 B/posting instead of 16 B raw, cutting the SPIMI shuffle ~4-5x
-    (at 10^12 turns the runs shuffle is the dominant network cost).
+    Vectorized end-to-end and Arrow-native: the token stream stays ONE
+    Arrow buffer (analysis.tokenize_flat_arrow — the Catalyst tokenizer's
+    stream, ASCII guarded), dictionary_encode factorizes it (codes +
+    unique terms, no Python objects) and an Arrow string sort ranks the
+    small vocabulary (tokens are pure [a-z0-9]+, so byte order == str
+    order). One lexsort by (term, doc_id) of the batch gives tf as a
+    run-length count, run boundaries fall where (term, shard) changes,
+    and each stream is varbyte-encoded in ONE call for the whole batch
+    and emitted as a BinaryArray whose offsets index straight into the
+    encoded buffer — runs ship at ~3-4 B/posting instead of 16 B raw,
+    cutting the SPIMI shuffle ~4-5x (at 10^12 turns the runs shuffle is
+    the dominant network cost).
 
-    With ``store_positions`` the batch is instead flattened to one
-    (term, doc, token_position) frame and lexsorted once — postings come
-    out with their position lists attached (first-absolute + gaps varbyte
-    per posting, ~1 B per token occurrence), still one encode call per
-    stream."""
+    With ``store_positions`` each token's position in its doc is the
+    lexsort's last key, and the runs carry a per-posting position stream
+    (first-absolute + gaps varbyte per posting, ~1 B per token
+    occurrence); without it no position is computed."""
     from .codecs import segment_delta_gaps
 
     def gen(batches) -> "Iterator":
-        # ARROW-NATIVE stage-1 kernel (r07; mapInArrow): the pandas shape
-        # materialized a Python str object per token (concatenate of the
-        # findall lists + pd.factorize over the object array) and sliced
-        # every run's three vbyte streams into per-run Python bytes —
-        # together ~40% of the stage's measured core time. Here the token
-        # stream stays ONE Arrow buffer end to end: tokenize via Arrow
-        # split (analysis.tokenize_flat_arrow — identical stream, ASCII
-        # guarded), factorize via dictionary_encode (codes + unique terms,
-        # no Python objects), rank the small vocabulary with an Arrow
-        # string sort (tokens are pure [a-z0-9]+, so byte order == str
-        # order == the former object argsort), and emit the run streams
-        # as BinaryArrays whose offsets index straight into the single
-        # encoded buffer (zero bytes-object per run). Values identical to
-        # the former pandas kernel row for row.
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -335,8 +335,7 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             total = int(lens_d.sum())
             if total == 0:
                 continue
-            doc_ids = rb.column(0).to_numpy()
-            flat_doc = np.repeat(doc_ids, lens_d)
+            flat_doc = np.repeat(rb.column(0).to_numpy(), lens_d)
             dic = pc.dictionary_encode(flat)
             codes = dic.indices.to_numpy().astype(np.int64)
             uniq = dic.dictionary
@@ -345,7 +344,14 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             rank[order_u] = np.arange(len(uniq), dtype=np.int64)
             tcode = rank[codes]
             uniq_sorted = uniq.take(pa.array(order_u))
-            order = np.lexsort((flat_doc, tcode))
+            if store_positions:
+                tok_starts = np.cumsum(lens_d) - lens_d
+                flat_pos = np.arange(total, dtype=np.int64) - np.repeat(
+                    tok_starts, lens_d
+                )
+                order = np.lexsort((flat_pos, flat_doc, tcode))
+            else:
+                order = np.lexsort((flat_doc, tcode))
             tcode_s = tcode[order]
             doc_s = flat_doc[order]
             # posting boundaries: (term, doc) change; tf = occurrences
@@ -370,7 +376,14 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
             gaps = segment_delta_gaps(docs, starts)
             docs_buf, docs_sz = vbyte_encode_arrays(gaps)
             tfs_buf, tfs_sz = vbyte_encode_arrays(tfs)
-            n_runs = len(starts)
+            if store_positions:
+                # per-posting delta restart (first absolute); a run's
+                # byte span starts at its first posting's first token
+                pos_gaps = segment_delta_gaps(flat_pos[order], p_starts)
+                pos_buf, pos_sz = vbyte_encode_arrays(pos_gaps)
+                pos_col = segment_binary(pos_buf, pos_sz, p_starts[starts])
+            else:
+                pos_col = pa.nulls(len(starts), pa.binary())
             yield pa.RecordBatch.from_arrays(
                 [
                     uniq_sorted.take(pa.array(post_tcode[starts])),
@@ -378,93 +391,14 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                     pa.array(lens.astype(np.int32), type=pa.int32()),
                     segment_binary(docs_buf, docs_sz, starts),
                     segment_binary(tfs_buf, tfs_sz, starts),
-                    pa.nulls(n_runs, pa.binary()),
+                    pos_col,
                 ],
                 names=["term", "shard_id", "n_docs",
                        "docs_vb", "tfs_vb", "pos_vb"],
             )
 
-    def gen_pos(batches) -> "Iterator":
-        # Arrow-native positional stage-1 (r07; mapInArrow) — the same
-        # conversion as `gen` (tokens stay one Arrow buffer,
-        # dictionary_encode + byte-order vocabulary rank replaces
-        # np.unique over an object array, run streams emitted as
-        # zero-copy BinaryArrays), plus the per-posting position stream.
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    return gen
 
-        from .analysis import tokenize_flat_arrow
-        from .codecs import vbyte_encode_arrays
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            flat, lens_d = tokenize_flat_arrow(rb.column(1))
-            total = int(lens_d.sum())
-            if total == 0:
-                continue
-            doc_ids = rb.column(0).to_numpy()
-            flat_doc = np.repeat(doc_ids, lens_d)
-            tok_starts = np.cumsum(lens_d) - lens_d
-            flat_pos = np.arange(total, dtype=np.int64) - np.repeat(
-                tok_starts, lens_d
-            )
-            dic = pc.dictionary_encode(flat)
-            codes = dic.indices.to_numpy().astype(np.int64)
-            uniq_d = dic.dictionary
-            order_u = pc.sort_indices(uniq_d).to_numpy().astype(np.int64)
-            rank = np.empty(len(uniq_d), dtype=np.int64)
-            rank[order_u] = np.arange(len(uniq_d), dtype=np.int64)
-            tcode = rank[codes]
-            uniq_sorted = uniq_d.take(pa.array(order_u))
-            # one lexsort of the whole batch: (term, doc, position)
-            order = np.lexsort((flat_pos, flat_doc, tcode))
-            tcode_s = tcode[order]
-            doc_s = flat_doc[order]
-            pos_s = flat_pos[order]
-            # posting boundaries: (term, doc) change; tf = positions/posting
-            pchange = np.ones(total, dtype=bool)
-            pchange[1:] = (tcode_s[1:] != tcode_s[:-1]) | (
-                doc_s[1:] != doc_s[:-1]
-            )
-            p_starts = np.flatnonzero(pchange)
-            p_lens = np.r_[p_starts[1:], total] - p_starts
-            post_doc = doc_s[p_starts]
-            post_tf = p_lens.astype(np.uint64)
-            post_tcode = tcode_s[p_starts]
-            post_shard = post_doc >> shard_shift
-            n_post = len(p_starts)
-            # run boundaries over postings: (term, shard) change — shard is
-            # monotone in doc (arithmetic >>), so runs are contiguous
-            rchange = np.ones(n_post, dtype=bool)
-            rchange[1:] = (post_tcode[1:] != post_tcode[:-1]) | (
-                post_shard[1:] != post_shard[:-1]
-            )
-            r_starts = np.flatnonzero(rchange)
-            r_lens = np.r_[r_starts[1:], n_post] - r_starts
-            gaps = segment_delta_gaps(post_doc, r_starts)
-            docs_buf, docs_sz = vbyte_encode_arrays(gaps)
-            tfs_buf, tfs_sz = vbyte_encode_arrays(post_tf)
-            # positions: per-posting delta restart (first absolute)
-            pos_gaps = segment_delta_gaps(pos_s, p_starts)
-            pos_buf, pos_sz = vbyte_encode_arrays(pos_gaps)
-            # position-stream run boundaries in TOKEN space (each run's
-            # byte span covers all its postings' positions)
-            tok_run_starts = p_starts[r_starts]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    uniq_sorted.take(pa.array(post_tcode[r_starts])),
-                    pa.array(post_shard[r_starts], type=pa.int64()),
-                    pa.array(r_lens.astype(np.int32), type=pa.int32()),
-                    segment_binary(docs_buf, docs_sz, r_starts),
-                    segment_binary(tfs_buf, tfs_sz, r_starts),
-                    segment_binary(pos_buf, pos_sz, tok_run_starts),
-                ],
-                names=["term", "shard_id", "n_docs",
-                       "docs_vb", "tfs_vb", "pos_vb"],
-            )
-
-    return gen_pos if store_positions else gen
 
 _BLOCK_COLS = [
     "term", "shard_id", "block_id", "n_docs", "first_doc", "sum_tf",
@@ -645,59 +579,52 @@ def _make_merge_gen(params: BuildParams,
 
 
 def build_postings(
-    corpus: DataFrame, params: BuildParams, stats: CorpusStats,
-    spill_dir: str | None = None,
+    corpus: DataFrame, params: BuildParams, shard_shift: int
 ) -> DataFrame:
     """corpus (doc_id, text) -> block rows DataFrame (BLOCK_SCHEMA + term_bucket).
 
     The macro-aggregation — analog of the reference's whole-dataset index
-    fold (faiss_gpu_index_cagra_builder.py:227-279).
-
-    ``spill_dir``: when ``params.spill_runs`` (or a caller forces it by
-    passing a dir with the flag on), materialize the stage-1 runs there
-    before the merge exchange — the classic disk-based SPIMI shape for
-    very long builds on shared storage (a durable stage boundary: the
-    merge can resume without re-tokenizing). The DEFAULT path skips it:
-    the merge exchange is a plain HASH repartition on (shard_id,
-    term_bucket) — no child sampling, so stage 1 executes exactly once
-    and pipelines into the shuffle. (History: layout v2 first used
-    repartitionByRange(shard_id, term), whose sampling re-ran stage 1 —
-    1.65x build wall; the r05 spill fixed the double-compute but cost
-    −32% throughput and 2x peak RSS at sf0.1. Hash on exactly the two
-    write-partition columns needs neither: equal (shard_id, term) keys
-    share a (shard_id, term_bucket) hash key, so every run group still
-    merges whole, and a write task owns whole (bucket, shard) combos, so
-    the partitionBy("term_bucket", "shard_id") write stays
-    shard-CLUSTERED (layout 2 onward) with no extra shuffle.)"""
+    fold (faiss_gpu_index_cagra_builder.py:227-279): the stage-1 runs
+    pipeline straight into merge_runs' exchange, so the corpus is
+    tokenized exactly once."""
     n_parts = params.num_shards * params.salt_factor
     salted = corpus.select("doc_id", "text").repartition(
         n_parts, F.pmod(F.xxhash64("doc_id"), F.lit(n_parts))
     )
-    # stage-1 kernels are Arrow-native (r07): the token stream,
-    # vocabulary, and run byte streams never become Python objects
-    # (see _make_runs_gen.gen / gen_pos)
     runs = salted.mapInArrow(
-        _make_runs_gen(stats.shard_shift, params.store_positions),
+        _make_runs_gen(shard_shift, params.store_positions),
         schema=RUN_SCHEMA,
     )
-    if spill_dir is not None and params.spill_runs:
-        runs.write.mode("overwrite").parquet(spill_dir)
-        # explicit schema: an empty group's spill dir has no footers
-        runs = corpus.sparkSession.read.schema(RUN_SCHEMA).parquet(spill_dir)
-    merged_parts = max(params.num_shards, n_parts // 2)
-    # Balance: num_shards*num_term_buckets hash keys over merged_parts
-    # (<= num_shards*salt_factor/2) partitions — >= 2*buckets keys per
+    # Balance: num_shards*num_term_buckets hash keys over
+    # max(num_shards, n_parts // 2) partitions — >= 2*buckets keys per
     # partition in expectation, and one key's bytes are bounded by
     # shard_span*avgdl/num_term_buckets, so no partition can exceed a
     # small multiple of the mean regardless of term skew.
+    return merge_runs(runs, params, max(params.num_shards, n_parts // 2))
+
+
+def merge_runs(runs: DataFrame, params: BuildParams, n_parts: int,
+               tombstones: "tuple | None" = None) -> DataFrame:
+    """Runs (RUN_SCHEMA columns [+ gseq]) -> block rows (BLOCK_SCHEMA +
+    term_bucket): the merge plan shared by the build and compact_index.
+
+    The exchange is a plain HASH repartition on exactly the two
+    write-partition columns (shard_id, term_bucket): no child sampling,
+    so the runs' producer executes once. Equal (shard_id, term) keys
+    share a hash key, so every run group merges whole, and a write task
+    owns whole (bucket, shard) combos, so the
+    partitionBy("term_bucket", "shard_id") write stays shard-CLUSTERED
+    with no extra shuffle. (History: repartitionByRange(shard_id, term)
+    re-ran stage 1 for its sampling, 1.65x build wall; materializing the
+    runs first cost −32% throughput and 2x peak RSS at sf0.1.)
+    ``tombstones`` purges dead copies while re-blocking
+    (_make_merge_gen)."""
     bucket = F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets))
-    blocks = (
-        runs.repartition(merged_parts, F.col("shard_id"), bucket)
+    return (
+        runs.repartition(n_parts, F.col("shard_id"), bucket)
         .sortWithinPartitions("shard_id", "term")
-        .mapInArrow(_make_merge_gen(params), schema=BLOCK_SCHEMA)
-    )
-    return blocks.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets))
+        .mapInArrow(_make_merge_gen(params, tombstones), schema=BLOCK_SCHEMA)
+        .withColumn("term_bucket", bucket)
     )
 
 
@@ -776,7 +703,6 @@ def params_dict(params: BuildParams, stats: CorpusStats) -> dict:
         max_doc=stats.max_doc,
         shard_shift=stats.shard_shift,
         shard_span=stats.shard_span,
-        total_tokens=stats.total_tokens,
         # audited shard-balance facts (provided-id quantile sharding) must
         # survive kill/resume: the admission check reads max_shard_docs
         extras=dict(stats.extras),

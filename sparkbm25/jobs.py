@@ -36,10 +36,12 @@ import time
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .analysis import tokens_col
 from .catalog import CasConflict, get_catalog
 from .localrel import LocalFrame, local_df
 
@@ -48,6 +50,7 @@ from .build import (
     BuildParams,
     CorpusStats,
     StageTimer,
+    _stats_from_manifest,
     build_postings,
     compute_corpus_stats,
     params_dict,
@@ -411,6 +414,75 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> dict:
         return m
 
 
+def _sum_column(tree: str, column: str) -> int:
+    """Σ ``column`` over every parquet file under ``tree`` (partition
+    directories included), read in the driver with pyarrow."""
+    return sum(
+        pc.sum(_read_parquet(path, [column]).column(0)).as_py() or 0
+        for path in glob.glob(
+            os.path.join(tree, "**", "*.parquet"), recursive=True
+        )
+    )
+
+
+def write_group(
+    corpus: DataFrame, params: BuildParams, shard_shift: int,
+    postings_dest: str, doc_stats_dest: str,
+) -> None:
+    """Write one lineage group: its doc_stats rows (doc_id, doc_len
+    [, text] [, attr_cols]) and its posting blocks — the one group writer
+    of the base build and of append_batch, both of which stage the group
+    outside the artifact and publish it by rename afterwards.
+
+    The kernels score with the doc_stats lengths (the JVM tokenizer,
+    tokens_col) while stage 1 builds the postings with the Python
+    tokenizer, so before returning this checks, from the written files,
+    that Σdoc_len equals the blocks' Σsum_tf; a disagreement would skew
+    every score silently, so it raises ValueError and the caller
+    publishes nothing."""
+    write_doc_stats(
+        corpus.select(
+            "doc_id",
+            F.size(tokens_col("text")).alias("doc_len"),
+            *(["text"] if params.store_text else []),
+            *params.attr_cols,
+        ),
+        doc_stats_dest, shard_shift,
+    )
+    write_group_blocks(
+        build_postings(corpus, params, shard_shift), postings_dest
+    )
+    doc_tokens = _sum_column(doc_stats_dest, "doc_len")
+    posted = _sum_column(postings_dest, "sum_tf")
+    if doc_tokens != posted:
+        raise ValueError(
+            f"postings hold {posted} tokens but doc_stats count "
+            f"{doc_tokens}: the Python and JVM tokenizers disagree, so "
+            "stored doc lengths would not match the postings"
+        )
+
+
+def publish_group(moves) -> None:
+    """Move a written group's staged dirs into the artifact: each
+    (staged, dest) pair by rename, replacing what dest held (a crashed
+    attempt's partial output, or the group a re-run epoch replaces)."""
+    for src, dst in moves:
+        if os.path.exists(dst):
+            shutil.rmtree(dst)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+
+
+def write_term_stats(blocks: DataFrame, index_dir: str) -> int:
+    """(Re)write ``term_stats/`` from the metadata of ``blocks`` (the
+    index's whole ``postings/`` tree) and return the vocabulary size
+    (Index.term_stats_lookup's preload-vs-lazy decision; a metadata-only
+    count of the fresh files)."""
+    tdir = os.path.join(index_dir, "term_stats")
+    term_stats_from_blocks(blocks).write.mode("overwrite").parquet(tdir)
+    return blocks.sparkSession.read.parquet(tdir).count()
+
+
 def build_index(
     corpus: DataFrame,
     index_dir: str,
@@ -523,10 +595,6 @@ def _build_index_locked(
         with timer.time("stats"):
             stats = stats_override or compute_corpus_stats(corpus, params)
         m["build"] = params_dict(params, stats)
-        if stats_override is not None:
-            # total_tokens may describe another corpus (e.g. base + future
-            # stream): finalize's tokenizer guard cannot compare with it
-            m["build"]["stats_override"] = True
         _cas_publish(index_dir, m, token)
     else:
         b = m["build"]
@@ -541,12 +609,7 @@ def _build_index_locked(
                 f"{b.get('posting_layout', 1)} (this engine writes layout "
                 f"{POSTING_LAYOUT}); rebuild the index into a fresh directory"
             )
-        stats = CorpusStats(
-            n_docs=b["n_docs"], avgdl=b["avgdl"], min_doc=b["min_doc"],
-            max_doc=b["max_doc"], shard_shift=b["shard_shift"],
-            total_tokens=b.get("total_tokens", 0),
-            extras=b.get("extras", {}),
-        )
+        _, stats = _stats_from_manifest(m)
 
     # admission gate (the reference's 507-capacity check at submit,
     # app/services/job_service.py:141-149): refuse a plan whose largest
@@ -592,32 +655,13 @@ def _build_index_locked(
             g_stage = os.path.join(staging, "postings", f"group={g}")
             d_stage = os.path.join(staging, "doc_stats", f"group={g}")
             t0 = time.time()
-            sub = corpus.filter(group_col == g)
             with timer.time(f"group_{g}"):
-                from .analysis import tokens_col
-
-                write_doc_stats(
-                    sub.select(
-                        "doc_id",
-                        F.size(tokens_col("text")).alias("doc_len"),
-                        *(["text"] if params.store_text else []),
-                        *params.attr_cols,
-                    ),
-                    d_stage, stats.shard_shift,
-                )
-                r_stage = os.path.join(staging, "runs", f"group={g}")
-                blocks = build_postings(sub, params, stats,
-                                        spill_dir=r_stage)
-                write_group_blocks(blocks, g_stage)
-                shutil.rmtree(r_stage, ignore_errors=True)
+                write_group(corpus.filter(group_col == g), params,
+                            stats.shard_shift, g_stage, d_stage)
             # publish gate: only the claim holder may move staged output
             # into the artifact and update the manifest
             _verify_claim(index_dir, token)
-            for src, dst in ((g_stage, gdir), (d_stage, ddir)):
-                if os.path.exists(dst):
-                    shutil.rmtree(dst)  # partial from a crashed attempt
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
+            publish_group(((g_stage, gdir), (d_stage, ddir)))
             m["completed_groups"][str(g)] = {
                 "wall_s": round(time.time() - t0, 3),
                 "postings_path": gdir,
@@ -634,13 +678,10 @@ def _build_index_locked(
 
         # --- finalize: global term stats from block metadata ---------------
         with timer.time("finalize"):
-            spark = corpus.sparkSession
-            blocks_all = spark.read.parquet(os.path.join(index_dir, "postings"))
-            tdir = os.path.join(index_dir, "term_stats")
-            term_stats_from_blocks(blocks_all).write.mode("overwrite").parquet(tdir)
-            # vocabulary size drives Index.term_stats_lookup's preload-vs-
-            # lazy decision (metadata-only count on the fresh parquet)
-            m["build"]["n_terms"] = spark.read.parquet(tdir).count()
+            blocks_all = corpus.sparkSession.read.parquet(
+                os.path.join(index_dir, "postings")
+            )
+            m["build"]["n_terms"] = write_term_stats(blocks_all, index_dir)
             # artifact size metrics (reference logs artifact size at upload,
             # tasks.py:341-381; compression ratio is the PQ-compression
             # analog, SURVEY §4)
@@ -652,21 +693,7 @@ def _build_index_locked(
                     + F.length("tfs_vbyte")
                     + F.coalesce(F.length("pos_vbyte"), F.lit(0))
                 ).alias("payload_bytes"),
-                F.sum("sum_tf").alias("tokens"),
             ).first()
-            # tokenizer guard: the kernels score with the JVM-tokenized
-            # doc_stats lengths while stage 1 counts postings with the
-            # Python tokenizer; total_tokens is the JVM count of the same
-            # corpus, so any disagreement would skew every score silently
-            tokens = int(size_row.tokens or 0)
-            if (not m["build"].get("stats_override")
-                    and tokens != stats.total_tokens):
-                raise ValueError(
-                    f"postings hold {tokens} tokens but the corpus stats "
-                    f"count {stats.total_tokens}: the Python and JVM "
-                    "tokenizers disagree, so stored doc lengths would not "
-                    "match the postings"
-                )
             m["metrics"]["total_postings"] = int(size_row.postings or 0)
             m["metrics"]["total_blocks"] = int(size_row.blocks or 0)
             m["metrics"]["payload_bytes"] = int(size_row.payload_bytes or 0)
@@ -967,16 +994,19 @@ class Index:
 
     def _group_seqs_of_paths(self, pattern: str) -> dict[int, list]:
         """{shard_id: [(group_seq, path), ...]} of the files matching the
-        glob ``pattern`` (a group=G/.../shard_id=S/ tree)."""
+        glob ``pattern`` (a group=G/.../shard_id=S/ tree), restricted to
+        the groups the manifest lists: a group dir left behind by an
+        append whose manifest write failed is not searched."""
         seq_of = self.group_seqs()
         out: dict[int, list[tuple[int, str]]] = {}
         for path in glob.glob(pattern):
             parts = dict(
                 seg.split("=", 1) for seg in path.split(os.sep) if "=" in seg
             )
-            out.setdefault(int(parts["shard_id"]), []).append(
-                (seq_of.get(parts["group"], 0), path)
-            )
+            seq = seq_of.get(parts["group"])
+            if seq is None:
+                continue  # not in the manifest: never published
+            out.setdefault(int(parts["shard_id"]), []).append((seq, path))
         return out
 
     def shard_file_map(

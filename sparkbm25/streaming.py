@@ -29,42 +29,24 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analysis import tokens_col
 from .build import (
     POSTING_LAYOUT,
-    BuildParams,
-    CorpusStats,
-    build_postings,
-    term_stats_from_blocks,
+    _stats_from_manifest,
     write_doc_stats,
     write_group_blocks,
 )
-from .jobs import read_manifest, _write_manifest
+from .jobs import (
+    _write_manifest,
+    publish_group,
+    read_manifest,
+    write_group,
+    write_term_stats,
+)
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
-
-
-def _stats_from_manifest(m: dict) -> tuple[BuildParams, CorpusStats]:
-    b = m["build"]
-    params = BuildParams(
-        k1=b["k1"], b=b["b"], block_size=b["block_size"],
-        num_shards=b["num_shards"], salt_factor=b["salt_factor"],
-        num_term_buckets=b["num_term_buckets"],
-        lineage_groups=b["lineage_groups"],
-        doc_id_scheme=b["doc_id_scheme"], store_text=b["store_text"],
-        attr_cols=tuple(b.get("attr_cols") or ()),
-        store_positions=bool(b.get("store_positions", False)),
-    )
-    stats = CorpusStats(
-        n_docs=b["n_docs"], avgdl=b["avgdl"], min_doc=b["min_doc"],
-        max_doc=b["max_doc"], shard_shift=b["shard_shift"],
-        total_tokens=b.get("total_tokens", 0),
-        extras=b.get("extras", {}),
-    )
-    return params, stats
 
 
 def append_batch(
@@ -83,6 +65,13 @@ def append_batch(
     The lock also serializes the manifest read-modify-write against
     concurrent delete_docs (an unlocked rewrite could clobber a
     just-appended tombstone file or n_deleted).
+
+    The group is written under ``append_staging/`` (jobs.write_group,
+    which refuses postings whose token count differs from the doc
+    lengths), moved into ``postings/`` and ``doc_stats/`` by rename and
+    then listed in the manifest; search reads the postings and norms of
+    listed groups only, so an append that fails at any step changes no
+    search result.
 
     An index of an older posting layout is refused: the new group would
     be written in layout 3 beside it, and search reads layout 3 only;
@@ -109,25 +98,19 @@ def append_batch(
         )
         gdir = os.path.join(index_dir, "postings", f"group={g}")
         ddir = os.path.join(index_dir, "doc_stats", f"group={g}")
+        staging = os.path.join(index_dir, "append_staging")
+        g_stage = os.path.join(staging, "postings", f"group={g}")
+        d_stage = os.path.join(staging, "doc_stats", f"group={g}")
         t0 = time.time()
-        write_doc_stats(
-            corpus_batch.select(
-                "doc_id",
-                F.size(tokens_col("text")).alias("doc_len"),
-                *(["text"] if params.store_text else []),
-                *params.attr_cols,
-            ),
-            ddir, stats.shard_shift,
-        )
-        r_tmp = os.path.join(index_dir, f"_runs_spill_{g}")
+        # the artifact lock excludes every other mutator, so whatever
+        # sits under append_staging/ is a failed append's leftover
+        shutil.rmtree(staging, ignore_errors=True)
         try:
-            blocks = build_postings(
-                corpus_batch, params, stats, spill_dir=r_tmp
-            )
-            write_group_blocks(blocks, gdir)
+            write_group(corpus_batch, params, stats.shard_shift,
+                        g_stage, d_stage)
+            publish_group(((g_stage, gdir), (d_stage, ddir)))
         finally:
-            # failed epochs must not leak spill dirs under index_dir
-            shutil.rmtree(r_tmp, ignore_errors=True)
+            shutil.rmtree(staging, ignore_errors=True)
         m["completed_groups"][g] = {
             "wall_s": round(time.time() - t0, 3),
             "postings_path": gdir,
@@ -189,10 +172,9 @@ def finalize_stream(spark: SparkSession, index_dir: str) -> None:
     from .jobs import live_doc_stats_df
 
     m = read_manifest(index_dir)
-    blocks = spark.read.parquet(os.path.join(index_dir, "postings"))
-    tdir = os.path.join(index_dir, "term_stats")
-    ts = term_stats_from_blocks(blocks)
-    ts.write.mode("overwrite").parquet(tdir)
+    m["build"]["n_terms"] = write_term_stats(
+        spark.read.parquet(os.path.join(index_dir, "postings")), index_dir
+    )
     # doc_id uniqueness audit across base + ALL streamed epochs, over LIVE
     # rows only: an id ingested twice while both copies are live
     # (base/stream overlap, or one doc in two epochs' files) would silently
@@ -225,7 +207,6 @@ def finalize_stream(spark: SparkSession, index_dir: str) -> None:
     total_docs = int(ds_all.count())
     m["streamed_total_docs"] = total_docs
     m["build"]["n_docs"] = max(int(m["build"]["n_docs"]), int(total_docs))
-    m["build"]["n_terms"] = spark.read.parquet(tdir).count()
     _write_manifest(index_dir, m)
 
 
@@ -527,8 +508,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     (first-absolute + positive-gaps varbyte) is byte-compatible with a
     stage-2 merge RUN (codecs.segment_delta_gaps of a single segment), so
     compaction is read blocks (all groups) → project to RUN_SCHEMA → the
-    SAME repartition(term, shard)+sortWithinPartitions + streaming-merge
-    kernel the build uses (build._make_merge_gen) → one group. Scales
+    SAME merge plan the build uses (build.merge_runs) → one group. Scales
     like the build's stage 2 alone: one compact shuffle of compressed
     runs, ~3 B/posting.
 
@@ -548,9 +528,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     the build lock, so builds/appends/compactions exclude each other;
     warm Index handles must .refresh() afterwards (same contract as
     finalize_stream)."""
-    import shutil
-
-    from .build import BLOCK_SCHEMA, _make_merge_gen
+    from .build import merge_runs
     from .jobs import STATUS_COMPLETED, _acquire_build_lock
 
     # peek only for the lock label; the authoritative read + status check
@@ -626,22 +604,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             group_seq_expr(m).alias("gseq")
             if tomb is not None else F.lit(0).alias("gseq"),
         )
-        merged_parts = max(params.num_shards, 8)
-        # hash on the two write-partition columns (same scheme as
-        # build_postings): no child sampling — the blocks scan runs once —
-        # and the write stays shard-clustered
-        bucket = F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets))
-        new_blocks = (
-            runs.repartition(merged_parts, F.col("shard_id"), bucket)
-            .sortWithinPartitions("shard_id", "term")
-            .mapInArrow(
-                _make_merge_gen(params, tombstones=tomb),
-                schema=BLOCK_SCHEMA,
-            )
-            .withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets)),
-            )
+        new_blocks = merge_runs(
+            runs, params, max(params.num_shards, 8), tombstones=tomb
         )
         # compaction rewrites the WHOLE postings and doc_stats trees, so
         # it always writes (and the manifest below records) the current
@@ -695,11 +659,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             os.rename(os.path.join(sdir, name), old)
         shutil.rmtree(sdir, ignore_errors=True)
 
-        tdir = os.path.join(index_dir, "term_stats")
-        term_stats_from_blocks(
-            spark.read.parquet(os.path.join(index_dir, "postings"))
-        ).write.mode("overwrite").parquet(tdir)
-        m["build"]["n_terms"] = spark.read.parquet(tdir).count()
+        m["build"]["n_terms"] = write_term_stats(
+            spark.read.parquet(pdir), index_dir
+        )
         if tomb is not None:
             # frozen corpus stats roll forward to the alive corpus (the
             # row-count audit ran pre-swap); tombstones cleared below

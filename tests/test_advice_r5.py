@@ -7,16 +7,12 @@
    doc-length sum when deriving avgdl~.
 3. OracleIndex.search must validate mode/min_match exactly like the
    engine, so typo'd parity tests cannot compare OR vs OR.
-4. append_batch must not leak its _runs_spill_<group> dir when the
-   posting build or the block write raises.
 """
 
 import math
-import os
 
 import pytest
 
-from sparkbm25 import streaming as streaming_mod
 from sparkbm25.analysis import tokenize_py
 from sparkbm25.bm25 import idf as idf_py
 from sparkbm25.bm25f import bm25f_score_topk
@@ -26,7 +22,6 @@ from sparkbm25.fixtures import make_transcripts_pdf
 from sparkbm25.index_query import index_search
 from sparkbm25.jobs import Index, build_index
 from sparkbm25.oracle import OracleIndex
-from sparkbm25.streaming import append_batch
 
 PARAMS = BuildParams(num_shards=4, salt_factor=2, num_term_buckets=4,
                      lineage_groups=2, doc_id_scheme="conv_seq")
@@ -131,19 +126,3 @@ def test_oracle_validates_mode_and_min_match(rows):
         oracle.search("hello world", mode="and", min_match=2)
     with pytest.raises(ValueError, match="min_match"):
         oracle.search("hello world", min_match=0)
-
-
-def test_append_batch_failure_cleans_spill_dir(spark, corpus, tmp_path,
-                                               monkeypatch):
-    d = str(tmp_path / "ixspill")
-    build_index(corpus.limit(10), d, PARAMS, source_fingerprint="spill10")
-
-    def boom(*a, **kw):
-        raise RuntimeError("injected block-write failure")
-
-    monkeypatch.setattr(streaming_mod, "write_group_blocks", boom)
-    batch = corpus.limit(5)
-    with pytest.raises(RuntimeError, match="injected"):
-        append_batch(batch, d, epoch_id=99)
-    leaked = [p for p in os.listdir(d) if p.startswith("_runs_spill_")]
-    assert leaked == []

@@ -11,8 +11,8 @@ from, what refuses older layouts, and the one migration.
   a re-ingested doc's newest copy included.
 - Search, append_batch and a resumed build refuse an older layout;
   compact_index migrates it (tests/legacy_layout.py writes the old files).
-- The build refuses to complete when the postings' token count differs
-  from the corpus stats' (the two tokenizers disagree).
+- A build or an append refuses to publish a group whose postings' token
+  count differs from its doc_stats' (the two tokenizers disagree).
 """
 
 import glob
@@ -231,24 +231,53 @@ def test_resumed_build_refuses_older_layout(spark, corpus, tmp_path):
         build_index(corpus, d, PARAMS, "resume")
 
 
-def test_tokenizer_disagreement_fails_the_build(spark, corpus, tmp_path,
-                                               monkeypatch):
-    """finalize compares the postings' token count (sum of sum_tf) with
-    the corpus stats' JVM count and raises before COMPLETED."""
-    import dataclasses
+def _one_doc_one_token_long(monkeypatch, doc_id: int) -> None:
+    """Make the JVM doc_len expression count one token more for ``doc_id``
+    than the Python tokenizer of stage 1 does."""
+    from pyspark.sql import functions as F
 
     import sparkbm25.jobs as jobs
 
-    real = jobs.compute_corpus_stats
+    real = jobs.tokens_col
 
-    def off_by_one(corpus_, params):
-        st = real(corpus_, params)
-        return dataclasses.replace(st, total_tokens=st.total_tokens + 1)
+    def tokens_col(col="text"):
+        return F.when(
+            F.col("doc_id") == doc_id, F.concat(real(col), F.array(F.lit("x")))
+        ).otherwise(real(col))
 
-    monkeypatch.setattr(jobs, "compute_corpus_stats", off_by_one)
+    monkeypatch.setattr(jobs, "tokens_col", tokens_col)
+
+
+def test_tokenizer_disagreement_fails_the_build(spark, corpus, tmp_path,
+                                               monkeypatch):
+    """The group writer compares the written doc_stats' Σdoc_len with the
+    written blocks' Σsum_tf and raises before the group is published."""
+    _one_doc_one_token_long(monkeypatch, corpus.first().doc_id)
     d = str(tmp_path / "ix")
     with pytest.raises(ValueError, match="tokenizers disagree"):
         build_index(corpus, d, PARAMS, "guard")
     assert read_manifest(d)["status"] != "COMPLETED"
     with pytest.raises(ValueError, match="not COMPLETED"):
         Index(spark, d)
+
+
+def test_tokenizer_disagreement_fails_the_append(spark, corpus, tmp_path,
+                                                monkeypatch):
+    """append_batch runs the same check: it raises, publishes no group
+    and leaves the manifest as it was."""
+    from pyspark.sql import functions as F
+
+    from sparkbm25.streaming import append_batch
+
+    ids = sorted(r.doc_id for r in corpus.select("doc_id").collect())
+    split = ids[len(ids) // 2]
+    d = str(tmp_path / "ix")
+    build_index(corpus.filter(F.col("doc_id") < split), d, PARAMS, "base")
+    before = read_manifest(d)
+    _one_doc_one_token_long(monkeypatch, split)
+    with pytest.raises(ValueError, match="tokenizers disagree"):
+        append_batch(corpus.filter(F.col("doc_id") >= split), d, epoch_id=5)
+    assert read_manifest(d) == before
+    for tree in ("postings", "doc_stats"):
+        assert not glob.glob(os.path.join(d, tree, "group=stream_5"))
+    assert not os.path.exists(os.path.join(d, "append_staging"))

@@ -593,6 +593,35 @@ def test_reingested_id_supersedes_tombstone(spark, corpora, tmp_path):
     assert ix2.doc_stats().filter(f"doc_id = {stay_dead}").count() == 0
 
 
+def test_failed_append_manifest_write_leaves_search_unchanged(
+        spark, corpora, tmp_path, monkeypatch):
+    """append_batch moves its group into postings/ and doc_stats/ before
+    the manifest lists it. When that manifest write fails, a refreshed
+    handle must not score the unlisted group: search returns exactly the
+    pre-append rows, although the appended docs match the queries."""
+    from sparkbm25 import streaming
+
+    full, a, b = corpora
+    params = BuildParams(num_shards=4, salt_factor=2, num_term_buckets=8,
+                         lineage_groups=1, doc_id_scheme="conv_seq")
+    d = str(tmp_path / "orphan_ix")
+    build_index(a.select("doc_id", "text"), d, params, "orphanA")
+    bdocs = b.select("doc_id", "text")
+    queries = [(0, bdocs.first().text)] + make_queries(10)
+    ix = Index(spark, d)
+    before = sorted(tuple(r) for r in index_search(ix, queries, k=10).collect())
+
+    def fail(*args, **kwargs):
+        raise OSError("injected manifest write failure")
+
+    monkeypatch.setattr(streaming, "_write_manifest", fail)
+    with pytest.raises(OSError, match="injected"):
+        streaming.append_batch(bdocs, d, epoch_id=3)
+    ix.refresh()
+    after = sorted(tuple(r) for r in index_search(ix, queries, k=10).collect())
+    assert after == before
+
+
 def test_reingest_of_doc_with_base_postings(spark, corpora, tmp_path):
     """The 'corrected document' flow where the re-ingested id ALREADY HAS
     postings in the base index (the round-4 advice's failure mode): after
