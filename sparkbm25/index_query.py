@@ -38,7 +38,8 @@ direct plan like any other.
 
 Every route reads a shard's blocks with one reader (_read_shard_blocks:
 pq.ParquetFile per file, row groups pruned by their term statistics, a
-pyarrow Table out) and decodes them with one function
+pyarrow Table out; the driver route reads through its handle's
+row-group cache, _BlockCache) and decodes them with one function
 (codecs.decode_blocks). Doc lengths are not stored per posting: the
 shard's norms ((doc id, doc length) arrays, _read_shard_norms; the
 driver route caches them per shard on the Index handle, a Spark task
@@ -54,7 +55,9 @@ positions for fields=).
 from __future__ import annotations
 
 import os
+import threading
 from bisect import bisect_left
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -610,8 +613,131 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
     return gen
 
 
+def _term_bounds(md) -> list:
+    """Each row group's ``term`` (min, max) from a file's parquet
+    metadata; None where the statistics are missing ("may hold")."""
+    ti = md.schema.names.index("term")
+    out = []
+    for i in range(md.num_row_groups):
+        st = md.row_group(i).column(ti).statistics
+        out.append((st.min, st.max) if st is not None and st.has_min_max
+                   else None)
+    return out
+
+
+def _row_groups_for(bounds: list, want: list[str]) -> list[int]:
+    """The row groups whose term range can hold a term of the sorted
+    ``want``."""
+    keep = []
+    for i, mm in enumerate(bounds):
+        if mm is not None:
+            j = bisect_left(want, mm[0])
+            if j == len(want) or want[j] > mm[1]:
+                continue
+        keep.append(i)
+    return keep
+
+
+class _BlockCache:
+    """The driver route's posting row-group cache, one per Index handle
+    (Index.block_cache; refresh() drops it). Per file it keeps the Arrow
+    schema and each row group's term bounds, taken when the file is
+    first opened, so pruning needs no open; per (file, row group,
+    column) the Arrow column exactly as parquet decoded it — blocks stay
+    vbyte-encoded, so a warm call skips the open, the footer parse and
+    the decompression but still decodes, masks and scores. Each column
+    is charged its Arrow ``nbytes``: least recently used columns are
+    evicted once ``nbytes`` would pass ``budget``, and a column larger
+    than the budget is returned but not kept. One lock guards every
+    lookup, insert and eviction; reads run outside it."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.nbytes = 0
+        self._files: dict[str, tuple] = {}
+        self._cols: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def _take(self, path: str, rg: int, cols: list[str]) -> dict:
+        with self._lock:
+            got = {}
+            for c in cols:
+                a = self._cols.get((path, rg, c))
+                if a is not None:
+                    self._cols.move_to_end((path, rg, c))
+                    got[c] = a
+            return got
+
+    def _put(self, path: str, rg: int, cols: dict) -> None:
+        with self._lock:
+            for c, a in cols.items():
+                if a.nbytes > self.budget:
+                    continue
+                old = self._cols.pop((path, rg, c), None)
+                if old is not None:  # another thread read it meanwhile
+                    self.nbytes -= old.nbytes
+                self._cols[(path, rg, c)] = a
+                self.nbytes += a.nbytes
+                while self.nbytes > self.budget:
+                    self.nbytes -= self._cols.popitem(last=False)[1].nbytes
+
+    def read(self, path: str, cols: list[str],
+             want: list[str]) -> tuple[pa.Schema, "pa.Table | None"]:
+        """(the file's Arrow schema, ``cols`` of its row groups that can
+        hold a term of ``want`` — None when none can): the same table
+        pq.ParquetFile.read_row_groups returns, read only where the
+        cache misses."""
+        f = None
+        try:
+            with self._lock:
+                meta = self._files.get(path)
+            if meta is None:
+                f = pq.ParquetFile(path)
+                meta = (f.schema_arrow, _term_bounds(f.metadata))
+                with self._lock:
+                    self._files[path] = meta
+            schema, bounds = meta
+            keep = _row_groups_for(bounds, want)
+            if not keep:
+                return schema, None
+            out = pa.schema([schema.field(c) for c in cols],
+                            metadata=schema.metadata)
+            tables = []
+            for rg in keep:
+                got = self._take(path, rg, cols)
+                miss = [c for c in cols if c not in got]
+                if miss:
+                    if f is None:
+                        f = pq.ParquetFile(path)
+                    t = f.read_row_group(rg, columns=miss, use_threads=False)
+                    read = {c: t.column(c) for c in miss}
+                    self._put(path, rg, read)
+                    got.update(read)
+                tables.append(pa.Table.from_arrays(
+                    [got[c] for c in cols], schema=out))
+            return schema, pa.concat_tables(tables)
+        finally:
+            if f is not None:
+                f.close()
+
+
+def _read_file(path: str, cols: list[str], want: list[str],
+               cache: "_BlockCache | None"):
+    """(Arrow schema, ``cols`` of the row groups of ``path`` that can
+    hold a term of ``want`` | None): through ``cache`` when given."""
+    if cache is not None:
+        return cache.read(path, cols, want)
+    with pq.ParquetFile(path) as f:
+        keep = _row_groups_for(_term_bounds(f.metadata), want)
+        return f.schema_arrow, (
+            f.read_row_groups(keep, columns=cols, use_threads=False)
+            if keep else None
+        )
+
+
 def _read_shard_blocks(entry: list, cols: list[str],
-                       terms: list[str], need_gseq: bool) -> pa.Table:
+                       terms: list[str], need_gseq: bool,
+                       cache: "_BlockCache | None" = None) -> pa.Table:
     """The one block reader of every route: the rows of ``terms`` in one
     shard's posting files ``entry`` ([(gseq, path), ...], layout-3
     clustered tree), in file order. Per file it reads only the row
@@ -626,8 +752,11 @@ def _read_shard_blocks(entry: list, cols: list[str],
     when a delete must mask only older groups. The table comes back as
     one chunk per column (a file or row group per chunk made every
     kernel filter several times slower); a call that matches no row
-    returns the files' typed empty table. Index.term_stats_lookup reads
-    the term_stats rows of uncached terms with it too."""
+    returns the files' typed empty table. The driver route passes its
+    handle's row-group cache (``cache``, Index.block_cache), which
+    returns the same tables; executor tasks, side-direct groups and
+    Index.term_stats_lookup (which reads the term_stats rows of uncached
+    terms with this reader too) pass none."""
     if not entry:
         return pa.table({
             c: pa.array([], pa.null())
@@ -638,22 +767,11 @@ def _read_shard_blocks(entry: list, cols: list[str],
         entry = sorted(entry, key=lambda e: int(e[0]))
     parts, schema = [], None
     for g, path in entry:
-        with pq.ParquetFile(path) as f:
-            md = f.metadata
-            if schema is None:
-                schema = pa.schema([f.schema_arrow.field(c) for c in cols])
-            ti = md.schema.names.index("term")
-            keep = []
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(ti).statistics
-                if st is not None and st.has_min_max:
-                    j = bisect_left(want, st.min)
-                    if j == len(want) or want[j] > st.max:
-                        continue
-                keep.append(i)
-            if not keep:
-                continue
-            part = f.read_row_groups(keep, columns=cols, use_threads=False)
+        file_schema, part = _read_file(path, cols, want, cache)
+        if schema is None:
+            schema = pa.schema([file_schema.field(c) for c in cols])
+        if part is None:
+            continue
         if need_gseq:
             part = part.append_column(
                 "gseq", pa.array(np.full(part.num_rows, int(g), np.int64))
@@ -806,6 +924,9 @@ def _merge_tops(spark, parts: list, k: int) -> DataFrame:
 LOCAL_SEARCH_MAX_POSTINGS = int(
     os.environ.get("SPARKBM25_LOCAL_SEARCH_MAX_POSTINGS", "8000000")
 )
+# driver route: the Arrow bytes of posting row groups an Index handle
+# keeps across calls (Index.block_cache, _BlockCache)
+DRIVER_BLOCK_CACHE_BYTES = 256 << 20
 # wall-time break-even of the two direct routes, in postings folded. The
 # driver route costs ~W*c for a call folding W postings; the Spark route
 # ~F + W*c/p over p parallel shard tasks, so the driver is no slower
@@ -850,12 +971,15 @@ def _local_search(ix: Index, kernel, cols: list[str], terms: list[str],
     below the route crossover reads a few small files, so a per-call
     thread pool cost more CPU than it saved wall time. Returns a
     LocalFrame: the call does all its work here, and collecting the
-    result reads the merged Arrow table without a JVM round trip. Every
-    call recomputes its postings from the parquet artifact."""
+    result reads the merged Arrow table without a JVM round trip. The
+    posting row groups come through the handle's cache
+    (Index.block_cache), so a warm call opens no file and decompresses
+    nothing; it still decodes, masks, scores and merges every time."""
     need_gseq = tomb is not None and len(tomb[0]) > 0
+    cache = ix.block_cache()
     tops = []
     for s in sorted(fm):
-        blocks = _read_shard_blocks(fm[s], cols, terms, need_gseq)
+        blocks = _read_shard_blocks(fm[s], cols, terms, need_gseq, cache)
         if blocks.num_rows:
             tops.append(kernel(blocks, ix.shard_norms(s)))
     return _merge_tops(ix.spark, [t for t in tops if t is not None], k)

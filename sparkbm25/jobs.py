@@ -336,6 +336,20 @@ def group_seq_expr(m: dict) -> F.Column:
     )
 
 
+def read_groups(spark: SparkSession, index_dir: str, name: str,
+                m: dict) -> DataFrame:
+    """The ``postings`` or ``doc_stats`` tree (``name``) of the lineage
+    groups the manifest ``m`` lists, with the ``group`` partition column.
+    A group dir with no manifest entry (an append whose manifest write
+    failed after its dirs were published) is not read."""
+    root = os.path.join(index_dir, name)
+    dirs = [os.path.join(root, f"group={g}")
+            for g in sorted(m.get("completed_groups") or {})]
+    return spark.read.option("basePath", root).parquet(
+        *[d for d in dirs if os.path.isdir(d)]
+    )
+
+
 def live_doc_stats_df(
     spark: SparkSession, index_dir: str, m: dict, ds: DataFrame | None = None,
     pair: tuple | None = None,
@@ -346,7 +360,7 @@ def live_doc_stats_df(
     doc_id against the tombstone LocalFrame (``pair``, when the caller
     already holds it, else read here)."""
     if ds is None:
-        ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+        ds = read_groups(spark, index_dir, "doc_stats", m)
     n_del = int((m.get("metrics") or {}).get("n_deleted", 0))
     if not n_del or not os.path.exists(
         os.path.join(index_dir, TOMBSTONES_DIR)
@@ -678,9 +692,8 @@ def _build_index_locked(
 
         # --- finalize: global term stats from block metadata ---------------
         with timer.time("finalize"):
-            blocks_all = corpus.sparkSession.read.parquet(
-                os.path.join(index_dir, "postings")
-            )
+            blocks_all = read_groups(corpus.sparkSession, index_dir,
+                                     "postings", m)
             m["build"]["n_terms"] = write_term_stats(blocks_all, index_dir)
             # artifact size metrics (reference logs artifact size at upload,
             # tasks.py:341-381; compression ratio is the PQ-compression
@@ -741,9 +754,13 @@ class Index:
     """Handle over a built index directory (the query engine's input).
 
     Driver memory: besides the vocabulary cache and the tombstone pair,
-    a handle caches the norms (doc id + doc length, 12 B per doc) of
-    every shard a driver-route search has touched; refresh() drops
-    them."""
+    a handle caches, for the shards and files a driver-route search has
+    touched, each shard's norms (doc id + doc length, 12 B per doc) and
+    the posting row groups it read (block_cache: each file's schema and
+    row-group term bounds, and each read column as Arrow, still
+    vbyte-encoded, within index_query.DRIVER_BLOCK_CACHE_BYTES; the
+    benchmark's 1,000-conversation index caches whole in ~2 MB).
+    refresh() drops them."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.index_dir = index_dir
@@ -771,6 +788,7 @@ class Index:
         self._bucket_files: dict[int, dict[int, list[tuple[int, str]]]] = {}
         self._norm_files: dict[int, list[tuple[int, str]]] | None = None
         self._norms: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._blocks = None
         self._dfs: dict[str, DataFrame] = {}
         self._stats_cache: dict[str, int | None] = {}
         self._stats_preloaded = False
@@ -779,8 +797,10 @@ class Index:
         # cache the DataFrame handle: file listing + schema inference happen
         # once per index, not once per query
         if name not in self._dfs:
-            self._dfs[name] = self.spark.read.parquet(
-                os.path.join(self.index_dir, name)
+            self._dfs[name] = (
+                self.spark.read.parquet(os.path.join(self.index_dir, name))
+                if name == "term_stats" else
+                read_groups(self.spark, self.index_dir, name, self.manifest)
             )
         return self._dfs[name]
 
@@ -966,6 +986,7 @@ class Index:
         self._bucket_files.clear()
         self._norm_files = None
         self._norms.clear()
+        self._blocks = None
         self.manifest = read_manifest(self.index_dir)
         b = self.manifest["build"]
         self.n_docs = b["n_docs"]
@@ -1066,6 +1087,16 @@ class Index:
                 self.norm_file_map().get(shard, [])
             )
         return self._norms[shard]
+
+    def block_cache(self):
+        """The driver route's posting row-group cache
+        (index_query._BlockCache, bounded by
+        index_query.DRIVER_BLOCK_CACHE_BYTES), made on first use."""
+        if self._blocks is None:
+            from .index_query import DRIVER_BLOCK_CACHE_BYTES, _BlockCache
+
+            self._blocks = _BlockCache(DRIVER_BLOCK_CACHE_BYTES)
+        return self._blocks
 
     def tombstones_pair(self):
         """(ids, seqs): sorted int64 doc ids with their per-id MAX delete

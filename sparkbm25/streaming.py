@@ -169,11 +169,11 @@ def finalize_stream(spark: SparkSession, index_dir: str) -> None:
     df <= n_docs always holds, so idf >= ln(1 + 0.5/(df+0.5)) > 0.
     avgdl stays frozen by contract (tf normalization drift is handled by
     periodic full rebuild, like segment-merge policies)."""
-    from .jobs import live_doc_stats_df
+    from .jobs import live_doc_stats_df, read_groups
 
     m = read_manifest(index_dir)
     m["build"]["n_terms"] = write_term_stats(
-        spark.read.parquet(os.path.join(index_dir, "postings")), index_dir
+        read_groups(spark, index_dir, "postings", m), index_dir
     )
     # doc_id uniqueness audit across base + ALL streamed epochs, over LIVE
     # rows only: an id ingested twice while both copies are live
@@ -184,7 +184,7 @@ def finalize_stream(spark: SparkSession, index_dir: str) -> None:
     # previously-DELETED id is legal: its old copy is tombstone-masked
     # (dead), so exactly one live copy remains. Mirrors
     # compute_corpus_stats' hash64 audit.
-    ds_all = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+    ds_all = read_groups(spark, index_dir, "doc_stats", m)
     live_row = (
         live_doc_stats_df(spark, index_dir, m, ds_all)
         .agg(
@@ -552,12 +552,11 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                 "repair/rebuild before compacting"
             )
         params, stats = _stats_from_manifest(m)
-        from .jobs import TOMBSTONES_DIR, group_seq_expr
+        from .jobs import TOMBSTONES_DIR, group_seq_expr, read_groups
 
-        pdir = os.path.join(index_dir, "postings")
         sdir = os.path.join(index_dir, "compact_staging")
         shutil.rmtree(sdir, ignore_errors=True)
-        blocks = spark.read.parquet(pdir)
+        blocks = read_groups(spark, index_dir, "postings", m)
         groups_before = sorted(m["completed_groups"])
         n_before = blocks.groupBy().sum("n_docs").first()[0] or 0
 
@@ -571,8 +570,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         n_deleted = int((m.get("metrics") or {}).get("n_deleted", 0))
         tomb = None
         n_tomb_ids = 0
-        dsdir = os.path.join(index_dir, "doc_stats")
-        ds_all = spark.read.parquet(dsdir)
+        ds_all = read_groups(spark, index_dir, "doc_stats", m)
         # layout 3 trees carry the shard_id directory level, older ones not
         ds = ds_all.drop("group", "shard_id")
         if n_deleted and os.path.exists(tdir_tomb):
@@ -659,8 +657,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             os.rename(os.path.join(sdir, name), old)
         shutil.rmtree(sdir, ignore_errors=True)
 
+        # the swapped-in postings/ holds the compacted group alone
         m["build"]["n_terms"] = write_term_stats(
-            spark.read.parquet(pdir), index_dir
+            spark.read.parquet(os.path.join(index_dir, "postings")),
+            index_dir,
         )
         if tomb is not None:
             # frozen corpus stats roll forward to the alive corpus (the

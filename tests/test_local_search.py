@@ -1,6 +1,8 @@
 """Driver route: the driver-side serve of direct-route searches below the
 route crossover must be BIT-IDENTICAL to the distributed routes on every
-shape it accepts, and must fall back cleanly when gated off."""
+shape it accepts, and must fall back cleanly when gated off. Its
+row-group cache (Index.block_cache) keeps results identical under a
+small budget and across an append and refresh()."""
 
 import threading
 
@@ -152,3 +154,72 @@ def test_driver_route_builds_no_pandas_frame_and_no_thread(spark, built,
     assert started == []
     assert served == [1]
     assert got == want
+
+
+def test_block_cache_budget_keeps_results(spark, built, monkeypatch):
+    """A handle whose cache holds less than the index: every call still
+    equals the Spark route, and the cached bytes never pass the budget."""
+    ix_dir, _ = built
+    qs = make_queries(30)
+    warm = Index(spark, ix_dir)
+    for i in range(0, 30, 3):
+        iq.index_search(warm, qs[i:i + 3], k=10).collect()
+    budget = warm.block_cache().nbytes // 4
+    assert budget > 0
+    monkeypatch.setattr(iq, "DRIVER_BLOCK_CACHE_BYTES", budget)
+    ix = Index(spark, ix_dir)
+    for _ in range(2):
+        for i in range(0, 30, 3):
+            a, b = _ab(ix, qs[i:i + 3])
+            assert a and a == b
+            cache = ix.block_cache()
+            assert 0 < cache.nbytes <= cache.budget == budget
+
+
+def test_refresh_after_append_drops_block_cache(spark, tmp_path,
+                                                monkeypatch):
+    """A warm handle sees an appended batch after finalize_stream +
+    refresh(), with an empty cache; a phrase and a where= search on it
+    then equal a fresh handle's and the Spark route's."""
+    from sparkbm25.fixtures import make_transcripts_pdf
+    from sparkbm25.index_query import index_phrase_search
+    from sparkbm25.streaming import append_batch, finalize_stream
+
+    full = add_doc_id(
+        spark.createDataFrame(make_transcripts_pdf(50)), "conv_seq"
+    ).select("doc_id", "text", "role")
+    base = full.filter(F.col("doc_id") % 5 != 0)
+    batch = full.filter(F.col("doc_id") % 5 == 0).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" zzqmarker"))
+    )
+    d = str(tmp_path / "ix")
+    build_index(base, d, BuildParams(
+        num_shards=4, salt_factor=2, num_term_buckets=4, lineage_groups=1,
+        doc_id_scheme="conv_seq", store_positions=True, attr_cols=("role",),
+    ), "cache-refresh")
+    ix = Index(spark, d)
+    qs = make_queries(10)[:3] + [(77, "zzqmarker")]
+    phrase = [(0, " ".join(base.first().text.split()[:2]))]
+    assert not [r for r in _rows(iq.index_search(ix, qs, k=10))
+                if r[0] == 77]
+    _rows(index_phrase_search(ix, phrase, k=10))
+    assert ix.block_cache().nbytes > 0
+    append_batch(batch, d, epoch_id=0)
+    finalize_stream(spark, d)
+    ix.refresh()
+    assert ix.block_cache().nbytes == 0
+    got = _rows(iq.index_search(ix, qs, k=10))
+    hits = {r[2] for r in got if r[0] == 77}
+    marked = {r.doc_id for r in batch.collect()}
+    assert hits <= marked and len(hits) == min(10, len(marked))
+    fresh = Index(spark, d)
+    assert got == _rows(iq.index_search(fresh, qs, k=10))
+    for search, args, kw in (
+        (index_phrase_search, (phrase,), {}),
+        (iq.index_search, (qs,), {"where": {"role": "user"}}),
+    ):
+        a = _rows(search(ix, *args, k=10, **kw))
+        assert a and a == _rows(search(fresh, *args, k=10, **kw))
+        with monkeypatch.context() as m:
+            m.setattr(iq, "_serve_in_driver", lambda *a: False)
+            assert a == _rows(search(ix, *args, k=10, **kw))

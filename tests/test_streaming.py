@@ -598,7 +598,10 @@ def test_failed_append_manifest_write_leaves_search_unchanged(
     """append_batch moves its group into postings/ and doc_stats/ before
     the manifest lists it. When that manifest write fails, a refreshed
     handle must not score the unlisted group: search returns exactly the
-    pre-append rows, although the appended docs match the queries."""
+    pre-append rows, although the appended docs match the queries. The
+    next finalize_stream and compact_index must not read it either:
+    term_stats and n_docs keep their pre-append values, and the
+    compacted index holds none of the batch's docs."""
     from sparkbm25 import streaming
 
     full, a, b = corpora
@@ -614,12 +617,28 @@ def test_failed_append_manifest_write_leaves_search_unchanged(
     def fail(*args, **kwargs):
         raise OSError("injected manifest write failure")
 
-    monkeypatch.setattr(streaming, "_write_manifest", fail)
-    with pytest.raises(OSError, match="injected"):
-        streaming.append_batch(bdocs, d, epoch_id=3)
+    def term_stats():
+        return sorted(map(tuple, spark.read.parquet(
+            os.path.join(d, "term_stats")).collect()))
+
+    stats_before = term_stats()
+    n_docs_before = read_manifest(d)["build"]["n_docs"]
+    with monkeypatch.context() as m:
+        m.setattr(streaming, "_write_manifest", fail)
+        with pytest.raises(OSError, match="injected"):
+            streaming.append_batch(bdocs, d, epoch_id=3)
+    assert os.path.isdir(os.path.join(d, "postings", "group=stream_3"))
     ix.refresh()
     after = sorted(tuple(r) for r in index_search(ix, queries, k=10).collect())
     assert after == before
+
+    streaming.finalize_stream(spark, d)
+    assert term_stats() == stats_before
+    assert read_manifest(d)["build"]["n_docs"] == n_docs_before
+    streaming.compact_index(spark, d)
+    batch_ids = {r.doc_id for r in bdocs.select("doc_id").collect()}
+    kept = {r.doc_id for r in Index(spark, d).doc_stats().collect()}
+    assert kept and not kept & batch_ids
 
 
 def test_reingest_of_doc_with_base_postings(spark, corpora, tmp_path):

@@ -2,11 +2,15 @@
 
 Builds the benchmark's clean ``search`` index (1,000 fixture
 conversations, ~11k turns, ``perfbench`` ``build_params(4)`` on
-``local[4]``) and times three call shapes, 10 measured calls each:
+``local[4]``) and times four call shapes, 10 measured calls each:
 
 - ``point``: one query;
 - ``blockmax``: 20 queries, ``strategy="blockmax"``;
-- ``batch``: the 100-query set, default strategy.
+- ``batch``: the 100-query set, default strategy;
+- ``point_after_refresh``: the first point call after ``ix.refresh()``
+  (outside the timed call), which reloads the vocabulary, the file
+  listing and the norms and finds the handle's row-group cache
+  (``Index.block_cache``) empty: the miss path.
 
 ``index_query._serve_in_driver`` picks each call's route from its
 posting volume: on the default index all three shapes are below the
@@ -21,8 +25,9 @@ name: the JIT compiler threads (``C1/C2 CompilerThread``), the executor
 task threads (``Executor task launch worker``) and the rest (scheduler,
 GC, netty, ...). Threads and workers that exit during a call drop their
 CPU from the figures. It also counts the Spark jobs and the tasks they
-ran (a skipped stage runs none) per call. One JSON line per call, then
-one summary line of medians per shape.
+ran (a skipped stage runs none) per call, and the bytes the handle's
+row-group cache holds after it (``block_cache_bytes``). One JSON line
+per call, then one summary line of medians per shape.
 
 Before the first measured call it runs warm-up calls of every shape and
 then waits until the JVM's JIT compiler threads have been idle for
@@ -162,13 +167,15 @@ def main() -> int:
     ix = jobs.Index(spark, ix_dir)
     texts = inputs.queries(N_QUERIES, args.seed)
     everything = list(enumerate(texts))
-    shapes = [
-        ("point", [[(0, t)] for t in texts], {}),
+    points = [[(0, t)] for t in texts]
+    shapes = [  # (name, query sets, search kwargs, refresh before a call)
+        ("point", points, {}, False),
         ("blockmax",
          [everything[i:i + BLOCKMAX_SIZE]
           for i in range(0, N_QUERIES, BLOCKMAX_SIZE)],
-         {"strategy": "blockmax"}),
-        ("batch", [everything], {}),
+         {"strategy": "blockmax"}, False),
+        ("batch", [everything], {}, False),
+        ("point_after_refresh", points, {}, True),
     ]
     jvm_pid = next(pid for (pid, _), (role, _) in _tree().items()
                    if role == "jvm")
@@ -181,13 +188,17 @@ def main() -> int:
         return index_search(ix, query_sets[i % len(query_sets)], k=K,
                             **kw).collect()
 
-    for _name, query_sets, kw in shapes:
+    for _name, query_sets, kw, refresh in shapes:
         for i in range(WARMUP):
+            if refresh:
+                ix.refresh()
             call(query_sets, kw, i)
     summary["settle_s"] = round(_settle(jvm_pid), 2)
-    for name, query_sets, kw in shapes:
+    for name, query_sets, kw, refresh in shapes:
         lines = []
         for i in range(args.calls):
+            if refresh:
+                ix.refresh()
             group = f"search_call_cost_{name}_{i}"
             sc.setJobGroup(group, group)
             procs0, threads0 = _snapshot(jvm_pid)
@@ -210,6 +221,7 @@ def main() -> int:
                 "jvm_other_cpu_ms": by_thread.get("other", 0.0),
                 "python_worker_cpu_ms": (by_role.get("daemon", 0.0)
                                          + by_role.get("worker", 0.0)),
+                "block_cache_bytes": ix.block_cache().nbytes,
                 "spark_jobs": len(job_ids),
                 "spark_tasks": sum(
                     st.getStageInfo(s).numCompletedTasks
