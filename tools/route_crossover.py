@@ -16,9 +16,9 @@ and query counts on ``local[4]``:
 
 Per cell it runs each route's calls in a block (after warm-up calls, so
 one route's JVM tail does not land on the other's figures) and records
-the median wall time and process-tree CPU (driver, JVM, Python daemon
-and workers, read from ``/proc`` with ``tools/search_call_cost.py``'s
-helpers) of
+the median wall time and process-tree CPU (the driver's from
+``time.process_time()``; the JVM's, Python daemon's and workers' read
+from ``/proc`` with ``tools/search_call_cost.py``'s helpers) of
 ``index_search(...).collect()``, the Spark jobs per call, the call's
 postings W (Σdf per query occurrence, and over the distinct terms), the
 parallelism p the rule uses and the route the rule picks. It also
@@ -59,15 +59,18 @@ SHAPES = [(1, {}), (20, {"strategy": "blockmax"}), (100, {})]
 def _measure(sc, st, call, tag: str) -> dict:
     sc.setJobGroup(tag, tag)
     procs0 = _tree()
-    t0 = time.perf_counter()
+    t0, c0 = time.perf_counter(), time.process_time()
     rows = call()
     wall = time.perf_counter() - t0
+    driver_cpu = time.process_time() - c0
     procs1 = _tree()
     sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
+    cpu = _delta(procs0, procs1)
+    cpu["driver"] = driver_cpu * 1000.0
     return {
         "wall_ms": wall * 1000.0,
-        "cpu_ms": sum(_delta(procs0, procs1).values()),
+        "cpu_ms": sum(cpu.values()),
         "jobs": len(st.getJobIdsForGroup(tag)),
         "rows": len(rows),
     }

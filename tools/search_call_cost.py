@@ -18,10 +18,11 @@ route crossover and run in the driver process (0 Spark jobs); a call
 above it runs one Spark job with one task per shard
 (``tools/route_crossover.py`` measures both routes).
 
-A call is ``index_search(...).collect()``. Around each call it reads
-``/proc`` for utime + stime of the driver (this process), the JVM and the
-Python daemon and workers, and of every JVM thread, grouped by thread
-name: the JIT compiler threads (``C1/C2 CompilerThread``), the executor
+A call is ``index_search(...).collect()``. Around each call it reads the
+driver's CPU (this process, all its threads) with ``time.process_time()``,
+which resolves a few-millisecond driver-route call, and ``/proc`` for
+utime + stime (whole clock ticks, 10 ms each) of the JVM and the Python
+daemon and workers, and of every JVM thread, grouped by thread name: the JIT compiler threads (``C1/C2 CompilerThread``), the executor
 task threads (``Executor task launch worker``) and the rest (scheduler,
 GC, netty, ...). Threads and workers that exit during a call drop their
 CPU from the figures. It also counts the Spark jobs and the tasks they
@@ -202,9 +203,10 @@ def main() -> int:
             group = f"search_call_cost_{name}_{i}"
             sc.setJobGroup(group, group)
             procs0, threads0 = _snapshot(jvm_pid)
-            t0 = time.perf_counter()
+            t0, c0 = time.perf_counter(), time.process_time()
             rows = call(query_sets, kw, WARMUP + i)
             wall = time.perf_counter() - t0
+            driver_cpu = time.process_time() - c0
             procs1, threads1 = _snapshot(jvm_pid)
             sc._jsc.clearJobGroup()
             by_role = _delta(procs0, procs1)
@@ -214,7 +216,7 @@ def main() -> int:
             line = {
                 "shape": name, "call": i, "rows": len(rows),
                 "wall_ms": wall * 1000.0,
-                "driver_cpu_ms": by_role.get("driver", 0.0),
+                "driver_cpu_ms": driver_cpu * 1000.0,
                 "jvm_cpu_ms": by_role.get("jvm", 0.0),
                 "jvm_jit_cpu_ms": by_thread.get("jit", 0.0),
                 "jvm_task_cpu_ms": by_thread.get("task", 0.0),
